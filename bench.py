@@ -28,24 +28,14 @@ from portfolio_data_pipelines_spark.sources.parquet import scan_table  # noqa: E
 
 
 def run_lakehouse_family(spark, sf_dir: str):
-    """Bench the Delta-log lifecycle vs its plain versioned-lake twin on
-    the events table: write, full read, MERGE, OPTIMIZE/compact, and the
-    incremental change read. Each step is timed on the SECOND of two
-    full lifecycle rounds (fresh roots), mirroring the per-query
+    """Bench the Delta-log lifecycle on the events table: write, full
+    read, feed backfill, selective read, MERGE, micro-appends, OPTIMIZE,
+    and the incremental change read. Each step is timed on the SECOND of
+    two full lifecycle rounds (fresh roots), mirroring the per-query
     warm-run methodology. Also returns the read-amplification evidence:
     live files a full read touches before vs after OPTIMIZE (from the
     Delta log's own live-set — the same number an executor fan-out
     sees).
-
-    Steps where the Delta twin is expected to cost more than the plain
-    lake, by design (the log buys semantics):
-    - merge: file-granular copy-on-write MERGE reads+rewrites only the
-      files holding matching keys but pays a key semi-join for the
-      touched-file discovery; the lake twin rewrites whole partitions
-      with no discovery pass.
-    - changes: read_delta_changes scans only the new files (log tail),
-      while the lake twin diff_versions full-outer-joins two snapshots
-      — the LAKE side is the expensive one here.
     """
     import shutil
     import tempfile
@@ -59,12 +49,6 @@ def run_lakehouse_family(spark, sf_dir: str):
         read_delta,
         read_delta_changes,
         write_delta,
-    )
-    from portfolio_data_pipelines_spark.operators.medallion import (
-        commit_versioned,
-        compact_versioned,
-        diff_versions,
-        read_versioned,
     )
     from portfolio_data_pipelines_spark.sources.delta_feed import (
         DeltaChangeFeedDataSource,
@@ -93,21 +77,16 @@ def run_lakehouse_family(spark, sf_dir: str):
     meta: dict[str, int] = {}
     for rnd in (0, 1):  # second round = warm numbers
         root = tempfile.mkdtemp(prefix="bench_lake_")
-        dpath, lpath = f"{root}/delta", f"{root}/lake"
+        dpath = f"{root}/delta"
 
         def step(name, fn):
             t0 = time.perf_counter()
-            out = fn()
+            fn()
             timings[name] = round(time.perf_counter() - t0, 4)
-            return out
 
         step("lakehouse_delta_write", lambda: write_delta(
             spark, events, dpath, partition_col="date"))
-        v_write = step("lakehouse_lake_write", lambda: commit_versioned(
-            spark, lpath, events, partition_col="date", derive_from="date"))
         step("lakehouse_delta_read", lambda: read_delta(spark, dpath)
-             .write.format("noop").mode("overwrite").save())
-        step("lakehouse_lake_read", lambda: read_versioned(spark, lpath)
              .write.format("noop").mode("overwrite").save())
 
         def feed_backfill():
@@ -152,41 +131,16 @@ def run_lakehouse_family(spark, sf_dir: str):
         step("lakehouse_feed_backfill", feed_backfill)
         step("lakehouse_feed_fixed_overhead", feed_fixed_overhead)
         # selective read: Delta prunes files from the LOG (partition
-        # values + stats ranges) before planning; the lake twin leans
-        # on Spark's hive partition pruning at the scan
+        # values + stats ranges) before planning
         step("lakehouse_delta_skip_read", lambda: read_delta(
             spark, dpath, predicate={"date": (two_days[0], two_days[-1])})
             .filter(F.col("date").isin(two_days))
             .write.format("noop").mode("overwrite").save())
-        step("lakehouse_lake_pruned_read", lambda: read_versioned(spark, lpath)
-             .filter(F.col("date").isin(two_days))
-             .write.format("noop").mode("overwrite").save())
         step("lakehouse_delta_merge", lambda: merge_delta(
             spark, dpath, merge_src, key_cols=["event_id"]))
 
-        def lake_merge():
-            # the versioned lake's MERGE shape: anti-join the touched
-            # days' slice against the update keys, commit the merged
-            # days (day-scoped replace — the K4 upsert contract)
-            slice_ = read_versioned(spark, lpath).filter(
-                F.col("date").isin(two_days)
-            )
-            kept = slice_.join(
-                merge_src.select("event_id").distinct(), ["event_id"],
-                "left_anti",
-            )
-            merged = kept.select(*merge_src.columns).unionByName(merge_src)
-            return commit_versioned(
-                spark, lpath, merged, partition_col="date",
-                derive_from="date",
-            )
-
-        step("lakehouse_lake_merge", lake_merge)
         # Pepper the touched days with micro-appends (the streaming-sink
-        # file pattern) so OPTIMIZE has real work; the plain lake cannot
-        # append to a partition (commit = day-level REPLACE), which is
-        # itself part of what the log buys — its compaction twin below
-        # rewrites the same days from their single batch.
+        # file pattern) so OPTIMIZE has real work.
         micro = merge_src.limit(500)
         t0 = time.perf_counter()
         for _ in range(4):
@@ -198,14 +152,8 @@ def run_lakehouse_family(spark, sf_dir: str):
         step("lakehouse_delta_optimize", lambda: optimize_delta(
             spark, dpath, partitions=two_days))
         meta["files_after_optimize"] = len(_replay_log(spark, dpath, None).adds)
-        step("lakehouse_lake_compact", lambda: compact_versioned(
-            spark, lpath, partitions=two_days, partition_col="date"))
         step("lakehouse_delta_changes", lambda: read_delta_changes(
             spark, dpath, from_version=0)
-            .write.format("noop").mode("overwrite").save())
-        step("lakehouse_lake_changes", lambda: diff_versions(
-            spark, lpath, v_write, v_write + 1,
-            key_cols=["event_id"], partition_col="date")
             .write.format("noop").mode("overwrite").save())
         shutil.rmtree(root, ignore_errors=True)
     events.unpersist()
@@ -441,10 +389,10 @@ def main() -> None:
             acc["total"] += s1["total"] - s0["total"]
             acc["loadavg_max"] = max(acc["loadavg_max"], s1["loadavg1"] or 0.0)
 
-    # Lakehouse lifecycle family (Delta log vs plain versioned lake) —
-    # not a declared query (it writes tables), so benched and reported
-    # as its own family, EXCLUDED from `value` to keep the headline
-    # number comparable with earlier rounds and the recorded baseline.
+    # Lakehouse lifecycle family (Delta log) — not a declared query (it
+    # writes tables), so benched and reported as its own family, EXCLUDED
+    # from `value` to keep the headline number comparable with earlier
+    # rounds and the recorded baseline.
     lk0 = _load_sample()
     lake_timings, lake_meta = run_lakehouse_family(spark, sf_dir)
     lk1 = _load_sample()
@@ -486,10 +434,10 @@ def main() -> None:
         "families_cold": families_cold,
         "sf": sf,
         "n_queries": len(timings),
-        # lakehouse lifecycle family: Delta-log steps vs plain-lake
-        # twins, warm (second of two lifecycle rounds); excluded from
-        # `value` (it writes tables rather than running a declared
-        # query). read-amp = live files a full read touches.
+        # lakehouse lifecycle family: Delta-log steps, warm (second of
+        # two lifecycle rounds); excluded from `value` (it writes tables
+        # rather than running a declared query). read-amp = live files a
+        # full read touches.
         "lakehouse": lake_timings,
         "lakehouse_total": lakehouse_total,
         "lakehouse_read_amp": lake_meta,
@@ -535,15 +483,12 @@ def main() -> None:
             # per-step lakehouse timings (r11 verdict #9): the CDF
             # reconstruction / feed / merge steps scale differently, so
             # the driver record must carry them round-over-round, not
-            # just the family total. Delta-side steps only, compact
-            # keys (r17): the plain-lake twin steps are derivable and
-            # live in BENCH_FULL.json — dropping them here is what lets
-            # the line keep the step map, the common block AND the env
-            # block inside the driver's capture tail.
+            # just the family total. Compact keys keep the step
+            # map, the common block AND the env block inside the
+            # driver's capture tail.
             "lakehouse_steps": {
                 _step_key(k): round(v, 1)
                 for k, v in sorted(lake_timings.items())
-                if not k.startswith("lakehouse_lake_")
             },
         },
         "load": {
@@ -604,7 +549,7 @@ def main() -> None:
             line_base["excluded"]["step_delta_vs_prior"] = movers
     line = json.dumps(line_base, separators=(",", ":"))
     # Never outgrow the driver's 2000-char capture tail: shed the most
-    # derivable detail first (plain-lake twin steps → all steps →
+    # derivable detail first (step deltas → common block → all steps →
     # per-query map), everything dropped stays in BENCH_FULL.json.
     if len(line) > 1900:
         # normalized = value × load.cpu_efficiency; detail is implied

@@ -92,7 +92,9 @@ def _memo_probe(df, kind: str, probe):
     A path re-scanned after in-session appends may return the stale
     probe; the only effect is a skipped (or redundant) widen, never a
     wrong result, and callers that mutate-and-rescan can
-    ``_NUM_PARTITIONS_CACHE.clear()``."""
+    ``_NUM_PARTITIONS_CACHE.clear()``. A probe that fails returns None,
+    which is passed through but NOT memoized, so one transient py4j
+    error does not pin the failure for the rest of the session."""
     key = (
         df.sparkSession.sparkContext.applicationId,
         df.semanticHash(),
@@ -101,6 +103,8 @@ def _memo_probe(df, kind: str, probe):
     val = _NUM_PARTITIONS_CACHE.get(key)
     if val is None:
         val = probe(df)
+        if val is None:
+            return None
         while len(_NUM_PARTITIONS_CACHE) >= _NUM_PARTITIONS_CACHE_MAX:
             _NUM_PARTITIONS_CACHE.popitem(last=False)  # LRU, not clear()
         _NUM_PARTITIONS_CACHE[key] = val
@@ -119,9 +123,9 @@ def _plan_size_bytes(df) -> int:
                     .sizeInBytes())
             )
         except Exception:
-            return 0
+            return None
 
-    return _memo_probe(df, "bytes", probe)
+    return _memo_probe(df, "bytes", probe) or 0
 
 
 def ensure_min_parallelism(

@@ -2,21 +2,18 @@
 
 Spark's built-in CBO only kicks in for catalog tables that have been
 ``ANALYZE TABLE``-d; DataFrame pipelines over raw parquet get just the
-scan-level ``sizeInBytes`` heuristic, which (a) never sees the
-versioned lake's true live size (its snapshot is a union of per-batch
-scans) and (b) is all-or-nothing — there is no way to carry a stats
+scan-level ``sizeInBytes`` heuristic: all-or-nothing, carrying no stats
 judgment from ingestion time to query time. The reference has no
 optimizer at all (Polars eager + Postgres; its one join-shaped model is
 a dbt view, ``/root/reference/dbt/models/marts/weather_daily.sql``).
 
 This module closes the loop the way a warehouse catalog does:
 
-- **Collect once, at write time.** `commit_versioned` records per-day
-  (rows, bytes) into the manifest (``partition_stats``), carried
-  forward day-by-day exactly like the entries map — so the live table's
-  size is one manifest read away, no scan needed.
-- **Expose uniformly.** `TableStats` from the lake manifest
-  (`stats_for_versioned`), or from any parquet file/directory
+- **Collect once, at write time.** Every Delta ``add`` action carries
+  the file's ``size`` and a ``stats`` JSON with ``numRecords``, so the
+  live table's size is a log replay away, no data scan needed.
+- **Expose uniformly.** `TableStats` from the Delta log
+  (`stats_for_delta`), or from any parquet file/directory
   (`stats_for_parquet`: footer row counts + file lengths, driver-side,
   mtime-cached — the same probe discipline as the nanos sniffer).
 - **Decide per join, like Spark's JoinSelection.** `stats_join`
@@ -98,22 +95,6 @@ def stats_for_parquet(spark, path: str) -> TableStats:
     return stats
 
 
-def stats_for_versioned(spark, path: str) -> TableStats | None:
-    """Live-snapshot (rows, bytes) of a versioned lake from its manifest's
-    ``partition_stats`` — one small-file read, zero data I/O. None for
-    pre-stats manifests (older layouts)."""
-    from .medallion import _latest_manifest_doc
-
-    _, doc = _latest_manifest_doc(spark, path)
-    pstats = (doc or {}).get("partition_stats")
-    if not pstats:
-        return None
-    return TableStats(
-        rows=sum(s["rows"] for s in pstats.values()),
-        bytes=sum(s["bytes"] for s in pstats.values()),
-    )
-
-
 def stats_for_delta(spark, path: str) -> TableStats:
     """Live-snapshot (rows, bytes) of a Delta table from its transaction
     log alone — add actions carry ``size`` and a ``stats`` JSON with
@@ -172,7 +153,7 @@ def stats_join(
     else:
         # No side qualifies. If a build-eligible side is KNOWN oversized,
         # force the merge path: Spark's scan-level sizeInBytes can wildly
-        # understate a side (lake snapshot unions, post-explode growth)
+        # understate a side (snapshot unions, post-explode growth)
         # and would happily broadcast a 50 GB build — the one case where
         # write-time stats beat the runtime estimate. Unknown stats add
         # no hint: Spark's own heuristic stays in charge.

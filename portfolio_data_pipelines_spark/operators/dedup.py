@@ -397,6 +397,14 @@ def minhash_lsh_pairs(
     filters them — the one quadratic trap left in this operator at
     100 TB. True pairs rest on rare shingles, so on real corpora the cap
     is a pure cost bound (fixture-verified: capped == uncapped output).
+
+    Caveats: building the returned plan already runs a Spark job — the
+    LSH bucket table is materialized with an eager ``localCheckpoint``
+    when this function is CALLED, not when the result is first acted
+    on. Those checkpoint blocks live only in executor storage and carry
+    no lineage, so if an executor is lost before the result is
+    consumed, the query fails instead of recomputing them; call this
+    again to rebuild the plan.
     """
     assert num_perm % rows_per_band == 0
     n_bands = num_perm // rows_per_band

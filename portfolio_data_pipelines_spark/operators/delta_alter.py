@@ -35,7 +35,7 @@ from .delta_protocol import (
     _upgraded_protocol_with,
     _upgraded_protocol_writer_only,
 )
-from .medallion import _hadoop_fs
+from .hadoop_io import _hadoop_fs
 
 
 class _DeltaLogProxy:

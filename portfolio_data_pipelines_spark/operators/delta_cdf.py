@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .delta_protocol import _PROTOCOL_ACTION, _check_writer_protocol
-from .medallion import _hadoop_fs
+from .hadoop_io import _hadoop_fs
 
 
 class _DeltaLogProxy:
@@ -404,9 +404,8 @@ def read_delta_cdf(
 
     ``key_cols`` must uniquely identify a row within the touched files
     of each snapshot side (the MERGE contract); duplicate keys make
-    image pairing ambiguous — the same contract as
-    ``medallion.diff_versions``, whose value-level diff this matches
-    commit-by-commit (pinned in tests).
+    image pairing ambiguous. Each commit's feed equals the keyed
+    value-level diff of its two adjacent snapshots (pinned in tests).
 
     WRITE-SIDE cdc files are preferred: a commit carrying ``cdc``
     actions (written by this repo's rewrite commits once

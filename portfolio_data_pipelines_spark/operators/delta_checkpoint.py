@@ -24,7 +24,7 @@ import uuid
 from pyspark.sql import SparkSession
 
 from .delta_protocol import _PROTOCOL_ACTION
-from .medallion import _hadoop_fs, _local_path, _write_small_file
+from .hadoop_io import _hadoop_fs, _local_path, _write_small_file
 
 #: Parquet checkpoint cadence, mirroring delta-spark's default.
 DELTA_CHECKPOINT_EVERY = 10

@@ -27,7 +27,7 @@ from .delta_protocol import (
     _iceberg_compat_version,
     _upgraded_protocol_for_dv,
 )
-from .medallion import _hadoop_fs
+from .hadoop_io import _hadoop_fs
 
 #: Deleted-position sets at or below this total broadcast to the DV
 #: anti-join (a few million longs ≈ tens of MB); above, the join

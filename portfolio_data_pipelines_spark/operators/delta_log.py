@@ -7,9 +7,9 @@ NDJSON commit files (one action object per line) — ``protocol``,
 referenced by ``_last_checkpoint``. No Delta package is needed to
 produce or consume it; this module implements the format directly so
 tables written here are readable by any standard Delta reader (
-delta-spark, delta-rs, DuckDB delta, Trino), and the homegrown
-versioned lake (``operators/medallion.py``) can be exported IN PLACE as
-a valid Delta table with one metadata-only pass.
+delta-spark, delta-rs, DuckDB delta, Trino), and a plain parquet
+directory converts IN PLACE with one metadata-only commit
+(``convert_parquet_to_delta``).
 
 Reference behavior: the reference repo's roadmap names Delta/MERGE
 (``README.md:204,209``) but ships none; this is the driver-mandated
@@ -130,7 +130,6 @@ from .delta_maintain import (  # noqa: F401  (re-exported surface)
     describe_history,
     drop_table_feature,
     enable_clustering,
-    export_versioned_as_delta,
     get_domain_metadata,
     optimize_delta,
     purge_delta,
@@ -178,7 +177,7 @@ from .delta_protocol import (  # noqa: F401  (re-exported surface)
     _warn_on_versioned_collations,
 )
 
-from .medallion import _hadoop_fs, _local_path, _write_small_file
+from .hadoop_io import _hadoop_fs, _local_path, _write_small_file
 
 
 
@@ -303,8 +302,7 @@ def _list_log_versions(fs, jvm, path: str) -> list[int]:
     start at ``_last_checkpoint`` (when present) and probe forward with
     existence checks until the first gap — versions are contiguous by
     construction (each is claimed by exclusive create), so reads cost
-    O(tail since checkpoint) small RPCs at any table age, matching the
-    medallion lake's probe pattern (``medallion._tail_versions``)."""
+    O(tail since checkpoint) small RPCs at any table age."""
     lp = _local_path(path)
     if lp is not None:
         if not os.path.isdir(f"{lp}/_delta_log"):
@@ -371,7 +369,7 @@ def _all_commit_versions(fs, jvm, path: str) -> list[int]:
 
 
 def _read_text(fs, jvm, path_str: str) -> str:
-    # Local fast path (medallion._local_path): the Hadoop route below
+    # Local fast path (hadoop_io._local_path): the Hadoop route below
     # costs one py4j round trip PER LINE — a multi-add commit file is
     # hundreds of round trips where open().read() is none.
     lp = _local_path(path_str)

@@ -8,8 +8,8 @@ hygiene (``drop_table_feature``), rollback (``restore_delta``),
 introspection (``describe_detail`` / ``describe_history``), physical
 reclamation (``vacuum_delta`` for data + DV files, ``cleanup_log`` for
 the metadata tail), the domain-metadata channel and the liquid
-clustering state it powers, and the two one-shot in-place converters
-(``convert_parquet_to_delta``, ``export_versioned_as_delta``).
+clustering state it powers, and the one-shot in-place converter
+(``convert_parquet_to_delta``).
 
 Public names are re-exported by ``operators.delta_log``; every
 delta_log internal is reached through the lazy ``dl`` proxy below so
@@ -37,7 +37,7 @@ from .delta_protocol import (
     _downgraded_protocol,
     _upgraded_protocol_writer_only,
 )
-from .medallion import _hadoop_fs
+from .hadoop_io import _hadoop_fs
 
 if TYPE_CHECKING:  # pragma: no cover - type-only, avoids a load-time cycle
     from .delta_log import LogState
@@ -1098,73 +1098,6 @@ def convert_parquet_to_delta(
         ),
         _PROTOCOL_ACTION,
         dl._metadata_action(df, pcols),
-    ]
-    actions.extend(adds)
-    dl._write_commit(fs, jvm, path, 0, actions)
-    return 0
-
-
-def export_versioned_as_delta(
-    spark: SparkSession, path: str, partition_col: str = "date"
-) -> int:
-    """Export the homegrown versioned lake at ``path`` as a Delta table
-    IN PLACE: one metadata-only pass writes ``_delta_log/`` referencing
-    the lake's existing ``_batch_*/{col}={v}/*.parquet`` files (Delta
-    add paths may point into subdirectories), so any standard Delta
-    reader can open the lake without copying a byte of data. Returns
-    the Delta version written (0).
-
-    The export snapshots the CURRENT lake manifest; re-running after
-    further lake commits raises (the log is append-only — use
-    ``write_delta`` for subsequent Delta-native commits, or re-export
-    to a fresh directory)."""
-    from .medallion import _latest_manifest_doc
-
-    version, doc = _latest_manifest_doc(spark, path)
-    if doc is None:
-        raise FileNotFoundError(f"no versioned-lake manifest under {path}")
-    fs, _, jvm = _hadoop_fs(spark, path)
-    if dl._list_log_versions(fs, jvm, path):
-        raise ValueError(f"{path} already has a _delta_log; export is one-shot")
-    entries: dict[str, str] = doc["entries"]
-    pcol = doc.get("partition_col", partition_col)
-    adds = []
-    now = dl._now_ms()
-    for day, batch_dir in sorted(entries.items()):
-        leaf = f"{batch_dir}/{pcol}={day}"
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{path}/{leaf}")):
-            if not st.getPath().getName().endswith(".parquet"):
-                continue
-            adds.append(
-                {
-                    "add": {
-                        "path": dl._encode_path(f"{leaf}/{st.getPath().getName()}"),
-                        "partitionValues": {pcol: day},
-                        "size": st.getLen(),
-                        "modificationTime": now,
-                        "dataChange": True,
-                    }
-                }
-            )
-    if not adds:
-        raise ValueError(f"versioned lake under {path} lists no data files")
-    # schema = the WIDEST file schema across batch dirs (the lake allows
-    # additive evolution) + the partition column from directory names
-    one_leaf_per_batch: dict[str, str] = {}
-    for day, batch_dir in sorted(entries.items()):
-        one_leaf_per_batch.setdefault(batch_dir, f"{batch_dir}/{pcol}={day}")
-    full = None
-    for batch_dir, leaf in sorted(one_leaf_per_batch.items()):
-        p = spark.read.option("basePath", f"{path}/{batch_dir}").parquet(
-            f"{path}/{leaf}"
-        )
-        full = p if full is None else full.unionByName(
-            p, allowMissingColumns=True
-        )
-    actions = [
-        dl._commit_info("CONVERT", {"sourceFormat": "versioned-lake"}),
-        _PROTOCOL_ACTION,
-        dl._metadata_action(full, [pcol]),
     ]
     actions.extend(adds)
     dl._write_commit(fs, jvm, path, 0, actions)

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .delta_protocol import _check_append_only, _check_writer_protocol
-from .medallion import _hadoop_fs
+from .hadoop_io import _hadoop_fs
 
 
 class _DeltaLogProxy:

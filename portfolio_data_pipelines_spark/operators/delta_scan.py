@@ -29,7 +29,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .medallion import _hadoop_fs
+from .hadoop_io import _hadoop_fs
 
 
 class _DeltaLogProxy:
@@ -660,9 +660,9 @@ def read_delta_changes(
     ``_commit_version``.
 
     Rows removed by overwrites/merges are not emitted (this is the
-    append feed, not a full CDF with preimages — the versioned lake's
-    ``diff_versions`` computes value-level diffs when those are
-    needed). Cost: the log tail plus a scan of ONLY the new files."""
+    append feed, not a full CDF with preimages — ``read_delta_cdf``
+    computes value-level diffs when those are needed). Cost: the log
+    tail plus a scan of ONLY the new files."""
     fs, _, jvm = _hadoop_fs(spark, path)
     versions = dl._list_log_versions(fs, jvm, path)
     if not versions:

@@ -33,8 +33,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import datetime as _dt
-import os
 import re
 from collections.abc import Sequence
 
@@ -339,682 +337,3 @@ def compact_partition(
     return sum(
         1 for f in fs.listStatus(p) if f.getPath().getName().endswith(".parquet")
     )
-
-
-# ---------------------------------------------------------------------------
-# Versioned (manifest-swap) atomic commits
-# ---------------------------------------------------------------------------
-#
-# Dynamic partition overwrite on plain parquet is last-writer-wins per
-# partition: a reader can observe HALF of a multi-day batch (SURVEY §4
-# "hard parts" #1; the reference avoids this only because one Postgres txn
-# spans its whole batch, weather_hourly_pipeline.py:101-112). The versioned
-# lake closes the gap without Delta/Iceberg dependencies by separating data
-# placement from commit:
-#
-# - each batch writes its partitions under an immutable `_batch_NNNNNN/`
-#   subdirectory (never touching prior data);
-# - the commit point is the creation of ONE numbered manifest file
-#   `_manifest_vNNNNNN.json` mapping partition value → batch directory
-#   (new days layered over the previous manifest's entries);
-# - readers resolve the highest manifest version and read exactly the
-#   (partition → directory) pairs it lists.
-#
-# Atomicity follows from single-file visibility: a manifest either exists
-# or it doesn't, so a reader sees the whole batch or none of it — the same
-# design as Delta's _delta_log commit files. `create(overwrite=False)` is
-# the mutual-exclusion primitive: two concurrent committers racing for the
-# same version number — one wins, the loser gets ConcurrentCommitError and
-# retries on top of the winner's manifest. Replaced partition data stays on
-# disk (old manifests keep working — snapshot isolation for in-flight
-# readers) until `vacuum_versioned` reclaims it.
-
-_MANIFEST_RE = re.compile(r"_manifest_v(\d{6})\.json$")
-_CHECKPOINT_RE = re.compile(r"_checkpoint_v(\d{6})\.json$")
-
-#: Write a rolled-up checkpoint every N commits. Without it, finding the
-#: latest manifest is an O(versions) directory listing and a time-travel
-#: read is O(versions) manifest reads — at one commit/hour that is 8,760
-#: round trips per year per read. With it (Delta's ``_last_checkpoint``
-#: design), any read touches ≤ 1 pointer + 1 checkpoint + N tail
-#: manifests, independent of table age.
-CHECKPOINT_EVERY = 10
-
-#: Test/ops instrumentation: small-file round-trips per category. Reset
-#: and read by tests to pin the O(1)-reads-per-lookup property; never on
-#: the data path.
-IO_STATS = {"manifest_reads": 0, "lists": 0}
-
-
-class ConcurrentCommitError(RuntimeError):
-    """Another committer claimed this manifest version first — reload the
-    latest manifest and retry the commit on top of it."""
-
-
-def _hadoop_fs(spark, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
-
-
-#: Memo for :func:`_default_fs_is_local` — fs.defaultFS is fixed for the
-#: JVM's lifetime, so one py4j probe answers for every later call.
-_DEFAULT_FS_LOCAL: bool | None = None
-
-
-def _default_fs_is_local() -> bool:
-    """True iff the Hadoop ``fs.defaultFS`` this session resolves
-    scheme-less paths against is the LOCAL filesystem. On a cluster
-    (defaultFS hdfs://...) a bare ``/warehouse/tbl`` names an HDFS
-    path, so the direct-Python fast paths must stand down (r16 ADVICE:
-    taking them would read an existing table as empty and commit to
-    the driver's local disk). With no session yet there is no Hadoop
-    conf to consult — no Hadoop I/O can be in flight either, so local
-    is the right (uncached) answer."""
-    global _DEFAULT_FS_LOCAL
-    if _DEFAULT_FS_LOCAL is None:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            return True
-        try:
-            scheme = str(
-                spark._jsc.hadoopConfiguration().get(
-                    "fs.defaultFS", "file:///"
-                )
-            )
-        except Exception:
-            return True
-        _DEFAULT_FS_LOCAL = scheme.startswith("file:")
-    return _DEFAULT_FS_LOCAL
-
-
-def _local_path(path_str: str) -> str | None:
-    """POSIX path when ``path_str`` is local (bare absolute path under a
-    file-scheme ``fs.defaultFS``, or a ``file:`` URI with no foreign
-    authority), else None.
-
-    Gate for the direct-Python fast paths on driver METADATA I/O
-    (manifest/log reads, existence probes, staging renames): each
-    Hadoop-FS call from Python is a py4j round trip — a replay of a
-    20-commit log through ``fs.open`` + per-line ``readLine`` costs
-    hundreds of round trips (~0.5 ms each) where one ``open().read()``
-    costs none (measured ~0.3-0.5 s per Delta lifecycle query at
-    sf0.1, guide §5: the driver should do almost no [slow] work). On
-    any non-local scheme (s3a/hdfs/abfs), on bare paths when
-    ``fs.defaultFS`` is remote (cluster deployments — r16 ADVICE), and
-    on ``file://host/...`` URIs naming a foreign authority, callers
-    fall through to the Hadoop FS exactly as before — semantics, not
-    just results, are unchanged: local ``open(..., 'x')`` is atomic
-    create-if-absent (stronger than RawLocalFileSystem's
-    check-then-act)."""
-    if path_str.startswith("/"):
-        return path_str if _default_fs_is_local() else None
-    if path_str.startswith("file:"):
-        rest = path_str[5:]
-        if rest.startswith("//"):
-            # file://AUTHORITY/path — only the local authorities map to
-            # this host's filesystem; anything else is a remote mount
-            authority, _, tail = rest[2:].partition("/")
-            if authority not in ("", "localhost"):
-                return None
-            return "/" + tail
-        return rest if rest.startswith("/") else None
-    return None
-
-
-def _parse_iso_ts(ts: str) -> _dt.datetime:
-    """Parse an ISO-8601 timestamp (``Z`` suffix accepted) into an
-    aware UTC datetime; naive inputs are taken as UTC."""
-    parsed = _dt.datetime.fromisoformat(ts.replace("Z", "+00:00"))
-    if parsed.tzinfo is None:
-        parsed = parsed.replace(tzinfo=_dt.timezone.utc)
-    return parsed.astimezone(_dt.timezone.utc)
-
-
-def _read_manifest_file(fs, jvm, manifest_path) -> dict:
-    import json
-
-    IO_STATS["manifest_reads"] += 1
-    path_str = (
-        manifest_path if isinstance(manifest_path, str)
-        else manifest_path.toString()
-    )
-    lp = _local_path(path_str)
-    if lp is not None:
-        with open(lp, encoding="utf-8") as f:
-            return json.load(f)
-    # one buffered transfer (r16 verdict #7): the per-line readLine
-    # loop paid a py4j round trip per manifest line on remote schemes
-    stream = fs.open(jvm.org.apache.hadoop.fs.Path(path_str))
-    try:
-        data = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-    finally:
-        stream.close()
-    return json.loads(bytes(data).decode("utf-8"))
-
-
-def _write_small_file(fs, jvm, path_str: str, text: str, overwrite: bool):
-    lp = _local_path(path_str)
-    if lp is not None:
-        # Hadoop's create() makes parent dirs; 'x' is the atomic
-        # create-if-absent the exclusive-commit callers rely on.
-        os.makedirs(os.path.dirname(lp), exist_ok=True)
-        with open(lp, "wb" if overwrite else "xb") as f:
-            f.write(text.encode("utf-8"))
-        return
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(path_str), overwrite)
-    out.write(bytearray(text.encode("utf-8")))
-    out.close()
-
-
-def _mpath(jvm, path: str, version: int):
-    return jvm.org.apache.hadoop.fs.Path(f"{path}/_manifest_v{version:06d}.json")
-
-
-def _read_last_checkpoint(fs, jvm, path: str) -> dict | None:
-    """The ``_last_checkpoint`` pointer ({"version": N}), or None on a
-    pre-checkpoint layout (old lake, or fewer than CHECKPOINT_EVERY
-    commits and never vacuumed)."""
-    ps = f"{path}/_last_checkpoint"
-    lp = _local_path(ps)
-    if lp is not None:
-        if not os.path.exists(lp):
-            return None
-        return _read_manifest_file(fs, jvm, ps)
-    p = jvm.org.apache.hadoop.fs.Path(ps)
-    if not fs.exists(p):
-        return None
-    return _read_manifest_file(fs, jvm, p)
-
-
-def _tail_versions(fs, jvm, path: str, start: int) -> list[int]:
-    """Manifest versions strictly after ``start``. Commits are claimed
-    by sequential create-exclusive manifests and vacuum re-checkpoints
-    at the latest version, so the tail beyond a checkpoint is
-    contiguous. Local tables probe forward (os.path.exists is ~free);
-    remote schemes take ONE directory listing instead of one fs.exists
-    RPC per version (r16 verdict #7)."""
-    out, v = [], start + 1
-    lp = _local_path(path)
-    if lp is not None:
-        while os.path.exists(f"{lp}/_manifest_v{v:06d}.json"):
-            out.append(v)
-            v += 1
-        return out
-    IO_STATS["lists"] += 1
-    present = set()
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(path)):
-        name = st.getPath().getName()
-        if (
-            len(name) == 22
-            and name.startswith("_manifest_v")
-            and name.endswith(".json")
-            and name[11:17].isdigit()
-        ):
-            present.add(int(name[11:17]))
-    while v in present:
-        out.append(v)
-        v += 1
-    return out
-
-
-def write_checkpoint(spark, path: str, version: int) -> None:
-    """Roll up commit metadata through ``version`` into
-    ``_checkpoint_v{version}.json`` ({"version", "commit_times"}) and
-    repoint ``_last_checkpoint`` at it — Delta's checkpoint design, JSON
-    instead of parquet because the index is O(versions) tiny rows.
-
-    Cost is amortized: builds on the previous checkpoint plus the ≤N
-    manifests committed since, so each commit pays O(1) small-file I/O
-    on average no matter how old the table is."""
-    import json
-
-    fs, _, jvm = _hadoop_fs(spark, path)
-    times: dict[int, str | None] = {}
-    lc = _read_last_checkpoint(fs, jvm, path)
-    start = 0
-    if lc is not None:
-        cp = jvm.org.apache.hadoop.fs.Path(
-            f"{path}/_checkpoint_v{lc['version']:06d}.json"
-        )
-        if fs.exists(cp):
-            doc = _read_manifest_file(fs, jvm, cp)
-            times = {int(k): v for k, v in doc["commit_times"].items()}
-            start = lc["version"]
-    for v in range(start + 1, version + 1):
-        mp = _mpath(jvm, path, v)
-        if fs.exists(mp):
-            times[v] = _read_manifest_file(fs, jvm, mp).get("committed_at")
-    doc = json.dumps(
-        {
-            "version": version,
-            "commit_times": {str(v): t for v, t in sorted(times.items())},
-        },
-        sort_keys=True,
-    )
-    _write_small_file(
-        fs, jvm, f"{path}/_checkpoint_v{version:06d}.json", doc, overwrite=True
-    )
-    _write_small_file(
-        fs, jvm, f"{path}/_last_checkpoint",
-        json.dumps({"version": version}), overwrite=True,
-    )
-
-
-def _latest_manifest(spark, path: str) -> tuple[int, dict]:
-    version, doc = _latest_manifest_doc(spark, path)
-    return version, (doc or {}).get("entries", {})
-
-
-def _latest_manifest_doc(spark, path: str) -> tuple[int, dict | None]:
-    """(version, manifest doc) of the highest-numbered manifest under
-    ``path``; (0, None) for an empty/uncommitted lake.
-
-    Checkpointed lakes resolve in O(1): one ``_last_checkpoint`` read +
-    forward existence probes over the ≤CHECKPOINT_EVERY tail + one
-    manifest read — never a directory listing. Pre-checkpoint layouts
-    fall back to the O(versions) listing."""
-    fs, root, jvm = _hadoop_fs(spark, path)
-    if not fs.exists(root):
-        return 0, None
-    lc = _read_last_checkpoint(fs, jvm, path)
-    if lc is not None:
-        tail = _tail_versions(fs, jvm, path, lc["version"])
-        best = tail[-1] if tail else lc["version"]
-        if best == 0:
-            return 0, None
-        return best, _read_manifest_file(fs, jvm, _mpath(jvm, path, best))
-    IO_STATS["lists"] += 1
-    best, best_path = 0, None
-    for st in fs.listStatus(root):
-        m = _MANIFEST_RE.match(st.getPath().getName())
-        if m and int(m.group(1)) > best:
-            best, best_path = int(m.group(1)), st.getPath()
-    if best_path is None:
-        return 0, None
-    return best, _read_manifest_file(fs, jvm, best_path)
-
-
-def _manifest_at(spark, path: str, version: int) -> tuple[int, dict]:
-    """Read a SPECIFIC manifest version — snapshot time travel. Raises
-    FileNotFoundError if that manifest never existed or was vacuumed."""
-    fs, _, jvm = _hadoop_fs(spark, path)
-    mp = jvm.org.apache.hadoop.fs.Path(f"{path}/_manifest_v{version:06d}.json")
-    if not fs.exists(mp):
-        raise FileNotFoundError(
-            f"no manifest v{version} under {path} (never committed, or vacuumed)"
-        )
-    return version, _read_manifest_file(fs, jvm, mp)["entries"]
-
-
-def _manifest_asof(spark, path: str, ts: str) -> tuple[int, dict]:
-    """Highest retained manifest committed at or before ISO timestamp
-    ``ts`` — Delta's ``timestampAsOf``. Manifests are tiny JSON files,
-    so reading every retained one is a handful of driver-side round
-    trips (a catalog would index commit times). Pre-``committed_at``
-    manifests (older layouts) count as arbitrarily old.
-
-    Both sides are parsed as real datetimes (``Z`` normalized to
-    ``+00:00``) rather than compared lexicographically — a caller ts of
-    ``...T12:00:00Z`` with no fractional part would otherwise sort
-    *after* ``...T12:00:00.999999Z`` ('.' < 'Z') and non-UTC offsets
-    would silently misorder."""
-    cutoff = _parse_iso_ts(ts)
-    fs, root, jvm = _hadoop_fs(spark, path)
-    if not fs.exists(root):
-        raise FileNotFoundError(f"no committed manifest under {path}")
-
-    def _is_before(committed: str | None) -> bool:
-        if not committed:
-            return True  # pre-committed_at layouts count as arbitrarily old
-        return _parse_iso_ts(committed) <= cutoff
-
-    lc = _read_last_checkpoint(fs, jvm, path)
-    if lc is not None:
-        # Checkpointed path: the rolled-up commit-time index + the ≤N
-        # tail manifests — O(1) reads regardless of table age.
-        cp = jvm.org.apache.hadoop.fs.Path(
-            f"{path}/_checkpoint_v{lc['version']:06d}.json"
-        )
-        times: dict[int, str | None] = {}
-        if fs.exists(cp):
-            doc = _read_manifest_file(fs, jvm, cp)
-            times = {int(k): v for k, v in doc["commit_times"].items()}
-        tail_docs: dict[int, dict] = {}
-        for v in _tail_versions(fs, jvm, path, lc["version"]):
-            tail_docs[v] = _read_manifest_file(fs, jvm, _mpath(jvm, path, v))
-            times[v] = tail_docs[v].get("committed_at")
-        cands = [v for v, t in times.items() if _is_before(t)]
-        if not cands:
-            raise FileNotFoundError(
-                f"no manifest under {path} committed at or before {ts} "
-                "(too early, or that history was vacuumed)"
-            )
-        best = max(cands)
-        if best in tail_docs:
-            return best, tail_docs[best]["entries"]
-        mp = _mpath(jvm, path, best)
-        if not fs.exists(mp):
-            raise FileNotFoundError(
-                f"manifest v{best} under {path} was vacuumed — as-of {ts} "
-                "is outside the retention window"
-            )
-        return best, _read_manifest_file(fs, jvm, mp)["entries"]
-
-    IO_STATS["lists"] += 1
-    best, best_doc = 0, None
-    for st in fs.listStatus(root):
-        m = _MANIFEST_RE.match(st.getPath().getName())
-        if not m:
-            continue
-        doc = _read_manifest_file(fs, jvm, st.getPath())
-        if _is_before(doc.get("committed_at")) and int(m.group(1)) > best:
-            best, best_doc = int(m.group(1)), doc
-    if best_doc is None:
-        raise FileNotFoundError(
-            f"no manifest under {path} committed at or before {ts} "
-            "(too early, or that history was vacuumed)"
-        )
-    return best, best_doc["entries"]
-
-
-def commit_versioned(
-    spark,
-    path: str,
-    df: DataFrame,
-    partition_col: str = "date",
-    derive_from: str = "time",
-) -> int:
-    """Atomically commit a (possibly multi-partition) batch to the
-    versioned lake at ``path``; returns the committed version number.
-
-    The batch's days become visible to readers all at once when the
-    manifest file lands — a reader concurrent with the commit sees
-    either the previous manifest (no new days, old content for replaced
-    days) or the new one (the full batch), never a partial rewrite.
-
-    Scale: the data write is the same partitioned parquet write as the
-    bronze sink; the commit adds one directory listing + one small JSON
-    file. Manifest size is O(live partitions) — fine for date-grained
-    partitioning (decades ≈ 10⁴ entries); for finer grains, compact the
-    entry map into per-batch partition *lists* the way Iceberg manifests
-    do.
-    """
-    import json
-
-    if partition_col not in df.columns:
-        df = df.withColumn(partition_col, F.to_date(F.col(derive_from)))
-    version, prev_doc = _latest_manifest_doc(spark, path)
-    entries = (prev_doc or {}).get("entries", {})
-    new_version = version + 1
-    batch_dir = f"_batch_{new_version:06d}"
-    (
-        df.repartition(partition_col)
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy(partition_col)
-        .parquet(f"{path}/{batch_dir}")
-    )
-    fs, _, jvm = _hadoop_fs(spark, path)
-    batch_path = jvm.org.apache.hadoop.fs.Path(f"{path}/{batch_dir}")
-    day_bytes: dict[str, int] = {}
-    for st in fs.listStatus(batch_path):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(f"{partition_col}="):
-            day_bytes[name.split("=", 1)[1]] = sum(
-                f.getLen() for f in fs.listStatus(st.getPath()) if f.isFile()
-            )
-    days = list(day_bytes)
-    # Per-day row counts for the manifest's partition_stats: a
-    # metadata-only count over the just-written batch (parquet count
-    # pushdown — footer reads, no data pages). This is the collect-once
-    # moment the mini-CBO (operators/cbo.py) feeds on at query time.
-    day_rows = {
-        r["d"]: r["cnt"]
-        for r in spark.read.parquet(f"{path}/{batch_dir}")
-        .groupBy(F.col(partition_col).cast("string").alias("d"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    new_entries = {**entries, **{d: batch_dir for d in days}}
-    prev_pstats = (prev_doc or {}).get("partition_stats", {})
-    new_pstats = {
-        **{d: s for d, s in prev_pstats.items() if d in new_entries},
-        **{
-            d: {"rows": int(day_rows.get(d, 0)), "bytes": day_bytes[d]}
-            for d in days
-        },
-    }
-    manifest = json.dumps(
-        {
-            "version": new_version,
-            "partition_col": partition_col,
-            "entries": new_entries,
-            # Day-granular (rows, bytes), carried forward like entries —
-            # the live table's size is one manifest read away.
-            "partition_stats": new_pstats,
-            # UTC commit time enables timestampAsOf reads (_manifest_asof).
-            "committed_at": _dt.datetime.now(_dt.timezone.utc).strftime(
-                "%Y-%m-%dT%H:%M:%S.%fZ"
-            ),
-        },
-        sort_keys=True,
-    )
-    try:
-        # overwrite=False: the exclusive create IS the version claim
-        _write_small_file(
-            fs, jvm, f"{path}/_manifest_v{new_version:06d}.json",
-            manifest, overwrite=False,
-        )
-    except Exception as exc:  # FileAlreadyExists → a racer claimed this version
-        raise ConcurrentCommitError(
-            f"manifest v{new_version} already exists under {path}"
-        ) from exc
-    if new_version % CHECKPOINT_EVERY == 0:
-        write_checkpoint(spark, path, new_version)
-    return new_version
-
-
-def read_versioned(
-    spark,
-    path: str,
-    partition_col: str = "date",
-    version: int | None = None,
-    as_of: str | None = None,
-) -> DataFrame:
-    """Read the versioned lake at its latest committed snapshot, at a
-    pinned ``version``, or ``as_of`` an ISO-8601 UTC timestamp (the
-    highest manifest committed at or before it — Delta ``timestampAsOf``
-    / Iceberg ``snapshot-as-of``); time travel works over retained
-    manifests.
-
-    Resolves the manifest and reads exactly the partition directories it
-    lists — uncommitted batch directories (a writer's in-flight or
-    crashed data placement) are invisible by construction. One parquet
-    read per referenced batch directory (explicit leaf paths + basePath,
-    so the partition column survives), unioned.
-
-    Schema evolution: batches are allowed to ADD columns over time. The
-    union across batch directories merges schemas by name
-    (``allowMissingColumns``), so rows from pre-evolution batches carry
-    nulls in the new columns — the Delta/Iceberg widening behavior. A
-    snapshot read at an old version reproduces that version's schema
-    exactly (the new column does not exist there). Column drops/renames
-    are not supported — model them as adds, as the lakehouse formats do.
-    """
-    if version is not None and as_of is not None:
-        raise ValueError("pass either version or as_of, not both")
-    if version is not None:
-        version, entries = _manifest_at(spark, path, version)
-    elif as_of is not None:
-        version, entries = _manifest_asof(spark, path, as_of)
-    else:
-        version, entries = _latest_manifest(spark, path)
-    if not entries:
-        raise FileNotFoundError(f"no committed manifest under {path}")
-    by_dir: dict[str, list[str]] = {}
-    for day, d in entries.items():
-        by_dir.setdefault(d, []).append(day)
-    parts = []
-    for d, days in sorted(by_dir.items()):
-        base = f"{path}/{d}"
-        leaves = [f"{base}/{partition_col}={day}" for day in sorted(days)]
-        parts.append(spark.read.option("basePath", base).parquet(*leaves))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
-
-
-def compact_versioned(
-    spark,
-    path: str,
-    partitions: Sequence[str] | None = None,
-    partition_col: str = "date",
-) -> int:
-    """OPTIMIZE for the versioned lake: rewrite the given partition
-    values (default: every live partition) of the LATEST snapshot into
-    one fresh batch — one file per partition after the commit's
-    per-partition repartition — and commit it, so readers atomically
-    flip from many small files to the compacted layout. Old batches
-    stay until :func:`vacuum_versioned` (snapshot isolation, as with
-    every commit). Returns the committed version.
-
-    The Delta/Iceberg OPTIMIZE cost model: one read + one write of just
-    the compacted partitions, amortized over every later scan; at 100 TB
-    this runs per closed partition behind the ingestion watermark, and
-    untouched partitions are neither read nor rewritten."""
-    snap = read_versioned(spark, path, partition_col=partition_col)
-    if partitions is not None:
-        values = [str(v) for v in partitions]
-        # Validate against the manifest's live-partition keys driver-side
-        # (no extra Spark action) — a take(1) here would execute the full
-        # filtered read once and the write would recompute it, doubling
-        # the documented one-read-one-write cost.
-        _, entries = _latest_manifest(spark, path)
-        missing = sorted(set(values) - set(entries))
-        if missing:
-            raise ValueError(f"no rows in partitions {missing} under {path}")
-        snap = snap.filter(F.col(partition_col).cast("string").isin(values))
-    return commit_versioned(spark, path, snap, partition_col=partition_col)
-
-
-def diff_versions(
-    spark,
-    path: str,
-    from_version: int,
-    to_version: int,
-    key_cols: Sequence[str],
-    partition_col: str = "date",
-) -> DataFrame:
-    """Row-level change feed between two retained snapshots — Delta
-    CDF-lite: ``_change_type`` ∈ insert | update | delete per key, with
-    the post-image columns (nulls for deletes).
-
-    Change detection is a full-outer key join of the two snapshots
-    comparing a sha2 over the canonical JSON of all non-key columns
-    (column set aligned by name first, so ADD-column evolution between
-    the versions reads as an update only when values actually differ —
-    a null-filled new column on both sides hashes equal).
-
-    Scale: one key shuffle per snapshot side, nothing else; at 100 TB
-    pair this with partition pruning (filter both snapshots to the days
-    a consumer cares about) — the join then carries only those days.
-    The retention caveat is Delta's too: both versions must still be
-    retained (vacuum removes the history this reads)."""
-    keys = list(key_cols)
-    old = read_versioned(spark, path, partition_col=partition_col, version=from_version)
-    new = read_versioned(spark, path, partition_col=partition_col, version=to_version)
-    all_cols = list(dict.fromkeys(old.columns + new.columns))  # stable order
-    val_cols = [c for c in all_cols if c not in keys]
-
-    def aligned(df: DataFrame) -> DataFrame:
-        source = {**{c: old.schema[c].dataType for c in old.columns},
-                  **{c: new.schema[c].dataType for c in new.columns}}
-        cols = [
-            (F.col(c) if c in df.columns else F.lit(None).cast(source[c])).alias(c)
-            for c in all_cols
-        ]
-        return df.select(*cols)
-
-    def hashed(df: DataFrame, tag: str) -> DataFrame:
-        h = F.sha2(F.to_json(F.struct(*[F.col(c) for c in val_cols])), 256)
-        return aligned(df).select(*keys, h.alias(f"_h_{tag}"),
-                                  *[F.col(c).alias(f"_{tag}_{c}") for c in val_cols])
-
-    o, n = hashed(old, "old"), hashed(new, "new")
-    joined = o.join(n, keys, "full_outer")
-    change = (
-        F.when(F.col("_h_old").isNull(), F.lit("insert"))
-        .when(F.col("_h_new").isNull(), F.lit("delete"))
-        .when(F.col("_h_old") != F.col("_h_new"), F.lit("update"))
-    )
-    return (
-        joined.withColumn("_change_type", change)
-        .filter(F.col("_change_type").isNotNull())
-        .select(
-            *keys,
-            "_change_type",
-            *[F.col(f"_new_{c}").alias(c) for c in val_cols],
-        )
-    )
-
-
-def vacuum_versioned(
-    spark, path: str, retain_hours: float | None = None, now: str | None = None
-) -> list[str]:
-    """Delete history outside the retention window; returns what was
-    removed. With ``retain_hours=None`` (the default, the original
-    behavior) only the latest snapshot survives; with a window, every
-    manifest whose ``committed_at`` falls inside ``[now - retain_hours,
-    now]`` is retained — time-travel reads (``version=`` / ``as_of=``)
-    inside the window keep working after the vacuum, outside it they
-    raise loudly (Delta VACUUM + ``delta.logRetentionDuration``
-    semantics in one knob). ``now`` is injectable for tests.
-
-    A batch directory is reclaimed only when NO retained manifest
-    references it; an in-flight committer's data dir (version above the
-    newest manifest) is never touched. After deleting, the lake is
-    re-checkpointed at the latest version so the checkpoint's forward
-    probes never cross a vacuumed hole and the commit-time index drops
-    vacuumed versions."""
-    version, latest_doc = _latest_manifest_doc(spark, path)
-    if version == 0:
-        return []
-    fs, root, jvm = _hadoop_fs(spark, path)
-    cutoff = None
-    if retain_hours is not None:
-        now_dt = _parse_iso_ts(now) if now else _dt.datetime.now(_dt.timezone.utc)
-        cutoff = now_dt - _dt.timedelta(hours=retain_hours)
-    IO_STATS["lists"] += 1
-    listing = list(fs.listStatus(root))
-    retained_docs = {version: latest_doc}
-    for st in listing:
-        mm = _MANIFEST_RE.match(st.getPath().getName())
-        if not mm or int(mm.group(1)) == version:
-            continue
-        if cutoff is not None:
-            doc = _read_manifest_file(fs, jvm, st.getPath())
-            committed = doc.get("committed_at")
-            if committed and _parse_iso_ts(committed) >= cutoff:
-                retained_docs[int(mm.group(1))] = doc
-    live = {d for doc in retained_docs.values() for d in doc["entries"].values()}
-    removed = []
-    for st in listing:
-        name = st.getPath().getName()
-        bm = re.fullmatch(r"_batch_(\d{6})", name)
-        mm = _MANIFEST_RE.match(name)
-        cm = _CHECKPOINT_RE.match(name)
-        if bm and int(bm.group(1)) < version and name not in live:
-            fs.delete(st.getPath(), True)
-            removed.append(name)
-        elif mm and int(mm.group(1)) < version and int(mm.group(1)) not in retained_docs:
-            fs.delete(st.getPath(), False)
-            removed.append(name)
-        elif cm:  # superseded below by the fresh post-vacuum checkpoint
-            fs.delete(st.getPath(), False)
-            removed.append(name)
-    write_checkpoint(spark, path, version)
-    return removed

@@ -115,7 +115,6 @@ _SLOW_NODEIDS = {
     "tests/test_dv_write.py::test_large_dv_delete_serializes_executor_side",
     "tests/test_id_mode_writes.py::test_feed_plain_and_cdf_over_id_mode",
     "tests/test_id_mode_writes.py::test_nested_feed_plain_and_cdf_over_id_mode",
-    "tests/test_medallion.py::TestCheckpointAndRetention::test_100_commits_reads_bounded_by_checkpoint",
     "tests/test_models_registry.py::TestIncrementalMaterialization::test_incremental_merge_and_table_rebuild",
     "tests/test_models_registry.py::TestPersistentCatalog::test_views_survive_session_restart",
     "tests/test_oracle_parity.py::test_query_matches_oracle[dedup_keep_docs]",

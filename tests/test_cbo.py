@@ -1,12 +1,10 @@
-"""Mini-CBO: write-time stats collection into the versioned-lake
-manifest, parquet footer stats probes, and the stats-driven join
+"""Mini-CBO: parquet footer stats probes and the stats-driven join
 strategy — pinned to reproduce the hand-hinted TPC-H plan shapes at sf
 scales and to fall back to shuffle joins when a dim outgrows the
 broadcast threshold."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -16,7 +14,6 @@ from portfolio_data_pipelines_spark.operators.cbo import (
     DEFAULT_BROADCAST_BYTES,
     TableStats,
     stats_for_parquet,
-    stats_for_versioned,
     stats_join,
 )
 
@@ -34,60 +31,6 @@ class TestStatsCollection:
         assert st.bytes == os.path.getsize(f"{SF}/nation.parquet")
         # cached: identical object back while the file is unchanged
         assert stats_for_parquet(spark, f"{SF}/nation.parquet") is st
-
-    def test_commit_records_partition_stats(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-        )
-
-        path = str(tmp_path / "lake")
-        d1 = spark.createDataFrame(
-            [("2025-08-20", float(i)) for i in range(6)]
-            + [("2025-08-21", 1.0)],
-            "date string, temperature_2m double",
-        )
-        commit_versioned(spark, path, d1)
-        with open(os.path.join(path, "_manifest_v000001.json")) as f:
-            ps = json.load(f)["partition_stats"]
-        assert ps["2025-08-20"]["rows"] == 6
-        assert ps["2025-08-21"]["rows"] == 1
-        assert ps["2025-08-20"]["bytes"] > 0
-
-        # replace one day: its stats refresh, the untouched day's carry over
-        d2 = spark.createDataFrame(
-            [("2025-08-21", 2.0), ("2025-08-21", 3.0)],
-            "date string, temperature_2m double",
-        )
-        commit_versioned(spark, path, d2)
-        with open(os.path.join(path, "_manifest_v000002.json")) as f:
-            ps2 = json.load(f)["partition_stats"]
-        assert ps2["2025-08-21"]["rows"] == 2
-        assert ps2["2025-08-20"] == ps["2025-08-20"]
-
-        st = stats_for_versioned(spark, path)
-        assert st.rows == 8  # 6 + 2 live rows
-        assert st.bytes == ps2["2025-08-20"]["bytes"] + ps2["2025-08-21"]["bytes"]
-
-    def test_versioned_stats_none_for_prestats_manifest(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators import medallion as med
-
-        path = str(tmp_path / "old")
-        med.commit_versioned(
-            spark, path,
-            spark.createDataFrame([("2025-08-20", 1.0)],
-                                  "date string, temperature_2m double"),
-        )
-        mp = os.path.join(path, "_manifest_v000001.json")
-        with open(mp) as f:
-            doc = json.load(f)
-        del doc["partition_stats"]
-        with open(mp, "w") as f:
-            json.dump(doc, f)
-        # out-of-band rewrite: drop Hadoop LocalFileSystem's checksum
-        crc = os.path.join(path, "._manifest_v000001.json.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-        assert stats_for_versioned(spark, path) is None
 
 
 class TestJoinStrategy:

@@ -186,20 +186,36 @@ def test_vacuumed_table_parity(spark, tmp_path):
 
 
 def test_exported_lake_layout_parity(spark, tmp_path):
-    """The in-place lake export produces add paths in NESTED
-    (_batch_*/date=D/) directories — the layout that exercises the
-    reader's no-assumptions path resolution."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        export_versioned_as_delta,
-    )
-    from portfolio_data_pipelines_spark.operators.medallion import (
-        commit_versioned,
-    )
+    """An in-place export of existing parquet whose add paths point
+    through a NON-partition directory (``sub/date=D/``) — the layout
+    that exercises the reader's no-assumptions path resolution.
+    Version 0 is written by hand, as a one-shot converter would."""
+    import os
+
+    from portfolio_data_pipelines_spark.operators import delta_log as dl
 
     path = str(tmp_path / "lake")
     d0 = _df(spark, [(1, 1.0, _day("2021-01-01")), (2, 2.0, _day("2021-01-02"))])
-    commit_versioned(spark, path, d0, partition_col="date")
-    export_versioned_as_delta(spark, path)
+    d0.write.partitionBy("date").parquet(f"{path}/sub")
+    adds = []
+    for root, _dirs, names in os.walk(f"{path}/sub"):
+        for name in sorted(n for n in names if n.endswith(".parquet")):
+            rel = os.path.relpath(os.path.join(root, name), path)
+            adds.append({"add": {
+                "path": dl._encode_path(rel),
+                "partitionValues": {"date": os.path.basename(root).split("=", 1)[1]},
+                "size": os.path.getsize(os.path.join(root, name)),
+                "modificationTime": dl._now_ms(),
+                "dataChange": True,
+            }})
+    assert adds
+    fs, _, jvm = dl._hadoop_fs(spark, path)
+    dl._write_commit(fs, jvm, path, 0, [
+        dl._commit_info("CONVERT", {"sourceFormat": "parquet"}),
+        dl._PROTOCOL_ACTION,
+        dl._metadata_action(d0, ["date"]),
+        *adds,
+    ])
     _assert_match(spark, path)
     # Delta-native commits continue on the exported table
     write_delta(spark, _df(spark, [(3, 3.0, _day("2021-01-03"))]),

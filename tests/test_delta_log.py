@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from portfolio_data_pipelines_spark.operators.delta_log import (
     DELTA_CHECKPOINT_EVERY,
     checkpoint_delta,
-    export_versioned_as_delta,
     merge_delta,
     optimize_delta,
     read_delta,
@@ -441,65 +440,6 @@ class TestStats:
         # stats must survive the checkpoint replay path
         st = stats_for_delta(spark, path)
         assert st.rows == 2
-
-
-class TestLakeExport:
-    def test_export_versioned_lake_in_place(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            read_versioned,
-        )
-
-        path = str(tmp_path / "lake")
-        d0 = spark.createDataFrame(
-            [(1, 1.0, _day("2021-01-01")), (2, 2.0, _day("2021-01-02"))],
-            "id bigint, v double, date date",
-        )
-        d1 = spark.createDataFrame(  # replaces day 2, adds day 3
-            [(3, 3.0, _day("2021-01-02")), (4, 4.0, _day("2021-01-03"))],
-            "id bigint, v double, date date",
-        )
-        commit_versioned(spark, path, d0, partition_col="date")
-        commit_versioned(spark, path, d1, partition_col="date")
-        export_versioned_as_delta(spark, path)
-        # a Delta reader over the SAME directory sees the lake snapshot
-        got = read_delta(spark, path)
-        exp = read_versioned(spark, path).select("id", "v", "date")
-        assert _rows(spark, got.select("id", "v", "date")) == _rows(spark, exp)
-        # add paths point into the existing batch dirs — no data copied
-        log = tmp_path / "lake" / "_delta_log"
-        v0 = [json.loads(x) for x in (log / f"{0:020d}.json").read_text().splitlines()]
-        adds = [a["add"] for a in v0 if "add" in a]
-        assert all(a["path"].startswith("_batch_") for a in adds)
-        # the replaced day references the REPLACING batch only
-        day2 = [a for a in adds if a["partitionValues"]["date"] == "2021-01-02"]
-        assert day2 and all(a["path"].startswith("_batch_000002/") for a in day2)
-        # export is one-shot
-        with pytest.raises(ValueError, match="one-shot"):
-            export_versioned_as_delta(spark, path)
-
-    def test_delta_native_commits_continue_after_export(self, spark, tmp_path):
-        """The migration path: export the lake in place, then keep
-        committing with write_delta — mixed layouts (lake batch dirs +
-        root-level hive dirs) must read back as one table."""
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-        )
-
-        path = str(tmp_path / "lake2")
-        d0 = spark.createDataFrame(
-            [(1, 1.0, _day("2021-01-01"))], "id bigint, v double, date date"
-        )
-        commit_versioned(spark, path, d0, partition_col="date")
-        export_versioned_as_delta(spark, path)
-        d1 = spark.createDataFrame(
-            [(2, 2.0, _day("2021-01-02"))], "id bigint, v double, date date"
-        )
-        assert write_delta(spark, d1, path, partition_col="date") == 1
-        got = _rows(spark, read_delta(spark, path).select("id", "v", "date"))
-        assert got == [(1, 1.0, _day("2021-01-01")), (2, 2.0, _day("2021-01-02"))]
-        # version 0 still reads as the pure lake snapshot
-        assert len(_rows(spark, read_delta(spark, path, version=0))) == 1
 
 
 class TestReplaceWhere:
@@ -1823,9 +1763,9 @@ class TestRowLevelCDF:
 
     def test_per_commit_equals_snapshot_diff(self, spark, tmp_path):
         """Every commit's CDF slice must equal the keyed value-level
-        diff of the two adjacent snapshots — the diff_versions
-        contract, including MERGE, replaceWhere, OPTIMIZE (empty),
-        RESTORE, and a truncating overwrite."""
+        diff of the two adjacent snapshots, including MERGE,
+        replaceWhere, OPTIMIZE (empty), RESTORE, and a truncating
+        overwrite."""
         path, versions = self._lifecycle(spark, tmp_path)
         for v in versions[1:]:
             old = self._snapshot(spark, path, v - 1)

@@ -265,468 +265,6 @@ class TestMergeUpsert:
         assert spark.read.parquet(path).count() == 4
 
 
-class TestVersionedLake:
-    """Manifest-swap atomic commits: multi-day batches become visible
-    all-or-nothing; readers pinned to an old manifest keep a consistent
-    snapshot; crashed (manifest-less) writes are invisible."""
-
-    def test_commit_read_roundtrip_and_layering(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            read_versioned,
-        )
-
-        path = str(tmp_path / "vlake")
-        v1 = commit_versioned(spark, path, _batch(spark, day=20, temp=10.0))
-        v2 = commit_versioned(
-            spark,
-            path,
-            _batch(spark, day=20, temp=99.0).unionByName(
-                _batch(spark, day=21, temp=50.0)
-            ),
-        )
-        assert (v1, v2) == (1, 2)
-        got = read_versioned(spark, path)
-        days = {
-            str(r["date"]): r["n"]
-            for r in got.groupBy("date").agg(F.count("*").alias("n")).collect()
-        }
-        assert days == {"2025-08-20": 4, "2025-08-21": 4}
-        # day 20 must come from batch 2 (temp 99-base), not batch 1
-        t20 = got.filter(F.col("date") == "2025-08-20").agg(
-            F.min("temperature_2m")
-        ).collect()[0][0]
-        assert t20 == 99.0
-
-    def test_reader_snapshot_survives_concurrent_commit(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            read_versioned,
-        )
-
-        path = str(tmp_path / "vlake2")
-        commit_versioned(spark, path, _batch(spark, day=20, temp=10.0))
-        snapshot = read_versioned(spark, path)  # resolves manifest v1
-        # a second multi-day commit replaces day 20 and adds day 21 ...
-        commit_versioned(
-            spark,
-            path,
-            _batch(spark, day=20, temp=99.0).unionByName(_batch(spark, day=21)),
-        )
-        # ... but the in-flight reader still materializes the v1 snapshot:
-        # old batch dirs are immutable and vacuum has not run.
-        rows = snapshot.collect()
-        assert len(rows) == 4
-        assert min(r["temperature_2m"] for r in rows) == 10.0
-        # a fresh read resolves v2 — all-or-nothing visibility of the batch
-        assert read_versioned(spark, path).count() == 8
-
-    def test_crashed_write_without_manifest_is_invisible(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            read_versioned,
-        )
-
-        path = str(tmp_path / "vlake3")
-        commit_versioned(spark, path, _batch(spark, day=20))
-        # simulate a committer that crashed after data placement, before
-        # its manifest: the directory exists but no _manifest_v000002
-        (
-            _batch(spark, day=21)
-            .withColumn("date", F.to_date("time"))
-            .write.mode("overwrite")
-            .partitionBy("date")
-            .parquet(f"{path}/_batch_000002")
-        )
-        got = read_versioned(spark, path)
-        assert {str(r["date"]) for r in got.select("date").distinct().collect()} == {
-            "2025-08-20"
-        }
-
-    def test_concurrent_version_claim_raises(self, spark, tmp_path, monkeypatch):
-        """The create(overwrite=False) guard: a committer whose manifest
-        read went stale (a racer claimed the next version between its
-        read and its create) must fail loudly, not overwrite."""
-        import pytest as _pytest
-
-        from portfolio_data_pipelines_spark.operators import medallion
-
-        path = str(tmp_path / "vlake4")
-        medallion.commit_versioned(spark, path, _batch(spark, day=20))
-        # racer lands v2 while our committer still believes latest == v1
-        with open(os.path.join(path, "_manifest_v000002.json"), "w") as f:
-            f.write('{"version": 2, "partition_col": "date", "entries": {}}')
-        monkeypatch.setattr(medallion, "_latest_manifest_doc", lambda *_: (1, None))
-        with _pytest.raises(medallion.ConcurrentCommitError):
-            medallion.commit_versioned(spark, path, _batch(spark, day=21))
-
-    def test_vacuum_removes_only_unreferenced(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            read_versioned,
-            vacuum_versioned,
-        )
-
-        path = str(tmp_path / "vlake5")
-        commit_versioned(spark, path, _batch(spark, day=20, temp=10.0))
-        commit_versioned(spark, path, _batch(spark, day=20, temp=99.0))
-        removed = vacuum_versioned(spark, path)
-        # batch 1 is fully superseded; manifest v1 is stale
-        assert "_batch_000001" in removed and "_manifest_v000001.json" in removed
-        got = read_versioned(spark, path)
-        assert got.count() == 4
-        assert got.agg(F.min("temperature_2m")).collect()[0][0] == 99.0
-
-    def test_vacuum_keeps_partially_referenced_batches(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            read_versioned,
-            vacuum_versioned,
-        )
-
-        path = str(tmp_path / "vlake6")
-        commit_versioned(
-            spark, path, _batch(spark, day=20).unionByName(_batch(spark, day=21))
-        )
-        commit_versioned(spark, path, _batch(spark, day=21, temp=99.0))
-        removed = vacuum_versioned(spark, path)
-        # batch 1 still serves day 20 → must survive; only manifest v1 goes
-        assert removed == ["_manifest_v000001.json"]
-        assert read_versioned(spark, path).count() == 8
-
-
-class TestSchemaEvolution:
-    """Versioned-lake schema evolution: later batches may ADD columns;
-    snapshot reads serve each version with ITS schema, and vacuum never
-    breaks the newest-schema manifest."""
-
-    def test_added_column_merges_and_time_travels(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            read_versioned,
-        )
-
-        path = str(tmp_path / "evo")
-        v1 = commit_versioned(spark, path, _batch(spark, day=20, temp=10.0))
-        evolved = _batch(spark, day=21, temp=50.0).withColumn(
-            "station", F.lit("sp-01")
-        )
-        v2 = commit_versioned(spark, path, evolved)
-        assert (v1, v2) == (1, 2)
-
-        latest = read_versioned(spark, path)
-        assert "station" in latest.columns
-        rows = {str(r["date"]): r for r in latest.collect()}
-        # pre-evolution rows surface the new column as null
-        assert rows["2025-08-20"]["station"] is None
-        assert rows["2025-08-21"]["station"] == "sp-01"
-        assert latest.count() == 8
-
-        # snapshot at v1 reproduces the v1 schema exactly
-        old = read_versioned(spark, path, version=1)
-        assert "station" not in old.columns
-        assert old.count() == 4
-
-    def test_vacuum_keeps_evolved_manifest_readable(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            read_versioned,
-            vacuum_versioned,
-        )
-
-        path = str(tmp_path / "evo2")
-        commit_versioned(spark, path, _batch(spark, day=20, temp=10.0))
-        # v2 REPLACES day 20 with the evolved schema → batch 1 unreferenced
-        commit_versioned(
-            spark,
-            path,
-            _batch(spark, day=20, temp=99.0).withColumn("station", F.lit("sp-01")),
-        )
-        removed = vacuum_versioned(spark, path)
-        assert "_batch_000001" in removed and "_manifest_v000001.json" in removed
-        got = read_versioned(spark, path)
-        assert "station" in got.columns and got.count() == 4
-        assert got.agg(F.min("temperature_2m")).collect()[0][0] == 99.0
-        # the vacuumed snapshot is gone loudly, not silently wrong
-        with _pytest.raises(FileNotFoundError):
-            read_versioned(spark, path, version=1)
-
-    def test_mixed_schema_day_union_within_latest(self, spark, tmp_path):
-        """Old and new batches both referenced by the latest manifest:
-        day-level entries from each must union with merged schema."""
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            read_versioned,
-            vacuum_versioned,
-        )
-
-        path = str(tmp_path / "evo3")
-        commit_versioned(
-            spark, path, _batch(spark, day=20).unionByName(_batch(spark, day=21))
-        )
-        commit_versioned(
-            spark,
-            path,
-            _batch(spark, day=21, temp=99.0).withColumn("station", F.lit("x")),
-        )
-        vacuum_versioned(spark, path)  # batch 1 still serves day 20 → survives
-        got = read_versioned(spark, path)
-        per_day = {
-            str(r["date"]): r["s"]
-            for r in got.groupBy("date").agg(F.first("station").alias("s")).collect()
-        }
-        assert per_day == {"2025-08-20": None, "2025-08-21": "x"}
-
-
-class TestTimeTravelAndCompaction:
-    """timestampAsOf reads + OPTIMIZE-style compaction on the versioned
-    lake — the Delta/Iceberg parity features the manifest design covers
-    without dependencies."""
-
-    @staticmethod
-    def _committed_at(path, version):
-        import json
-
-        with open(os.path.join(path, f"_manifest_v{version:06d}.json")) as f:
-            return json.load(f)["committed_at"]
-
-    def test_asof_reads_between_commits(self, spark, tmp_path):
-        import time
-
-        import pytest as _pytest
-
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            read_versioned,
-        )
-
-        path = str(tmp_path / "tt")
-        commit_versioned(spark, path, _batch(spark, day=20, temp=10.0))
-        time.sleep(0.05)
-        commit_versioned(spark, path, _batch(spark, day=20, temp=99.0))
-        t1 = self._committed_at(path, 1)
-        t2 = self._committed_at(path, 2)
-        assert t1 < t2
-        # as-of v1's commit instant → v1 content; as-of v2's → v2
-        old = read_versioned(spark, path, as_of=t1)
-        assert old.agg(F.min("temperature_2m")).collect()[0][0] == 10.0
-        new = read_versioned(spark, path, as_of=t2)
-        assert new.agg(F.min("temperature_2m")).collect()[0][0] == 99.0
-        with _pytest.raises(FileNotFoundError):  # before any commit
-            read_versioned(spark, path, as_of="1999-01-01T00:00:00.000000Z")
-        with _pytest.raises(ValueError):
-            read_versioned(spark, path, version=1, as_of=t1)
-
-    def test_asof_parses_timestamps_not_lexicographic(self, spark, tmp_path):
-        """as_of must compare instants, not strings: an equivalent
-        timestamp expressed with a +02:00 offset (or without the
-        fractional part) must select the same version as the canonical
-        '...%fZ' form — lexicographic comparison would misorder both."""
-        import datetime as dt
-        import time
-
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            read_versioned,
-        )
-
-        path = str(tmp_path / "tt_tz")
-        commit_versioned(spark, path, _batch(spark, day=20, temp=10.0))
-        time.sleep(0.05)
-        commit_versioned(spark, path, _batch(spark, day=20, temp=99.0))
-        t1 = self._committed_at(path, 1)
-        # Same instant as t1, rendered in +02:00 — lexicographically this
-        # sorts AFTER t2's UTC string (hour digits differ), so a string
-        # compare would wrongly pick v2.
-        t1_offset = (
-            dt.datetime.fromisoformat(t1.replace("Z", "+00:00"))
-            .astimezone(dt.timezone(dt.timedelta(hours=2)))
-            .isoformat()
-        )
-        old = read_versioned(spark, path, as_of=t1_offset)
-        assert old.agg(F.min("temperature_2m")).collect()[0][0] == 10.0
-        # No-fraction form one second past t1 (still before t2 only if
-        # the gap allows; just assert it parses and returns some version).
-        nofrac = dt.datetime.fromisoformat(t1.replace("Z", "+00:00")).strftime(
-            "%Y-%m-%dT%H:%M:%SZ"
-        )
-        # floor-of-second ≤ t1's fractional instant ⇒ v1 only if commit
-        # landed exactly on the second; either way it must not raise and
-        # must never return v2 (whose commit is strictly later).
-        try:
-            got = read_versioned(spark, path, as_of=nofrac)
-            assert got.agg(F.min("temperature_2m")).collect()[0][0] == 10.0
-        except FileNotFoundError:
-            pass  # commit had a nonzero fraction and floor(t1) < t1
-
-    def test_compact_coalesces_snapshot_into_one_batch(self, spark, tmp_path):
-        import glob
-
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            compact_versioned,
-            read_versioned,
-            vacuum_versioned,
-        )
-
-        path = str(tmp_path / "opt")
-        for day in (20, 21, 22):
-            commit_versioned(spark, path, _batch(spark, day=day, temp=float(day)))
-        before = sorted(
-            (str(r["date"]), r["temperature_2m"])
-            for r in read_versioned(spark, path).collect()
-        )
-        v = compact_versioned(spark, path)
-        assert v == 4
-        after = read_versioned(spark, path)
-        assert sorted((str(r["date"]), r["temperature_2m"]) for r in after.collect()) == before
-        # all days now live in the single compacted batch; old ones reclaim
-        removed = vacuum_versioned(spark, path)
-        assert {"_batch_000001", "_batch_000002", "_batch_000003"} <= set(removed)
-        files = glob.glob(f"{path}/_batch_000004/date=*/*.parquet")
-        assert len(files) == 3  # one file per day after per-partition repartition
-
-    def test_partition_scoped_compaction(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            compact_versioned,
-            read_versioned,
-        )
-
-        path = str(tmp_path / "opt2")
-        for day in (20, 21, 22):
-            commit_versioned(spark, path, _batch(spark, day=day, temp=float(day)))
-        compact_versioned(spark, path, partitions=["2025-08-20", "2025-08-21"])
-        import json
-
-        with open(os.path.join(path, "_manifest_v000004.json")) as f:
-            entries = json.load(f)["entries"]
-        assert entries["2025-08-20"] == "_batch_000004"
-        assert entries["2025-08-21"] == "_batch_000004"
-        assert entries["2025-08-22"] == "_batch_000003"  # untouched
-        assert read_versioned(spark, path).count() == 12
-        with _pytest.raises(ValueError, match="no rows"):
-            compact_versioned(spark, path, partitions=["2030-01-01"])
-
-
-def test_read_versioned_prunes_partitions_in_scan(spark, tmp_path):
-    """A date filter over the versioned-lake read must prune at the FILE
-    level inside every per-batch scan (PartitionFilters on the
-    FileSourceScan), not post-union — the property that keeps day-scoped
-    reads O(day) instead of O(lake) at 100 TB."""
-    from portfolio_data_pipelines_spark.operators.medallion import (
-        commit_versioned,
-        read_versioned,
-    )
-
-    path = str(tmp_path / "prune")
-    commit_versioned(
-        spark, path, _batch(spark, day=20).unionByName(_batch(spark, day=21))
-    )
-    commit_versioned(spark, path, _batch(spark, day=22))
-    snap = read_versioned(spark, path).filter(F.col("date") == "2025-08-21")
-    assert snap.count() == 4
-    plan = snap._jdf.queryExecution().executedPlan().toString()
-    # every scan carries the pushed partition predicate
-    scans = [seg for seg in plan.split("FileScan") if "PartitionFilters" in seg]
-    assert scans, plan
-    assert all("2025-08-21" in seg.split("PartitionFilters", 1)[1][:200] or
-               "date" in seg.split("PartitionFilters", 1)[1][:200] for seg in scans)
-
-
-class TestDiffVersions:
-    """CDC-lite between snapshots: inserts, updates, deletes per key,
-    including across an ADD-column schema evolution."""
-
-    def test_insert_update_delete(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            diff_versions,
-        )
-
-        path = str(tmp_path / "cdc")
-        v1_rows = _batch(spark, day=20, n=3, temp=10.0)  # hours 0,1,2
-        commit_versioned(spark, path, v1_rows)
-        # v2 REPLACES day 20: hour 0 unchanged, hour 1 new temp (update),
-        # hour 2 gone (delete), hour 3 added (insert)
-        import datetime as _dt
-
-        from portfolio_data_pipelines_spark.schemas import WEATHER_BRONZE
-
-        rows = [
-            (_dt.datetime(2025, 8, 20, 0), 10.0, 50.0, "-23.55", "-46.63", _dt.datetime(2025, 8, 20, 12)),
-            (_dt.datetime(2025, 8, 20, 1), 42.0, 50.0, "-23.55", "-46.63", _dt.datetime(2025, 8, 20, 12)),
-            (_dt.datetime(2025, 8, 20, 3), 13.0, 50.0, "-23.55", "-46.63", _dt.datetime(2025, 8, 20, 12)),
-        ]
-        commit_versioned(spark, path, spark.createDataFrame(rows, schema=WEATHER_BRONZE))
-        got = {
-            r["time"]: r["_change_type"]
-            for r in diff_versions(spark, path, 1, 2, key_cols=["time"]).collect()
-        }
-        assert got == {
-            _dt.datetime(2025, 8, 20, 1): "update",
-            _dt.datetime(2025, 8, 20, 2): "delete",
-            _dt.datetime(2025, 8, 20, 3): "insert",
-        }
-
-    def test_schema_evolution_diff(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.medallion import (
-            commit_versioned,
-            diff_versions,
-        )
-
-        path = str(tmp_path / "cdc2")
-        commit_versioned(spark, path, _batch(spark, day=20, n=2, temp=10.0))
-        # v2 re-commits the SAME rows with an added column: only rows whose
-        # new column is non-null should read as updates
-        evolved = _batch(spark, day=20, n=2, temp=10.0).withColumn(
-            "station", F.when(F.hour("time") == 1, F.lit("sp-01"))
-        )
-        commit_versioned(spark, path, evolved)
-        got = {
-            r["time"].hour: (r["_change_type"], r["station"])
-            for r in diff_versions(spark, path, 1, 2, key_cols=["time"]).collect()
-        }
-        # hour 0: station null on both sides after alignment → unchanged
-        assert got == {1: ("update", "sp-01")}
-
-
-def test_compact_after_schema_evolution_widens_old_days(spark, tmp_path):
-    """Compacting a snapshot whose batches have different schemas must
-    rewrite old days WITH the widened schema (null-filled new columns) —
-    after compaction plus vacuum, one batch serves everything and the
-    per-day values are unchanged."""
-    from portfolio_data_pipelines_spark.operators.medallion import (
-        commit_versioned,
-        compact_versioned,
-        read_versioned,
-        vacuum_versioned,
-    )
-
-    path = str(tmp_path / "evo_opt")
-    commit_versioned(spark, path, _batch(spark, day=20, temp=10.0))
-    commit_versioned(
-        spark, path, _batch(spark, day=21, temp=50.0).withColumn("station", F.lit("sp"))
-    )
-    compact_versioned(spark, path)
-    vacuum_versioned(spark, path)
-    got = read_versioned(spark, path)
-    per_day = {
-        str(r["date"]): (r["s"], r["t"])
-        for r in got.groupBy("date")
-        .agg(F.first("station").alias("s"), F.min("temperature_2m").alias("t"))
-        .collect()
-    }
-    assert per_day == {"2025-08-20": (None, 10.0), "2025-08-21": ("sp", 50.0)}
-    import glob
-
-    assert not glob.glob(f"{path}/_batch_00000[12]")  # old batches reclaimed
-
-
 def test_jdbc_readback_numeric_partition_column(spark, tmp_path):
     """Numeric partitionColumn with explicit and probed bounds: all rows
     exactly once across the range queries."""
@@ -754,148 +292,3 @@ def test_jdbc_readback_numeric_partition_column(spark, tmp_path):
         spark, url, "t", partition_column="id", num_partitions=3, driver=drv
     )
     assert sorted(r["ID"] for r in probed.collect()) == list(range(50))
-
-
-class TestCheckpointAndRetention:
-    """Manifest checkpointing (_last_checkpoint + rolled-up commit-time
-    index every CHECKPOINT_EVERY commits) and retention-policy vacuum —
-    the two pieces that keep manifest I/O O(1) and history bounded as
-    the table ages."""
-
-    @staticmethod
-    def _tiny(spark, temp: float):
-        return spark.createDataFrame(
-            [("2025-08-20", temp)], "date string, temperature_2m double"
-        )
-
-    def test_100_commits_reads_bounded_by_checkpoint(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators import medallion as med
-
-        path = str(tmp_path / "cp100")
-        for i in range(100):
-            med.commit_versioned(spark, path, self._tiny(spark, float(i)))
-        # checkpoint landed at v100 and the pointer tracks it
-        assert os.path.exists(os.path.join(path, "_checkpoint_v000100.json"))
-        assert os.path.exists(os.path.join(path, "_last_checkpoint"))
-
-        med.IO_STATS.update(manifest_reads=0, lists=0)
-        snap = med.read_versioned(spark, path)
-        assert snap.agg(F.max("temperature_2m")).collect()[0][0] == 99.0
-        # pointer + latest manifest; never a directory listing, never a
-        # per-version scan
-        assert med.IO_STATS["lists"] == 0
-        assert med.IO_STATS["manifest_reads"] <= 2 + med.CHECKPOINT_EVERY
-
-        # time travel through the checkpoint's commit-time index
-        import json
-
-        with open(os.path.join(path, "_manifest_v000042.json")) as f:
-            t42 = json.load(f)["committed_at"]
-        med.IO_STATS.update(manifest_reads=0, lists=0)
-        old = med.read_versioned(spark, path, as_of=t42)
-        assert old.agg(F.max("temperature_2m")).collect()[0][0] == 41.0
-        assert med.IO_STATS["lists"] == 0
-        assert med.IO_STATS["manifest_reads"] <= 3 + med.CHECKPOINT_EVERY
-
-    def test_checkpoint_cadence_and_tail_probing(self, spark, tmp_path, monkeypatch):
-        from portfolio_data_pipelines_spark.operators import medallion as med
-
-        monkeypatch.setattr(med, "CHECKPOINT_EVERY", 3)
-        path = str(tmp_path / "cp3")
-        for i in range(7):
-            med.commit_versioned(spark, path, self._tiny(spark, float(i)))
-        assert os.path.exists(os.path.join(path, "_checkpoint_v000003.json"))
-        assert os.path.exists(os.path.join(path, "_checkpoint_v000006.json"))
-        import json
-
-        with open(os.path.join(path, "_last_checkpoint")) as f:
-            assert json.load(f)["version"] == 6
-        with open(os.path.join(path, "_checkpoint_v000006.json")) as f:
-            doc = json.load(f)
-        assert sorted(map(int, doc["commit_times"])) == [1, 2, 3, 4, 5, 6]
-        med.IO_STATS.update(manifest_reads=0, lists=0)
-        v, entries = med._latest_manifest(spark, path)
-        assert v == 7 and entries
-        assert med.IO_STATS["lists"] == 0
-        assert med.IO_STATS["manifest_reads"] == 2  # pointer + v7 manifest
-
-    def test_vacuum_retention_window(self, spark, tmp_path, monkeypatch):
-        import json
-        import time
-
-        import pytest as _pytest
-
-        from portfolio_data_pipelines_spark.operators import medallion as med
-
-        monkeypatch.setattr(med, "CHECKPOINT_EVERY", 3)
-        path = str(tmp_path / "ret")
-        for i in range(1, 6):
-            med.commit_versioned(spark, path, self._tiny(spark, float(i)))
-            time.sleep(0.02)
-
-        def committed(v):
-            with open(os.path.join(path, f"_manifest_v{v:06d}.json")) as f:
-                return json.load(f)["committed_at"]
-
-        t = {v: committed(v) for v in range(1, 6)}
-        now = t[5]
-        # retention window reaching back to v3's commit, exclusive of v2
-        span_h = (
-            med._parse_iso_ts(now) - med._parse_iso_ts(t[3])
-        ).total_seconds() / 3600
-        removed = med.vacuum_versioned(
-            spark, path, retain_hours=span_h + 1e-9, now=now
-        )
-        assert "_manifest_v000001.json" in removed
-        assert "_manifest_v000002.json" in removed
-        assert "_batch_000001" in removed and "_batch_000002" in removed
-        assert "_manifest_v000003.json" not in removed
-
-        # inside retention: version- and time-travel both survive
-        assert (
-            med.read_versioned(spark, path, version=3)
-            .agg(F.max("temperature_2m")).collect()[0][0] == 3.0
-        )
-        assert (
-            med.read_versioned(spark, path, as_of=t[4])
-            .agg(F.max("temperature_2m")).collect()[0][0] == 4.0
-        )
-        # outside retention: loud failures, not silent fallbacks
-        with _pytest.raises(FileNotFoundError):
-            med.read_versioned(spark, path, version=2)
-        with _pytest.raises(FileNotFoundError):
-            med.read_versioned(spark, path, as_of=t[1])
-
-        # vacuum re-checkpointed at the latest version: reads stay O(1)
-        # and the commit-time index dropped the vacuumed versions
-        with open(os.path.join(path, "_last_checkpoint")) as f:
-            assert json.load(f)["version"] == 5
-        with open(os.path.join(path, "_checkpoint_v000005.json")) as f:
-            assert sorted(map(int, json.load(f)["commit_times"])) == [3, 4, 5]
-        med.IO_STATS.update(manifest_reads=0, lists=0)
-        assert (
-            med.read_versioned(spark, path)
-            .agg(F.max("temperature_2m")).collect()[0][0] == 5.0
-        )
-        assert med.IO_STATS["lists"] == 0
-
-    def test_vacuum_default_retains_only_latest_and_recheckpoints(
-        self, spark, tmp_path
-    ):
-        from portfolio_data_pipelines_spark.operators import medallion as med
-
-        path = str(tmp_path / "ret0")
-        for i in range(1, 4):
-            med.commit_versioned(spark, path, self._tiny(spark, float(i)))
-        removed = med.vacuum_versioned(spark, path)
-        assert {"_batch_000001", "_batch_000002",
-                "_manifest_v000001.json", "_manifest_v000002.json"} <= set(removed)
-        assert (
-            med.read_versioned(spark, path)
-            .agg(F.max("temperature_2m")).collect()[0][0] == 3.0
-        )
-        # post-vacuum lakes are checkpointed even below CHECKPOINT_EVERY
-        assert os.path.exists(os.path.join(path, "_last_checkpoint"))
-        med.IO_STATS.update(manifest_reads=0, lists=0)
-        med._latest_manifest(spark, path)
-        assert med.IO_STATS["lists"] == 0

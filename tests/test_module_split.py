@@ -61,7 +61,6 @@ def test_split_public_names_reexported_from_delta_log():
         "clustering_columns": "delta_maintain",
         "set_domain_metadata": "delta_maintain",
         "convert_parquet_to_delta": "delta_maintain",
-        "export_versioned_as_delta": "delta_maintain",
         # r15 splits keep their seam too
         "checkpoint_delta": "delta_checkpoint",
         "delete_where_dv": "delta_dv",

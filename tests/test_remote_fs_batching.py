@@ -10,9 +10,7 @@ count the calls crossing the fs handle, pinning that:
   per version;
 - ``_read_text`` moves a commit file in one buffered transfer, not one
   ``readLine`` round trip per line;
-- ``_replay_log`` adds no per-version existence probe on top;
-- ``medallion._tail_versions`` lists once instead of probing per
-  manifest version.
+- ``_replay_log`` adds no per-version existence probe on top.
 
 Also pins the r16-ADVICE ``_local_path`` gates themselves: bare paths
 are local only under a file-scheme fs.defaultFS, and ``file://host/...``
@@ -26,7 +24,7 @@ from collections import Counter
 import pytest
 
 from portfolio_data_pipelines_spark.operators import delta_log as dl
-from portfolio_data_pipelines_spark.operators import medallion as med
+from portfolio_data_pipelines_spark.operators import hadoop_io as hio
 
 
 class _CountingFS:
@@ -53,7 +51,7 @@ class _CountingFS:
 def no_local_fastpath(monkeypatch):
     """Disguise every path as remote: the Hadoop branch must run."""
     monkeypatch.setattr(dl, "_local_path", lambda p: None)
-    monkeypatch.setattr(med, "_local_path", lambda p: None)
+    monkeypatch.setattr(hio, "_local_path", lambda p: None)
 
 
 def _make_table(spark, tmp_path, n_appends: int) -> str:
@@ -66,7 +64,7 @@ def _make_table(spark, tmp_path, n_appends: int) -> str:
 
 def test_list_log_versions_lists_once(spark, tmp_path, no_local_fastpath):
     path = _make_table(spark, tmp_path, 6)
-    fs, _, jvm = med._hadoop_fs(spark, path)
+    fs, _, jvm = hio._hadoop_fs(spark, path)
     cfs = _CountingFS(fs)
     versions = dl._list_log_versions(cfs, jvm, path)
     assert versions == list(range(6))
@@ -79,7 +77,7 @@ def test_list_log_versions_lists_once(spark, tmp_path, no_local_fastpath):
 
 def test_read_text_single_transfer(spark, tmp_path, no_local_fastpath):
     path = _make_table(spark, tmp_path, 1)
-    fs, _, jvm = med._hadoop_fs(spark, path)
+    fs, _, jvm = hio._hadoop_fs(spark, path)
     cfs = _CountingFS(fs)
     text = dl._read_text(cfs, jvm, f"{path}/{dl._log_path(0)}")
     assert cfs.calls["open"] == 1
@@ -92,10 +90,10 @@ def test_replay_log_no_per_version_probes(
     spark, tmp_path, no_local_fastpath, monkeypatch
 ):
     path = _make_table(spark, tmp_path, 8)
-    fs, _, jvm = med._hadoop_fs(spark, path)
+    fs, _, jvm = hio._hadoop_fs(spark, path)
     cfs = _CountingFS(fs)
     monkeypatch.setattr(
-        med, "_hadoop_fs", lambda s, p: (cfs, None, jvm)
+        hio, "_hadoop_fs", lambda s, p: (cfs, None, jvm)
     )
     monkeypatch.setattr(
         dl, "_hadoop_fs", lambda s, p: (cfs, None, jvm)
@@ -110,42 +108,21 @@ def test_replay_log_no_per_version_probes(
     assert cfs.calls["exists"] <= 2
 
 
-def test_tail_versions_lists_once(spark, tmp_path, no_local_fastpath):
-    import pyspark.sql.functions as F
-
-    lake = str(tmp_path / "lake")
-    df = spark.range(8).select(
-        F.col("id").alias("event_id"),
-        (F.col("id") % 2).cast("string").alias("day"),
-        F.col("id").cast("double").alias("value"),
-    )
-    for _ in range(3):
-        med.commit_versioned(
-            spark, lake, df, partition_col="day", derive_from="day"
-        )
-    fs, _, jvm = med._hadoop_fs(spark, lake)
-    cfs = _CountingFS(fs)
-    tail = med._tail_versions(cfs, jvm, lake, 0)
-    assert tail == [1, 2, 3]
-    assert cfs.calls["listStatus"] == 1
-    assert cfs.calls["exists"] == 0
-
-
 def test_local_path_gates():
     # file: URIs — empty/localhost authority is local, foreign is not
-    assert med._local_path("file:///a/b") == "/a/b"
-    assert med._local_path("file:/a/b") == "/a/b"
-    assert med._local_path("file://localhost/a/b") == "/a/b"
-    assert med._local_path("file://nas01/a/b") is None
-    assert med._local_path("s3a://bucket/a") is None
-    assert med._local_path("hdfs:///a/b") is None
+    assert hio._local_path("file:///a/b") == "/a/b"
+    assert hio._local_path("file:/a/b") == "/a/b"
+    assert hio._local_path("file://localhost/a/b") == "/a/b"
+    assert hio._local_path("file://nas01/a/b") is None
+    assert hio._local_path("s3a://bucket/a") is None
+    assert hio._local_path("hdfs:///a/b") is None
 
 
 def test_bare_path_gated_on_default_fs(monkeypatch):
     # simulate a cluster: fs.defaultFS = hdfs://... ⇒ bare paths are
     # NOT local (r16 ADVICE: the fast path would read an existing HDFS
     # table as empty and commit to the driver's local disk)
-    monkeypatch.setattr(med, "_DEFAULT_FS_LOCAL", False)
-    assert med._local_path("/warehouse/tbl") is None
-    monkeypatch.setattr(med, "_DEFAULT_FS_LOCAL", True)
-    assert med._local_path("/warehouse/tbl") == "/warehouse/tbl"
+    monkeypatch.setattr(hio, "_DEFAULT_FS_LOCAL", False)
+    assert hio._local_path("/warehouse/tbl") is None
+    monkeypatch.setattr(hio, "_DEFAULT_FS_LOCAL", True)
+    assert hio._local_path("/warehouse/tbl") == "/warehouse/tbl"
