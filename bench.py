@@ -44,11 +44,13 @@ def run_lakehouse_family(spark, sf_dir: str):
 
     from portfolio_data_pipelines_spark.operators.delta_log import (
         _replay_log,
-        merge_delta,
-        optimize_delta,
+        write_delta,
+    )
+    from portfolio_data_pipelines_spark.operators.delta_maintain import optimize_delta
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+    from portfolio_data_pipelines_spark.operators.delta_scan import (
         read_delta,
         read_delta_changes,
-        write_delta,
     )
     from portfolio_data_pipelines_spark.sources.delta_feed import (
         DeltaChangeFeedDataSource,

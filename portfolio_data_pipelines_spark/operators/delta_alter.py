@@ -10,11 +10,6 @@ metadata-shaped commits; the heavy exception — icebergCompat's
 enable-rewrite — stages through the same distributed machinery as any
 data commit.
 
-Public names are re-exported by ``operators.delta_log``; every
-delta_log internal is reached through the lazy ``dl`` proxy below so
-the import graph stays acyclic (the delta_dv pattern, r15) and
-monkeypatches on the ``delta_log`` module keep working.
-
 Reference: delta-io PROTOCOL.md (Column Mapping / IcebergCompat / Row
 Tracking / CHECK Constraints / Default Columns).
 """
@@ -28,6 +23,8 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from . import delta_colmap, delta_scan
+from . import delta_log as dl
 from .delta_protocol import (
     _PROTOCOL_ACTION,
     _check_writer_protocol,
@@ -36,20 +33,6 @@ from .delta_protocol import (
     _upgraded_protocol_writer_only,
 )
 from .hadoop_io import _hadoop_fs
-
-
-class _DeltaLogProxy:
-    """Call-time attribute proxy onto ``operators.delta_log`` — see
-    ``delta_cdf._DeltaLogProxy``; duplicated (three lines) rather than
-    imported so the split modules stay independent of each other."""
-
-    def __getattr__(self, name):
-        from . import delta_log
-
-        return getattr(delta_log, name)
-
-
-dl = _DeltaLogProxy()
 
 
 def enable_column_mapping(spark: SparkSession, path: str) -> int:
@@ -236,7 +219,7 @@ def enable_iceberg_compat(
         {"type": "struct", "fields": new_fields}
     )
     meta["configuration"] = config
-    meta = dl._assign_compat_element_ids(meta)
+    meta = delta_colmap._assign_compat_element_ids(meta)
     proto = dict(st.protocol or _PROTOCOL_ACTION["protocol"])
     feat = f"icebergCompatV{version}"
     actions = [
@@ -290,7 +273,7 @@ def enable_iceberg_compat(
             # complete = ids on every struct field at any depth AND on
             # list element / map key/value nodes (r14: Iceberg
             # addresses repeated nodes by id too)
-            has_ids = dl._arrow_schema_ids_complete(sch)
+            has_ids = delta_colmap._arrow_schema_ids_complete(sch)
         except Exception:
             has_ids = False  # unreadable: rewrite to be safe — counted
             probe_failed += 1
@@ -311,9 +294,9 @@ def enable_iceberg_compat(
     if not doomed:
         return v
     pcols = st2.meta.get("partitionColumns", [])
-    l2p = dl._logical_to_physical(st2.meta)
+    l2p = delta_colmap._logical_to_physical(st2.meta)
     rt = dl._row_tracking_supported(st2.protocol)
-    rewritten = dl._read_adds(spark, path, doomed, st2.meta, row_ids=rt)
+    rewritten = delta_scan._read_adds(spark, path, doomed, st2.meta, row_ids=rt)
     if rt:
         rewritten = dl._rt_materialize(rewritten, st2.meta)
     new_version = st2.version + 1
@@ -341,9 +324,7 @@ def enable_iceberg_compat(
     )
     dl._rt_finalize_commit(st2, adds, actions, new_version)
     actions.extend(adds)
-    dl._write_commit(fs, jvm, path, new_version, actions)
-    if new_version % dl.DELTA_CHECKPOINT_EVERY == 0:
-        dl.checkpoint_delta(spark, path, new_version)
+    dl._write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version
 
 
@@ -405,9 +386,7 @@ def enable_row_tracking(spark: SparkSession, path: str) -> int:
         dl._rt_domain_action(hwm if hwm is not None else -1),
     ]
     actions.extend(backfill)
-    dl._write_commit(fs, jvm, path, new_version, actions)
-    if new_version % dl.DELTA_CHECKPOINT_EVERY == 0:
-        dl.checkpoint_delta(spark, path, new_version)
+    dl._write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version
 
 
@@ -437,7 +416,7 @@ def rename_column(
     _check_writer_protocol(st.protocol, st.meta)
     if st.meta is None:
         raise ValueError(f"Delta log under {path} has no metaData action")
-    if dl._logical_to_physical(st.meta) is None:
+    if delta_colmap._logical_to_physical(st.meta) is None:
         raise ValueError(
             "rename_column requires name-mode column mapping — run "
             "enable_column_mapping(path) first"
@@ -476,7 +455,7 @@ def drop_column(spark: SparkSession, path: str, name: str) -> int:
     _check_writer_protocol(st.protocol, st.meta)
     if st.meta is None:
         raise ValueError(f"Delta log under {path} has no metaData action")
-    if dl._logical_to_physical(st.meta) is None:
+    if delta_colmap._logical_to_physical(st.meta) is None:
         raise ValueError(
             "drop_column requires name-mode column mapping — run "
             "enable_column_mapping(path) first"
@@ -505,7 +484,6 @@ def drop_column(spark: SparkSession, path: str, name: str) -> int:
     )
 
 
-
 def add_check_constraint(
     spark: SparkSession, path: str, name: str, expr: str
 ) -> int:
@@ -528,7 +506,7 @@ def add_check_constraint(
     config = dict(st.meta.get("configuration") or {})
     if key in config:
         raise ValueError(f"constraint {name!r} already exists: {config[key]}")
-    current = dl.read_delta(spark, path)
+    current = delta_scan.read_delta(spark, path)
     n_bad = current.filter(~F.coalesce(F.expr(expr), F.lit(True))).count()
     if n_bad:
         raise ValueError(
@@ -568,9 +546,7 @@ def add_check_constraint(
                 }
             }
         )
-    dl._write_commit(fs, jvm, path, new_version, actions)
-    if new_version % dl.DELTA_CHECKPOINT_EVERY == 0:
-        dl.checkpoint_delta(spark, path, new_version)
+    dl._write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version
 
 
@@ -599,9 +575,7 @@ def drop_check_constraint(
         dl._commit_info("DROP CONSTRAINT", {"name": name}),
         {"metaData": meta},
     ]
-    dl._write_commit(fs, jvm, path, new_version, actions)
-    if new_version % dl.DELTA_CHECKPOINT_EVERY == 0:
-        dl.checkpoint_delta(spark, path, new_version)
+    dl._write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version
 
 

@@ -9,11 +9,6 @@ can never diverge), and ``read_delta_cdf`` — Delta's readChangeFeed
 contract reconstructed from the transaction log with write-side change
 files preferred.
 
-Public names are re-exported by ``operators.delta_log``; every
-delta_log internal is reached through the lazy ``dl`` proxy below so
-the import graph stays acyclic (the delta_dv pattern, r15) and
-monkeypatches on the ``delta_log`` module keep working.
-
 Reference: delta-io PROTOCOL.md (Change Data Files / Add CDC File).
 """
 
@@ -25,32 +20,17 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import delta_colmap, delta_scan
+from . import delta_log as dl
 from .delta_protocol import _PROTOCOL_ACTION, _check_writer_protocol
 from .hadoop_io import _hadoop_fs
-
-
-class _DeltaLogProxy:
-    """Call-time attribute proxy onto ``operators.delta_log``: the
-    split module reads every delta_log internal (and tunable) through
-    it, so a test monkeypatching ``delta_log.X`` affects this module
-    too, and importing this module never imports delta_log at load
-    time (no cycle — delta_log imports THIS module at its top for the
-    re-exported surface)."""
-
-    def __getattr__(self, name):
-        from . import delta_log
-
-        return getattr(delta_log, name)
-
-
-dl = _DeltaLogProxy()
 
 
 def _read_adds_subset(spark, path, subset, meta):
     """Rows of an explicit add-entry subset (one commit's adds, or the
     live entries of its removed files), projected to the logical
     schema's columns (column mapping resolved). None when empty."""
-    return dl._read_adds(spark, path, subset, meta)
+    return delta_scan._read_adds(spark, path, subset, meta)
 
 
 def _cdf_enabled(meta: dict | None) -> bool:
@@ -310,8 +290,8 @@ def _read_cdc_rows(spark, path: str, rels: list, meta: dict):
     from pyspark.sql.types import StringType, StructField, StructType
 
     schema = dl._spark_schema_from_string(meta["schemaString"])
-    l2p = dl._logical_to_physical(meta)
-    base = dl._physical_read_schema(meta) if l2p else schema
+    l2p = delta_colmap._logical_to_physical(meta)
+    base = delta_colmap._physical_read_schema(meta) if l2p else schema
     read_schema = StructType(
         list(base.fields) + [StructField("_change_type", StringType())]
     )

@@ -5,12 +5,6 @@ multi-part (V.checkpoint.{i}.{n}.parquet + ``parts``), and v2
 (UUID-named manifest + sidecars) — plus the ``_last_checkpoint``
 pointer and checkpoint-file discovery used by log replay.
 
-Public names are re-exported by ``operators.delta_log`` so the split
-is invisible to callers; the tunables (``CHECKPOINT_PART_ACTIONS``,
-``TOMBSTONE_RETENTION_MS``) are read back through the ``delta_log``
-module at call time so existing monkeypatches on that module keep
-working.
-
 Reference: delta-io PROTOCOL.md (Checkpoints, V2 Checkpoints).
 """
 
@@ -23,6 +17,7 @@ import uuid
 
 from pyspark.sql import SparkSession
 
+from . import delta_log as dl
 from .delta_protocol import _PROTOCOL_ACTION
 from .hadoop_io import _hadoop_fs, _local_path, _write_small_file
 
@@ -43,14 +38,13 @@ TOMBSTONE_RETENTION_MS = 30 * 24 * 3600 * 1000
 
 
 def _read_last_checkpoint_doc(fs, jvm, path: str) -> dict | None:
-    from . import delta_log as _dl
     ps = f"{path}/_delta_log/_last_checkpoint"
     lp = _local_path(ps)
     if lp is not None and not os.path.exists(lp):
         return None
     if lp is None and not fs.exists(jvm.org.apache.hadoop.fs.Path(ps)):
         return None
-    return json.loads(_dl._read_text(fs, jvm, ps))
+    return json.loads(dl._read_text(fs, jvm, ps))
 
 
 def _checkpoint_files(fs, jvm, path: str, lc: dict) -> list[str]:
@@ -121,18 +115,16 @@ def checkpoint_delta(spark: SparkSession, path: str, version: int) -> None:
     each live add) in the spec's flattened column layout; sizes stay
     O(live files), and subsequent reads cost one small JSON + one
     parquet + the commit tail."""
-    from . import delta_log as _dl
-
     from pyspark.sql.types import (
         ArrayType, BooleanType, LongType, MapType, StringType, StructField,
         StructType,
     )
 
-    st = _dl._replay_log(spark, path, version)
+    st = dl._replay_log(spark, path, version)
     target, adds, meta, txns = st.version, st.adds, st.meta, st.txns
     # tombstones ride the checkpoint (within retention) so vacuum can
     # still date deletions after old commits are cleaned up
-    cutoff = _dl._now_ms() - _dl.TOMBSTONE_RETENTION_MS
+    cutoff = dl._now_ms() - TOMBSTONE_RETENTION_MS
     removes = {
         r: rm for r, rm in st.removes.items()
         if rm["deletionTimestamp"] >= cutoff
@@ -261,7 +253,7 @@ def checkpoint_delta(spark: SparkSession, path: str, version: int) -> None:
         rm = removes[rel]
         rows.append(
             {**base,
-             "remove": {"path": _dl._encode_path(rel),
+             "remove": {"path": dl._encode_path(rel),
                         "deletionTimestamp": int(rm["deletionTimestamp"]),
                         "dataChange": bool(rm["dataChange"]),
                         "deletionVector": _dv_struct(rm.get("deletionVector"))}}
@@ -289,7 +281,7 @@ def checkpoint_delta(spark: SparkSession, path: str, version: int) -> None:
         rows.append(
             {**base,
              "add": {
-                 "path": _dl._encode_path(a["path"]),
+                 "path": dl._encode_path(a["path"]),
                  "partitionValues": a.get("partitionValues", {}),
                  "size": int(a.get("size", 0)),
                  "modificationTime": int(a.get("modificationTime", 0)),
@@ -358,7 +350,7 @@ def checkpoint_delta(spark: SparkSession, path: str, version: int) -> None:
         main_rows = [
             {**base2, **r} for r in other_rows
         ] + [{**base2, "checkpointMetadata": {"version": target}}]
-        n_sc = max(1, math.ceil(len(file_rows) / _dl.CHECKPOINT_PART_ACTIONS))
+        n_sc = max(1, math.ceil(len(file_rows) / CHECKPOINT_PART_ACTIONS))
         per = math.ceil(len(file_rows) / n_sc) if file_rows else 0
         for i in range(n_sc if file_rows else 0):
             chunk = file_rows[i * per : (i + 1) * per]
@@ -400,7 +392,7 @@ def checkpoint_delta(spark: SparkSession, path: str, version: int) -> None:
         )
         return
 
-    n_parts = max(1, math.ceil(len(rows) / _dl.CHECKPOINT_PART_ACTIONS))
+    n_parts = max(1, math.ceil(len(rows) / CHECKPOINT_PART_ACTIONS))
     if n_parts == 1:
         tmp = f"{path}/_delta_log/_cp_tmp_{target:020d}"
         spark.createDataFrame(rows, schema=schema).coalesce(1).write.mode(

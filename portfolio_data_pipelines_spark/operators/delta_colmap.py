@@ -11,12 +11,6 @@ schema, arrow-footer completeness probes, and the per-file /
 distributed element-id stamping pass that writes list/map node ids
 pyarrow-side (Spark's writer cannot place them).
 
-Public names are re-exported by ``operators.delta_log``; every
-delta_log internal — including the ``STAMP_DISTRIBUTE_MIN_FILES``
-tunable the suite patches — is reached through the lazy ``dl`` proxy
-below so the import graph stays acyclic (the delta_dv pattern, r15)
-and monkeypatches on the ``delta_log`` module keep working.
-
 Reference: delta-io PROTOCOL.md (Column Mapping / IcebergCompat) and
 the Iceberg spec's field-id addressing rules.
 """
@@ -31,20 +25,6 @@ from .delta_protocol import (
     _elem_id_paths,
     _iceberg_compat_version,
 )
-
-
-class _DeltaLogProxy:
-    """Call-time attribute proxy onto ``operators.delta_log`` — see
-    ``delta_cdf._DeltaLogProxy``; duplicated (three lines) rather than
-    imported so the split modules stay independent of each other."""
-
-    def __getattr__(self, name):
-        from . import delta_log
-
-        return getattr(delta_log, name)
-
-
-dl = _DeltaLogProxy()
 
 
 class _IdModeMap(dict):
@@ -456,7 +436,7 @@ def _stamp_element_ids_batch(
             out[u] = size
         return out
 
-    if len(uris) < dl.STAMP_DISTRIBUTE_MIN_FILES or spark is None:
+    if len(uris) < STAMP_DISTRIBUTE_MIN_FILES or spark is None:
         return _driver_loop()
 
     eids = dict(elem_ids)
@@ -464,7 +444,7 @@ def _stamp_element_ids_batch(
     def _stamp_batches(batches):
         import pandas as pd
 
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_colmap import (
             _stamp_and_size,
         )
 

@@ -6,10 +6,6 @@ and ``delete_where_dv`` — the merge-on-read DELETE that writes roaring
 bitmaps instead of rewriting files. The roaring codec itself lives in
 ``operators.deletion_vectors``.
 
-Public names are re-exported by ``operators.delta_log``; the sizing
-tunables are read back through the ``delta_log`` module at call time
-so existing monkeypatches on that module keep working.
-
 Reference: delta-io PROTOCOL.md (Deletion Vectors).
 """
 
@@ -20,6 +16,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import delta_cdf, delta_colmap, delta_scan
+from . import delta_log as dl
 from .delta_protocol import (
     _PROTOCOL_ACTION,
     _check_append_only,
@@ -96,8 +94,6 @@ def _dv_identity(adds: dict, pcols: list):
     stamped per scan group — basenames alone are NOT unique across a
     dynamic-partition write's partition dirs (same part number + job
     uuid), but are unique within one group; verified, not assumed."""
-    from . import delta_log as _dl
-
     global _URI_SAFE_REL
     if _URI_SAFE_REL is None:
         import re
@@ -115,7 +111,7 @@ def _dv_identity(adds: dict, pcols: list):
     ):
         return True, len(pcols) + 1, {rel: (0, rel) for rel in adds}
     keymap: dict[str, tuple[int, str]] = {}
-    for i, (_key, rels) in enumerate(_dl._group_adds(adds, pcols)):
+    for i, (_key, rels) in enumerate(delta_scan._group_adds(adds, pcols)):
         seen: set[str] = set()
         for rel in rels:
             base = rel.rsplit("/", 1)[-1]
@@ -137,8 +133,6 @@ def _dv_positions_df(spark, path: str, dv_adds: dict, keymap: dict):
     to its raw bitmap bytes (reading each referenced .bin once via the
     blob cache); positions explode executor-side. Returns (df, total
     declared cardinality) so the caller can pick broadcast vs shuffle."""
-    from . import delta_log as _dl
-
     from . import deletion_vectors as dv_codec
 
     fs, _, jvm = _hadoop_fs(spark, path)
@@ -148,7 +142,7 @@ def _dv_positions_df(spark, path: str, dv_adds: dict, keymap: dict):
         target = (
             loc if "://" in loc or loc.startswith("/") else f"{path}/{loc}"
         )
-        return _dl._read_bytes(fs, jvm, target)
+        return dl._read_bytes(fs, jvm, target)
 
     rows, total = [], 0
     for rel in sorted(dv_adds):
@@ -157,7 +151,7 @@ def _dv_positions_df(spark, path: str, dv_adds: dict, keymap: dict):
         grp, fn = keymap[rel]
         rows.append((grp, fn, int(d["cardinality"]), bytearray(data)))
         total += int(d["cardinality"])
-    if total <= _dl.DV_DRIVER_DECODE_MAX_POSITIONS:
+    if total <= DV_DRIVER_DECODE_MAX_POSITIONS:
         # small DV sets decode on the driver into a local relation —
         # no Python-worker round-trip, the anti-join side is ready-made
         pairs = [
@@ -205,7 +199,7 @@ def delete_where_dv(
     ``delete`` change rows (cdc files), so the change feed never needs
     to reconstruct a DV commit.
 
-    Scale: below ``_dl.DV_DELETE_DRIVER_MAX_POSITIONS`` matched rows the
+    Scale: below ``DV_DELETE_DRIVER_MAX_POSITIONS`` matched rows the
     position list collects to the driver (decode + union locally);
     above it each file's bitmap serializes EXECUTOR-side (one
     ``applyInPandas`` over the per-file position groups, existing
@@ -220,15 +214,13 @@ def delete_where_dv(
     Per-file ``stats`` are kept as written (physical file counts) —
     they stay a conservative superset for data skipping, as the spec's
     ``tightBounds=false`` state denotes."""
-    from . import delta_log as _dl
-
     import numpy as np
 
     from . import deletion_vectors as dv_codec
 
-    _dl._warn_if_commit_unsafe(path)
+    dl._warn_if_commit_unsafe(path)
     fs, _, jvm = _hadoop_fs(spark, path)
-    st = _dl._replay_log(spark, path, None)
+    st = dl._replay_log(spark, path, None)
     _check_writer_protocol(st.protocol, st.meta)
     if st.meta is not None and _iceberg_compat_version(st.meta):
         raise ValueError(
@@ -239,12 +231,12 @@ def delete_where_dv(
     if st.meta is None:
         raise ValueError(f"Delta log under {path} has no metaData action")
     _check_append_only(st.meta, True)
-    df = _dl._read_adds(spark, path, st.adds, st.meta, with_pos=True)
+    df = delta_scan._read_adds(spark, path, st.adds, st.meta, with_pos=True)
     if df is None:
         return None
     matched = df.filter(F.expr(predicate))
     pcols_log = st.meta.get("partitionColumns", [])
-    l2p_map = _dl._logical_to_physical(st.meta)
+    l2p_map = delta_colmap._logical_to_physical(st.meta)
     pv_cols = [l2p_map.get(c, c) for c in pcols_log] if l2p_map else pcols_log
     by_key = {
         key: rel for rel, key in _dv_identity(st.adds, pv_cols)[2].items()
@@ -255,7 +247,7 @@ def delete_where_dv(
         target = (
             loc if "://" in loc or loc.startswith("/") else f"{path}/{loc}"
         )
-        return _dl._read_bytes(fs, jvm, target)
+        return dl._read_bytes(fs, jvm, target)
 
     # one O(files) pre-count decides WHERE the bitmaps serialize: the
     # driver never learns the position list's size the hard way
@@ -267,7 +259,7 @@ def delete_where_dv(
     n_deleted = sum(int(r["count"]) for r in counts)
     #: (rel, framed-ready bitmap bytes, combined cardinality), sorted
     dv_blobs: list[tuple[str, bytes, int]] = []
-    if n_deleted <= _dl.DV_DELETE_DRIVER_MAX_POSITIONS:
+    if n_deleted <= DV_DELETE_DRIVER_MAX_POSITIONS:
         # SMALL path: positions collect to the driver (bounded by the
         # constant), old descriptors decode + union locally
         per_file = (
@@ -378,7 +370,7 @@ def delete_where_dv(
             [b for _rel, b, _c in dv_files]
         )
         poi, bin_rel = dv_codec.new_dv_file_name()
-        _dl._write_small_bytes(fs, jvm, f"{path}/{bin_rel}", blob)
+        dl._write_small_bytes(fs, jvm, f"{path}/{bin_rel}", blob)
         for (rel, _b, card), (off, size) in zip(dv_files, metas):
             descriptors[rel] = {
                 "storageType": "u",
@@ -388,19 +380,19 @@ def delete_where_dv(
                 "cardinality": int(card),
             }
     cdc_actions: list[dict] = []
-    if _dl._cdf_enabled(st.meta):
-        schema = _dl._spark_schema_from_string(st.meta["schemaString"])
+    if delta_cdf._cdf_enabled(st.meta):
+        schema = dl._spark_schema_from_string(st.meta["schemaString"])
         cols = [f.name for f in schema.fields]
-        cdc_actions = _dl._stage_cdc_files(
+        cdc_actions = delta_cdf._stage_cdc_files(
             spark, fs, jvm, path,
             matched.select(
                 *cols, F.lit("delete").alias("_change_type")
             ),
             new_version,
-            _dl._logical_to_physical(st.meta),
+            delta_colmap._logical_to_physical(st.meta),
         )
     actions: list[dict] = [
-        _dl._commit_info(
+        dl._commit_info(
             "DELETE",
             {"predicate": predicate},
             metrics={
@@ -414,10 +406,10 @@ def delete_where_dv(
     if "deletionVectors" not in (proto.get("readerFeatures") or []):
         actions.append({"protocol": _upgraded_protocol_for_dv(proto)})
     actions.extend(cdc_actions)
-    now = _dl._now_ms()
+    now = dl._now_ms()
     for rel in fully_dead + [r for r, _b, _c in dv_files]:
         rm = {
-            "path": _dl._encode_path(rel),
+            "path": dl._encode_path(rel),
             "deletionTimestamp": now,
             "dataChange": True,
         }
@@ -427,7 +419,7 @@ def delete_where_dv(
         actions.append({"remove": rm})
     for rel, _b, _c in dv_files:
         a = dict(st.adds[rel])
-        a["path"] = _dl._encode_path(rel)
+        a["path"] = dl._encode_path(rel)
         a["dataChange"] = True
         a["deletionVector"] = descriptors[rel]
         if a.get("stats"):
@@ -438,7 +430,5 @@ def delete_where_dv(
             doc["tightBounds"] = False
             a["stats"] = json.dumps(doc, sort_keys=True)
         actions.append({"add": a})
-    _dl._write_commit(fs, jvm, path, new_version, actions)
-    if new_version % _dl.DELTA_CHECKPOINT_EVERY == 0:
-        _dl.checkpoint_delta(spark, path, new_version)
+    dl._write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version

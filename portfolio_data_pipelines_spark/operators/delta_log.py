@@ -15,17 +15,20 @@ Reference behavior: the reference repo's roadmap names Delta/MERGE
 (``README.md:204,209``) but ships none; this is the driver-mandated
 lakehouse surface.
 
-This module is the WRITE half and the family's hub: staging + commit +
-replay + schema evolution + copy-on-write DML live here, and the rest
-of the protocol is split into sibling modules whose public names are
-re-exported from this one (import from ``delta_log`` and never notice
-the decomposition): ``delta_protocol`` (feature gates), ``delta_scan``
-(the shared read path + data skipping), ``delta_checkpoint``,
-``delta_cdf``, ``delta_merge``, ``delta_alter``, ``delta_maintain``
+This module is the WRITE half of the Delta family: staging, commit
+(``_write_commit`` — the one commit-write path, which also owns the
+checkpoint cadence), log replay, schema evolution and copy-on-write
+DML. The rest of the protocol lives in sibling modules that own their
+names — import each from the module that defines it:
+``delta_protocol`` (feature gates), ``delta_scan`` (the shared read
+path + data skipping), ``delta_checkpoint``, ``delta_cdf``,
+``delta_merge``, ``delta_alter``, ``delta_maintain``
 (OPTIMIZE/RESTORE/VACUUM/…), ``delta_colmap`` (column-mapping physical
-schema + icebergCompat stamping), ``delta_dv``, ``deletion_vectors``.
-Each sibling reaches delta_log internals through a call-time proxy, so
-``monkeypatch.setattr(delta_log, …)`` affects the moved code too.
+schema + icebergCompat stamping), ``delta_dv`` and
+``deletion_vectors``. The siblings that call back into this module and
+this module import each other as module objects (``from . import
+delta_scan``), so names resolve at call time and any of them can be
+imported first.
 
 Scale notes:
 - A commit is one staging write + per-file renames + ONE small NDJSON
@@ -51,134 +54,24 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .delta_cdf import (  # noqa: F401  (re-exported surface)
-    _cdf_enabled,
-    _maybe_stage_cdc,
-    _net_changes,
-    _read_adds_subset,
-    _read_cdc_rows,
-    _stage_cdc_files,
-    enable_change_data_feed,
-    read_delta_cdf,
-)
-from .delta_merge import (  # noqa: F401  (re-exported surface)
-    apply_changes_delta,
-    delta_cdf_apply_sink,
-    merge_delta,
-)
-from .delta_alter import (  # noqa: F401  (re-exported surface)
-    _guard_constraints_reference,
-    add_check_constraint,
-    drop_check_constraint,
-    drop_column,
-    drop_column_default,
-    enable_column_mapping,
-    enable_iceberg_compat,
-    enable_row_tracking,
-    rename_column,
-    set_column_default,
-)
-from .delta_dv import (  # noqa: F401  (re-exported surface)
-    DV_BROADCAST_MAX_POSITIONS,
-    DV_DELETE_DRIVER_MAX_POSITIONS,
-    DV_DRIVER_DECODE_MAX_POSITIONS,
-    _dv_explode_batches,
-    _dv_identity,
-    _dv_positions_df,
-    delete_where_dv,
-)
-
-from .delta_colmap import (  # noqa: F401  (re-exported surface)
-    STAMP_DISTRIBUTE_MIN_FILES,
-    _IdModeMap,
-    _arrow_schema_ids_complete,
-    _assign_compat_element_ids,
-    _dt_from_json_type,
-    _element_id_map,
-    _field_ids,
-    _idmode_nested_type,
-    _idmode_validate_shape,
-    _idmode_write_types,
-    _logical_to_physical,
-    _physical_read_schema,
-    _stamp_and_size,
-    _stamp_element_ids_batch,
-    _stamp_element_ids_file,
-)
-
-from .delta_scan import (  # noqa: F401  (re-exported surface)
-    _derived_partition_bounds,
-    _fast_hive_read,
-    _file_may_match,
-    _group_adds,
-    _read_adds,
-    _read_file_groups,
-    _skip_lt,
-    _temporal_utc,
-    read_delta,
-    read_delta_changes,
-    version_as_of,
-)
-
-from .delta_maintain import (  # noqa: F401  (re-exported surface)
-    _CLUSTERING_DOMAIN,
-    _clustering_logical_columns,
-    cleanup_log,
-    clustering_columns,
-    convert_parquet_to_delta,
-    describe_detail,
-    describe_history,
-    drop_table_feature,
-    enable_clustering,
-    get_domain_metadata,
-    optimize_delta,
-    purge_delta,
-    remove_domain_metadata,
-    restore_delta,
-    set_domain_metadata,
-    vacuum_delta,
-)
-
-from .delta_checkpoint import (  # noqa: F401  (re-exported surface)
-    CHECKPOINT_PART_ACTIONS,
-    DELTA_CHECKPOINT_EVERY,
-    TOMBSTONE_RETENTION_MS,
-    _checkpoint_files,
-    _read_last_checkpoint_doc,
-    checkpoint_delta,
-)
-
-from .delta_protocol import (  # noqa: F401  (re-exported surface)
-    PARQUET_NESTED_IDS_KEY,
+from . import delta_cdf, delta_checkpoint, delta_colmap, delta_dv, delta_scan
+from .delta_protocol import (
     _COLLATION_FEATURES,
-    _COLLATION_KNOWN,
-    _DROPPABLE_FEATURES,
-    _LEGACY_WRITER_FEATURES,
     _PROTOCOL_ACTION,
-    _SUPPORTED_COLLATIONS,
     _SUPPORTED_READER_FEATURES,
-    _SUPPORTED_WRITER_FEATURES,
     _check_append_only,
     _check_iceberg_compat_duties,
     _check_writer_protocol,
     _collation_base,
-    _collation_supported,
     _creation_protocol,
-    _downgraded_protocol,
-    _elem_id_paths,
     _iceberg_compat_version,
     _schema_uses_ntz,
     _type_contains_variant,
     _unsupported_collations,
-    _upgraded_protocol_for_dv,
     _upgraded_protocol_with,
-    _upgraded_protocol_writer_only,
     _variant_field_split,
-    _warn_on_versioned_collations,
 )
-
 from .hadoop_io import _hadoop_fs, _local_path, _write_small_file
-
 
 
 class LogState(NamedTuple):
@@ -307,7 +200,7 @@ def _list_log_versions(fs, jvm, path: str) -> list[int]:
     if lp is not None:
         if not os.path.isdir(f"{lp}/_delta_log"):
             return []
-        lc = _read_last_checkpoint_doc(fs, jvm, path)
+        lc = delta_checkpoint._read_last_checkpoint_doc(fs, jvm, path)
         start = int(lc["version"]) if lc else 0
         out = []
         v = start
@@ -318,7 +211,7 @@ def _list_log_versions(fs, jvm, path: str) -> list[int]:
     log_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/_delta_log")
     if not fs.exists(log_dir):
         return []
-    lc = _read_last_checkpoint_doc(fs, jvm, path)
+    lc = delta_checkpoint._read_last_checkpoint_doc(fs, jvm, path)
     start = int(lc["version"]) if lc else 0
     # ONE listing instead of one fs.exists round trip per version (r16
     # verdict #7): on object stores each probe is a metadata RPC, so a
@@ -1361,7 +1254,6 @@ def _enforce_not_null(
     return df, did_cache
 
 
-
 def _commit_info(
     operation: str,
     params: dict | None = None,
@@ -1434,23 +1326,36 @@ def _resolve_ict(fs, jvm, path: str, version: int) -> int:
     return now
 
 
-def _write_commit(fs, jvm, path: str, version: int, actions: list[dict]) -> None:
+def _commit_text(actions: list[dict]) -> str:
+    """One commit file's content: the spec's NDJSON, one action a line."""
+    return "\n".join(json.dumps(a, sort_keys=True) for a in actions)
+
+
+def _write_commit(
+    spark, fs, jvm, path: str, version: int, actions: list[dict]
+) -> None:
     """Serialize ``actions`` as the spec's NDJSON and exclusively create
     commit ``version`` — THE single commit-write path, so every commit
     (data, metadata-only, conversion) carries a monotonic
     ``commitInfo.inCommitTimestamp``. The ICT is resolved here, not at
     action-build time, because an append retry can move the commit to a
-    later version whose predecessor differs."""
+    later version whose predecessor differs.
+
+    This path also owns the checkpoint cadence: a commit whose version
+    is a positive multiple of ``delta_checkpoint.DELTA_CHECKPOINT_EVERY``
+    is checkpointed right after it lands (version 0, a table's creation
+    or conversion, never is)."""
     ict = _resolve_ict(fs, jvm, path, version)
     for a in actions:
         if "commitInfo" in a:
             a["commitInfo"]["inCommitTimestamp"] = ict
             break
     _write_small_file(
-        fs, jvm, f"{path}/{_log_path(version)}",
-        "\n".join(json.dumps(a, sort_keys=True) for a in actions),
+        fs, jvm, f"{path}/{_log_path(version)}", _commit_text(actions),
         overwrite=False,
     )
+    if version > 0 and version % delta_checkpoint.DELTA_CHECKPOINT_EVERY == 0:
+        delta_checkpoint.checkpoint_delta(spark, path, version)
 
 
 def _add_metrics(adds: list[dict], removed: int) -> dict:
@@ -1611,8 +1516,13 @@ def _stage_commit_files(
         # size and coalescing tiny ones — so staged file count tracks
         # data volume, not input parallelism, at any scale. Identity /
         # generated values are already bound to rows by this point, so
-        # the extra exchange only moves rows.
-        df = df.hint("rebalance", *partition_cols)
+        # the extra exchange only moves rows. Without AQE the hint is a
+        # no-op, so a plain hash repartition on the same columns keeps
+        # the one-writer-per-value property there.
+        if spark.conf.get("spark.sql.adaptive.enabled") == "true":
+            df = df.hint("rebalance", *partition_cols)
+        else:
+            df = df.repartition(*partition_cols)
     writer = df.write.mode("overwrite").option("compression", "zstd")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
@@ -1680,7 +1590,7 @@ def _stage_commit_files(
         # once — driver loop for small commits, distributed Spark job
         # above STAMP_DISTRIBUTE_MIN_FILES (the add actions must carry
         # the REWRITTEN sizes)
-        newsizes = _stamp_element_ids_batch(
+        newsizes = delta_colmap._stamp_element_ids_batch(
             spark, [f"{path}/{fr}" for fr, _, _ in renamed], elem_ids
         )
         renamed = [
@@ -1886,7 +1796,7 @@ def _evolve_meta(df: DataFrame, prev_meta: dict) -> dict | None:
     physical names to genuinely new columns, and bumps
     ``delta.columnMapping.maxColumnId`` — exactly delta-spark's
     mergeSchema-under-mapping behavior."""
-    l2p = _logical_to_physical(prev_meta)
+    l2p = delta_colmap._logical_to_physical(prev_meta)
     new_json = json.loads(_schema_string(df))["fields"]
     prev_fields = json.loads(prev_meta["schemaString"])["fields"]
     if l2p is None:
@@ -2372,12 +2282,14 @@ def write_delta(
             # New array/map levels first get their repeated-node ids
             # assigned (r14), the same duty enable_iceberg_compat
             # performs — then the check validates completeness.
-            evolved_meta = _assign_compat_element_ids(evolved_meta)
+            evolved_meta = delta_colmap._assign_compat_element_ids(evolved_meta)
             _check_iceberg_compat_duties(
                 st.protocol if st is not None else None, evolved_meta
             )
     l2p = (
-        _logical_to_physical(evolved_meta or prev_meta) if prev_meta else None
+        delta_colmap._logical_to_physical(evolved_meta or prev_meta)
+        if prev_meta
+        else None
     )
     try:
         adds = _stage_commit_files(
@@ -2416,7 +2328,7 @@ def write_delta(
     # otherwise. Pure appends derive from add actions and skip this.
     cdc_actions: list[dict] = []
     eff_meta = evolved_meta or prev_meta
-    if doomed and _cdf_enabled(eff_meta):
+    if doomed and delta_cdf._cdf_enabled(eff_meta):
         if cdf_key_cols:
             eff_cols = [
                 f.name
@@ -2429,12 +2341,12 @@ def write_delta(
                 raise ValueError(
                     f"cdf_key_cols {bad_keys} not in table schema {eff_cols}"
                 )
-        cdc_actions = _maybe_stage_cdc(
+        cdc_actions = delta_cdf._maybe_stage_cdc(
             spark, fs, jvm, path, eff_meta,
-            _read_adds(
+            delta_scan._read_adds(
                 spark, path, {r: prev_adds[r] for r in doomed}, eff_meta
             ),
-            _read_adds(
+            delta_scan._read_adds(
                 spark, path,
                 {_decode_path(a["add"]["path"]): a["add"] for a in adds},
                 eff_meta,
@@ -2556,11 +2468,17 @@ def write_delta(
     )
     for _attempt in range(64):
         try:
-            _write_commit(fs, jvm, path, new_version, actions)
+            _write_commit(spark, fs, jvm, path, new_version, actions)
             break
         except Exception as race:
             latest = _list_log_versions(fs, jvm, path)
-            lost_race = bool(latest) and latest[-1] >= new_version
+            # our own commit landing and then failing its checkpoint
+            # is not a lost race: surface the error, never re-commit
+            lost_race = (
+                bool(latest) and latest[-1] >= new_version
+                and _read_text(fs, jvm, f"{path}/{_log_path(new_version)}")
+                != _commit_text(actions)
+            )
             if not (retriable and lost_race):
                 raise
             for v in range(new_version, latest[-1] + 1):
@@ -2621,8 +2539,6 @@ def write_delta(
             f"append to {path} lost the version race 64 times — "
             "pathological contention"
         )
-    if new_version > 0 and new_version % DELTA_CHECKPOINT_EVERY == 0:
-        checkpoint_delta(spark, path, new_version)
     return new_version
 
 
@@ -2663,9 +2579,9 @@ def _replay_log(
             dv_tombs[rel_bin] = max(dv_tombs.get(rel_bin, 0), ts)
 
     start = 0
-    lc = _read_last_checkpoint_doc(fs, jvm, path)
+    lc = delta_checkpoint._read_last_checkpoint_doc(fs, jvm, path)
     if lc is not None and lc["version"] <= target:
-        cps = _checkpoint_files(fs, jvm, path, lc)
+        cps = delta_checkpoint._checkpoint_files(fs, jvm, path, lc)
         if len(cps) == 1 and cps[0].endswith(".json"):
             # V2 manifests may be NDJSON (V.checkpoint.<uuid>.json):
             # same action rows, line-delimited — file actions still
@@ -3070,7 +2986,6 @@ def delta_stream_sink(
     return sink
 
 
-
 def _copy_on_write_where(
     spark: SparkSession,
     path: str,
@@ -3109,7 +3024,7 @@ def _copy_on_write_where(
     schema = _spark_schema_from_string(meta["schemaString"])
     cols = [f.name for f in schema.fields]
     types = {f.name: f.dataType for f in schema.fields}
-    l2p = _logical_to_physical(meta)
+    l2p = delta_colmap._logical_to_physical(meta)
     pcols = meta.get("partitionColumns", [])
     if assignments:
         unknown = sorted(set(assignments) - set(cols))
@@ -3129,14 +3044,14 @@ def _copy_on_write_where(
                 "their values are writer-allocated (delta-spark refuses "
                 "this too)"
             )
-    df = _read_adds(spark, path, adds, meta, with_pos=True)
+    df = delta_scan._read_adds(spark, path, adds, meta, with_pos=True)
     if df is None:
         return None
     _check_append_only(meta, True)
     pred = F.expr(predicate)
     matched = df.filter(pred)
     pv_cols = [l2p.get(c, c) for c in pcols] if l2p else pcols
-    by_key = {k: rel for rel, k in _dv_identity(adds, pv_cols)[2].items()}
+    by_key = {k: rel for rel, k in delta_dv._dv_identity(adds, pv_cols)[2].items()}
     touched = (
         matched.select("__dv_grp", "__dv_fn").distinct().collect()
     )
@@ -3149,7 +3064,7 @@ def _copy_on_write_where(
     touched_adds = {rel: adds[rel] for rel in touched_rels}
     rt = _row_tracking_supported(st.protocol)
     rt_cols = ["_row_id", "_row_commit_version"] if rt else []
-    base = _read_adds(spark, path, touched_adds, meta, row_ids=rt)
+    base = delta_scan._read_adds(spark, path, touched_adds, meta, row_ids=rt)
     keep = ~F.coalesce(pred, F.lit(False))
     survivors = base.filter(keep).select(*cols, *rt_cols)
     if rt:
@@ -3206,7 +3121,7 @@ def _copy_on_write_where(
             spark, fs, jvm, path, new_data, pcols, new_version, l2p=l2p
         )
         cdc_actions: list[dict] = []
-        if _cdf_enabled(meta):
+        if delta_cdf._cdf_enabled(meta):
             pre = base.filter(~keep).select(*cols)
             if assignments is None:
                 changes = pre.select(
@@ -3221,7 +3136,7 @@ def _copy_on_write_where(
                         F.lit("update_postimage").alias("_change_type"),
                     )
                 )
-            cdc_actions = _stage_cdc_files(
+            cdc_actions = delta_cdf._stage_cdc_files(
                 spark, fs, jvm, path, changes, new_version, l2p
             )
     finally:
@@ -3257,9 +3172,7 @@ def _copy_on_write_where(
     )
     _rt_finalize_commit(st, new_adds, actions, new_version)
     actions.extend(new_adds)
-    _write_commit(fs, jvm, path, new_version, actions)
-    if new_version % DELTA_CHECKPOINT_EVERY == 0:
-        checkpoint_delta(spark, path, new_version)
+    _write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version
 
 
@@ -3294,7 +3207,5 @@ def _commit_metadata_only(
     st = _replay_log(spark, path, None)
     _check_writer_protocol(st.protocol, st.meta)
     new_version = st.version + 1
-    _write_commit(fs, jvm, path, new_version, actions)
-    if new_version % DELTA_CHECKPOINT_EVERY == 0:
-        checkpoint_delta(spark, path, new_version)
+    _write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version

@@ -11,11 +11,6 @@ the metadata tail), the domain-metadata channel and the liquid
 clustering state it powers, and the one-shot in-place converter
 (``convert_parquet_to_delta``).
 
-Public names are re-exported by ``operators.delta_log``; every
-delta_log internal is reached through the lazy ``dl`` proxy below so
-the import graph stays acyclic (the delta_dv pattern, r15) and
-monkeypatches on the ``delta_log`` module keep working.
-
 Reference: delta-io PROTOCOL.md (Optimize / Reorg / Restore / Vacuum /
 Domain Metadata / Clustered Tables / Table Features) and delta-spark's
 matching DDL surface.
@@ -25,10 +20,11 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import delta_cdf, delta_checkpoint, delta_colmap, delta_scan
+from . import delta_log as dl
 from .delta_protocol import (
     _DROPPABLE_FEATURES,
     _PROTOCOL_ACTION,
@@ -38,23 +34,6 @@ from .delta_protocol import (
     _upgraded_protocol_writer_only,
 )
 from .hadoop_io import _hadoop_fs
-
-if TYPE_CHECKING:  # pragma: no cover - type-only, avoids a load-time cycle
-    from .delta_log import LogState
-
-
-class _DeltaLogProxy:
-    """Call-time attribute proxy onto ``operators.delta_log`` — see
-    ``delta_cdf._DeltaLogProxy``; duplicated (three lines) rather than
-    imported so the split modules stay independent of each other."""
-
-    def __getattr__(self, name):
-        from . import delta_log
-
-        return getattr(delta_log, name)
-
-
-dl = _DeltaLogProxy()
 
 
 def optimize_delta(
@@ -121,7 +100,7 @@ def optimize_delta(
         if partitions is not None
         else None
     )
-    l2p = dl._logical_to_physical(st.meta)
+    l2p = delta_colmap._logical_to_physical(st.meta)
     pv_cols = [l2p.get(c, c) for c in pcols] if l2p else pcols
     for rel, a in sorted(st.adds.items()):
         key = tuple(a.get("partitionValues", {}).get(c) for c in pv_cols)
@@ -140,7 +119,7 @@ def optimize_delta(
         for rel in rels:
             doomed_adds[rel] = st.adds[rel]
     rt = dl._row_tracking_supported(st.protocol)
-    compacted = dl._read_adds(spark, path, doomed_adds, st.meta, row_ids=rt)
+    compacted = delta_scan._read_adds(spark, path, doomed_adds, st.meta, row_ids=rt)
     if rt:
         # compaction must not re-id rows: persist each row's id AND its
         # original commit version into the hidden materialized columns
@@ -189,9 +168,7 @@ def optimize_delta(
     )
     dl._rt_finalize_commit(st, adds, actions, new_version)
     actions.extend(adds)
-    dl._write_commit(fs, jvm, path, new_version, actions)
-    if new_version % dl.DELTA_CHECKPOINT_EVERY == 0:
-        dl.checkpoint_delta(spark, path, new_version)
+    dl._write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version
 
 
@@ -236,7 +213,7 @@ def purge_delta(
         raise ValueError(
             "partitions scope given but the table is unpartitioned"
         )
-    l2p = dl._logical_to_physical(st.meta)
+    l2p = delta_colmap._logical_to_physical(st.meta)
     pv_cols = [l2p.get(c, c) for c in pcols] if l2p else pcols
     scope = (
         dl._partition_scope_matcher(partitions, pcols)
@@ -254,7 +231,7 @@ def purge_delta(
     if not doomed:
         return None
     rt = dl._row_tracking_supported(st.protocol)
-    purged = dl._read_adds(spark, path, doomed, st.meta, row_ids=rt)
+    purged = delta_scan._read_adds(spark, path, doomed, st.meta, row_ids=rt)
     if rt:
         # a purge rewrite keeps surviving rows' ids and commit versions
         purged = dl._rt_materialize(purged, st.meta)
@@ -304,9 +281,7 @@ def purge_delta(
         )
     dl._rt_finalize_commit(st, adds, actions, new_version)
     actions.extend(adds)
-    dl._write_commit(fs, jvm, path, new_version, actions)
-    if new_version % dl.DELTA_CHECKPOINT_EVERY == 0:
-        dl.checkpoint_delta(spark, path, new_version)
+    dl._write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version
 
 
@@ -360,9 +335,7 @@ def set_domain_metadata(
         }
     )
     new_version = st.version + 1
-    dl._write_commit(fs, jvm, path, new_version, actions)
-    if new_version % dl.DELTA_CHECKPOINT_EVERY == 0:
-        dl.checkpoint_delta(spark, path, new_version)
+    dl._write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version
 
 
@@ -388,9 +361,7 @@ def remove_domain_metadata(
         },
     ]
     new_version = st.version + 1
-    dl._write_commit(fs, jvm, path, new_version, actions)
-    if new_version % dl.DELTA_CHECKPOINT_EVERY == 0:
-        dl.checkpoint_delta(spark, path, new_version)
+    dl._write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version
 
 
@@ -443,7 +414,7 @@ def enable_clustering(
     proto = dict(st.protocol or _PROTOCOL_ACTION["protocol"])
     proto = _upgraded_protocol_writer_only(proto, "clustering")
     proto = _upgraded_protocol_writer_only(proto, "domainMetadata")
-    l2p = dl._logical_to_physical(st.meta) or {}
+    l2p = delta_colmap._logical_to_physical(st.meta) or {}
     return dl._commit_metadata_only(
         spark, path,
         [
@@ -471,7 +442,7 @@ def enable_clustering(
     )
 
 
-def _clustering_logical_columns(st: "LogState") -> list[str]:
+def _clustering_logical_columns(st: dl.LogState) -> list[str]:
     """The table's liquid-clustering columns in LOGICAL names: the
     ``delta.clustering`` domain records PHYSICAL name paths (the form
     foreign engines expect), so on a column-mapped table each entry is
@@ -481,7 +452,7 @@ def _clustering_logical_columns(st: "LogState") -> list[str]:
     if not raw or st.meta is None:
         return []
     p2l = {
-        p: l for l, p in (dl._logical_to_physical(st.meta) or {}).items()
+        p: l for l, p in (delta_colmap._logical_to_physical(st.meta) or {}).items()
     }
     return [
         p2l.get(p[-1], p[-1])
@@ -581,9 +552,7 @@ def drop_table_feature(spark: SparkSession, path: str, feature: str) -> int:
                 f"cannot drop {feature!r}: column(s) {still} still "
                 "declare a DEFAULT — drop_column_default them first"
             )
-    dl._write_commit(fs, jvm, path, new_version, actions)
-    if new_version % dl.DELTA_CHECKPOINT_EVERY == 0:
-        dl.checkpoint_delta(spark, path, new_version)
+    dl._write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version
 
 
@@ -659,13 +628,13 @@ def restore_delta(
     ] or old.meta.get("partitionColumns") != cur.meta.get("partitionColumns")
     eff_meta = old.meta if reemit_meta else cur.meta
     cdc_actions: list[dict] = []
-    if to_remove and to_readd and cdf_key_cols and dl._cdf_enabled(eff_meta):
-        cdc_actions = dl._maybe_stage_cdc(
+    if to_remove and to_readd and cdf_key_cols and delta_cdf._cdf_enabled(eff_meta):
+        cdc_actions = delta_cdf._maybe_stage_cdc(
             spark, fs, jvm, path, eff_meta,
-            dl._read_adds(
+            delta_scan._read_adds(
                 spark, path, {r: cur.adds[r] for r in to_remove}, eff_meta
             ),
-            dl._read_adds(
+            delta_scan._read_adds(
                 spark, path, {r: old.adds[r] for r in to_readd}, eff_meta
             ),
             cdf_key_cols,
@@ -676,7 +645,7 @@ def restore_delta(
                 ).fields
             ],
             new_version,
-            dl._logical_to_physical(eff_meta),
+            delta_colmap._logical_to_physical(eff_meta),
         )
     now = dl._now_ms()
     actions: list[dict] = [
@@ -718,9 +687,7 @@ def restore_delta(
     # table never serves null row ids
     dl._rt_finalize_commit(cur, readd_actions, actions, new_version)
     actions.extend(readd_actions)
-    dl._write_commit(fs, jvm, path, new_version, actions)
-    if new_version % dl.DELTA_CHECKPOINT_EVERY == 0:
-        dl.checkpoint_delta(spark, path, new_version)
+    dl._write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version
 
 
@@ -885,7 +852,7 @@ def vacuum_delta(
     for deterministic tests. Retention windows beyond 30 days exceed
     the checkpoint tombstone retention (``TOMBSTONE_RETENTION_MS``) and
     raise."""
-    if retain_hours * 3600 * 1000 > dl.TOMBSTONE_RETENTION_MS:
+    if retain_hours * 3600 * 1000 > delta_checkpoint.TOMBSTONE_RETENTION_MS:
         raise ValueError(
             "vacuum retention exceeds checkpoint tombstone retention "
             "(30 days) — deletion times that old may no longer be recorded"
@@ -985,7 +952,7 @@ def cleanup_log(
     sidecar refs, never by directory sweep — a retained checkpoint's
     sidecars are untouchable."""
     fs, _, jvm = _hadoop_fs(spark, path)
-    lc = dl._read_last_checkpoint_doc(fs, jvm, path)
+    lc = delta_checkpoint._read_last_checkpoint_doc(fs, jvm, path)
     if lc is None:
         return []  # nothing can be covered without a checkpoint
     anchor = int(lc["version"])
@@ -1100,5 +1067,5 @@ def convert_parquet_to_delta(
         dl._metadata_action(df, pcols),
     ]
     actions.extend(adds)
-    dl._write_commit(fs, jvm, path, 0, actions)
+    dl._write_commit(spark, fs, jvm, path, 0, actions)
     return 0

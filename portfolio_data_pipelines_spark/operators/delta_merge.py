@@ -9,11 +9,6 @@ a change feed to a replica in commit order), and the
 ``delta_cdf_apply_sink`` foreachBatch wrapper that turns the latter
 into an exactly-once streaming sink.
 
-Public names are re-exported by ``operators.delta_log``; every
-delta_log internal is reached through the lazy ``dl`` proxy below so
-the import graph stays acyclic (the delta_dv pattern, r15) and
-monkeypatches on the ``delta_log`` module keep working.
-
 Reference: delta-io PROTOCOL.md (Commit Provenance / Change Data
 Files); Databricks MERGE INTO / APPLY CHANGES INTO semantics (public
 docs) for the operation shapes.
@@ -26,22 +21,11 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import delta_cdf, delta_colmap, delta_scan
+from . import delta_log as dl
 from .delta_protocol import _check_append_only, _check_writer_protocol
 from .hadoop_io import _hadoop_fs
 
-
-class _DeltaLogProxy:
-    """Call-time attribute proxy onto ``operators.delta_log`` — see
-    ``delta_cdf._DeltaLogProxy``; duplicated (three lines) rather than
-    imported so neither split module depends on the other."""
-
-    def __getattr__(self, name):
-        from . import delta_log
-
-        return getattr(delta_log, name)
-
-
-dl = _DeltaLogProxy()
 
 #: Fused-discovery bound: when the table's live set is at most this many
 #: files, MERGE/APPLY CHANGES skip the stats-pruning pass (which needs
@@ -177,7 +161,7 @@ def merge_delta(
     # so the source profile and the touched-file discovery run as ONE
     # action (a cross join of two single-row aggregates) over all
     # files' key columns, and stats pruning is skipped.
-    l2p = dl._logical_to_physical(meta)
+    l2p = delta_colmap._logical_to_physical(meta)
     pv_cols = [l2p.get(c, c) for c in pcols] if l2p else pcols
     fold_cols = dl._fold_collated_columns(meta)
     fused = len(adds) <= FUSED_DISCOVERY_MAX_FILES
@@ -193,7 +177,7 @@ def merge_delta(
     src_prof = source.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("_kc"))
     src_keys = F.broadcast(source.select(*key_cols).distinct())
     if fused:
-        target_keys = dl._read_adds(spark, path, adds, meta, with_file=True)
+        target_keys = delta_scan._read_adds(spark, path, adds, meta, with_file=True)
         if target_keys is None:
             target_keys = spark.createDataFrame(
                 [], schema=schema
@@ -229,7 +213,7 @@ def merge_delta(
             {
                 rel: a
                 for rel, a in adds.items()
-                if dl._file_may_match(a, pv_cols, key_pred)
+                if delta_scan._file_may_match(a, pv_cols, key_pred)
             }
             if key_pred
             else adds
@@ -239,7 +223,7 @@ def merge_delta(
         # only, so the scan prunes to the join keys (never the full row
         # width). Writer-produced hive layouts resolve in ONE reader
         # call; foreign layouts take the grouped union fallback.
-        target_keys = dl._read_adds(
+        target_keys = delta_scan._read_adds(
             spark, path, scan_adds, meta, with_file=True
         )
         if target_keys is None:
@@ -293,7 +277,7 @@ def merge_delta(
     touched_df = None
     if touched_rels:
         touched_adds = {rel: adds[rel] for rel in touched_rels}
-        touched_df = dl._read_adds(spark, path, touched_adds, meta, row_ids=rt)
+        touched_df = delta_scan._read_adds(spark, path, touched_adds, meta, row_ids=rt)
     # Matched-row DEFAULT repair: a source that omitted a defaulted
     # column was filled above (correct for inserts), but SQL MERGE
     # keeps the TARGET's stored values on matched rows. Pull them from
@@ -453,14 +437,16 @@ def merge_delta(
     # re-evaluating the merge plan. Touch-free commits (pure inserts)
     # stay derivable from their add actions and write no cdc.
     cdc_actions: list[dict] = []
-    if touched_rels and dl._cdf_enabled(meta):
+    if touched_rels and delta_cdf._cdf_enabled(meta):
         staged_map = {
             dl._decode_path(a["add"]["path"]): a["add"] for a in new_adds
         }
-        cdc_actions = dl._maybe_stage_cdc(
+        cdc_actions = delta_cdf._maybe_stage_cdc(
             spark, fs, jvm, path, meta,
-            dl._read_adds(spark, path, {r: adds[r] for r in touched_rels}, meta),
-            dl._read_adds(spark, path, staged_map, meta),
+            delta_scan._read_adds(
+                spark, path, {r: adds[r] for r in touched_rels}, meta
+            ),
+            delta_scan._read_adds(spark, path, staged_map, meta),
             key_cols, cols, new_version, l2p,
         )
     now = dl._now_ms()
@@ -490,9 +476,7 @@ def merge_delta(
     )
     dl._rt_finalize_commit(st, new_adds, actions, new_version)
     actions.extend(new_adds)
-    dl._write_commit(fs, jvm, path, new_version, actions)
-    if new_version % dl.DELTA_CHECKPOINT_EVERY == 0:
-        dl.checkpoint_delta(spark, path, new_version)
+    dl._write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version
 
 
@@ -607,7 +591,7 @@ def apply_changes_delta(
     # (r17, same cost model as merge_delta's FUSED_DISCOVERY_MAX_FILES:
     # pruning can at best avoid N-1 small key-column scans, the bounds
     # action costs a fixed driver latency).
-    l2p = dl._logical_to_physical(meta)
+    l2p = delta_colmap._logical_to_physical(meta)
     pv_cols = [l2p.get(c, c) for c in pcols] if l2p else pcols
     fold_cols = dl._fold_collated_columns(meta)
     if len(adds) <= FUSED_DISCOVERY_MAX_FILES:
@@ -631,12 +615,12 @@ def apply_changes_delta(
             {
                 r: a
                 for r, a in adds.items()
-                if dl._file_may_match(a, pv_cols, key_pred)
+                if delta_scan._file_may_match(a, pv_cols, key_pred)
             }
             if key_pred
             else adds
         )
-    target_keys = dl._read_adds(spark, path, scan_adds, meta, with_file=True)
+    target_keys = delta_scan._read_adds(spark, path, scan_adds, meta, with_file=True)
     affected_keys = F.broadcast(net.select(*key_cols).distinct())
     if target_keys is not None:
         touched_uris = {
@@ -670,7 +654,7 @@ def apply_changes_delta(
     rt = dl._row_tracking_supported(st.protocol)
     if touched_rels:
         touched_adds = {rel: adds[rel] for rel in touched_rels}
-        touched_df = dl._read_adds(spark, path, touched_adds, meta, row_ids=rt)
+        touched_df = delta_scan._read_adds(spark, path, touched_adds, meta, row_ids=rt)
         survivors = (
             touched_df.join(affected_keys, key_cols, "left_anti")
             .select(
@@ -721,14 +705,16 @@ def apply_changes_delta(
     # write-side CDF on the replica: rewrite commits carry cdc files,
     # so a replica-of-a-replica chain stays O(changes) end to end
     cdc_actions: list[dict] = []
-    if touched_rels and dl._cdf_enabled(meta):
+    if touched_rels and delta_cdf._cdf_enabled(meta):
         staged_map = {
             dl._decode_path(a["add"]["path"]): a["add"] for a in new_adds
         }
-        cdc_actions = dl._maybe_stage_cdc(
+        cdc_actions = delta_cdf._maybe_stage_cdc(
             spark, fs, jvm, path, meta,
-            dl._read_adds(spark, path, {r: adds[r] for r in touched_rels}, meta),
-            dl._read_adds(spark, path, staged_map, meta),
+            delta_scan._read_adds(
+                spark, path, {r: adds[r] for r in touched_rels}, meta
+            ),
+            delta_scan._read_adds(spark, path, staged_map, meta),
             key_cols, cols, new_version, l2p,
         )
     now = dl._now_ms()
@@ -759,9 +745,7 @@ def apply_changes_delta(
     )
     dl._rt_finalize_commit(st, new_adds, actions, new_version)
     actions.extend(new_adds)
-    dl._write_commit(fs, jvm, path, new_version, actions)
-    if new_version % dl.DELTA_CHECKPOINT_EVERY == 0:
-        dl.checkpoint_delta(spark, path, new_version)
+    dl._write_commit(spark, fs, jvm, path, new_version, actions)
     return new_version
 
 

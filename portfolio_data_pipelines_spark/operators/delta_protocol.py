@@ -8,9 +8,6 @@ filesystem — everything here is dict-in/dict-out, which is what makes
 the gates unit-testable and reusable by both the writer (delta_log)
 and the independent reader (delta_reader).
 
-Public names are re-exported by ``operators.delta_log`` so the split
-is invisible to callers (same import surface as before r15).
-
 Reference: delta-io PROTOCOL.md (Table Features, Column Mapping,
 Iceberg Compatibility, Collations); see the per-function docstrings.
 """

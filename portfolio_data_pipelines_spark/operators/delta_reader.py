@@ -54,7 +54,7 @@ _READER_FEATURES = {
     # to plain Python by this module's own from-spec decoder below
     "variantType",
     # preview spellings delta-spark 3.x stamped before GA — identical
-    # read duties (see delta_log._SUPPORTED_READER_FEATURES)
+    # read duties (see delta_protocol._SUPPORTED_READER_FEATURES)
     "typeWidening-preview",
     "variantType-preview",
     # SHREDDED variants (VariantShredding.md): files may store a

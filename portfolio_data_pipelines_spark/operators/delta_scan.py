@@ -11,13 +11,6 @@ derivation), the log-only data-skipping proofs (`_file_may_match` /
 replay) stays in delta_log; the independent spec-only reader lives in
 ``delta_reader.py``.
 
-Public names are re-exported by ``operators.delta_log``; every
-delta_log internal is reached through the lazy ``dl`` proxy below so
-the import graph stays acyclic (the delta_dv pattern, r15) and
-monkeypatches on the ``delta_log`` module keep working — including
-patches on the seams INSIDE this cluster (``_fast_hive_read``,
-``_read_adds``), which route through the proxy for the same reason.
-
 Reference: delta-io PROTOCOL.md (Data Skipping / Deletion Vectors /
 Row Tracking / Column Mapping) and delta-spark's DeltaScan.
 """
@@ -29,21 +22,9 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import delta_colmap, delta_dv
+from . import delta_log as dl
 from .hadoop_io import _hadoop_fs
-
-
-class _DeltaLogProxy:
-    """Call-time attribute proxy onto ``operators.delta_log`` — see
-    ``delta_cdf._DeltaLogProxy``; duplicated (three lines) rather than
-    imported so the split modules stay independent of each other."""
-
-    def __getattr__(self, name):
-        from . import delta_log
-
-        return getattr(delta_log, name)
-
-
-dl = _DeltaLogProxy()
 
 
 def _group_adds(adds: dict, pcols: list) -> list[tuple[tuple, list[str]]]:
@@ -138,7 +119,7 @@ def _read_adds(
     if not adds:
         return None
     schema = dl._spark_schema_from_string(meta["schemaString"])
-    l2p = dl._logical_to_physical(meta)
+    l2p = delta_colmap._logical_to_physical(meta)
     id_mode = getattr(l2p, "read_by_id", False)
     if id_mode:
         # resolution is by parquet FIELD ID: the physical read schema
@@ -152,7 +133,7 @@ def _read_adds(
         read_schema = schema
         pcols = list(pcols_log)
     else:
-        read_schema = dl._physical_read_schema(meta)
+        read_schema = delta_colmap._physical_read_schema(meta)
         pcols = [l2p[c] for c in pcols_log]
     # collated PARTITION columns: Spark's hive partition discovery
     # cannot cast a dir value to a collated string type
@@ -198,7 +179,7 @@ def _read_adds(
     dv_adds = {r: a for r, a in adds.items() if a.get("deletionVector")}
     need_pos = with_pos or row_ids or bool(dv_adds)
     fast_id, depth, keymap = (
-        dl._dv_identity(adds, pcols) if need_pos else (False, 0, {})
+        delta_dv._dv_identity(adds, pcols) if need_pos else (False, 0, {})
     )
     pos_cols = {
         "__dv_fn": (
@@ -219,7 +200,7 @@ def _read_adds(
     df = (
         None
         if need_pos and not fast_id  # grouped identity needs the tag
-        else dl._fast_hive_read(spark, path, adds, read_schema, pcols)
+        else _fast_hive_read(spark, path, adds, read_schema, pcols)
     )
     if df is None and any(
         f.dataType.typeName() == "variant" for f in read_schema.fields
@@ -247,7 +228,7 @@ def _read_adds(
             extra.update(pos_cols)
         from pyspark.sql.types import StructType as _ST
 
-        df = dl._read_file_groups(
+        df = _read_file_groups(
             spark, path, adds, pcols, ptypes, read_schema,
             extra_cols=extra or None,
             tag_col="__dv_grp" if need_pos else None,
@@ -267,8 +248,8 @@ def _read_adds(
     if df is None:
         return None
     if dv_adds:
-        pos_df, total = dl._dv_positions_df(spark, path, dv_adds, keymap)
-        if total <= dl.DV_BROADCAST_MAX_POSITIONS:
+        pos_df, total = delta_dv._dv_positions_df(spark, path, dv_adds, keymap)
+        if total <= delta_dv.DV_BROADCAST_MAX_POSITIONS:
             pos_df = F.broadcast(pos_df)
         df = df.join(
             pos_df,
@@ -549,7 +530,7 @@ def read_delta(
     if as_of is not None:
         if version is not None:
             raise ValueError("pass either version or as_of, not both")
-        version = dl.version_as_of(spark, path, as_of)
+        version = version_as_of(spark, path, as_of)
     st = dl._replay_log(spark, path, version)
     adds, meta = st.adds, st.meta
     if meta is None:
@@ -558,7 +539,7 @@ def read_delta(
     if predicate:
         # pruning through generated partition columns: a bound on the
         # BASE column implies bounds on the generated partition column
-        derived = dl._derived_partition_bounds(meta, predicate, pcols)
+        derived = _derived_partition_bounds(meta, predicate, pcols)
         if derived:
             predicate = {**derived, **predicate}
         # folded-compare (collated) columns never prune on byte-ordered
@@ -588,7 +569,7 @@ def read_delta(
             }
         # callers phrase predicates in LOGICAL names; stats documents
         # and partitionValues carry PHYSICAL names on mapped tables
-        l2p = dl._logical_to_physical(meta)
+        l2p = delta_colmap._logical_to_physical(meta)
         if l2p is not None:
             predicate = {l2p.get(c, c): b for c, b in predicate.items()}
             fold_eq = {l2p.get(c, c): v for c, v in fold_eq.items()}
@@ -598,7 +579,7 @@ def read_delta(
         adds = {
             rel: a
             for rel, a in adds.items()
-            if dl._file_may_match(a, pcols_phys, predicate)
+            if _file_may_match(a, pcols_phys, predicate)
             and all(
                 (pv := a.get("partitionValues", {}).get(c)) is None
                 or dl._ascii_fold(pv) is None
@@ -606,7 +587,7 @@ def read_delta(
                 for c, fv in fold_eq.items()
             )
         }
-    out = dl._read_adds(spark, path, adds, meta, row_ids=row_ids)
+    out = _read_adds(spark, path, adds, meta, row_ids=row_ids)
     if out is None:
         from pyspark.sql.types import LongType, StructField, StructType
 
@@ -704,7 +685,7 @@ def read_delta_changes(
     for v, a in new_adds:
         by_commit.setdefault(v, {})[a["path"]] = a
     parts = [
-        dl._read_adds(spark, path, by_commit[v], meta).withColumn(
+        _read_adds(spark, path, by_commit[v], meta).withColumn(
             "_commit_version", F.lit(v).cast("long")
         )
         for v in sorted(by_commit)

@@ -105,7 +105,7 @@ def zorder_key(
     normalized ``cols`` (one broadcast bounds aggregate, map-side
     interleave). Returns (keyed frame, helper column names to drop
     after partitioning/sorting). Shared by :func:`zorder_write` and
-    ``delta_log.optimize_delta(zorder_by=...)`` so the clustering key
+    ``delta_maintain.optimize_delta(zorder_by=...)`` so the clustering key
     can never diverge between the plain and the lakehouse layout
     passes."""
     if not cols:

@@ -78,7 +78,8 @@ def delta_skip_daily_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     and serves every reader. Scale: the skip-read plans O(window days)
     files regardless of table history — the property the declared
     lifecycle tests pin via inputFiles counts."""
-    from ..operators.delta_log import read_delta, write_delta
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_scan import read_delta
 
     # PID-keyed fixture root: two concurrent runs against the same scale
     # factor (e.g. bench and pytest on one host) must not share a table —
@@ -134,7 +135,9 @@ def delta_dv_delete_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape on a 100 TB table; the read pays one broadcast anti-join of
     the deleted positions (executor-side bitmap decode, driver holds
     only compressed bytes)."""
-    from ..operators.delta_log import delete_where_dv, read_delta, write_delta
+    from ..operators.delta_dv import delete_where_dv
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_scan import read_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -201,12 +204,8 @@ def delta_update_delete_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both commands rewrite only files HOLDING matches (file-
     granular copy-on-write, delta-spark's cost model); discovery is
     one predicate-filtered scan of the live set."""
-    from ..operators.delta_log import (
-        delete_where,
-        read_delta,
-        update_where,
-        write_delta,
-    )
+    from ..operators.delta_log import delete_where, update_where, write_delta
+    from ..operators.delta_scan import read_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -287,7 +286,9 @@ def delta_cdf_merge_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the CDF read costs O(files each commit touched) + one key
     shuffle per rewrite commit — never a table scan; see
     ``read_delta_cdf``'s docstring."""
-    from ..operators.delta_log import merge_delta, read_delta_cdf, write_delta
+    from ..operators.delta_cdf import read_delta_cdf
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_merge import merge_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -375,12 +376,9 @@ def delta_cdf_writeside(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the cdc read is O(change files) with no shuffle and survives
     vacuuming of the rewritten data files — the production CDF shape
     at 100 TB (measured 2.4× over reconstruction in SCALE.md r8)."""
-    from ..operators.delta_log import (
-        enable_change_data_feed,
-        merge_delta,
-        read_delta_cdf,
-        write_delta,
-    )
+    from ..operators.delta_cdf import enable_change_data_feed, read_delta_cdf
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_merge import merge_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -460,13 +458,10 @@ def delta_colmap_renamed_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     movement); the MERGE pays its stats-pruned file-granular rewrite;
     the read is the ordinary one-call hive scan under the physical
     schema plus a rename projection (no extra stage)."""
-    from ..operators.delta_log import (
-        enable_column_mapping,
-        merge_delta,
-        read_delta,
-        rename_column,
-        write_delta,
-    )
+    from ..operators.delta_alter import enable_column_mapping, rename_column
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_merge import merge_delta
+    from ..operators.delta_scan import read_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -548,13 +543,10 @@ def delta_apply_replica_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: apply's cost tracks the CHANGES (stats-pruned discovery,
     file-granular rewrite — measured flat against 10× table history in
     SCALE.md); the replica bootstrap here is the fixture shape."""
-    from ..operators.delta_log import (
-        apply_changes_delta,
-        merge_delta,
-        read_delta,
-        read_delta_cdf,
-        write_delta,
-    )
+    from ..operators.delta_cdf import read_delta_cdf
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_merge import apply_changes_delta, merge_delta
+    from ..operators.delta_scan import read_delta
 
     root = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -637,7 +629,8 @@ def delta_gencol_pruned_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions, queries phrased on the event timestamp) — the derived
     bounds turn a ts-range scan from every-partition stats checks into
     the few covered partitions, before any parquet footer is opened."""
-    from ..operators.delta_log import read_delta, write_delta
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_scan import read_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -690,13 +683,10 @@ def delta_dv_purged_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: purge cost is O(bytes of DV'd files only); afterwards reads
     pay no anti-join at all — the lifecycle a 100 TB table follows when
     accumulated DVs start taxing the hot read path."""
-    from ..operators.delta_log import (
-        delete_where_dv,
-        drop_table_feature,
-        purge_delta,
-        read_delta,
-        write_delta,
-    )
+    from ..operators.delta_dv import delete_where_dv
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_maintain import drop_table_feature, purge_delta
+    from ..operators.delta_scan import read_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -776,7 +766,8 @@ def delta_identity_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-local running count — never a global window), so the
     contract holds at any partition count; the merge repairs matched
     rows from only the touched files."""
-    from ..operators.delta_log import read_delta, write_delta
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_scan import read_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -823,7 +814,7 @@ def delta_identity_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MERGE (r12): update every event_id%5==0 row to a sentinel value
     # (matched rows must KEEP their sk) and insert the next day's
     # events (allocated past the high-water mark) — sk omitted
-    from ..operators.delta_log import merge_delta
+    from ..operators.delta_merge import merge_delta
 
     updates = events.filter(F.col("event_id") % 5 == 0).withColumn(
         "value", F.lit(-123456.789)
@@ -889,13 +880,10 @@ def delta_rowtracking_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ids ride the files (baseRowId + hidden materialized
     columns) — stability costs no extra shuffle at any table size; the
     verification join here is the TEST's cost, not the feature's."""
-    from ..operators.delta_log import (
-        merge_delta,
-        optimize_delta,
-        read_delta,
-        restore_delta,
-        write_delta,
-    )
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_maintain import optimize_delta, restore_delta
+    from ..operators.delta_merge import merge_delta
+    from ..operators.delta_scan import read_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -984,7 +972,8 @@ def delta_variant_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the variant re-wrap is one arrow-batched mapInPandas over
     the staged rows (no per-row Python objects besides the binary
     pair); reads ride the same single-scan plan as any other column."""
-    from ..operators.delta_log import read_delta, write_delta
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_scan import read_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -1062,11 +1051,9 @@ def delta_defaults_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: fill-on-omit is one free column expression on the staged
     frame (no extra pass); everything else is the ordinary partitioned
     write + single-scan read."""
-    from ..operators.delta_log import (
-        read_delta,
-        set_column_default,
-        write_delta,
-    )
+    from ..operators.delta_alter import set_column_default
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_scan import read_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -1148,7 +1135,9 @@ def delta_nested_idmode_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     (t)-keyed shuffle with map-side partials."""
     import json as _json
 
-    from ..operators.delta_log import merge_delta, read_delta, write_delta
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_merge import merge_delta
+    from ..operators.delta_scan import read_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -1263,7 +1252,9 @@ def delta_below_array_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation with partials); the lifecycle is the fixture's cost."""
     import json as _json
 
-    from ..operators.delta_log import merge_delta, read_delta, write_delta
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_merge import merge_delta
+    from ..operators.delta_scan import read_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -1383,7 +1374,9 @@ def delta_lcase_merge_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the raw parquet."""
     import json as _json
 
-    from ..operators.delta_log import merge_delta, read_delta, write_delta
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_merge import merge_delta
+    from ..operators.delta_scan import read_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",
@@ -1480,13 +1473,10 @@ def delta_iceberg_compat_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw parquet alone — a row lost or duplicated by the
     enable-rewrite, or a mis-stamped file breaking the merge's read,
     surfaces as a hash mismatch."""
-    from ..operators.delta_log import (
-        enable_column_mapping,
-        enable_iceberg_compat,
-        merge_delta,
-        read_delta,
-        write_delta,
-    )
+    from ..operators.delta_alter import enable_column_mapping, enable_iceberg_compat
+    from ..operators.delta_log import write_delta
+    from ..operators.delta_merge import merge_delta
+    from ..operators.delta_scan import read_delta
 
     table = os.path.join(
         "/tmp", "pdp_delta_q", f"pid{os.getpid()}",

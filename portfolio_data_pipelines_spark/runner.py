@@ -124,7 +124,7 @@ class WeatherPipeline:
         if manifest.path is None:
             raise ValueError("empty batch: nothing to load")
         if self.cfg.lake_format == "delta":
-            from .operators.delta_log import read_delta
+            from .operators.delta_scan import read_delta
 
             bronze = read_delta(self.spark, manifest.path)
         else:

@@ -42,7 +42,7 @@ one end offset by Spark's own semantics, and a restarted reader never
 caps below Spark's checkpointed position).
 
 ``readChangeFeed=true`` switches the source to ROW-LEVEL change-feed
-mode (the streamed form of ``operators.delta_log.read_delta_cdf``):
+mode (the streamed form of ``operators.delta_cdf.read_delta_cdf``):
 instead of re-delivering every added row, each micro-batch emits the
 net per-row changes of its commits — ``_change_type`` ∈ {insert,
 update_preimage, update_postimage, delete}, with ``_commit_version``

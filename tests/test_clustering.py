@@ -12,13 +12,13 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from portfolio_data_pipelines_spark.operators.delta_log import (
+from portfolio_data_pipelines_spark.operators.delta_log import write_delta
+from portfolio_data_pipelines_spark.operators.delta_maintain import (
     clustering_columns,
     enable_clustering,
     optimize_delta,
-    read_delta,
-    write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )
@@ -108,11 +108,11 @@ def test_clustering_domain_carries_physical_names_under_mapping(
     resolve them against parquet columns), while every API surface
     (clustering_columns, describe_detail, OPTIMIZE's zOrderBy) speaks
     LOGICAL names. Advisory fix, round 11."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        describe_detail,
+    from portfolio_data_pipelines_spark.operators.delta_alter import (
         enable_column_mapping,
         rename_column,
     )
+    from portfolio_data_pipelines_spark.operators.delta_maintain import describe_detail
 
     path = _mk(spark, tmp_path, "t_cl_cm")
     enable_column_mapping(spark, path)
@@ -165,9 +165,7 @@ def test_clustering_domain_carries_physical_names_under_mapping(
 
 
 def test_describe_detail_surfaces_clustering_columns(spark, tmp_path):
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        describe_detail,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_maintain import describe_detail
 
     path = _mk(spark, tmp_path, "t_cl_desc", n=100)
     assert describe_detail(spark, path).first()["clusteringColumns"] == []

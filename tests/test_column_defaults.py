@@ -16,14 +16,14 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from portfolio_data_pipelines_spark.operators.delta_log import (
+from portfolio_data_pipelines_spark.operators.delta_alter import (
     drop_column_default,
-    drop_table_feature,
-    merge_delta,
-    read_delta,
     set_column_default,
-    write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_log import write_delta
+from portfolio_data_pipelines_spark.operators.delta_maintain import drop_table_feature
+from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )

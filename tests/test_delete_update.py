@@ -10,16 +10,18 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from portfolio_data_pipelines_spark.operators.delta_log import (
-    add_check_constraint,
-    delete_where,
-    delete_where_dv,
+from portfolio_data_pipelines_spark.operators.delta_alter import add_check_constraint
+from portfolio_data_pipelines_spark.operators.delta_cdf import (
     enable_change_data_feed,
-    read_delta,
     read_delta_cdf,
+)
+from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
+from portfolio_data_pipelines_spark.operators.delta_log import (
+    delete_where,
     update_where,
     write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )

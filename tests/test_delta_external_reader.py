@@ -21,14 +21,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from portfolio_data_pipelines_spark.operators import delta_reader
-from portfolio_data_pipelines_spark.operators.delta_log import (
+from portfolio_data_pipelines_spark.operators.delta_checkpoint import (
     DELTA_CHECKPOINT_EVERY,
-    merge_delta,
-    optimize_delta,
-    read_delta,
-    vacuum_delta,
-    write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_log import write_delta
+from portfolio_data_pipelines_spark.operators.delta_maintain import (
+    optimize_delta,
+    vacuum_delta,
+)
+from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )
@@ -193,6 +195,10 @@ def test_exported_lake_layout_parity(spark, tmp_path):
     import os
 
     from portfolio_data_pipelines_spark.operators import delta_log as dl
+    from portfolio_data_pipelines_spark.operators.delta_protocol import (
+        _PROTOCOL_ACTION,
+    )
+    from portfolio_data_pipelines_spark.operators.hadoop_io import _hadoop_fs
 
     path = str(tmp_path / "lake")
     d0 = _df(spark, [(1, 1.0, _day("2021-01-01")), (2, 2.0, _day("2021-01-02"))])
@@ -209,10 +215,10 @@ def test_exported_lake_layout_parity(spark, tmp_path):
                 "dataChange": True,
             }})
     assert adds
-    fs, _, jvm = dl._hadoop_fs(spark, path)
-    dl._write_commit(fs, jvm, path, 0, [
+    fs, _, jvm = _hadoop_fs(spark, path)
+    dl._write_commit(spark, fs, jvm, path, 0, [
         dl._commit_info("CONVERT", {"sourceFormat": "parquet"}),
-        dl._PROTOCOL_ACTION,
+        _PROTOCOL_ACTION,
         dl._metadata_action(d0, ["date"]),
         *adds,
     ])
@@ -365,7 +371,7 @@ def test_restored_table_parity(spark, tmp_path):
     OPTIMIZE-written files, now with dataChange=true) must replay to
     the same rows in both readers — at the restore version AND at every
     surrounding version."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
+    from portfolio_data_pipelines_spark.operators.delta_maintain import (
         optimize_delta,
         restore_delta,
     )
@@ -389,10 +395,10 @@ def test_timestamp_as_of_parity(spark, tmp_path):
     """timestampAsOf resolution must agree between the writer-side
     version_as_of and the spec-only external resolution, including a
     version BEFORE a checkpoint (full-listing rule)."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
+    from portfolio_data_pipelines_spark.operators.delta_checkpoint import (
         DELTA_CHECKPOINT_EVERY,
-        version_as_of,
     )
+    from portfolio_data_pipelines_spark.operators.delta_scan import version_as_of
     from portfolio_data_pipelines_spark.operators.delta_reader import (
         read_delta_external_as_of,
         version_as_of_external,
@@ -426,7 +432,7 @@ def test_check_constraint_configuration_roundtrip(spark, tmp_path):
     through plain NDJSON replay AND through a checkpoint-anchored
     replay — enforcement is a writer duty handed over via exactly this
     map."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
+    from portfolio_data_pipelines_spark.operators.delta_checkpoint import (
         DELTA_CHECKPOINT_EVERY,
         checkpoint_delta,
     )
@@ -467,12 +473,10 @@ def test_multipart_checkpoint_written_above_threshold(
     ``parts`` pointer, and a table readable from the parts + tail alone
     by both readers — including the deletion-vector descriptors and
     feature lists the parts must carry."""
-    from portfolio_data_pipelines_spark.operators import delta_log as dl
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        delete_where_dv,
-    )
+    from portfolio_data_pipelines_spark.operators import delta_checkpoint
+    from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
 
-    monkeypatch.setattr(dl, "CHECKPOINT_PART_ACTIONS", 4)
+    monkeypatch.setattr(delta_checkpoint, "CHECKPOINT_PART_ACTIONS", 4)
     path = str(tmp_path / "t_mp_write")
     # 9 appends + 1 dv delete = 10 commits → auto-checkpoint at v10
     # with well over 4 actions (protocol, metaData, 10 adds, removes)
@@ -513,9 +517,7 @@ def test_multipart_checkpoint_written_above_threshold(
         spark.createDataFrame([(200, 200.0)], "id bigint, v double"),
         path,
     )
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        vacuum_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_maintain import vacuum_delta
 
     vacuum_delta(spark, path, retain_hours=168)
     assert read_delta(spark, path).count() == len(expected) + 1
@@ -532,9 +534,7 @@ def test_checkpoint_add_before_tombstone_order_is_safe(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        delete_where_dv,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
 
     path = str(tmp_path / "t_cporder")
     df = spark.range(1, 11).select(

@@ -9,10 +9,8 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from portfolio_data_pipelines_spark.operators.delta_log import (
-    optimize_delta,
-    write_delta,
-)
+from portfolio_data_pipelines_spark.operators.delta_log import write_delta
+from portfolio_data_pipelines_spark.operators.delta_maintain import optimize_delta
 from portfolio_data_pipelines_spark.sources.delta_feed import (
     DeltaChangeFeedDataSource,
 )
@@ -126,10 +124,8 @@ def test_sink_to_source_roundtrip(registered, tmp_path):
     """The two halves compose: a stream lands in table A via the
     exactly-once sink, and a second hop streams A's feed into table B —
     B converges to A's rows."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        delta_stream_sink,
-        read_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_log import delta_stream_sink
+    from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 
     spark = registered
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
@@ -215,7 +211,7 @@ def test_read_delta_timestamp_as_of(registered, tmp_path):
     raises."""
     import datetime as dt
 
-    from portfolio_data_pipelines_spark.operators.delta_log import (
+    from portfolio_data_pipelines_spark.operators.delta_scan import (
         read_delta,
         version_as_of,
     )
@@ -257,10 +253,8 @@ def test_cdf_mode_merge_mid_stream_net_rows_once(registered, tmp_path):
     merge's NET changes exactly once — no re-delivery of carried-over
     rows — and folding the emitted changes over the first batch's
     inserts reconstructs the final table."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        merge_delta,
-        read_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+    from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 
     spark = registered
     path = str(tmp_path / "t_cdf_feed")
@@ -312,9 +306,7 @@ def test_cdf_mode_requires_key_cols_only_for_reconstruction(
     rewrite without cdc actions). Append-only history streams keyless;
     a keyless stream over a cdc-less MERGE commit fails planning with
     the remedy in the message."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        merge_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
     spark = registered
     path = str(tmp_path / "t_cdf_nokeys")
@@ -353,9 +345,7 @@ def test_cdf_mode_restore_after_optimize(registered, tmp_path):
     """RESTORE re-adds files with dataChange=true (r7 fix) — the CDF
     stream must emit the restored rows as net changes, while the
     OPTIMIZE commit itself stays invisible."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        restore_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_maintain import restore_delta
 
     spark = registered
     path = str(tmp_path / "t_cdf_restore")
@@ -393,10 +383,8 @@ def test_feed_sessionize_to_delta_equals_batch(registered, tmp_path):
     operators, not just pass-through reads."""
     import datetime as dt
 
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        delta_stream_sink,
-        read_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_log import delta_stream_sink
+    from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
     from portfolio_data_pipelines_spark.streaming import user_session_windows
 
     spark = registered
@@ -464,11 +452,11 @@ def test_cdf_stream_apply_maintains_replica(registered, tmp_path):
     truncating overwrite in between, the replica equals the source
     after every catch-up — updates applied once, deletes propagated,
     carried-over rows untouched."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
+    from portfolio_data_pipelines_spark.operators.delta_merge import (
         delta_cdf_apply_sink,
         merge_delta,
-        read_delta,
     )
+    from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 
     spark = registered
     src, rep = str(tmp_path / "src_rep"), str(tmp_path / "rep_rep")
@@ -520,9 +508,7 @@ def test_cdf_mode_respects_max_commits_per_trigger(registered, tmp_path):
     """readChangeFeed composes with admission control: the change
     stream drains a multi-commit backlog in version order under
     maxCommitsPerTrigger, net changes intact."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        merge_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
     spark = registered
     path = str(tmp_path / "t_cdf_paced")
@@ -593,11 +579,11 @@ def test_feed_reads_column_mapped_table(registered, tmp_path):
     """The feed resolves name-mode column mapping: physical col names
     in files/partitionValues, logical names in the output — both plain
     and readChangeFeed modes."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
+    from portfolio_data_pipelines_spark.operators.delta_alter import (
         enable_column_mapping,
-        merge_delta,
         rename_column,
     )
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
     spark = registered
     path = str(tmp_path / "t_feed_cm")
@@ -655,12 +641,12 @@ def test_cdf_stream_prefers_write_side_change_files(registered, tmp_path):
     their _change_data files (arrow path, keyless), pinned equal —
     rows, versions AND _commit_timestamp — to the batch
     read_delta_cdf over the same window."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
+    from portfolio_data_pipelines_spark.operators.delta_cdf import (
         enable_change_data_feed,
-        merge_delta,
         read_delta_cdf,
-        write_delta as wd,
     )
+    from portfolio_data_pipelines_spark.operators.delta_log import write_delta as wd
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
     spark = registered
     path = str(tmp_path / "t_cdc_stream")
@@ -714,10 +700,8 @@ def test_cdf_reconstruction_carries_commit_timestamp(registered, tmp_path):
     """Batch-CDF column parity holds in RECONSTRUCTION mode too: the
     dict-diff path emits _commit_timestamp equal to the batch read's
     (both resolve the commitInfo in-commit timestamp)."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        merge_delta,
-        read_delta_cdf,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
     spark = registered
     path = str(tmp_path / "t_recon_ts")
@@ -744,9 +728,7 @@ def test_cdf_reconstruction_byte_cap(registered, tmp_path):
     """A cdc-less rewrite commit whose touched bytes exceed
     maxReconstructBytes fails PLANNING with the remedy in the message
     — not an opaque mid-task OOM."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        merge_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
     spark = registered
     path = str(tmp_path / "t_cap")
@@ -777,9 +759,7 @@ def test_plain_feed_respects_deletion_vectors(registered, tmp_path):
     """A fresh stream over a table whose files carry deletion vectors
     (delete_where_dv) must NOT emit the deleted rows: plain mode's
     arrow path drops DV'd positions before the batch leaves the task."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        delete_where_dv,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
 
     spark = registered
     path = str(tmp_path / "t_dv_plain")
@@ -805,9 +785,7 @@ def test_cdf_feed_reconstructs_dv_delete_without_cdc(registered, tmp_path):
     """A DV delete on a NON-CDF table is a rewrite commit without cdc
     actions: reconstruction mode (keyCols) must pair both sides through
     the DV filter and emit exactly the deleted rows as deletes."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        delete_where_dv,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
 
     spark = registered
     path = str(tmp_path / "t_dv_cdf")
@@ -833,10 +811,10 @@ def test_cdf_feed_streams_dv_delete_from_cdc_files(registered, tmp_path):
     """On a CDF-ENABLED table, delete_where_dv stages cdc delete rows;
     the streaming CDF must serve that commit from the change files
     (keyless — reconstruction would raise) with _commit_timestamp."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        delete_where_dv,
+    from portfolio_data_pipelines_spark.operators.delta_cdf import (
         enable_change_data_feed,
     )
+    from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
 
     spark = registered
     path = str(tmp_path / "t_dv_cdc_feed")
@@ -1043,9 +1021,8 @@ def test_feed_reconstruction_refuses_folded_collation_keys(
         LongType, StringType, StructField, StructType as ST,
     )
 
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        merge_delta, write_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_log import write_delta
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
     spark = registered
     path = str(tmp_path / "t_feed_lcase")

@@ -11,15 +11,17 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from portfolio_data_pipelines_spark.operators.delta_log import (
+from portfolio_data_pipelines_spark.operators.delta_checkpoint import (
     DELTA_CHECKPOINT_EVERY,
     checkpoint_delta,
-    merge_delta,
-    optimize_delta,
-    read_delta,
-    vacuum_delta,
-    write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_log import write_delta
+from portfolio_data_pipelines_spark.operators.delta_maintain import (
+    optimize_delta,
+    vacuum_delta,
+)
+from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 
 
 def _df(spark, rows, schema="id bigint, v double, date date"):
@@ -80,6 +82,32 @@ class TestWriteRead:
         write_delta(spark, d0, path, partition_col="date")
         got = read_delta(spark, path).filter(F.col("date") == "2021-01-02")
         assert got.count() == 10
+
+    def test_optimized_write_without_aqe_one_file_per_value(self, spark, tmp_path):
+        """The staged write concentrates each partition value's rows in
+        one writer. The rebalance hint does that only under AQE, so a
+        session with AQE off must still stage one file per value from a
+        4-partition input, not up to four."""
+        from collections import Counter
+
+        from portfolio_data_pipelines_spark.operators.delta_log import _replay_log
+
+        path = str(tmp_path / "t_no_aqe")
+        days = [f"2021-01-{d:02d}" for d in (1, 2, 3)]
+        d0 = _df(
+            spark, [(i, float(i), _day(days[i % 3])) for i in range(40)]
+        ).repartition(4)
+        assert d0.rdd.getNumPartitions() == 4
+        prev = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            write_delta(spark, d0, path, partition_col="date")
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", prev)
+        adds = _replay_log(spark, path, None).adds
+        per_value = Counter(a["partitionValues"]["date"] for a in adds.values())
+        assert per_value == {d: 1 for d in days}
+        assert read_delta(spark, path).count() == 40
 
 
 class TestSchemaEvolution:
@@ -514,7 +542,7 @@ class TestDeltaBronzePipeline:
         m1 = sorted(tuple(r) for r in built1[key].collect())
         m2 = sorted(tuple(r) for r in built2[key].collect())
         assert m1 == m2 and len(m1) == 1
-        from portfolio_data_pipelines_spark.operators.delta_log import read_delta
+        from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
         bronze = read_delta(spark, f"{cfg.lake_root}/weather")
         assert bronze.count() == 6  # not 12: day-level overwrite
         # both ingests exist as versions
@@ -524,7 +552,7 @@ class TestDeltaBronzePipeline:
 
 class TestMerge:
     def test_merge_updates_and_inserts(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import merge_delta
+        from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
         path = str(tmp_path / "t_merge")
         d0 = _df(spark, [(1, 1.0, _day("2021-01-01")), (2, 2.0, _day("2021-01-02"))])
@@ -542,7 +570,7 @@ class TestMerge:
         assert _rows(spark, read_delta(spark, path, version=0)) == _rows(spark, d0)
 
     def test_merge_rewrites_only_touched_files(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import merge_delta
+        from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
         path = str(tmp_path / "t_merge2")
         d0 = _df(spark, [(1, 1.0, _day("2021-01-01"))])
@@ -566,7 +594,7 @@ class TestMerge:
         ]
 
     def test_merge_keeps_nonmatching_rows_of_touched_files(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import merge_delta
+        from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
         path = str(tmp_path / "t_merge3")
         # one file holds BOTH keys; merging one key must keep the other
@@ -584,7 +612,7 @@ class TestMerge:
         across partition dirs; merging keys of one partition must not
         tombstone the same-named files of the others (regression: a
         basename-keyed file match mass-removed untouched partitions)."""
-        from portfolio_data_pipelines_spark.operators.delta_log import merge_delta
+        from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
         path = str(tmp_path / "t_merge5")
         d0 = _df(spark, [(i, float(i), _day(f"2021-01-{1 + i % 3:02d}"))
@@ -601,7 +629,7 @@ class TestMerge:
         assert removed and all("2021-01-02" in p for p in removed)
 
     def test_merge_rejects_ambiguous_source(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import merge_delta
+        from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
         path = str(tmp_path / "t_merge4")
         write_delta(spark, _df(spark, [(1, 1.0, _day("2021-01-01"))]), path,
@@ -613,7 +641,7 @@ class TestMerge:
 
 class TestChangeFeed:
     def test_incremental_reads_pull_only_new_commits(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_scan import (
             read_delta_changes,
         )
 
@@ -637,8 +665,8 @@ class TestChangeFeed:
         """A consumer at version N sees a later MERGE's rewritten files
         (survivors + updates) — at-least-once per changed file, the
         append-feed contract."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            merge_delta,
+        from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+        from portfolio_data_pipelines_spark.operators.delta_scan import (
             read_delta_changes,
         )
 
@@ -708,8 +736,10 @@ def test_delta_bronze_keeps_unparseable_timestamp_rows(spark, tmp_path):
 
 class TestOptimize:
     def test_optimize_compacts_to_one_file_per_partition(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
             optimize_delta,
+        )
+        from portfolio_data_pipelines_spark.operators.delta_scan import (
             read_delta_changes,
         )
 
@@ -744,7 +774,9 @@ class TestOptimize:
         assert optimize_delta(spark, path) is None
 
     def test_optimize_scoped_to_partitions(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import optimize_delta
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
+            optimize_delta,
+        )
 
         path = str(tmp_path / "t_opt2")
         for day in ("2021-01-01", "2021-01-02"):
@@ -763,7 +795,7 @@ def test_checkpoint_preserves_tombstone_datachange_flag(spark, tmp_path):
     dataChange=false (regression: the checkpoint rewrote them as
     dataChange=true, turning a pure compaction into phantom deletions
     for any standard reader replaying the checkpoint)."""
-    from portfolio_data_pipelines_spark.operators.delta_log import optimize_delta
+    from portfolio_data_pipelines_spark.operators.delta_maintain import optimize_delta
 
     path = str(tmp_path / "t_cp_dc")
     for i in range(2):
@@ -786,11 +818,9 @@ def test_lakehouse_lifecycle_stream_optimize_vacuum(spark, tmp_path):
     them after retention — and the data never changes."""
     import time
 
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        delta_stream_sink,
-        optimize_delta,
-        read_delta_changes,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_log import delta_stream_sink
+    from portfolio_data_pipelines_spark.operators.delta_maintain import optimize_delta
+    from portfolio_data_pipelines_spark.operators.delta_scan import read_delta_changes
 
     path = str(tmp_path / "t_life")
     sink = delta_stream_sink(path, partition_col="date", app_id="life")
@@ -922,9 +952,7 @@ class TestAdviceHardening:
         the old endswith matching silently dropped its rows."""
         import shutil
 
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            merge_delta,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
         root = tmp_path / "t_suffix"
         (root / "a").mkdir(parents=True)
@@ -1095,6 +1123,9 @@ class TestDataSkipping:
             path,
         )
         monkeypatch.undo()
+        with open(f"{path}/_delta_log/{1:020d}.json") as fh:
+            v1_adds = [a["add"] for a in map(json.loads, fh) if "add" in a]
+        assert v1_adds and not any(a.get("stats") for a in v1_adds)
         pruned = read_delta(spark, path, predicate={"id": (800, None)})
         # the stats-less file survives; the provably-disjoint one goes
         assert len(pruned.inputFiles()) == 1
@@ -1246,7 +1277,7 @@ class TestOptimizeZorder:
     ):
         import random
 
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_scan import (
             read_delta_changes,
         )
 
@@ -1321,7 +1352,7 @@ class TestRestore:
     time-travelable, and the feed sees the re-added files."""
 
     def test_restore_rolls_back_live_set_and_schema(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
             restore_delta,
         )
 
@@ -1356,7 +1387,7 @@ class TestRestore:
     def test_restore_refuses_when_files_vacuumed(self, spark, tmp_path):
         import time as _time
 
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
             restore_delta,
         )
 
@@ -1409,9 +1440,7 @@ class TestCheckConstraints:
         assert read_delta(spark, path).count() == 2
 
     def test_null_passes_and_merge_is_gated(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            merge_delta,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
         path = self._make(spark, tmp_path)
         # SQL CHECK semantics: NULL is not a violation
@@ -1466,9 +1495,7 @@ class TestAdviceR7:
         both mixed directions."""
         import datetime as dt
 
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            _file_may_match,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_scan import _file_may_match
 
         naive_stats = {
             "minValues": {"ts": "2024-01-10T00:00:00"},
@@ -1539,9 +1566,7 @@ class TestAdviceR7:
         import os
         import time
 
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            version_as_of,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_scan import version_as_of
 
         path = str(tmp_path / "t_asof_cp")
         for i in range(DELTA_CHECKPOINT_EVERY + 2):
@@ -1585,9 +1610,11 @@ class TestAdviceR7:
         that is removed and later RESTOREd must re-enter with
         dataChange=true — Delta RESTORE semantics — so the change feed
         and delta_feed see the restored rows."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            read_delta_changes,
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
             restore_delta,
+        )
+        from portfolio_data_pipelines_spark.operators.delta_scan import (
+            read_delta_changes,
         )
 
         path = str(tmp_path / "t_restore_dc")
@@ -1668,9 +1695,7 @@ class TestRowLevelCDF:
 
     @staticmethod
     def _cdf(spark, path, lo, hi=None):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            read_delta_cdf,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
 
         return read_delta_cdf(
             spark, path, from_version=lo, key_cols=["id"], to_version=hi
@@ -1686,7 +1711,7 @@ class TestRowLevelCDF:
     def _lifecycle(self, spark, tmp_path):
         """Build one table through every commit shape; return its path
         and the list of committed versions."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
             restore_delta,
         )
 
@@ -1731,7 +1756,7 @@ class TestRowLevelCDF:
     def test_merge_does_not_redeliver_carried_rows(self, spark, tmp_path):
         """The append feed re-delivers every row of a rewritten file;
         the CDF emits only the net changes of the MERGE."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_scan import (
             read_delta_changes,
         )
 
@@ -1816,9 +1841,7 @@ class TestRowLevelCDF:
         ]
 
     def test_bad_key_cols_raise(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            read_delta_cdf,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
 
         path, _ = self._lifecycle(spark, tmp_path)
         with pytest.raises(ValueError, match="key_cols"):
@@ -2021,10 +2044,10 @@ class TestConstraintLifecycle:
         """Delta validates EXISTING data before accepting a constraint:
         a table already holding a violating row must refuse ALTER TABLE
         ADD CONSTRAINT, leaving the configuration unchanged."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            _replay_log,
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
             add_check_constraint,
         )
+        from portfolio_data_pipelines_spark.operators.delta_log import _replay_log
 
         path = str(tmp_path / "t_addc_bad")
         write_delta(spark, _df(spark, [(1, -5.0, _day("2024-01-01"))]), path)
@@ -2034,7 +2057,7 @@ class TestConstraintLifecycle:
         assert not (meta.get("configuration") or {})
 
     def test_add_constraint_then_enforced(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
             add_check_constraint,
             drop_check_constraint,
         )
@@ -2062,10 +2085,10 @@ class TestConstraintLifecycle:
         checked: the evolved metaData must carry the configuration
         forward, and enforcement must keep working after evolution —
         including when the new column is later constrained too."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
             add_check_constraint,
-            _replay_log,
         )
+        from portfolio_data_pipelines_spark.operators.delta_log import _replay_log
 
         path = str(tmp_path / "t_evo_c")
         write_delta(
@@ -2155,7 +2178,7 @@ class TestMergeStatsPruning:
     def test_discovery_scans_only_overlapping_files(
         self, spark, tmp_path, monkeypatch
     ):
-        import portfolio_data_pipelines_spark.operators.delta_log as dl
+        import portfolio_data_pipelines_spark.operators.delta_scan as ds
         import portfolio_data_pipelines_spark.operators.delta_merge as dm
 
         # force the at-scale two-action path (stats pruning) — small
@@ -2164,13 +2187,13 @@ class TestMergeStatsPruning:
         monkeypatch.setattr(dm, "FUSED_DISCOVERY_MAX_FILES", 0)
         path = self._seed_two_ranges(spark, tmp_path, "t_mprune")
         calls = []
-        orig = dl._fast_hive_read
+        orig = ds._fast_hive_read
 
         def spy(spark_, path_, adds, schema, pcols):
             calls.append(sorted(adds))
             return orig(spark_, path_, adds, schema, pcols)
 
-        monkeypatch.setattr(dl, "_fast_hive_read", spy)
+        monkeypatch.setattr(ds, "_fast_hive_read", spy)
         merge_delta(
             spark, path,
             _df(spark, [(1005, 5000.0, _day("2024-01-02"))]),
@@ -2185,19 +2208,19 @@ class TestMergeStatsPruning:
     def test_disjoint_merge_is_pure_insert_zero_scans(
         self, spark, tmp_path, monkeypatch
     ):
-        import portfolio_data_pipelines_spark.operators.delta_log as dl
+        import portfolio_data_pipelines_spark.operators.delta_scan as ds
         import portfolio_data_pipelines_spark.operators.delta_merge as dm
 
         monkeypatch.setattr(dm, "FUSED_DISCOVERY_MAX_FILES", 0)
         path = self._seed_two_ranges(spark, tmp_path, "t_mprune2")
         calls = []
-        orig = dl._fast_hive_read
+        orig = ds._fast_hive_read
 
         def spy(spark_, path_, adds, schema, pcols):
             calls.append(sorted(adds))
             return orig(spark_, path_, adds, schema, pcols)
 
-        monkeypatch.setattr(dl, "_fast_hive_read", spy)
+        monkeypatch.setattr(ds, "_fast_hive_read", spy)
         merge_delta(
             spark, path,
             _df(spark, [(500, 0.5, _day("2024-01-03"))]),  # between ranges
@@ -2206,6 +2229,7 @@ class TestMergeStatsPruning:
         assert calls == []  # zero read calls: nothing to discover or rewrite
         got = read_delta(spark, path)
         assert got.count() == 22
+        assert calls  # the spy does see reads: the zero above is real
         # both original files still live (no rewrite commit touched them)
         from portfolio_data_pipelines_spark.operators.delta_log import (
             _replay_log,
@@ -2223,18 +2247,18 @@ class TestMergeStatsPruning:
         two-action path's."""
         import pytest as _pytest
 
-        import portfolio_data_pipelines_spark.operators.delta_log as dl
+        import portfolio_data_pipelines_spark.operators.delta_scan as ds
 
         path = self._seed_two_ranges(spark, tmp_path, "t_mfused")
         calls = []
-        orig = dl._fast_hive_read
+        orig = ds._fast_hive_read
 
         def spy(spark_, path_, adds, schema, pcols):
             calls.append(sorted(adds))
             return orig(spark_, path_, adds, schema, pcols)
 
         mp = _pytest.MonkeyPatch()
-        mp.setattr(dl, "_fast_hive_read", spy)
+        mp.setattr(ds, "_fast_hive_read", spy)
         try:
             merge_delta(
                 spark, path,
@@ -2269,10 +2293,12 @@ class TestCommitInfoHistory:
     ignores it, checkpoints do not carry it)."""
 
     def test_full_lifecycle_history(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
             add_check_constraint,
-            describe_history,
             drop_check_constraint,
+        )
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
+            describe_history,
             restore_delta,
         )
 
@@ -2330,7 +2356,7 @@ class TestCommitInfoHistory:
         """A commit written by an engine that omits commitInfo (it's
         optional in the spec) still appears in history with a null
         operation and a file-mtime timestamp."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
             describe_history,
         )
 
@@ -2368,10 +2394,12 @@ class TestApplyChanges:
         return path
 
     def test_batch_apply_converges(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            apply_changes_delta,
-            read_delta_cdf,
+        from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
             restore_delta,
+        )
+        from portfolio_data_pipelines_spark.operators.delta_merge import (
+            apply_changes_delta,
         )
 
         src = str(tmp_path / "src_ac")
@@ -2412,7 +2440,7 @@ class TestApplyChanges:
     def test_apply_nets_update_then_delete(self, spark, tmp_path):
         """A key updated at one version and deleted at a later one nets
         to a delete; preimages never resurrect rows."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_merge import (
             apply_changes_delta,
         )
 
@@ -2437,7 +2465,7 @@ class TestApplyChanges:
                        (5, 5.0, _day("2024-01-02"))]
 
     def test_txn_makes_apply_idempotent(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_merge import (
             apply_changes_delta,
         )
 
@@ -2465,9 +2493,7 @@ class TestCDFEdges:
         """A CDF window spanning an evolution commit null-fills the new
         column for pre-evolution rows (the widened tip schema governs),
         and the evolved rows carry their values."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            read_delta_cdf,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
 
         path = str(tmp_path / "t_cdf_evo")
         write_delta(
@@ -2501,10 +2527,8 @@ class TestCDFEdges:
         ]
 
     def test_cdf_window_past_vacuum_raises_retention_error(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            read_delta_cdf,
-            vacuum_delta,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
+        from portfolio_data_pipelines_spark.operators.delta_maintain import vacuum_delta
 
         path = str(tmp_path / "t_cdf_vac")
         write_delta(spark, _df(spark, [(1, 1.0, _day("2024-01-01"))]).coalesce(1), path)
@@ -2529,7 +2553,7 @@ class TestColumnMapping:
 
     @staticmethod
     def _seed(spark, tmp_path, name):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
             enable_column_mapping,
         )
 
@@ -2546,10 +2570,10 @@ class TestColumnMapping:
         return path, v_en
 
     def test_enable_sets_protocol_and_metadata(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            _replay_log,
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
             enable_column_mapping,
         )
+        from portfolio_data_pipelines_spark.operators.delta_log import _replay_log
 
         path, v_en = self._seed(spark, tmp_path, "t_cm_enable")
         st = _replay_log(spark, path, None)
@@ -2568,10 +2592,8 @@ class TestColumnMapping:
             enable_column_mapping(spark, path)
 
     def test_rename_is_metadata_only_and_time_travels(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            _replay_log,
-            rename_column,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_alter import rename_column
+        from portfolio_data_pipelines_spark.operators.delta_log import _replay_log
 
         path, v_en = self._seed(spark, tmp_path, "t_cm_rename")
         files_before = set(_replay_log(spark, path, None).adds)
@@ -2631,7 +2653,7 @@ class TestColumnMapping:
         assert len(tagged) == 1
 
     def test_drop_column_and_guards(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
             add_check_constraint,
             drop_column,
             rename_column,
@@ -2656,7 +2678,7 @@ class TestColumnMapping:
             drop_column(spark, path, "id")
 
     def test_mapping_requires_enable(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
             drop_column,
             rename_column,
         )
@@ -2672,10 +2694,8 @@ class TestColumnMapping:
                 fn()
 
     def test_merge_cdf_optimize_under_mapping(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            read_delta_cdf,
-            rename_column,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_alter import rename_column
+        from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
 
         path, v_en = self._seed(spark, tmp_path, "t_cm_ops")
         rename_column(spark, path, "v", "amount")
@@ -2705,9 +2725,7 @@ class TestColumnMapping:
         assert {r["id"] for r in pr.collect()} == {4}
 
     def test_external_reader_parity_on_mapped_table(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            rename_column,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_alter import rename_column
         from portfolio_data_pipelines_spark.operators.delta_reader import (
             read_delta_external,
         )
@@ -2736,8 +2754,8 @@ class TestColumnMapping:
     def test_restore_rolls_back_rename(self, spark, tmp_path):
         """RESTORE re-emits the old metaData, so a rename rolls back
         with the data — and the physical files satisfy both schemas."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            rename_column,
+        from portfolio_data_pipelines_spark.operators.delta_alter import rename_column
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
             restore_delta,
         )
 
@@ -2783,7 +2801,7 @@ class TestColumnMapping:
         zero scan efficiency."""
         import re
 
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
             enable_column_mapping,
             rename_column,
         )
@@ -2821,7 +2839,7 @@ class TestOperationMetrics:
     surfaced through DESCRIBE HISTORY."""
 
     def test_metrics_across_operations(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
             describe_history,
             restore_delta,
         )
@@ -2854,7 +2872,7 @@ class TestOperationMetrics:
         assert int(m_rst["numRestoredFiles"]) >= 1
 
     def test_overwrite_metrics_count_tombstones(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
             describe_history,
         )
 
@@ -2875,7 +2893,7 @@ class TestConvertParquet:
     stats-bearing, readable by both readers, and committable afterwards."""
 
     def test_convert_partitioned_dir(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
             convert_parquet_to_delta,
             describe_history,
         )
@@ -2922,7 +2940,7 @@ class TestConvertParquet:
         assert int(m["numFiles"]) >= 3 and int(m["numOutputRows"]) == 30
 
     def test_convert_unpartitioned_and_guards(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
             convert_parquet_to_delta,
         )
 
@@ -2962,7 +2980,7 @@ class TestAdviceR8:
         — cache() returns the SAME object, so the old `is not` check
         never fired and every constrained commit leaked executor
         storage for the session lifetime."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_merge import (
             apply_changes_delta,
         )
 
@@ -3001,7 +3019,7 @@ class TestAdviceR8:
     def test_apply_changes_enforces_check_constraints(self, spark, tmp_path):
         """A CDF replica with delta.constraints.* must reject violating
         upserts — same writer duty as WRITE and MERGE."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_merge import (
             apply_changes_delta,
         )
 
@@ -3042,7 +3060,7 @@ class TestAdviceR8:
         column-mapped table whose partition column was RENAMED: the
         staged-file validation used to rebuild the matcher with
         physical names and reject the (valid) logical key."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
             enable_column_mapping,
             rename_column,
         )
@@ -3191,8 +3209,10 @@ class TestInCommitTimestamps:
         return out
 
     def test_every_commit_type_carries_monotonic_ict(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
             add_check_constraint,
+        )
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
             describe_history,
         )
 
@@ -3232,9 +3252,7 @@ class TestInCommitTimestamps:
         import datetime as dt
         import os
 
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            version_as_of,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_scan import version_as_of
         from portfolio_data_pipelines_spark.operators.delta_reader import (
             version_as_of_external,
         )
@@ -3276,9 +3294,7 @@ class TestInCommitTimestamps:
         not the (scramble-able) file mtime."""
         import os
 
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            read_delta_cdf,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
 
         path = str(tmp_path / "t_ict_cdf")
         write_delta(
@@ -3327,8 +3343,10 @@ class TestWriteSideCDF:
         """v0 append → (enable) → merge → keyed replaceWhere → keyed
         restore. With ``enable_at_start`` the enable commit shifts the
         data-commit versions by one, so comparisons strip versions."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_cdf import (
             enable_change_data_feed,
+        )
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
             restore_delta,
         )
 
@@ -3359,9 +3377,7 @@ class TestWriteSideCDF:
 
     @staticmethod
     def _changes(spark, path, key_cols=None):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            read_delta_cdf,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
 
         df = read_delta_cdf(spark, path, -1, key_cols)
         return sorted(
@@ -3389,10 +3405,8 @@ class TestWriteSideCDF:
         raises the retention error over the same window."""
         import os
 
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            _replay_log,
-            read_delta_cdf,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
+        from portfolio_data_pipelines_spark.operators.delta_log import _replay_log
 
         p_on = self._lifecycle(spark, tmp_path / "on", True)
         p_off = self._lifecycle(spark, tmp_path / "off", False)
@@ -3430,7 +3444,7 @@ class TestWriteSideCDF:
         """Without cdf_key_cols an overwrite records the protocol's
         operation semantics: every removed row a delete, every written
         row an insert — even for value-identical rows."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_cdf import (
             enable_change_data_feed,
         )
 
@@ -3457,7 +3471,7 @@ class TestWriteSideCDF:
         """A rewrite that nets to zero changes still commits a cdc
         action (0-row file) — readers then KNOW nothing changed instead
         of falling back to a reconstruction join."""
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_cdf import (
             enable_change_data_feed,
         )
 
@@ -3474,7 +3488,7 @@ class TestWriteSideCDF:
         ]
 
     def test_append_commits_carry_no_cdc(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_cdf import (
             enable_change_data_feed,
         )
 
@@ -3489,10 +3503,10 @@ class TestWriteSideCDF:
         ]
 
     def test_enable_is_idempotent_and_bumps_protocol(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            _replay_log,
+        from portfolio_data_pipelines_spark.operators.delta_cdf import (
             enable_change_data_feed,
         )
+        from portfolio_data_pipelines_spark.operators.delta_log import _replay_log
 
         path = str(tmp_path / "t_proto")
         write_delta(spark, _df(spark, [(1, 1.0, _day("2024-01-01"))]), path)
@@ -3510,9 +3524,11 @@ class TestWriteSideCDF:
         ]
 
     def test_apply_changes_writes_cdc(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            apply_changes_delta,
+        from portfolio_data_pipelines_spark.operators.delta_cdf import (
             enable_change_data_feed,
+        )
+        from portfolio_data_pipelines_spark.operators.delta_merge import (
+            apply_changes_delta,
         )
 
         path = str(tmp_path / "t_apply")
@@ -3560,10 +3576,12 @@ class TestWriteSideCDF:
         names — same contract as the data path."""
         import os
 
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            enable_change_data_feed,
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
             enable_column_mapping,
             rename_column,
+        )
+        from portfolio_data_pipelines_spark.operators.delta_cdf import (
+            enable_change_data_feed,
         )
 
         path = str(tmp_path / "t_map")
@@ -3579,9 +3597,7 @@ class TestWriteSideCDF:
             ),
             ["id"],
         )
-        from portfolio_data_pipelines_spark.operators.delta_log import (
-            read_delta_cdf,
-        )
+        from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
 
         got = read_delta_cdf(spark, path, -1)
         assert set(got.columns) == {

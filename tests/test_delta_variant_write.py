@@ -29,16 +29,17 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
-from portfolio_data_pipelines_spark.operators.delta_log import (
-    delete_where,
+from portfolio_data_pipelines_spark.operators.delta_cdf import (
     enable_change_data_feed,
-    merge_delta,
-    optimize_delta,
-    read_delta,
     read_delta_cdf,
-    restore_delta,
-    write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_log import delete_where, write_delta
+from portfolio_data_pipelines_spark.operators.delta_maintain import (
+    optimize_delta,
+    restore_delta,
+)
+from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )

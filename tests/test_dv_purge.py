@@ -15,17 +15,19 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from portfolio_data_pipelines_spark.operators.delta_log import (
-    delete_where_dv,
-    drop_table_feature,
+from portfolio_data_pipelines_spark.operators.delta_alter import enable_column_mapping
+from portfolio_data_pipelines_spark.operators.delta_cdf import (
     enable_change_data_feed,
-    enable_column_mapping,
-    purge_delta,
-    read_delta,
     read_delta_cdf,
-    vacuum_delta,
-    write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
+from portfolio_data_pipelines_spark.operators.delta_log import write_delta
+from portfolio_data_pipelines_spark.operators.delta_maintain import (
+    drop_table_feature,
+    purge_delta,
+    vacuum_delta,
+)
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )

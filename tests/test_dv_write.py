@@ -15,18 +15,22 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from portfolio_data_pipelines_spark.operators.delta_log import (
+from portfolio_data_pipelines_spark.operators.delta_cdf import (
+    enable_change_data_feed,
+    read_delta_cdf,
+)
+from portfolio_data_pipelines_spark.operators.delta_checkpoint import (
     DELTA_CHECKPOINT_EVERY,
     checkpoint_delta,
-    delete_where_dv,
-    enable_change_data_feed,
-    merge_delta,
-    optimize_delta,
-    read_delta,
-    read_delta_cdf,
-    vacuum_delta,
-    write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
+from portfolio_data_pipelines_spark.operators.delta_log import write_delta
+from portfolio_data_pipelines_spark.operators.delta_maintain import (
+    optimize_delta,
+    vacuum_delta,
+)
+from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_changes_external,
     read_delta_external,
@@ -302,10 +306,8 @@ def test_append_feed_respects_dv_and_restore_resurrects(spark, tmp_path):
     """read_delta_changes over a DV re-add emits only LIVE rows (the
     shared read path filters); RESTORE to the pre-delete version brings
     the rows back through both readers (re-added adds carry no DV)."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        read_delta_changes,
-        restore_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_maintain import restore_delta
+    from portfolio_data_pipelines_spark.operators.delta_scan import read_delta_changes
 
     path = _mk(spark, tmp_path, "t12")
     delete_where_dv(spark, path, "id in (4, 8)")
@@ -324,7 +326,7 @@ def test_dv_on_column_mapped_table(spark, tmp_path):
     carry physical names, and the DV identity (group, basename,
     position) is computed over the PHYSICAL layout. Both readers and
     time travel stay row-identical."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
+    from portfolio_data_pipelines_spark.operators.delta_alter import (
         enable_column_mapping,
         rename_column,
     )
@@ -381,10 +383,8 @@ def test_vacuum_tracks_bin_age_across_double_tombstones(spark, tmp_path):
     tracked (keyed by BIN path across all tombstones), or an object
     store that rewrites mtimes lets vacuum reclaim a .bin still needed
     by in-retention time travel."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        _replay_log,
-        purge_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_log import _replay_log
+    from portfolio_data_pipelines_spark.operators.delta_maintain import purge_delta
 
     path = _mk(spark, tmp_path, "t_dbl", partitioned=False, one_file=True)
     delete_where_dv(spark, path, "id = 4")     # v1: bin1
@@ -424,7 +424,7 @@ def test_large_dv_delete_serializes_executor_side(spark, tmp_path, monkeypatch):
     delete takes the big path, run a ~million-row erasure plus a
     second (merging) delete on a table with an EXISTING DV, and pin
     the result equal to both readers and to time travel."""
-    from portfolio_data_pipelines_spark.operators import delta_log
+    from portfolio_data_pipelines_spark.operators import deletion_vectors, delta_dv
 
     path = str(tmp_path / "t_bigdv")
     n = 1_000_000
@@ -435,7 +435,17 @@ def test_large_dv_delete_serializes_executor_side(spark, tmp_path, monkeypatch):
         ).repartition(4),
         path,
     )
-    monkeypatch.setattr(delta_log, "DV_DELETE_DRIVER_MAX_POSITIONS", 0)
+    monkeypatch.setattr(delta_dv, "DV_DELETE_DRIVER_MAX_POSITIONS", 0)
+    # the small path serializes bitmaps in THIS process; the big path
+    # only in executor workers, which this spy does not reach
+    driver_serialized = []
+    real_serialize = deletion_vectors.serialize_roaring64
+
+    def spy_serialize(positions):
+        driver_serialized.append(len(positions))
+        return real_serialize(positions)
+
+    monkeypatch.setattr(deletion_vectors, "serialize_roaring64", spy_serialize)
     # first delete: ~half the table, executor-side bitmaps
     v1 = delete_where_dv(spark, path, "id % 2 = 0")
     assert v1 == 1
@@ -443,6 +453,7 @@ def test_large_dv_delete_serializes_executor_side(spark, tmp_path, monkeypatch):
     # closure ships the old compressed bytes, the kernel unions)
     v2 = delete_where_dv(spark, path, "id % 3 = 0")
     assert v2 == 2
+    assert driver_serialized == []  # the patched bound took the big path
     expected = n - n // 2 - (n // 3 - n // 6)
     got = read_delta(spark, path)
     assert got.count() == expected

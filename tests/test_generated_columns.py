@@ -18,11 +18,11 @@ from pyspark.sql import functions as F
 
 from portfolio_data_pipelines_spark.operators.delta_log import (
     delete_where,
-    merge_delta,
-    read_delta,
     update_where,
     write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )

@@ -19,15 +19,14 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
-from portfolio_data_pipelines_spark.operators.delta_log import (
-    delete_where,
-    delete_where_dv,
+from portfolio_data_pipelines_spark.operators.delta_alter import (
     enable_column_mapping,
     enable_iceberg_compat,
-    merge_delta,
-    read_delta,
-    write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
+from portfolio_data_pipelines_spark.operators.delta_log import delete_where, write_delta
+from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )
@@ -319,7 +318,7 @@ def test_array_column_compat_lifecycle(spark, tmp_path):
     enable_iceberg_compat(spark, path, version=2)
 
     def ids_complete(fpath):
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_colmap import (
             _arrow_schema_ids_complete,
         )
 
@@ -450,7 +449,7 @@ def test_element_id_stamp_distributes_above_threshold(
     value parity in both readers."""
     import pyarrow.parquet as pq
 
-    from portfolio_data_pipelines_spark.operators import delta_log as dl
+    from portfolio_data_pipelines_spark.operators import delta_colmap
 
     path = str(tmp_path / "t")
     write_delta(
@@ -464,7 +463,17 @@ def test_element_id_stamp_distributes_above_threshold(
     enable_column_mapping(spark, path)
     enable_iceberg_compat(spark, path, version=2)
 
-    monkeypatch.setattr(dl, "STAMP_DISTRIBUTE_MIN_FILES", 1)
+    monkeypatch.setattr(delta_colmap, "STAMP_DISTRIBUTE_MIN_FILES", 1)
+    # the driver loop stamps in THIS process; the distributed pass only
+    # in executor workers, which this spy does not reach
+    driver_stamped = []
+    real_stamp = delta_colmap._stamp_and_size
+
+    def spy_stamp(uri, elem_ids):
+        driver_stamped.append(uri)
+        return real_stamp(uri, elem_ids)
+
+    monkeypatch.setattr(delta_colmap, "_stamp_and_size", spy_stamp)
     write_delta(
         spark,
         spark.createDataFrame(
@@ -474,8 +483,9 @@ def test_element_id_stamp_distributes_above_threshold(
         path,
         mode="append",
     )
+    assert driver_stamped == []  # the patched threshold distributed it
     for f in _live_files(path):
-        assert dl._arrow_schema_ids_complete(pq.read_schema(f)), f
+        assert delta_colmap._arrow_schema_ids_complete(pq.read_schema(f)), f
     # add.size must reflect the REWRITTEN file, not the staged one
     import json as _json
     import os as _os
@@ -507,33 +517,33 @@ def test_element_id_stamp_retry_safe_and_missing_file_loud(
     silently skipping the icebergCompat footer-id duty."""
     import pyarrow as pa
 
-    from portfolio_data_pipelines_spark.operators import delta_log as dl
+    from portfolio_data_pipelines_spark.operators import delta_colmap
 
     f = str(tmp_path / "staged.parquet")
     pq.write_table(
         pa.table({"xs": pa.array([[1, 2], [3]], pa.list_(pa.int64()))}), f
     )
     eids = {"xs": 1, "xs.element": 2}
-    first = dl._stamp_element_ids_batch(None, [f], eids)
+    first = delta_colmap._stamp_element_ids_batch(None, [f], eids)
     assert first == {f: os.path.getsize(f)}
-    assert dl._arrow_schema_ids_complete(pq.read_schema(f))
+    assert delta_colmap._arrow_schema_ids_complete(pq.read_schema(f))
     # second (retried) pass: nothing left to rewrite, but the size must
     # still be reported — and identical to the rewritten on-disk size
-    again = dl._stamp_element_ids_batch(None, [f], eids)
+    again = delta_colmap._stamp_element_ids_batch(None, [f], eids)
     assert again == first
     # the distributed kernel reports the same tri-state per file
-    assert dl._stamp_and_size(f, eids) == os.path.getsize(f)
-    assert dl._stamp_and_size(str(tmp_path / "nope.parquet"), eids) == -2
+    assert delta_colmap._stamp_and_size(f, eids) == os.path.getsize(f)
+    assert delta_colmap._stamp_and_size(str(tmp_path / "nope.parquet"), eids) == -2
     # a missing file in the driver loop is an error, not a silent skip
     with pytest.raises(IOError, match="vanished"):
-        dl._stamp_element_ids_batch(
+        delta_colmap._stamp_element_ids_batch(
             None, [str(tmp_path / "nope.parquet")], eids
         )
     # ... and in the distributed path it routes through the driver loop
     # (which then raises) rather than returning a partial result
-    monkeypatch.setattr(dl, "STAMP_DISTRIBUTE_MIN_FILES", 1)
+    monkeypatch.setattr(delta_colmap, "STAMP_DISTRIBUTE_MIN_FILES", 1)
     with pytest.warns(UserWarning, match="1 of 2 staged files"):
         with pytest.raises(IOError, match="vanished"):
-            dl._stamp_element_ids_batch(
+            delta_colmap._stamp_element_ids_batch(
                 spark, [f, str(tmp_path / "nope.parquet")], eids
             )

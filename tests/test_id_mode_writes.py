@@ -22,16 +22,16 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
+from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
 from portfolio_data_pipelines_spark.operators.delta_log import (
     delete_where,
-    delete_where_dv,
-    merge_delta,
-    optimize_delta,
-    read_delta,
-    read_delta_cdf,
     update_where,
     write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_maintain import optimize_delta
+from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )

@@ -16,13 +16,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from portfolio_data_pipelines_spark.operators.delta_log import (
-    apply_changes_delta,
     delete_where,
-    merge_delta,
-    read_delta,
     update_where,
     write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_merge import (
+    apply_changes_delta,
+    merge_delta,
+)
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )

@@ -26,18 +26,20 @@ from pyspark.sql import functions as F
 # driver's default verify run (pytest.ini deselects slow by default).
 pytestmark = pytest.mark.slow
 
+from portfolio_data_pipelines_spark.operators.delta_checkpoint import checkpoint_delta
+from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
 from portfolio_data_pipelines_spark.operators.delta_log import (
-    checkpoint_delta,
     delete_where,
-    delete_where_dv,
-    merge_delta,
-    optimize_delta,
-    purge_delta,
-    read_delta,
-    restore_delta,
     update_where,
     write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_maintain import (
+    optimize_delta,
+    purge_delta,
+    restore_delta,
+)
+from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )
@@ -196,10 +198,8 @@ def _walk_with_cdf_replica(spark, tmp_path, seed, n_ops):
     must converge to the model through arbitrary op interleavings,
     including DV deletes (cdc-staged), replaceWhere overwrites and
     keyed restores."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        apply_changes_delta,
-        read_delta_cdf,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
+    from portfolio_data_pipelines_spark.operators.delta_merge import apply_changes_delta
 
     rng = random.Random(seed)
     path = str(tmp_path / f"fuzz_cdf_{seed}")
@@ -331,17 +331,23 @@ def _walk_metadata(
     ID-mode column-mapped table — every commit stages field-id-stamped
     files and every read resolves by id (no row tracking: converted
     tables don't carry it)."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        _commit_metadata_only,
-        _replay_log,
-        _upgraded_protocol_with,
-        cleanup_log,
+    from portfolio_data_pipelines_spark.operators.delta_alter import (
         drop_column,
         drop_column_default,
         enable_column_mapping,
         rename_column,
         set_column_default,
+    )
+    from portfolio_data_pipelines_spark.operators.delta_log import (
+        _commit_metadata_only,
+        _replay_log,
+    )
+    from portfolio_data_pipelines_spark.operators.delta_maintain import (
+        cleanup_log,
         vacuum_delta,
+    )
+    from portfolio_data_pipelines_spark.operators.delta_protocol import (
+        _upgraded_protocol_with,
     )
 
     rng = random.Random(seed)
@@ -447,7 +453,7 @@ def _walk_metadata(
             # icebergCompatV2 on top (r13): the enable pass rewrites
             # every unstamped file, and check() then asserts EVERY op's
             # staged files carry complete parquet field ids
-            from portfolio_data_pipelines_spark.operators.delta_log import (
+            from portfolio_data_pipelines_spark.operators.delta_alter import (
                 enable_iceberg_compat,
             )
 
@@ -697,9 +703,7 @@ def _walk_metadata(
             if not defaults:
                 trace[-1] += "(noop)"
                 continue
-            from portfolio_data_pipelines_spark.operators.delta_log import (
-                merge_delta,
-            )
+            from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
             omit = rng.choice(sorted(defaults))
             hit = sorted(i for i in rows if i % 3 == 0)[:3]
@@ -801,9 +805,7 @@ def _walk_identity_generated(spark, tmp_path, seed, n_ops):
     are single-partition so allocation order is the frame order),
     the generated column is recomputed/validated on every path, and
     deletes/updates/optimize/checkpoint/vacuum interleave."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        vacuum_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_maintain import vacuum_delta
 
     rng = random.Random(seed)
     path = str(tmp_path / f"fuzz_idgen_{seed}")
@@ -928,9 +930,7 @@ def _walk_variant(spark, tmp_path, seed, n_ops):
     external reader must agree on the decoded logical values."""
     import json as _json
 
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        vacuum_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_maintain import vacuum_delta
 
     rng = random.Random(seed)
     path = str(tmp_path / f"fuzz_var_{seed}")
@@ -1195,12 +1195,12 @@ def _walk_composed(spark, tmp_path, seed, n_ops):
 
     import pyarrow.parquet as _pq
 
-    from portfolio_data_pipelines_spark.operators.delta_log import (
+    from portfolio_data_pipelines_spark.operators.delta_checkpoint import (
         checkpoint_delta,
-        merge_delta,
-        optimize_delta,
-        update_where,
     )
+    from portfolio_data_pipelines_spark.operators.delta_log import update_where
+    from portfolio_data_pipelines_spark.operators.delta_maintain import optimize_delta
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
     from portfolio_data_pipelines_spark.operators.delta_reader import _replay
 
     rng = random.Random(seed)
@@ -1450,13 +1450,15 @@ def _walk_composed_rt(spark, tmp_path, seed, n_ops):
       apply_changes_delta converges to the model after every commit;
     - the independent external reader agrees with the native one.
     """
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        apply_changes_delta,
+    from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
+    from portfolio_data_pipelines_spark.operators.delta_checkpoint import (
         checkpoint_delta,
+    )
+    from portfolio_data_pipelines_spark.operators.delta_log import update_where
+    from portfolio_data_pipelines_spark.operators.delta_maintain import optimize_delta
+    from portfolio_data_pipelines_spark.operators.delta_merge import (
+        apply_changes_delta,
         merge_delta,
-        optimize_delta,
-        read_delta_cdf,
-        update_where,
     )
 
     rng = random.Random(seed)

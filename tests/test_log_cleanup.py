@@ -13,12 +13,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from portfolio_data_pipelines_spark.operators.delta_log import (
-    checkpoint_delta,
-    cleanup_log,
-    read_delta,
-    write_delta,
-)
+from portfolio_data_pipelines_spark.operators.delta_checkpoint import checkpoint_delta
+from portfolio_data_pipelines_spark.operators.delta_log import write_delta
+from portfolio_data_pipelines_spark.operators.delta_maintain import cleanup_log
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )

@@ -1,113 +1,36 @@
-"""The delta_log decomposition seam (r15 delta_protocol/checkpoint/dv,
-r16 delta_cdf/merge/alter/maintain): every split module must keep two
-promises —
-
-1. its public names stay importable from ``operators.delta_log``
-   (the re-export surface callers and tests were written against), and
-2. it reads delta_log internals at CALL time (the ``dl`` proxy), so a
-   monkeypatch on the ``delta_log`` module affects the moved code —
-   the property the whole test suite's tunable patches rely on.
+"""The Delta module seams: every ``operators/delta_*`` module owns its
+names, imports cleanly whichever module loads first, and reads its own
+tunables — so a patch on the owning module is what the code observes.
 """
 
 from __future__ import annotations
 
+import os
 
-def test_split_public_names_reexported_from_delta_log():
-    from portfolio_data_pipelines_spark.operators import delta_log as dl
-
-    expected = {
-        # delta_cdf (r16)
-        "enable_change_data_feed": "delta_cdf",
-        "read_delta_cdf": "delta_cdf",
-        "_net_changes": "delta_cdf",
-        "_maybe_stage_cdc": "delta_cdf",
-        # delta_merge (r16)
-        "merge_delta": "delta_merge",
-        "apply_changes_delta": "delta_merge",
-        "delta_cdf_apply_sink": "delta_merge",
-        # delta_alter (r16)
-        "enable_column_mapping": "delta_alter",
-        "enable_iceberg_compat": "delta_alter",
-        "enable_row_tracking": "delta_alter",
-        "rename_column": "delta_alter",
-        "drop_column": "delta_alter",
-        "add_check_constraint": "delta_alter",
-        "set_column_default": "delta_alter",
-        # delta_colmap (r16)
-        "_logical_to_physical": "delta_colmap",
-        "_physical_read_schema": "delta_colmap",
-        "_stamp_element_ids_batch": "delta_colmap",
-        "_assign_compat_element_ids": "delta_colmap",
-        "_field_ids": "delta_colmap",
-        # delta_scan (r16)
-        "read_delta": "delta_scan",
-        "read_delta_changes": "delta_scan",
-        "version_as_of": "delta_scan",
-        "_read_adds": "delta_scan",
-        "_fast_hive_read": "delta_scan",
-        "_file_may_match": "delta_scan",
-        "_read_file_groups": "delta_scan",
-        "_derived_partition_bounds": "delta_scan",
-        # delta_maintain (r16)
-        "optimize_delta": "delta_maintain",
-        "purge_delta": "delta_maintain",
-        "restore_delta": "delta_maintain",
-        "vacuum_delta": "delta_maintain",
-        "cleanup_log": "delta_maintain",
-        "drop_table_feature": "delta_maintain",
-        "describe_detail": "delta_maintain",
-        "describe_history": "delta_maintain",
-        "enable_clustering": "delta_maintain",
-        "clustering_columns": "delta_maintain",
-        "set_domain_metadata": "delta_maintain",
-        "convert_parquet_to_delta": "delta_maintain",
-        # r15 splits keep their seam too
-        "checkpoint_delta": "delta_checkpoint",
-        "delete_where_dv": "delta_dv",
-        "_check_writer_protocol": "delta_protocol",
-    }
-    for name, module in expected.items():
-        fn = getattr(dl, name)
-        assert fn.__module__.endswith(module), (name, fn.__module__)
-
-
-def test_split_modules_see_delta_log_monkeypatches(monkeypatch):
-    """The _DeltaLogProxy contract: patching an internal (or tunable)
-    on the delta_log MODULE must be what the split modules observe at
-    call time — otherwise every existing ``monkeypatch.setattr(dl,…)``
-    in the suite silently stops covering the moved code."""
-    from portfolio_data_pipelines_spark.operators import (
-        delta_alter,
-        delta_cdf,
-        delta_log as dl,
-        delta_colmap,
-        delta_maintain,
-        delta_merge,
-        delta_scan,
+DELTA_MODULES = sorted(
+    name[:-3]
+    for name in os.listdir(
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "portfolio_data_pipelines_spark", "operators",
+        )
     )
-
-    monkeypatch.setattr(dl, "_now_ms", lambda: 424242)
-    for split in (
-        delta_cdf, delta_merge, delta_alter, delta_maintain, delta_scan,
-        delta_colmap,
-    ):
-        assert split.dl._now_ms() == 424242, split.__name__
-    monkeypatch.setattr(dl, "DELTA_CHECKPOINT_EVERY", 3)
-    assert delta_merge.dl.DELTA_CHECKPOINT_EVERY == 3
-    assert delta_maintain.dl.DELTA_CHECKPOINT_EVERY == 3
+    if name.startswith("delta_") and name.endswith(".py")
+)
 
 
 def test_split_modules_import_standalone():
-    """Importing a split module FIRST (fresh interpreter order) must
-    not hit a partially-initialized delta_log: the proxy defers the
-    delta_log import to call time, so a bare import is cycle-free."""
+    """Importing any Delta module FIRST (fresh interpreter order) must
+    not hit a partially-initialized sibling: the modules in the
+    delta_log cycle import each other as module objects and resolve
+    names at call time."""
     import subprocess
     import sys
 
-    for mod in (
-        "delta_cdf", "delta_merge", "delta_alter", "delta_dv",
-        "delta_maintain", "delta_scan", "delta_colmap",
-    ):
+    assert {"delta_log", "delta_checkpoint", "delta_protocol", "delta_dv"} <= set(
+        DELTA_MODULES
+    )
+    for mod in DELTA_MODULES:
         r = subprocess.run(
             [
                 sys.executable,
@@ -120,3 +43,92 @@ def test_split_modules_import_standalone():
             timeout=120,
         )
         assert r.returncode == 0, (mod, r.stderr[-500:])
+
+
+def test_checkpoint_cadence_read_from_delta_checkpoint(spark, tmp_path, monkeypatch):
+    """``_write_commit`` owns the checkpoint cadence and reads it from
+    ``delta_checkpoint``: lowering the constant there checkpoints every
+    third commit, whichever module wrote it (MERGE at v3, OPTIMIZE at
+    v6, a plain append at v9) — and no other version."""
+    from portfolio_data_pipelines_spark.operators import delta_checkpoint
+    from portfolio_data_pipelines_spark.operators.delta_alter import (
+        add_check_constraint,
+    )
+    from portfolio_data_pipelines_spark.operators.delta_log import write_delta
+    from portfolio_data_pipelines_spark.operators.delta_maintain import (
+        optimize_delta,
+    )
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+    from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
+
+    monkeypatch.setattr(delta_checkpoint, "DELTA_CHECKPOINT_EVERY", 3)
+    path = str(tmp_path / "t")
+
+    def rows(lo, hi):
+        return spark.createDataFrame(
+            [(i, float(i)) for i in range(lo, hi)], "id bigint, v double"
+        ).coalesce(1)
+
+    versions = [
+        write_delta(spark, rows(0, 10), path),  # v0
+        write_delta(spark, rows(10, 20), path),  # v1
+        write_delta(spark, rows(20, 30), path),  # v2
+        merge_delta(spark, path, rows(25, 35), key_cols=["id"]),  # v3
+    ]
+    assert read_delta(spark, path, version=3).count() == 35
+    versions += [
+        add_check_constraint(spark, path, "id_nonneg", "id >= 0"),  # v4
+        write_delta(spark, rows(35, 40), path),  # v5
+        optimize_delta(spark, path),  # v6
+        write_delta(spark, rows(40, 45), path),  # v7
+        write_delta(spark, rows(45, 50), path),  # v8
+        write_delta(spark, rows(50, 55), path),  # v9
+    ]
+    assert versions == list(range(10))
+    log = os.path.join(path, "_delta_log")
+    checkpoints = sorted(
+        n for n in os.listdir(log) if n.endswith(".checkpoint.parquet")
+    )
+    assert checkpoints == [
+        f"{v:020d}.checkpoint.parquet" for v in (3, 6, 9)
+    ]
+    for v, want in ((3, 35), (6, 40), (9, 55)):
+        assert read_delta(spark, path, version=v).count() == want
+    assert read_delta(spark, path).count() == 55
+
+
+def test_checkpoint_failure_after_append_is_not_a_lost_race(
+    spark, tmp_path, monkeypatch
+):
+    """An append's commit lands, then its checkpoint fails: the error
+    reaches the caller and the append's retry loop does not mistake its
+    own commit for a racer's (which would re-commit the rows, or delete
+    the committed files as a 'twin writer' batch)."""
+    import pytest
+
+    from portfolio_data_pipelines_spark.operators import delta_checkpoint
+    from portfolio_data_pipelines_spark.operators.delta_log import (
+        _replay_log,
+        write_delta,
+    )
+    from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
+
+    monkeypatch.setattr(delta_checkpoint, "DELTA_CHECKPOINT_EVERY", 2)
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, 1.0)], "id bigint, v double")
+    write_delta(spark, df, path)
+    write_delta(spark, df, path)
+
+    def failing_checkpoint(spark_, path_, version):
+        raise RuntimeError("checkpoint failed")
+
+    monkeypatch.setattr(delta_checkpoint, "checkpoint_delta", failing_checkpoint)
+    with pytest.raises(RuntimeError, match="checkpoint failed"):
+        write_delta(spark, df, path, txn=("app", 1))
+    log = os.path.join(path, "_delta_log")
+    assert sorted(n for n in os.listdir(log) if n.endswith(".json")) == [
+        f"{v:020d}.json" for v in range(3)
+    ]
+    adds = _replay_log(spark, path, None).adds
+    assert all(os.path.exists(os.path.join(path, rel)) for rel in adds)
+    assert read_delta(spark, path).count() == 3

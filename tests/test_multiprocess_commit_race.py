@@ -28,10 +28,8 @@ import sys
 
 import pytest
 
-from portfolio_data_pipelines_spark.operators.delta_log import (
-    read_delta,
-    write_delta,
-)
+from portfolio_data_pipelines_spark.operators.delta_log import write_delta
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 

@@ -448,12 +448,10 @@ def test_delta_log_matches_model_at_every_version(spark, tmp_path_factory, scrip
     upserts by id)."""
     import datetime
 
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        merge_delta,
-        optimize_delta,
-        read_delta,
-        write_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_log import write_delta
+    from portfolio_data_pipelines_spark.operators.delta_maintain import optimize_delta
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+    from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 
     path = str(tmp_path_factory.mktemp("delta_model") / "t")
     by_version: dict[int, list[tuple]] = {}
@@ -526,8 +524,8 @@ def test_delta_stream_sink_exactly_once_under_any_kill_and_replay(
     version."""
     import datetime
 
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        delta_stream_sink,
+    from portfolio_data_pipelines_spark.operators.delta_log import delta_stream_sink
+    from portfolio_data_pipelines_spark.operators.delta_scan import (
         read_delta,
         read_delta_changes,
     )

@@ -17,15 +17,15 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from portfolio_data_pipelines_spark.operators.delta_log import (
-    checkpoint_delta,
+from portfolio_data_pipelines_spark.operators.delta_checkpoint import checkpoint_delta
+from portfolio_data_pipelines_spark.operators.delta_log import write_delta
+from portfolio_data_pipelines_spark.operators.delta_maintain import (
     get_domain_metadata,
-    read_delta,
     remove_domain_metadata,
     set_domain_metadata,
     vacuum_delta,
-    write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )
@@ -175,9 +175,7 @@ def test_domain_metadata_survives_checkpoint(spark, tmp_path):
 
 
 def test_creation_configuration(spark, tmp_path):
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        read_delta_cdf,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
 
     path = str(tmp_path / "t8")
     write_delta(
@@ -217,7 +215,7 @@ def test_creation_configuration(spark, tmp_path):
 
 
 def test_describe_detail(spark, tmp_path):
-    from portfolio_data_pipelines_spark.operators.delta_log import (
+    from portfolio_data_pipelines_spark.operators.delta_maintain import (
         describe_detail,
         set_domain_metadata,
     )
@@ -249,7 +247,7 @@ def test_check_constraints_bump_writer_version(spark, tmp_path):
     (a foreign legacy writer would commit violating rows without ever
     seeing the constraint), and ALTER ADD CONSTRAINT on a v2 table
     must bump the protocol in the SAME commit."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
+    from portfolio_data_pipelines_spark.operators.delta_alter import (
         add_check_constraint,
     )
 
@@ -370,10 +368,12 @@ def test_utf8_lcase_collation_write_lifecycle(spark, tmp_path):
     the stored 'a'; byte-ordered file stats never prune on the folded
     column (superset-safe)."""
     from portfolio_data_pipelines_spark.operators.delta_log import (
-        apply_changes_delta,
         delete_where,
-        merge_delta,
         update_where,
+    )
+    from portfolio_data_pipelines_spark.operators.delta_merge import (
+        apply_changes_delta,
+        merge_delta,
     )
 
     path = _collated_fixture(tmp_path, "t_coll_lcase_w", "UTF8_LCASE")
@@ -450,10 +450,8 @@ def test_icu_collation_write_lifecycle(spark, tmp_path):
     a source key 'A' matches the stored 'a' under UNICODE_CI; stats
     never prune on the collated column (superset-safe, same duty as
     UTF8_LCASE)."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        delete_where,
-        merge_delta,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_log import delete_where
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
     path = _collated_fixture(tmp_path, "t_coll_icu_w", "UNICODE_CI")
     write_delta(
@@ -589,9 +587,11 @@ def test_cdf_images_byte_faithful_on_folded_keys(spark, tmp_path):
     from pyspark.sql.types import LongType, StringType, StructField
     from pyspark.sql.types import StructType as ST
 
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        enable_change_data_feed, merge_delta, read_delta_cdf,
+    from portfolio_data_pipelines_spark.operators.delta_cdf import (
+        enable_change_data_feed,
+        read_delta_cdf,
     )
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 
     path = str(tmp_path / "t_cdf_fold")
     st = ST([StructField("s", StringType("UTF8_LCASE")),

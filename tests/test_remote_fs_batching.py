@@ -23,6 +23,7 @@ from collections import Counter
 
 import pytest
 
+from portfolio_data_pipelines_spark.operators import delta_checkpoint
 from portfolio_data_pipelines_spark.operators import delta_log as dl
 from portfolio_data_pipelines_spark.operators import hadoop_io as hio
 
@@ -49,8 +50,10 @@ class _CountingFS:
 
 @pytest.fixture()
 def no_local_fastpath(monkeypatch):
-    """Disguise every path as remote: the Hadoop branch must run."""
+    """Disguise every path as remote: the Hadoop branch must run in
+    every module whose code reads ``_local_path``."""
     monkeypatch.setattr(dl, "_local_path", lambda p: None)
+    monkeypatch.setattr(delta_checkpoint, "_local_path", lambda p: None)
     monkeypatch.setattr(hio, "_local_path", lambda p: None)
 
 
@@ -101,11 +104,13 @@ def test_replay_log_no_per_version_probes(
     st = dl._replay_log(spark, path, None)
     assert st.version == 7
     assert len(st.adds) == 8
-    # 8 commit reads (one open each) + one listing + ≤2 exists — the
-    # r16 form added 8 more exists probes and ~8 readLine trips per file
+    # 8 commit reads (one open each) + one listing + 3 exists: the
+    # log-dir probe and the _last_checkpoint pointer probe, which both
+    # _list_log_versions and _replay_log make — O(1), where the r16 form
+    # added 8 more exists probes and ~8 readLine trips per file
     assert cfs.calls["open"] == 8
     assert cfs.calls["listStatus"] == 1
-    assert cfs.calls["exists"] <= 2
+    assert cfs.calls["exists"] == 3
 
 
 def test_local_path_gates():

@@ -18,21 +18,25 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from portfolio_data_pipelines_spark.operators.delta_log import (
+from portfolio_data_pipelines_spark.operators.delta_alter import enable_row_tracking
+from portfolio_data_pipelines_spark.operators.delta_checkpoint import (
     DELTA_CHECKPOINT_EVERY,
     checkpoint_delta,
+)
+from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
+from portfolio_data_pipelines_spark.operators.delta_log import (
     delete_where,
-    delete_where_dv,
-    enable_row_tracking,
-    merge_delta,
-    optimize_delta,
-    purge_delta,
-    read_delta,
-    restore_delta,
     update_where,
-    vacuum_delta,
     write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_maintain import (
+    optimize_delta,
+    purge_delta,
+    restore_delta,
+    vacuum_delta,
+)
+from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )
@@ -314,9 +318,7 @@ def test_row_tracking_composes_with_cdf(spark, tmp_path):
     change files (which never carry the hidden materialized columns)
     AND preserves row ids in the rewrite; the CDF nets the merge
     correctly and ids stay stable."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        read_delta_cdf,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_cdf import read_delta_cdf
 
     path = str(tmp_path / "t_rt_cdf")
     write_delta(
@@ -389,7 +391,7 @@ def test_drop_row_tracking_feature(spark, tmp_path):
     configuration, and the delta.rowTracking domain is removed —
     afterwards row-id reads refuse cleanly and plain reads still
     serve every row; re-enabling works and starts a fresh mark."""
-    from portfolio_data_pipelines_spark.operators.delta_log import (
+    from portfolio_data_pipelines_spark.operators.delta_maintain import (
         drop_table_feature,
         get_domain_metadata,
     )

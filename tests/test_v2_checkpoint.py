@@ -23,14 +23,11 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from portfolio_data_pipelines_spark.operators.delta_log import (
-    checkpoint_delta,
-    delete_where,
-    delete_where_dv,
-    merge_delta,
-    read_delta,
-    write_delta,
-)
+from portfolio_data_pipelines_spark.operators.delta_checkpoint import checkpoint_delta
+from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
+from portfolio_data_pipelines_spark.operators.delta_log import delete_where, write_delta
+from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.operators.delta_reader import (
     read_delta_external,
 )
@@ -330,9 +327,7 @@ def test_append_only_enforcement(spark, tmp_path):
 
 
 def test_v2_checkpoint_carries_dv_descriptors(spark, tmp_path):
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        delete_where_dv,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
 
     path = _mk(spark, tmp_path, "t10")
     delete_where_dv(spark, path, "id % 4 = 1")  # v3: DVs across files

@@ -39,11 +39,15 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F  # noqa: E402
 
 import portfolio_data_pipelines_spark.operators.delta_log as dl  # noqa: E402
-from portfolio_data_pipelines_spark.operators.delta_log import (  # noqa: E402
+import portfolio_data_pipelines_spark.operators.delta_scan as ds  # noqa: E402
+from portfolio_data_pipelines_spark.operators.delta_cdf import (  # noqa: E402
+    enable_change_data_feed,
+    read_delta_cdf,
+)
+from portfolio_data_pipelines_spark.operators.delta_log import write_delta  # noqa: E402
+from portfolio_data_pipelines_spark.operators.delta_merge import (  # noqa: E402
     apply_changes_delta,
     merge_delta,
-    read_delta_cdf,
-    write_delta,
 )
 from portfolio_data_pipelines_spark.session import get_spark  # noqa: E402
 from portfolio_data_pipelines_spark.sources.parquet import scan_table  # noqa: E402
@@ -91,20 +95,20 @@ def measure(spark, base_events, replicas):
         "event_id", "day", (F.col("value") * 2).alias("value")
     )
     scanned = []
-    orig = dl._read_adds
+    orig = ds._read_adds
 
     def spy(spark_, path_, adds, meta, with_file=False, **kw):
         if with_file:  # the discovery pass
             scanned.append(len(adds))
         return orig(spark_, path_, adds, meta, with_file, **kw)
 
-    dl._read_adds = spy
+    ds._read_adds = spy
     try:
         t0 = time.perf_counter()
         v_merge = merge_delta(spark, path, src, key_cols=["event_id"])
         t_merge = time.perf_counter() - t0
     finally:
-        dl._read_adds = orig
+        ds._read_adds = orig
     t0 = time.perf_counter()
     changes = read_delta_cdf(
         spark, path, from_version=v_merge - 1, key_cols=["event_id"],
@@ -157,7 +161,7 @@ def measure_cdc_vs_recon(spark, base_events, n_merges=4):
         p = f"{root}/{name}"
         build_table(spark, base_events, p, 1)
         if enable:
-            dl.enable_change_data_feed(spark, p)
+            enable_change_data_feed(spark, p)
         v0 = dl._replay_log(spark, p, None).version
         for i, d in enumerate(days):
             src = base_events.filter(F.col("day") == d).select(

@@ -31,6 +31,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 import portfolio_data_pipelines_spark.operators.delta_log as dl  # noqa: E402
+from portfolio_data_pipelines_spark.operators.delta_dv import (  # noqa: E402
+    delete_where_dv,
+)
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta  # noqa: E402
 from portfolio_data_pipelines_spark.session import get_spark  # noqa: E402
 from portfolio_data_pipelines_spark.sources.parquet import scan_table  # noqa: E402
 
@@ -77,7 +81,7 @@ def measure_dv_vs_cow(spark, base_events, predicate="event_id % 97 = 0"):
     root = tempfile.mkdtemp(prefix="dv_scale_")
     out = {}
     counts = {}
-    for name, fn in (("dv", dl.delete_where_dv), ("cow", dl.delete_where)):
+    for name, fn in (("dv", delete_where_dv), ("cow", dl.delete_where)):
         p = f"{root}/{name}"
         st = _build(spark, base_events, p)
         out.setdefault("table_files", len(st.adds))
@@ -86,11 +90,11 @@ def measure_dv_vs_cow(spark, base_events, predicate="event_id % 97 = 0"):
         out[f"{name}_delete_s"] = round(time.perf_counter() - t0, 3)
         out[f"{name}_commit_bytes"] = _commit_bytes(p, v)
         t0 = time.perf_counter()
-        counts[name] = dl.read_delta(spark, p).count()
+        counts[name] = read_delta(spark, p).count()
         out[f"{name}_read_s"] = round(time.perf_counter() - t0, 3)
         # warm second read (JVM/code paths warmed)
         t0 = time.perf_counter()
-        dl.read_delta(spark, p).count()
+        read_delta(spark, p).count()
         out[f"{name}_read_warm_s"] = round(time.perf_counter() - t0, 3)
     expect = base_events.filter(f"not ({predicate})").count()
     out["rows_parity"] = (

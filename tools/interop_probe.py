@@ -89,14 +89,16 @@ def run_matrix(spark, readers: dict, work: str) -> list[dict]:
     available foreign reader, compare against Spark's own read."""
     from pyspark.sql import functions as F
 
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        checkpoint_delta,
-        delete_where_dv,
+    from portfolio_data_pipelines_spark.operators.delta_alter import (
         enable_column_mapping,
-        merge_delta,
-        read_delta,
-        write_delta,
     )
+    from portfolio_data_pipelines_spark.operators.delta_checkpoint import (
+        checkpoint_delta,
+    )
+    from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
+    from portfolio_data_pipelines_spark.operators.delta_log import write_delta
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+    from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 
     def frame(lo, hi):
         return spark.range(lo, hi).select(
@@ -280,7 +282,7 @@ def run_matrix(spark, readers: dict, work: str) -> list[dict]:
     def build_iceberg_compat(p):
         # r13: enable_iceberg_compat rewrites unstamped files and every
         # later commit stamps field ids in NAME mode
-        from portfolio_data_pipelines_spark.operators.delta_log import (
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
             enable_iceberg_compat,
         )
 

@@ -28,11 +28,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from portfolio_data_pipelines_spark.operators.delta_log import (  # noqa: E402
+from portfolio_data_pipelines_spark.operators.delta_log import write_delta  # noqa: E402
+from portfolio_data_pipelines_spark.operators.delta_merge import (  # noqa: E402
     merge_delta,
-    read_delta,
-    write_delta,
 )
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta  # noqa: E402
 from portfolio_data_pipelines_spark.session import get_spark  # noqa: E402
 from portfolio_data_pipelines_spark.sources.parquet import scan_table  # noqa: E402
 
