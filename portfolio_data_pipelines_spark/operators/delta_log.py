@@ -196,10 +196,17 @@ def _list_log_versions(fs, jvm, path: str) -> list[int]:
     existence checks until the first gap — versions are contiguous by
     construction (each is claimed by exclusive create), so reads cost
     O(tail since checkpoint) small RPCs at any table age."""
+    return _log_tail(fs, jvm, path)[0]
+
+
+def _log_tail(fs, jvm, path: str) -> tuple[list[int], dict | None]:
+    """:func:`_list_log_versions` plus the ``_last_checkpoint`` doc it
+    anchored on (None when absent), so a replay starts from the same
+    checkpoint without reading the pointer again."""
     lp = _local_path(path)
     if lp is not None:
         if not os.path.isdir(f"{lp}/_delta_log"):
-            return []
+            return [], None
         lc = delta_checkpoint._read_last_checkpoint_doc(fs, jvm, path)
         start = int(lc["version"]) if lc else 0
         out = []
@@ -207,10 +214,10 @@ def _list_log_versions(fs, jvm, path: str) -> list[int]:
         while os.path.exists(f"{lp}/{_log_path(v)}"):
             out.append(v)
             v += 1
-        return out
+        return out, lc
     log_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/_delta_log")
     if not fs.exists(log_dir):
-        return []
+        return [], None
     lc = delta_checkpoint._read_last_checkpoint_doc(fs, jvm, path)
     start = int(lc["version"]) if lc else 0
     # ONE listing instead of one fs.exists round trip per version (r16
@@ -228,7 +235,7 @@ def _list_log_versions(fs, jvm, path: str) -> list[int]:
     while v in present:
         out.append(v)
         v += 1
-    return out
+    return out, lc
 
 
 def _all_commit_versions(fs, jvm, path: str) -> list[int]:
@@ -2554,7 +2561,7 @@ def _replay_log(
     JSON + one parquet + the commit tail), never the full history;
     pinned-version reads at or after the checkpoint do the same."""
     fs, _, jvm = _hadoop_fs(spark, path)
-    versions = _list_log_versions(fs, jvm, path)
+    versions, lc = _log_tail(fs, jvm, path)
     if not versions:
         raise FileNotFoundError(f"no _delta_log under {path}")
     tip = versions[-1]
@@ -2579,7 +2586,6 @@ def _replay_log(
             dv_tombs[rel_bin] = max(dv_tombs.get(rel_bin, 0), ts)
 
     start = 0
-    lc = delta_checkpoint._read_last_checkpoint_doc(fs, jvm, path)
     if lc is not None and lc["version"] <= target:
         cps = delta_checkpoint._checkpoint_files(fs, jvm, path, lc)
         if len(cps) == 1 and cps[0].endswith(".json"):

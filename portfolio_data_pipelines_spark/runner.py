@@ -24,7 +24,7 @@ from .config import DEFAULT_CONFIG, PipelineConfig
 from .operators.medallion import write_bronze
 from .plans.models import default_registry
 from .plans.quality import not_null, row_range, run_expectations
-from .sources.weather import batch_partition_date, weather_payload_to_df
+from .sources.weather import weather_payload_to_df
 
 
 def with_retry(fn: Callable[[], Any], retries: int = 1, base_delay_s: float = 0.1) -> Any:
@@ -77,15 +77,21 @@ class WeatherPipeline:
             )
         return with_retry(self._fetcher, retries=self.cfg.http_retries)
 
-    # Stage 2 — transform + bronze write (P1-P3, F1, A1, K1/K2).
+    # Stage 2 — transform + bronze write (P1-P3, F1, A1, K1/K2). One
+    # action, a per-day row count, yields every fact the stage needs:
+    # emptiness (no groups, the P7 guard), the days the write replaces,
+    # the manifest date (A1: the minimum parsed day) and the row count.
+    # The bronze write is the stage's only other job.
     def transform_and_store(self, raw: str | None = None) -> StageResult:
         if raw is None:  # O4: self-bootstrap when run in isolation
             raw = self.fetch()
         payload: Mapping[str, Any] = json.loads(raw)
         df = weather_payload_to_df(self.spark, payload)
-        if df.isEmpty():  # P7 empty-relation guard
+        with_date = df.withColumn("date", F.to_date(F.col("time")))
+        day_rows = {r["date"]: r["count"] for r in with_date.groupBy("date").count().collect()}
+        if not day_rows:
             return StageResult(date=None, path=None, rows=0)
-        d = batch_partition_date(df)
+        d = min((day for day in day_rows if day is not None), default=None)
         path = f"{self.cfg.lake_root}/weather"
         if self.cfg.lake_format == "delta":
             # Transaction-logged bronze: the reference's day-level
@@ -94,24 +100,22 @@ class WeatherPipeline:
             # days' files, and every ingest stays time-travelable.
             from .operators.delta_log import write_delta
 
-            with_date = df.withColumn("date", F.to_date(F.col("time")))
             # null dates (unparseable timestamps, F1's non-strict parse)
             # stay in bronze for audit — they live in the null partition,
             # which the replace set must include or the commit rejects
             # the staged data
-            days = [
-                r["date"].isoformat() if r["date"] is not None else None
-                for r in with_date.select("date").distinct().collect()
-            ]
             write_delta(
                 self.spark, with_date, path,
                 partition_col="date", mode="overwrite",
-                replace_partitions=days,
+                replace_partitions=[
+                    day.isoformat() if day is not None else None for day in day_rows
+                ],
             )
         else:
-            write_bronze(df, path)
-        rows = df.count()
-        return StageResult(date=d.isoformat() if d else None, path=path, rows=rows)
+            write_bronze(with_date, path)
+        return StageResult(
+            date=d.isoformat() if d else None, path=path, rows=sum(day_rows.values())
+        )
 
     # Stage 3 — warehouse load (K3/K4): re-read bronze, narrow to the
     # 4-column warehouse schema (P4), register as the `weather_hourly`

@@ -13,7 +13,11 @@ Re-expresses the reference transform
 
 The payload itself arrives driver-side (the reference fetches on an
 Airflow worker with ``requests``); at reference scale (~168 rows/batch)
-a driver-side parse + ``createDataFrame`` is the correct topology. For
+the columns are built into a ``pyarrow.Table`` on the driver, which Spark
+plans as a JVM ``LocalRelation``: every action on the batch runs without
+Python workers (a list of tuples would plan as a pickled Python RDD and
+start them on every action). The Arrow ``float64`` columns also accept
+JSON integer readings (``21``), as the reference's Polars cast does. For
 partition-parallel ingestion of many payloads, feed a directory of raw
 JSON files to ``spark.read.json`` or the streaming source instead.
 """
@@ -22,19 +26,19 @@ from __future__ import annotations
 
 from typing import Any, Mapping
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..schemas import WEATHER_BRONZE
 
-#: Raw (pre-cast) shape: everything as strings except the metric doubles,
+#: Raw (pre-cast) shape: timestamps as strings, the metrics as doubles,
 #: mirroring how the reference builds from Python lists then casts.
-_RAW_SCHEMA = T.StructType(
+_RAW_SCHEMA = pa.schema(
     [
-        T.StructField("time", T.StringType(), True),
-        T.StructField("temperature_2m", T.DoubleType(), True),
-        T.StructField("relative_humidity_2m", T.DoubleType(), True),
+        ("time", pa.string()),
+        ("temperature_2m", pa.float64()),
+        ("relative_humidity_2m", pa.float64()),
     ]
 )
 
@@ -53,13 +57,18 @@ def weather_payload_to_df(spark: SparkSession, payload: Mapping[str, Any]) -> Da
     temps = hourly.get("temperature_2m") or []
     hums = hourly.get("relative_humidity_2m") or []
 
-    rows = list(zip(times, temps, hums))
-    if not rows:
+    n = min(len(times), len(temps), len(hums))
+    if n == 0:
         # Typed empty frame — the P7 empty-relation guard downstream
         # relies on schema presence even with zero rows.
         return spark.createDataFrame([], schema=WEATHER_BRONZE)
 
-    raw = spark.createDataFrame(rows, schema=_RAW_SCHEMA)
+    raw = spark.createDataFrame(
+        pa.Table.from_pydict(
+            {"time": times[:n], "temperature_2m": temps[:n], "relative_humidity_2m": hums[:n]},
+            schema=_RAW_SCHEMA,
+        )
+    )
     return raw.select(
         # try_to_timestamp: malformed → NULL, never an error (F1 parity).
         F.try_to_timestamp(F.col("time")).alias("time"),
@@ -72,15 +81,3 @@ def weather_payload_to_df(spark: SparkSession, payload: Mapping[str, Any]) -> Da
             F.lit("yyyy-MM-dd'T'HH:mm:ss[.SSSSSS]'Z'"),
         ).alias("ingested_at"),
     )
-
-
-def batch_partition_date(df: DataFrame):
-    """Scalar min date of the batch (SURVEY §2.4 A1).
-
-    The reference derives one partition date per batch via
-    ``df.select(pl.col("time").dt.date().min()).item()``
-    (``weather_hourly_pipeline.py:67,89``); used for the file name, the
-    Hive partition key, and the idempotent-delete predicate.
-    """
-    row = df.agg(F.min(F.to_date("time")).alias("d")).first()
-    return row["d"] if row is not None else None

@@ -104,13 +104,13 @@ def test_replay_log_no_per_version_probes(
     st = dl._replay_log(spark, path, None)
     assert st.version == 7
     assert len(st.adds) == 8
-    # 8 commit reads (one open each) + one listing + 3 exists: the
-    # log-dir probe and the _last_checkpoint pointer probe, which both
-    # _list_log_versions and _replay_log make — O(1), where the r16 form
-    # added 8 more exists probes and ~8 readLine trips per file
+    # 8 commit reads (one open each) + one listing + 2 exists: the
+    # log-dir probe and ONE _last_checkpoint pointer probe (the replay
+    # starts from the pointer the listing anchored on) — O(1), where the
+    # r16 form added 8 more exists probes and ~8 readLine trips per file
     assert cfs.calls["open"] == 8
     assert cfs.calls["listStatus"] == 1
-    assert cfs.calls["exists"] == 3
+    assert cfs.calls["exists"] == 2
 
 
 def test_local_path_gates():

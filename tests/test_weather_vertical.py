@@ -15,10 +15,20 @@ import pytest
 
 from portfolio_data_pipelines_spark.runner import WeatherPipeline
 from portfolio_data_pipelines_spark.config import PipelineConfig
-from portfolio_data_pipelines_spark.sources.weather import (
-    batch_partition_date,
-    weather_payload_to_df,
-)
+from portfolio_data_pipelines_spark.sources.fx import fx_payload_to_df
+from portfolio_data_pipelines_spark.sources.weather import weather_payload_to_df
+
+
+def next_job_id(spark) -> int:
+    """The DAGScheduler's next job id: the difference across a call is
+    the number of Spark jobs it launched."""
+    nxt = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    return int(nxt if isinstance(nxt, int) else nxt.get())
+
+
+def plan_leaves(df) -> list[str]:
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
 
 
 def payload_fixture(days: int = 2, per_day: int = 24) -> dict:
@@ -80,9 +90,41 @@ class TestWeatherTransform:
         assert got[1]["time"] is None  # strict=False parity
         assert got[0]["time"] is not None
 
-    def test_batch_partition_date_is_min_date(self, spark):
-        df = weather_payload_to_df(spark, payload_fixture(days=3))
-        assert batch_partition_date(df) == dt.date(2025, 8, 20)
+    def test_integer_and_null_readings_are_doubles(self, spark):
+        # JSON integers (21) must not crash the build; the reference's
+        # Polars cast accepts them too
+        p = payload_fixture(days=1, per_day=3)
+        p["hourly"]["temperature_2m"] = [21, 15.5, None]
+        p["hourly"]["relative_humidity_2m"] = [40.5, 80, 55.0]
+        df = weather_payload_to_df(spark, p)
+        assert df.schema["temperature_2m"].dataType.simpleString() == "double"
+        rows = df.collect()
+        assert [r["temperature_2m"] for r in rows] == [21.0, 15.5, None]
+        assert [r["relative_humidity_2m"] for r in rows] == [40.5, 80.0, 55.0]
+        assert isinstance(rows[0]["temperature_2m"], float)
+        assert isinstance(rows[1]["relative_humidity_2m"], float)
+
+    @pytest.mark.parametrize("arrow", ["true", "false"])
+    def test_payload_frames_plan_as_local_relation(self, spark, arrow):
+        """Driver-side payloads plan as a JVM LocalRelation, never as a
+        Python RDD that starts Python workers on every action — also
+        with Arrow conversion switched off."""
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        before = spark.conf.get(key)
+        spark.conf.set(key, arrow)
+        try:
+            weather = weather_payload_to_df(spark, payload_fixture(days=1))
+            assert plan_leaves(weather) == ["LocalRelation"]
+            assert weather.count() == 24
+            fx = fx_payload_to_df(
+                spark, {"date": "2025-08-20", "rates": {"EUR": 0.9, "BRL": None}}
+            )
+            assert plan_leaves(fx) == ["LocalRelation"]
+            assert {r["quote_ccy"]: r["rate"] for r in fx.collect()} == {
+                "BRL": None, "EUR": 0.9,
+            }
+        finally:
+            spark.conf.set(key, before)
 
 
 class TestPipelineEndToEnd:
@@ -113,6 +155,33 @@ class TestPipelineEndToEnd:
         first = spark.table("weather_hourly").count()
         pipeline.run()  # same batch again — K4 contract: no duplicates
         assert spark.table("weather_hourly").count() == first
+
+    def test_manifest_date_is_min_parsed_date(self, pipeline):
+        p = payload_fixture(days=3)
+        p["hourly"]["time"][0] = "not-a-timestamp"  # the NULL day
+        m = pipeline.transform_and_store(json.dumps(p))
+        assert m.date == "2025-08-20"  # NULL day ignored
+        assert m.rows == 72  # NULL-day row still landed
+
+    def test_delta_batch_job_budget(self, spark, tmp_path):
+        """A batch on an existing Delta bronze — stage 2's one per-day
+        count, the staged write, the warehouse load, the models with one
+        quality pass, and the mart collect — stays within 10 Spark jobs."""
+        cfg = PipelineConfig(lake_format="delta", lake_root=str(tmp_path / "lake_d"))
+        p = WeatherPipeline(spark, config=cfg)
+
+        def batch(payload: dict) -> None:
+            built = p.run(json.dumps(payload))
+            built["marts_weather_daily"].collect()
+
+        batch(payload_fixture(days=2))
+        start = next_job_id(spark)
+        batch(payload_fixture(days=3))
+        assert next_job_id(spark) - start <= 10
+        mart = spark.table("marts_weather_daily").orderBy("date_utc").collect()
+        assert [str(r["date_utc"]) for r in mart] == [
+            "2025-08-20", "2025-08-21", "2025-08-22",
+        ]
 
     def test_empty_batch_short_circuits(self, spark, tmp_path):
         cfg = PipelineConfig(lake_root=str(tmp_path / "lake2"))
@@ -161,3 +230,62 @@ def test_freshness_expectation(spark):
     empty = spark.createDataFrame([], "ts timestamp")
     (r,) = run_expectations(empty, [freshness("ts", 6, now=dt.datetime(2025, 8, 1))])
     assert not r.passed  # no data counts as stale
+
+
+def test_row_checks_run_as_one_action(spark):
+    """Row-predicate expectations share one aggregation: a mixed list
+    costs its non-row checks plus ONE row-check action, results keep the
+    input order, and every count equals its own filtered count."""
+    from pyspark.sql import functions as F
+
+    from portfolio_data_pipelines_spark.plans.quality import (
+        freshness,
+        not_null,
+        row_range,
+        run_expectations,
+        unique,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (1, dt.datetime(2025, 8, 1, 10), 20.0, 50.0),
+            (2, None, 99.0, 120.0),
+            (2, dt.datetime(2025, 8, 1, 12), None, -5.0),
+            (3, None, -90.0, 40.0),
+        ],
+        "id bigint, ts timestamp, temp double, rh double",
+    )
+    now = dt.datetime(2025, 8, 1, 15)
+    checks = [
+        not_null("ts"),
+        freshness("ts", 6, now=now),
+        row_range("temp", -80.0, 60.0),
+        unique("id"),
+        row_range("rh", 0.0, 100.0),
+    ]
+
+    def jobs(expectations) -> int:
+        start = next_job_id(spark)
+        run_expectations(df, expectations)
+        return next_job_id(spark) - start
+
+    jobs(checks)  # warm-up
+    others = jobs([freshness("ts", 6, now=now), unique("id")])
+    one_row_check = jobs([not_null("ts")])
+    assert jobs(checks) == others + one_row_check
+
+    got = run_expectations(df, checks)
+    assert [r.name for r in got] == [
+        "not_null(ts)", "freshness(ts,6h)", "range(temp,-80.0,60.0)",
+        "unique(id)", "range(rh,0.0,100.0)",
+    ]
+    want = {
+        0: df.filter(F.col("ts").isNull()).count(),
+        2: df.filter(F.col("temp").isNotNull() & ~F.col("temp").between(-80.0, 60.0)).count(),
+        4: df.filter(F.col("rh").isNotNull() & ~F.col("rh").between(0.0, 100.0)).count(),
+    }
+    assert want == {0: 2, 2: 2, 4: 2}
+    for i, n in want.items():
+        assert got[i].violations == n and not got[i].passed
+    assert got[1].passed and got[1].violations == 0
+    assert not got[3].passed and got[3].violations == 1
