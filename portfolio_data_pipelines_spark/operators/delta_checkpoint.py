@@ -1,9 +1,23 @@
-"""Delta checkpoint machinery (split from delta_log, r15).
+"""Delta checkpoints, built, written and read with pyarrow, outside Spark.
 
-Writing parquet checkpoints of the log state — classic single-file,
-multi-part (V.checkpoint.{i}.{n}.parquet + ``parts``), and v2
-(UUID-named manifest + sidecars) — plus the ``_last_checkpoint``
-pointer and checkpoint-file discovery used by log replay.
+A checkpoint is the table state at one version as flattened action rows
+(protocol, metaData, txn, domainMetadata, in-retention remove
+tombstones and live adds) in parquet, plus the ``_last_checkpoint``
+pointer that tells readers where to start. Three layouts:
+
+- classic: one ``V.checkpoint.parquet`` file;
+- multi-part: ``V.checkpoint.{i}.{n}.parquet`` files with ``parts`` in
+  the pointer, once the rows exceed :data:`CHECKPOINT_PART_ACTIONS`;
+- V2 (tables declaring ``v2Checkpoint``): a UUID-named main file with
+  the non-file actions, ``checkpointMetadata`` and ``sidecar`` refs,
+  the add/remove rows in ``_delta_log/_sidecars/`` parquet files.
+
+No Spark job touches ``_delta_log``: each file is encoded in memory
+and stored through the ``hadoop_io`` small-file helpers under a
+temporary name beside its destination, then renamed into place, so a
+crash never leaves a partial file under a checkpoint name. Reading is
+the mirror image (:func:`_read_checkpoint`), for every layout,
+including NDJSON V2 mains and checkpoints written by other engines.
 
 Reference: delta-io PROTOCOL.md (Checkpoints, V2 Checkpoints).
 """
@@ -11,15 +25,20 @@ Reference: delta-io PROTOCOL.md (Checkpoints, V2 Checkpoints).
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 from . import delta_log as dl
 from .delta_protocol import _PROTOCOL_ACTION
-from .hadoop_io import _hadoop_fs, _local_path, _write_small_file
+from .hadoop_io import (
+    _hadoop_fs, _local_path, _read_bytes, _rename, _write_small_file,
+)
 
 #: Parquet checkpoint cadence, mirroring delta-spark's default.
 DELTA_CHECKPOINT_EVERY = 10
@@ -36,6 +55,78 @@ CHECKPOINT_PART_ACTIONS = 100_000
 #: longer than this cannot rely on recorded deletion times.
 TOMBSTONE_RETENTION_MS = 30 * 24 * 3600 * 1000
 
+_STR_MAP = pa.map_(pa.string(), pa.string())
+_STR_LIST = pa.list_(pa.string())
+_DV = pa.struct([
+    ("storageType", pa.string()),
+    ("pathOrInlineDv", pa.string()),
+    ("offset", pa.int64()),
+    ("sizeInBytes", pa.int64()),
+    ("cardinality", pa.int64()),
+])
+
+#: The checkpoint's flattened action columns. It must carry EVERY field
+#: replay depends on: a checkpoint that dropped deletionVector
+#: descriptors would resurrect deleted rows for any reader anchored on
+#: it, one that dropped the protocol's feature lists would emit a
+#: malformed reader-v3 protocol, and one that dropped the rowTracking
+#: fields would re-id every row.
+CHECKPOINT_SCHEMA = pa.schema([
+    ("protocol", pa.struct([
+        ("minReaderVersion", pa.int64()),
+        ("minWriterVersion", pa.int64()),
+        ("readerFeatures", _STR_LIST),
+        ("writerFeatures", _STR_LIST),
+    ])),
+    ("metaData", pa.struct([
+        ("id", pa.string()),
+        ("format", pa.struct([
+            ("provider", pa.string()), ("options", _STR_MAP),
+        ])),
+        ("schemaString", pa.string()),
+        ("partitionColumns", _STR_LIST),
+        ("configuration", _STR_MAP),
+        ("createdTime", pa.int64()),
+    ])),
+    ("add", pa.struct([
+        ("path", pa.string()),
+        ("partitionValues", _STR_MAP),
+        ("size", pa.int64()),
+        ("modificationTime", pa.int64()),
+        ("dataChange", pa.bool_()),
+        ("stats", pa.string()),
+        ("deletionVector", _DV),
+        ("baseRowId", pa.int64()),
+        ("defaultRowCommitVersion", pa.int64()),
+    ])),
+    ("txn", pa.struct([
+        ("appId", pa.string()),
+        ("version", pa.int64()),
+        ("lastUpdated", pa.int64()),
+    ])),
+    ("remove", pa.struct([
+        ("path", pa.string()),
+        ("deletionTimestamp", pa.int64()),
+        ("dataChange", pa.bool_()),
+        ("deletionVector", _DV),
+    ])),
+    ("domainMetadata", pa.struct([
+        ("domain", pa.string()),
+        ("configuration", pa.string()),
+        ("removed", pa.bool_()),
+    ])),
+])
+
+#: A V2 main file: the same columns plus the version pin and the
+#: sidecar refs.
+_V2_MAIN_SCHEMA = CHECKPOINT_SCHEMA.append(
+    pa.field("checkpointMetadata", pa.struct([("version", pa.int64())]))
+).append(
+    pa.field("sidecar", pa.struct([
+        ("path", pa.string()), ("sizeInBytes", pa.int64()),
+    ]))
+)
+
 
 def _read_last_checkpoint_doc(fs, jvm, path: str) -> dict | None:
     ps = f"{path}/_delta_log/_last_checkpoint"
@@ -48,16 +139,14 @@ def _read_last_checkpoint_doc(fs, jvm, path: str) -> dict | None:
 
 
 def _checkpoint_files(fs, jvm, path: str, lc: dict) -> list[str]:
-    """Checkpoint parquet file(s) for a ``_last_checkpoint`` doc. This
-    writer emits the classic single-file form, but the spec also allows
-    MULTI-PART checkpoints (``_last_checkpoint`` carries ``parts``: N
-    files named ``V.checkpoint.{i:010d}.{N:010d}.parquet``) and the
-    UUID-named V2 form (``V.checkpoint.<uuid>.parquet``, what
-    delta-spark writes by default on modern tables) — a conformant
-    reader must accept all three. The V2 name is unpredictable, so its
-    probe is the one place checkpoint discovery pays a directory
-    listing, and only after the classic-name probe missed (never on
-    this writer's own tables)."""
+    """Checkpoint file(s) for a ``_last_checkpoint`` doc: the classic
+    single file, the MULTI-PART parts (``parts`` in the doc, N files
+    named ``V.checkpoint.{i:010d}.{N:010d}.parquet``) or the UUID-named
+    V2 main (``V.checkpoint.<uuid>.{parquet,json}``, what delta-spark
+    writes by default on modern tables) — a conformant reader must
+    accept all three. The V2 name is unpredictable, so its probe is the
+    one place checkpoint discovery pays a directory listing, and only
+    after the classic-name probe missed."""
     v = int(lc["version"])
     parts = lc.get("parts")
     if parts:
@@ -77,8 +166,7 @@ def _checkpoint_files(fs, jvm, path: str, lc: dict) -> list[str]:
     prefix = f"{v:020d}.checkpoint."
     log_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/_delta_log")
     # the spec allows V2 manifests in BOTH formats: parquet AND NDJSON
-    # (V.checkpoint.<uuid>.json) — probe both; .json is parsed by the
-    # caller as line-delimited actions
+    # (V.checkpoint.<uuid>.json)
     found = sorted(
         st.getPath().getName()
         for st in fs.listStatus(log_dir)
@@ -107,315 +195,159 @@ def _checkpoint_files(fs, jvm, path: str, lc: dict) -> list[str]:
     return [classic]  # let the read raise the natural missing-file error
 
 
+def _read_actions(fs, jvm, file: str) -> list[dict]:
+    """One checkpoint file's rows as action dicts: parquet through
+    pyarrow, or an NDJSON V2 main (same action shapes as a commit).
+    pyarrow yields map columns as (key, value) pairs; replay normalizes
+    them with ``delta_log._as_str_map``."""
+    if file.endswith(".json"):
+        return [
+            json.loads(line)
+            for line in dl._read_text(fs, jvm, file).splitlines()
+            if line.strip()
+        ]
+    data = _read_bytes(fs, jvm, file)
+    return pq.read_table(pa.BufferReader(data)).to_pylist()
+
+
+def _read_checkpoint(fs, jvm, path: str, lc: dict) -> list[dict]:
+    """Every action row of the checkpoint a ``_last_checkpoint`` doc
+    names: all parts, plus the rows of the sidecars a V2 main refers to
+    (file actions live there; non-file actions stay in the main). A
+    ``checkpointMetadata`` action must pin the doc's version."""
+    cps = _checkpoint_files(fs, jvm, path, lc)
+    rows = [d for cp in cps for d in _read_actions(fs, jvm, cp)]
+    for d in rows:
+        cm = d.get("checkpointMetadata")
+        if cm and cm.get("version") is not None and int(
+            cm["version"]
+        ) != int(lc["version"]):
+            raise ValueError(
+                f"checkpoint at {cps[0]} declares version "
+                f"{cm['version']} but _last_checkpoint says "
+                f"{lc['version']} — corrupt log"
+            )
+    sidecars = [
+        sc["path"] for sc in (d.get("sidecar") for d in rows)
+        if sc and sc.get("path")
+    ]
+    for rel in sidecars:
+        sc_path = (
+            rel if "://" in rel or rel.startswith("/")
+            else f"{path}/_delta_log/_sidecars/{rel}"
+        )
+        rows.extend(_read_actions(fs, jvm, sc_path))
+    return rows
+
+
+def _write_parquet(fs, jvm, path_str: str, rows: list[dict], schema) -> int:
+    """Store ``rows`` as one parquet file at ``path_str``: encoded in
+    memory, written under a temporary name in the same directory, then
+    renamed into place. Returns the file's size in bytes."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), buf)
+    data = buf.getvalue().to_pybytes()
+    parent, _, name = path_str.rpartition("/")
+    tmp = f"{parent}/.{name}.{uuid.uuid4().hex}.tmp"
+    _write_small_file(fs, jvm, tmp, data, overwrite=False)
+    _rename(fs, jvm, tmp, path_str)
+    return len(data)
+
+
+def _chunks(rows: list[dict]) -> list[list[dict]]:
+    """``rows`` split into the fewest near-equal chunks of at most
+    :data:`CHECKPOINT_PART_ACTIONS` rows each."""
+    n = max(1, math.ceil(len(rows) / CHECKPOINT_PART_ACTIONS))
+    per = math.ceil(len(rows) / n)
+    return [rows[i * per : (i + 1) * per] for i in range(n)]
+
+
 def checkpoint_delta(spark: SparkSession, path: str, version: int) -> None:
-    """Write a parquet checkpoint of the table state at ``version`` and
-    point ``_last_checkpoint`` at it — the Delta reader fast path.
+    """Write a checkpoint of the table state at ``version`` and point
+    ``_last_checkpoint`` at it — the Delta reader fast path.
 
-    The checkpoint carries one row per action (protocol, metaData, and
-    each live add) in the spec's flattened column layout; sizes stay
-    O(live files), and subsequent reads cost one small JSON + one
-    parquet + the commit tail."""
-    from pyspark.sql.types import (
-        ArrayType, BooleanType, LongType, MapType, StringType, StructField,
-        StructType,
-    )
-
+    One row per action (protocol, metaData, each txn, live domain,
+    in-retention tombstone and live add) in :data:`CHECKPOINT_SCHEMA`;
+    sizes stay O(live files), and later reads cost one small JSON, the
+    checkpoint file(s) and the commit tail. The layout is V2 on
+    ``v2Checkpoint`` tables, else classic, or multi-part above
+    :data:`CHECKPOINT_PART_ACTIONS` rows. Built and written with
+    pyarrow: no Spark job runs."""
     st = dl._replay_log(spark, path, version)
-    target, adds, meta, txns = st.version, st.adds, st.meta, st.txns
+    target, meta = st.version, st.meta
+    if meta is None:
+        raise ValueError("cannot checkpoint a log without metaData")
     # tombstones ride the checkpoint (within retention) so vacuum can
     # still date deletions after old commits are cleaned up
     cutoff = dl._now_ms() - TOMBSTONE_RETENTION_MS
-    removes = {
-        r: rm for r, rm in st.removes.items()
-        if rm["deletionTimestamp"] >= cutoff
-    }
-    if meta is None:
-        raise ValueError("cannot checkpoint a log without metaData")
-    # the checkpoint schema must carry EVERY field replay depends on —
-    # a checkpoint that silently dropped deletionVector descriptors
-    # would permanently resurrect deleted rows for any reader anchored
-    # on it, and one that dropped protocol feature lists would emit a
-    # malformed reader-v3 protocol
-    dv_t = StructType(
-        [
-            StructField("storageType", StringType()),
-            StructField("pathOrInlineDv", StringType()),
-            StructField("offset", LongType()),
-            StructField("sizeInBytes", LongType()),
-            StructField("cardinality", LongType()),
-        ]
-    )
-    add_t = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("partitionValues", MapType(StringType(), StringType())),
-            StructField("size", LongType()),
-            StructField("modificationTime", LongType()),
-            StructField("dataChange", BooleanType()),
-            StructField("stats", StringType()),
-            StructField("deletionVector", dv_t),
-            # rowTracking: a checkpoint that dropped these would
-            # permanently re-id every row for checkpoint-anchored
-            # readers (the r8 DV lesson, applied up front)
-            StructField("baseRowId", LongType()),
-            StructField("defaultRowCommitVersion", LongType()),
-        ]
-    )
-    meta_t = StructType(
-        [
-            StructField("id", StringType()),
-            StructField(
-                "format",
-                StructType(
-                    [
-                        StructField("provider", StringType()),
-                        StructField(
-                            "options", MapType(StringType(), StringType())
-                        ),
-                    ]
-                ),
-            ),
-            StructField("schemaString", StringType()),
-            StructField("partitionColumns", ArrayType(StringType())),
-            StructField("configuration", MapType(StringType(), StringType())),
-            StructField("createdTime", LongType()),
-        ]
-    )
-    proto_t = StructType(
-        [
-            StructField("minReaderVersion", LongType()),
-            StructField("minWriterVersion", LongType()),
-            StructField("readerFeatures", ArrayType(StringType())),
-            StructField("writerFeatures", ArrayType(StringType())),
-        ]
-    )
-    txn_t = StructType(
-        [
-            StructField("appId", StringType()),
-            StructField("version", LongType()),
-            StructField("lastUpdated", LongType()),
-        ]
-    )
-    remove_t = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("deletionTimestamp", LongType()),
-            StructField("dataChange", BooleanType()),
-            StructField("deletionVector", dv_t),
-        ]
-    )
-    dm_t = StructType(
-        [
-            StructField("domain", StringType()),
-            StructField("configuration", StringType()),
-            StructField("removed", BooleanType()),
-        ]
-    )
-    schema = StructType(
-        [
-            StructField("protocol", proto_t),
-            StructField("metaData", meta_t),
-            StructField("add", add_t),
-            StructField("txn", txn_t),
-            StructField("remove", remove_t),
-            StructField("domainMetadata", dm_t),
-        ]
-    )
-    base = {"protocol": None, "metaData": None, "add": None, "txn": None,
-            "remove": None, "domainMetadata": None}
-    proto = dict(st.protocol or _PROTOCOL_ACTION["protocol"])
-
-    def _dv_struct(d: dict | None) -> dict | None:
-        if not d:
-            return None
-        return {
-            "storageType": d["storageType"],
-            "pathOrInlineDv": d["pathOrInlineDv"],
-            "offset": int(d["offset"]) if d.get("offset") is not None else None,
-            "sizeInBytes": int(d["sizeInBytes"]),
-            "cardinality": int(d["cardinality"]),
-        }
-
-    rows = [
-        # carry the TABLE'S protocol, not a constant — a checkpoint
-        # after a column-mapping upgrade must keep reader v2 (and a
-        # feature-granular one its feature lists), or a checkpoint-
-        # anchored replay would silently downgrade it
-        {**base, "protocol": {
-            "minReaderVersion": int(proto["minReaderVersion"]),
-            "minWriterVersion": int(proto["minWriterVersion"]),
-            "readerFeatures": proto.get("readerFeatures"),
-            "writerFeatures": proto.get("writerFeatures"),
-        }},
-        {**base, "metaData": meta},
-    ]
-    for rel in sorted(removes):
-        rm = removes[rel]
-        rows.append(
-            {**base,
-             "remove": {"path": dl._encode_path(rel),
-                        "deletionTimestamp": int(rm["deletionTimestamp"]),
-                        "dataChange": bool(rm["dataChange"]),
-                        "deletionVector": _dv_struct(rm.get("deletionVector"))}}
-        )
-    for app_id in sorted(txns):
-        # the spec keeps the latest txn per appId in checkpoints, so the
-        # exactly-once ledger survives log cleanup
-        rows.append(
-            {**base,
-             "txn": {"appId": app_id, "version": int(txns[app_id]),
-                     "lastUpdated": 0}}
-        )
-    for domain in sorted(st.domain_metadata or {}):
-        # the spec keeps the latest domainMetadata per live domain
-        rows.append(
-            {**base,
-             "domainMetadata": {
-                 "domain": domain,
-                 "configuration": st.domain_metadata[domain],
-                 "removed": False,
-             }}
-        )
-    for rel in sorted(adds):
-        a = adds[rel]
-        rows.append(
-            {**base,
-             "add": {
-                 "path": dl._encode_path(a["path"]),
-                 "partitionValues": a.get("partitionValues", {}),
-                 "size": int(a.get("size", 0)),
-                 "modificationTime": int(a.get("modificationTime", 0)),
-                 "dataChange": bool(a.get("dataChange", True)),
-                 "stats": a.get("stats"),
-                 "deletionVector": _dv_struct(a.get("deletionVector")),
-                 "baseRowId": (
-                     int(a["baseRowId"])
-                     if a.get("baseRowId") is not None else None
-                 ),
-                 "defaultRowCommitVersion": (
-                     int(a["defaultRowCommitVersion"])
-                     if a.get("defaultRowCommitVersion") is not None
-                     else None
-                 ),
-             }}
-        )
-    # Below the part threshold the spec's classic single FILE
-    # NNN.checkpoint.parquet is written; above it, the MULTI-PART form
-    # NNN.checkpoint.%010d.%010d.parquet with ``parts`` recorded in
-    # _last_checkpoint — a long-lived table's checkpoint must not be
-    # one file that grows without bound (at 100 TB the live-file list
-    # alone is millions of actions; parts keep each write and each
-    # reader-side scan unit bounded). Both this repo's readers and the
-    # feed consume either form.
-    import math
-
+    # carry the TABLE'S protocol, not a constant — a checkpoint after a
+    # column-mapping upgrade must keep reader v2 (and a feature-granular
+    # one its feature lists), or a checkpoint-anchored replay would
+    # silently downgrade it
+    proto = st.protocol or _PROTOCOL_ACTION["protocol"]
+    rows = [{"protocol": proto}, {"metaData": meta}]
+    for rel in sorted(st.removes):
+        rm = st.removes[rel]
+        if rm["deletionTimestamp"] >= cutoff:
+            rows.append({"remove": {**rm, "path": dl._encode_path(rel)}})
+    # the spec keeps the latest txn per appId (so the exactly-once
+    # ledger survives log cleanup) and the latest domainMetadata per
+    # live domain
+    for app_id in sorted(st.txns):
+        rows.append({"txn": {
+            "appId": app_id, "version": st.txns[app_id], "lastUpdated": 0,
+        }})
+    domains = st.domain_metadata or {}
+    for domain in sorted(domains):
+        rows.append({"domainMetadata": {
+            "domain": domain, "configuration": domains[domain],
+            "removed": False,
+        }})
+    for rel in sorted(st.adds):
+        a = st.adds[rel]
+        rows.append({"add": {
+            **a,
+            "path": dl._encode_path(a["path"]),
+            "partitionValues": a.get("partitionValues", {}),
+            "size": a.get("size", 0),
+            "modificationTime": a.get("modificationTime", 0),
+            "dataChange": a.get("dataChange", True),
+        }})
     fs, _, jvm = _hadoop_fs(spark, path)
-
-    def _promote(tmp_dir: str, dst_name: str) -> None:
-        """Write-to-temp + rename: the lone part file of ``tmp_dir``
-        becomes ``_delta_log/<dst_name>``."""
-        part = next(
-            st.getPath()
-            for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(tmp_dir))
-            if st.getPath().getName().endswith(".parquet")
-        )
-        dst = jvm.org.apache.hadoop.fs.Path(f"{path}/_delta_log/{dst_name}")
-        fs.delete(dst, False)
-        if not fs.rename(part, dst):
-            raise IOError(f"rename failed for checkpoint {dst_name}")
-        fs.delete(jvm.org.apache.hadoop.fs.Path(tmp_dir), True)
-
-    if "v2Checkpoint" in (
-        (st.protocol or {}).get("writerFeatures") or []
-    ):
+    log = f"{path}/_delta_log"
+    lc = {"version": target, "size": len(rows)}
+    if "v2Checkpoint" in (proto.get("writerFeatures") or []):
         # v2Checkpoint table contract: the checkpoint MUST be the V2
-        # layout — a UUID-named main file holding the non-file actions
-        # plus checkpointMetadata and sidecar refs, with add/remove
-        # actions in _sidecars/ parquet files (chunked by the same
-        # action bound as multi-part classic checkpoints)
-        from pyspark.sql.types import LongType, StringType as _S
-        from pyspark.sql.types import StructField as _F, StructType as _T
-
-        file_rows = [r for r in rows if r.get("add") or r.get("remove")]
-        other_rows = [
-            r for r in rows if not (r.get("add") or r.get("remove"))
-        ]
-        cm_t = _T([_F("version", LongType())])
-        sc_t = _T([_F("path", _S()), _F("sizeInBytes", LongType())])
-        main_schema = _T(
-            list(schema.fields)
-            + [_F("checkpointMetadata", cm_t), _F("sidecar", sc_t)]
-        )
-        base2 = {**base, "checkpointMetadata": None, "sidecar": None}
-        main_rows = [
-            {**base2, **r} for r in other_rows
-        ] + [{**base2, "checkpointMetadata": {"version": target}}]
-        n_sc = max(1, math.ceil(len(file_rows) / CHECKPOINT_PART_ACTIONS))
-        per = math.ceil(len(file_rows) / n_sc) if file_rows else 0
-        for i in range(n_sc if file_rows else 0):
-            chunk = file_rows[i * per : (i + 1) * per]
-            sc_name = f"{uuid.uuid4().hex}.parquet"
-            tmp = f"{path}/_delta_log/_cp_tmp_sc_{target:020d}_{i}"
-            spark.createDataFrame(chunk, schema=schema).coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            part = next(
-                s.getPath()
-                for s in fs.listStatus(jvm.org.apache.hadoop.fs.Path(tmp))
-                if s.getPath().getName().endswith(".parquet")
+        # layout, file actions in sidecars chunked by the same bound as
+        # multi-part classic checkpoints
+        file_rows = [r for r in rows if "add" in r or "remove" in r]
+        main = [r for r in rows if not ("add" in r or "remove" in r)]
+        main.append({"checkpointMetadata": {"version": target}})
+        for chunk in _chunks(file_rows) if file_rows else []:
+            name = f"{uuid.uuid4().hex}.parquet"
+            size = _write_parquet(
+                fs, jvm, f"{log}/_sidecars/{name}", chunk, CHECKPOINT_SCHEMA
             )
-            dst = jvm.org.apache.hadoop.fs.Path(
-                f"{path}/_delta_log/_sidecars/{sc_name}"
-            )
-            fs.mkdirs(dst.getParent())
-            if not fs.rename(part, dst):
-                raise IOError(f"rename failed for sidecar {sc_name}")
-            fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
-            main_rows.append(
-                {
-                    **base2,
-                    "sidecar": {
-                        "path": sc_name,
-                        "sizeInBytes": int(fs.getFileStatus(dst).getLen()),
-                    },
-                }
-            )
-        tmp = f"{path}/_delta_log/_cp_tmp_{target:020d}"
-        spark.createDataFrame(main_rows, schema=main_schema).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        _promote(tmp, f"{target:020d}.checkpoint.{uuid.uuid4().hex}.parquet")
-        _write_small_file(
-            fs, jvm, f"{path}/_delta_log/_last_checkpoint",
-            json.dumps({"version": target, "size": len(rows)}),
-            overwrite=True,
-        )
-        return
-
-    n_parts = max(1, math.ceil(len(rows) / CHECKPOINT_PART_ACTIONS))
-    if n_parts == 1:
-        tmp = f"{path}/_delta_log/_cp_tmp_{target:020d}"
-        spark.createDataFrame(rows, schema=schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        _promote(tmp, f"{target:020d}.checkpoint.parquet")
-        lc = {"version": target, "size": len(rows)}
+            main.append({"sidecar": {"path": name, "sizeInBytes": size}})
+        name = f"{target:020d}.checkpoint.{uuid.uuid4().hex}.parquet"
+        _write_parquet(fs, jvm, f"{log}/{name}", main, _V2_MAIN_SCHEMA)
     else:
-        per = math.ceil(len(rows) / n_parts)
-        for i in range(n_parts):
-            chunk = rows[i * per : (i + 1) * per]
-            tmp = f"{path}/_delta_log/_cp_tmp_{target:020d}_{i + 1:010d}"
-            spark.createDataFrame(chunk, schema=schema).coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            _promote(
-                tmp,
-                f"{target:020d}.checkpoint."
-                f"{i + 1:010d}.{n_parts:010d}.parquet",
+        # above the part bound the MULTI-PART form: a long-lived table's
+        # checkpoint must not be one file that grows without bound
+        parts = _chunks(rows)
+        if len(parts) == 1:
+            _write_parquet(
+                fs, jvm, f"{log}/{target:020d}.checkpoint.parquet", rows,
+                CHECKPOINT_SCHEMA,
             )
-        lc = {"version": target, "size": len(rows), "parts": n_parts}
+        else:
+            n = len(parts)
+            for i, chunk in enumerate(parts, 1):
+                name = f"{target:020d}.checkpoint.{i:010d}.{n:010d}.parquet"
+                _write_parquet(
+                    fs, jvm, f"{log}/{name}", chunk, CHECKPOINT_SCHEMA
+                )
+            lc["parts"] = n
     _write_small_file(
-        fs, jvm, f"{path}/_delta_log/_last_checkpoint",
-        json.dumps(lc),
-        overwrite=True,
+        fs, jvm, f"{log}/_last_checkpoint", json.dumps(lc), overwrite=True
     )

@@ -25,7 +25,7 @@ from .delta_protocol import (
     _iceberg_compat_version,
     _upgraded_protocol_for_dv,
 )
-from .hadoop_io import _hadoop_fs
+from .hadoop_io import _hadoop_fs, _read_bytes, _write_small_file
 
 #: Deleted-position sets at or below this total broadcast to the DV
 #: anti-join (a few million longs ≈ tens of MB); above, the join
@@ -142,7 +142,7 @@ def _dv_positions_df(spark, path: str, dv_adds: dict, keymap: dict):
         target = (
             loc if "://" in loc or loc.startswith("/") else f"{path}/{loc}"
         )
-        return dl._read_bytes(fs, jvm, target)
+        return _read_bytes(fs, jvm, target)
 
     rows, total = [], 0
     for rel in sorted(dv_adds):
@@ -247,7 +247,7 @@ def delete_where_dv(
         target = (
             loc if "://" in loc or loc.startswith("/") else f"{path}/{loc}"
         )
-        return dl._read_bytes(fs, jvm, target)
+        return _read_bytes(fs, jvm, target)
 
     # one O(files) pre-count decides WHERE the bitmaps serialize: the
     # driver never learns the position list's size the hard way
@@ -370,7 +370,9 @@ def delete_where_dv(
             [b for _rel, b, _c in dv_files]
         )
         poi, bin_rel = dv_codec.new_dv_file_name()
-        dl._write_small_bytes(fs, jvm, f"{path}/{bin_rel}", blob)
+        _write_small_file(
+            fs, jvm, f"{path}/{bin_rel}", blob, overwrite=False
+        )
         for (rel, _b, card), (off, size) in zip(dv_files, metas):
             descriptors[rel] = {
                 "storageType": "u",

@@ -71,7 +71,9 @@ from .delta_protocol import (
     _upgraded_protocol_with,
     _variant_field_split,
 )
-from .hadoop_io import _hadoop_fs, _local_path, _write_small_file
+from .hadoop_io import (
+    _hadoop_fs, _local_path, _read_bytes, _write_small_file,
+)
 
 
 class LogState(NamedTuple):
@@ -101,12 +103,12 @@ class LogState(NamedTuple):
 
 def _as_str_map(m) -> dict:
     """A map-typed action field as a dict, wherever the action came
-    from: JSON commits and Spark-written checkpoints yield dicts, but
-    FOREIGN checkpoints written through pyarrow can materialize map
-    columns as lists of (key, value) pairs or {'key':..,'value':..}
-    structs — normalize all three so replay state is always
-    dict-shaped (partitionValues lookups and re-checkpointing both
-    depend on it)."""
+    from: JSON commits yield dicts, but checkpoints (all read through
+    pyarrow) materialize map columns as lists of (key, value) pairs,
+    and some foreign writers as {'key':..,'value':..} structs —
+    normalize all three so replay state is always dict-shaped
+    (partitionValues lookups and re-checkpointing both depend on
+    it)."""
     if not m:
         return {}
     if isinstance(m, dict):
@@ -280,36 +282,6 @@ def _read_text(fs, jvm, path_str: str) -> str:
     # verdict #7) — commit files are small, so the whole body rides one
     # call like the local branch's read()
     return _read_bytes(fs, jvm, path_str).decode("utf-8").rstrip("\n")
-
-
-def _read_bytes(fs, jvm, path_str: str) -> bytes:
-    """Raw bytes of a (small) file through the Hadoop FS — deletion
-    vector .bin files are kilobytes (compressed roaring bitmaps), never
-    data-sized."""
-    lp = _local_path(path_str)
-    if lp is not None:
-        with open(lp, "rb") as f:
-            return f.read()
-    stream = fs.open(jvm.org.apache.hadoop.fs.Path(path_str))
-    try:
-        out = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-    finally:
-        stream.close()
-    return bytes(out)
-
-
-def _write_small_bytes(fs, jvm, path_str: str, data: bytes) -> None:
-    """Exclusive-create a small binary file (DV .bin blobs) through the
-    Hadoop FS."""
-    lp = _local_path(path_str)
-    if lp is not None:
-        os.makedirs(os.path.dirname(lp), exist_ok=True)
-        with open(lp, "xb") as f:
-            f.write(data)
-        return
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(path_str), False)
-    out.write(bytearray(data))
-    out.close()
 
 
 def _stats_value(v):
@@ -2084,14 +2056,15 @@ def write_delta(
         )
     _warn_if_commit_unsafe(path)
     fs, _, jvm = _hadoop_fs(spark, path)
-    versions = _list_log_versions(fs, jvm, path)
+    tail = _log_tail(fs, jvm, path)
+    versions = tail[0]
     new_version = (versions[-1] + 1) if versions else 0
     prev_adds: dict[str, dict] = {}
     prev_meta: dict | None = None
     prev_txns: dict[str, int] = {}
     st: LogState | None = None
     if versions:
-        st = _replay_log(spark, path, None)
+        st = _replay_log(spark, path, None, tail)
         _check_writer_protocol(st.protocol, st.meta)
         prev_adds, prev_meta, prev_txns = st.adds, st.meta, st.txns
         if shred_variants:
@@ -2478,7 +2451,8 @@ def write_delta(
             _write_commit(spark, fs, jvm, path, new_version, actions)
             break
         except Exception as race:
-            latest = _list_log_versions(fs, jvm, path)
+            tail = _log_tail(fs, jvm, path)
+            latest = tail[0]
             # our own commit landing and then failing its checkpoint
             # is not a lost race: surface the error, never re-commit
             lost_race = (
@@ -2537,7 +2511,7 @@ def write_delta(
                     if (x.get("domainMetadata") or {}).get("domain")
                     != _ROW_TRACKING_DOMAIN
                 ]
-                st_retry = _replay_log(spark, path, None)
+                st_retry = _replay_log(spark, path, None, tail)
                 _rt_finalize_commit(
                     st_retry, adds, actions, new_version, proto=rt_proto
                 )
@@ -2550,7 +2524,10 @@ def write_delta(
 
 
 def _replay_log(
-    spark: SparkSession, path: str, version: int | None
+    spark: SparkSession,
+    path: str,
+    version: int | None,
+    tail: tuple[list[int], dict | None] | None = None,
 ) -> LogState:
     """Replay the log up to ``version`` (latest if None) into a
     :class:`LogState` — live adds, metaData, the per-app txn ledger
@@ -2558,10 +2535,12 @@ def _replay_log(
     (vacuum's retention basis).
 
     Latest reads start from ``_last_checkpoint`` when present (one small
-    JSON + one parquet + the commit tail), never the full history;
-    pinned-version reads at or after the checkpoint do the same."""
+    JSON + the checkpoint file(s) + the commit tail), never the full
+    history; pinned-version reads at or after the checkpoint do the
+    same. ``tail`` is a :func:`_log_tail` result the caller already
+    holds, so the log is not listed again."""
     fs, _, jvm = _hadoop_fs(spark, path)
-    versions, lc = _log_tail(fs, jvm, path)
+    versions, lc = tail if tail is not None else _log_tail(fs, jvm, path)
     if not versions:
         raise FileNotFoundError(f"no _delta_log under {path}")
     tip = versions[-1]
@@ -2587,51 +2566,7 @@ def _replay_log(
 
     start = 0
     if lc is not None and lc["version"] <= target:
-        cps = delta_checkpoint._checkpoint_files(fs, jvm, path, lc)
-        if len(cps) == 1 and cps[0].endswith(".json"):
-            # V2 manifests may be NDJSON (V.checkpoint.<uuid>.json):
-            # same action rows, line-delimited — file actions still
-            # live in the parquet sidecars it references
-            rows = [
-                json.loads(line)
-                for line in _read_text(fs, jvm, cps[0]).splitlines()
-                if line.strip()
-            ]
-        else:
-            rows = [
-                r.asDict(recursive=True)
-                for r in spark.read.parquet(*cps).collect()
-            ]
-        # V2 checkpoints: file actions may live in SIDECAR parquet
-        # files under _delta_log/_sidecars/ referenced by `sidecar`
-        # actions (the layout delta-spark's v2Checkpoint feature
-        # writes); non-file actions stay in the main file. A
-        # checkpointMetadata action pins the checkpoint's version.
-        sidecar_rels = [
-            d["sidecar"]["path"]
-            for d in rows
-            if d.get("sidecar") and d["sidecar"].get("path")
-        ]
-        for d in rows:
-            cm = d.get("checkpointMetadata")
-            if cm and cm.get("version") is not None and int(
-                cm["version"]
-            ) != int(lc["version"]):
-                raise ValueError(
-                    f"checkpoint at {cps[0]} declares version "
-                    f"{cm['version']} but _last_checkpoint says "
-                    f"{lc['version']} — corrupt log"
-                )
-        if sidecar_rels:
-            sc_paths = [
-                p if "://" in p or p.startswith("/")
-                else f"{path}/_delta_log/_sidecars/{p}"
-                for p in sidecar_rels
-            ]
-            rows.extend(
-                r.asDict(recursive=True)
-                for r in spark.read.parquet(*sc_paths).collect()
-            )
+        rows = delta_checkpoint._read_checkpoint(fs, jvm, path, lc)
         for d in rows:
             if d.get("protocol") and d["protocol"].get("minReaderVersion") is not None:
                 protocol = {
@@ -2656,12 +2591,13 @@ def _replay_log(
                 )
                 # log paths are URI-encoded; state is keyed physical
                 a["path"] = _decode_path(a["path"])
-                # the checkpoint's deletionVector struct materializes
-                # (as all-None) for every row; keep it only when real
+                # the checkpoint's deletionVector column materializes
+                # (as None or all-None) for every row; keep it only
+                # when real
                 dvd = a.get("deletionVector")
-                if dvd is not None and dvd.get("storageType") is None:
-                    a.pop("deletionVector")
-                elif dvd is not None:
+                if dvd is None or dvd.get("storageType") is None:
+                    a.pop("deletionVector", None)
+                else:
                     a["deletionVector"] = {
                         k: v for k, v in dvd.items() if v is not None
                     }

@@ -983,15 +983,13 @@ def cleanup_log(
             continue
         if not name[:20].isdigit() or int(name[:20]) not in doomed_set:
             continue
-        if name.endswith(".parquet") and name.count(".") == 3 and not (
-            name.split(".")[2].isdigit()
-        ):
-            # UUID-named V2 main: collect its sidecar refs
+        if name.count(".") == 3 and not name.split(".")[2].isdigit():
+            # UUID-named V2 main (parquet or NDJSON): collect its
+            # sidecar refs
             try:
-                for row in spark.read.parquet(
-                    f"{path}/_delta_log/{name}"
-                ).collect():
-                    d = row.asDict(recursive=True)
+                for d in delta_checkpoint._read_actions(
+                    fs, jvm, f"{path}/_delta_log/{name}"
+                ):
                     sc = d.get("sidecar")
                     if sc and sc.get("path"):
                         scp = jvm.org.apache.hadoop.fs.Path(

@@ -66,9 +66,6 @@ def merge_delta(
     restatement at partition granularity."""
     dl._warn_if_commit_unsafe(path)
     fs, _, jvm = _hadoop_fs(spark, path)
-    versions = dl._list_log_versions(fs, jvm, path)
-    if not versions:
-        raise FileNotFoundError(f"no _delta_log under {path}")
     st = dl._replay_log(spark, path, None)
     _check_writer_protocol(st.protocol, st.meta)
     adds, meta = st.adds, st.meta
@@ -263,12 +260,12 @@ def merge_delta(
     if touched_rels:
         # the rewrite deletes rows from the touched files
         _check_append_only(meta, True)
-    new_version = versions[-1] + 1
+    new_version = st.version + 1
     # empty source ⇔ the fused profile saw zero key groups — no extra job
     if not touched_rels and max_kc is None:
         for fr in cached_frames:
             fr.unpersist()
-        return versions[-1]
+        return st.version
     # REWRITE pass reads ONLY the touched files (the Delta MERGE cost
     # model: O(files holding matching keys), not a second full-table
     # scan filtered by provenance — at scale the difference is the
@@ -509,16 +506,13 @@ def apply_changes_delta(
     batch)."""
     dl._warn_if_commit_unsafe(path)
     fs, _, jvm = _hadoop_fs(spark, path)
-    versions = dl._list_log_versions(fs, jvm, path)
-    if not versions:
-        raise FileNotFoundError(f"no _delta_log under {path}")
     st = dl._replay_log(spark, path, None)
     _check_writer_protocol(st.protocol, st.meta)
     adds, meta = st.adds, st.meta
     if meta is None:
         raise ValueError(f"Delta log under {path} has no metaData action")
     if txn is not None and st.txns.get(txn[0], -1) >= txn[1]:
-        return versions[-1]
+        return st.version
     schema = dl._spark_schema_from_string(meta["schemaString"])
     cols = [f.name for f in schema.fields]
     # identity columns (r12): a change batch carries FULL rows, so the
@@ -646,11 +640,11 @@ def apply_changes_delta(
     touched_rels = sorted(touched_rels)
     if touched_rels:
         _check_append_only(meta, True)
-    new_version = versions[-1] + 1
+    new_version = st.version + 1
     if not touched_rels and upserts.isEmpty():
         if upserts_cached:
             upserts.unpersist()
-        return versions[-1]
+        return st.version
     rt = dl._row_tracking_supported(st.protocol)
     if touched_rels:
         touched_adds = {rel: adds[rel] for rel in touched_rels}

@@ -1,8 +1,9 @@
 """Driver-side Hadoop FS helpers shared by the Delta modules.
 
-Small-file metadata I/O (log reads, existence probes, exclusive
-creates) goes through the session's Hadoop FileSystem, with a direct
-Python fast path when the path is provably on the local filesystem.
+Small-file I/O (log and checkpoint reads, existence probes, exclusive
+creates, renames into place) goes through the session's Hadoop
+FileSystem, with a direct Python fast path when the path is provably on
+the local filesystem.
 """
 
 from __future__ import annotations
@@ -82,15 +83,53 @@ def _local_path(path_str: str) -> str | None:
     return None
 
 
-def _write_small_file(fs, jvm, path_str: str, text: str, overwrite: bool):
+def _read_bytes(fs, jvm, path_str: str) -> bytes:
+    """Raw bytes of a small file (commits, checkpoints, deletion-vector
+    blobs): one local read, else one buffered Hadoop transfer."""
+    lp = _local_path(path_str)
+    if lp is not None:
+        with open(lp, "rb") as f:
+            return f.read()
+    stream = fs.open(jvm.org.apache.hadoop.fs.Path(path_str))
+    try:
+        out = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+    finally:
+        stream.close()
+    return bytes(out)
+
+
+def _write_small_file(
+    fs, jvm, path_str: str, data: bytes | str, overwrite: bool
+) -> None:
+    """Create a small file holding ``data`` (str is UTF-8 encoded);
+    ``overwrite=False`` is the exclusive create the commit protocol
+    relies on."""
+    if isinstance(data, str):
+        data = data.encode("utf-8")
     lp = _local_path(path_str)
     if lp is not None:
         # Hadoop's create() makes parent dirs; 'x' is the atomic
         # create-if-absent the exclusive-commit callers rely on.
         os.makedirs(os.path.dirname(lp), exist_ok=True)
         with open(lp, "wb" if overwrite else "xb") as f:
-            f.write(text.encode("utf-8"))
+            f.write(data)
         return
     out = fs.create(jvm.org.apache.hadoop.fs.Path(path_str), overwrite)
-    out.write(bytearray(text.encode("utf-8")))
+    out.write(bytearray(data))
     out.close()
+
+
+def _rename(fs, jvm, src: str, dst: str) -> None:
+    """Move ``src`` to ``dst``, replacing an existing ``dst``. A Hadoop
+    rename never overwrites, so a refused one deletes ``dst`` and tries
+    once more."""
+    lsrc, ldst = _local_path(src), _local_path(dst)
+    if lsrc is not None and ldst is not None:
+        os.replace(lsrc, ldst)
+        return
+    s = jvm.org.apache.hadoop.fs.Path(src)
+    d = jvm.org.apache.hadoop.fs.Path(dst)
+    if not fs.rename(s, d):
+        fs.delete(d, False)
+        if not fs.rename(s, d):
+            raise IOError(f"rename {src} -> {dst} failed")

@@ -214,21 +214,22 @@ class TestLogConformance:
         path = str(tmp_path / "t3")
         d0 = _df(spark, [(1, 1.0, _day("2021-01-01"))])
         write_delta(spark, d0, path, partition_col="date")
-        real_list = dl._list_log_versions
+        real_tail = dl._log_tail
         stale = {"uses": 0}
 
         def stale_then_real(*a):
             # both writers plan against [0]; the retry path re-lists for real
             if stale["uses"] < 2:
                 stale["uses"] += 1
-                return [0]
-            return real_list(*a)
+                return [0], None
+            return real_tail(*a)
 
-        monkeypatch.setattr(dl, "_list_log_versions", stale_then_real)
+        monkeypatch.setattr(dl, "_log_tail", stale_then_real)
         write_delta(spark, d0, path, partition_col="date")  # claims v1
         d1 = _df(spark, [(2, 2.0, _day("2021-01-01"))])
         v = write_delta(spark, d1, path, partition_col="date")  # retries → v2
-        monkeypatch.setattr(dl, "_list_log_versions", real_list)
+        monkeypatch.setattr(dl, "_log_tail", real_tail)
+        assert stale["uses"] == 2
         assert v == 2
         assert _rows(spark, read_delta(spark, path)) == [
             (1, 1.0, _day("2021-01-01")),
@@ -249,14 +250,14 @@ class TestLogConformance:
         path = str(tmp_path / "t3b")
         d0 = _df(spark, [(1, 1.0, _day("2021-01-01"))])
         write_delta(spark, d0, path, partition_col="date")
-        real_list = dl._list_log_versions
-        monkeypatch.setattr(dl, "_list_log_versions", lambda *a: [0])
+        real_tail = dl._log_tail
+        monkeypatch.setattr(dl, "_log_tail", lambda *a: ([0], None))
         write_delta(spark, d0, path, partition_col="date")  # claims v1
         with pytest.raises(Exception):
             write_delta(
                 spark, d0, path, partition_col="date", mode="overwrite"
             )
-        monkeypatch.setattr(dl, "_list_log_versions", real_list)
+        monkeypatch.setattr(dl, "_log_tail", real_tail)
         assert read_delta(spark, path).count() == 2  # intact
 
     def test_append_retry_blocked_by_concurrent_metadata_change(

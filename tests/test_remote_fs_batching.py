@@ -10,7 +10,10 @@ count the calls crossing the fs handle, pinning that:
   per version;
 - ``_read_text`` moves a commit file in one buffered transfer, not one
   ``readLine`` round trip per line;
-- ``_replay_log`` adds no per-version existence probe on top.
+- ``_replay_log`` adds no per-version existence probe on top;
+- an append lists the log and probes ``_last_checkpoint`` once each;
+- a checkpoint is one create + one rename per file (no temp-dir
+  listings or recursive deletes), and a replay opens each file once.
 
 Also pins the r16-ADVICE ``_local_path`` gates themselves: bare paths
 are local only under a file-scheme fs.defaultFS, and ``file://host/...``
@@ -19,7 +22,8 @@ URIs with a foreign authority are NOT treated as local.
 
 from __future__ import annotations
 
-from collections import Counter
+import json
+from collections import Counter, defaultdict
 
 import pytest
 
@@ -29,20 +33,23 @@ from portfolio_data_pipelines_spark.operators import hadoop_io as hio
 
 
 class _CountingFS:
-    """Wrap a py4j Hadoop FileSystem handle, counting method calls."""
+    """Wrap a py4j Hadoop FileSystem handle, counting method calls and
+    keeping their arguments."""
 
     def __init__(self, fs):
         object.__setattr__(self, "_fs", fs)
         object.__setattr__(self, "calls", Counter())
+        object.__setattr__(self, "args", defaultdict(list))
 
     def __getattr__(self, name):
         attr = getattr(self._fs, name)
         if not callable(attr):
             return attr
-        calls = self.calls
+        calls, args = self.calls, self.args
 
         def wrapped(*a, **k):
             calls[name] += 1
+            args[name].append(a)
             return attr(*a, **k)
 
         return wrapped
@@ -111,6 +118,64 @@ def test_replay_log_no_per_version_probes(
     assert cfs.calls["open"] == 8
     assert cfs.calls["listStatus"] == 1
     assert cfs.calls["exists"] == 2
+
+
+def _count_fs_calls(spark, monkeypatch) -> _CountingFS:
+    """Route every ``_hadoop_fs`` handle of the log, checkpoint and I/O
+    modules through one counting wrapper."""
+    real = hio._hadoop_fs
+    cfs = _CountingFS(real(spark, "/")[0])
+    for mod in (hio, dl, delta_checkpoint):
+        monkeypatch.setattr(
+            mod, "_hadoop_fs", lambda s, p: (cfs, *real(s, p)[1:])
+        )
+    return cfs
+
+
+def test_append_lists_log_once(spark, tmp_path, no_local_fastpath, monkeypatch):
+    path = _make_table(spark, tmp_path, 3)
+    cfs = _count_fs_calls(spark, monkeypatch)
+    df = spark.range(10).coalesce(1).selectExpr("id", "id * 2 AS v")
+    assert dl.write_delta(spark, df, path) == 3
+    # the version listing and its pointer are handed to the replay, not
+    # fetched again
+    assert len([
+        a for a in cfs.args["listStatus"] if str(a[0]).endswith("/_delta_log")
+    ]) == 1
+    assert len([
+        a for a in cfs.args["exists"]
+        if str(a[0]).endswith("/_last_checkpoint")
+    ]) == 1
+
+
+@pytest.mark.parametrize("layout", ["classic", "multipart", "v2"])
+def test_checkpoint_is_create_and_rename_per_file(
+    spark, tmp_path, no_local_fastpath, monkeypatch, layout
+):
+    path = _make_table(spark, tmp_path, 3)  # 5 rows: protocol, metaData, 3 adds
+    version, n_files = 2, 1
+    if layout != "classic":
+        monkeypatch.setattr(delta_checkpoint, "CHECKPOINT_PART_ACTIONS", 2)
+        n_files = 3  # 3 parts, or a main + 2 sidecars of the 3 adds
+    if layout == "v2":
+        version = 3
+        with open(f"{path}/_delta_log/{version:020d}.json", "w") as f:
+            f.write(json.dumps({"protocol": {
+                "minReaderVersion": 3, "minWriterVersion": 7,
+                "readerFeatures": ["v2Checkpoint"],
+                "writerFeatures": ["v2Checkpoint"],
+            }}) + "\n")
+    cfs = _count_fs_calls(spark, monkeypatch)
+    delta_checkpoint.checkpoint_delta(spark, path, version)
+    # the one listing is the replay's log tail; the write lists nothing
+    assert cfs.calls["listStatus"] == 1
+    assert cfs.calls["delete"] == 0
+    assert cfs.calls["rename"] == n_files
+    assert cfs.calls["create"] == n_files + 1  # + _last_checkpoint
+    cfs.calls.clear()
+    st = dl._replay_log(spark, path, None)
+    assert len(st.adds) == 3
+    assert cfs.calls["open"] == n_files + 1  # + _last_checkpoint
 
 
 def test_local_path_gates():

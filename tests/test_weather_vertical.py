@@ -183,6 +183,33 @@ class TestPipelineEndToEnd:
             "2025-08-20", "2025-08-21", "2025-08-22",
         ]
 
+    def test_checkpoint_batch_job_budget(self, spark, tmp_path, monkeypatch):
+        """The batch whose commit is checkpointed, and the batch after it
+        (which replays from that checkpoint), keep the same ≤10-job
+        budget: the checkpoint is written and read without Spark."""
+        import os
+
+        from portfolio_data_pipelines_spark.operators import delta_checkpoint
+
+        monkeypatch.setattr(delta_checkpoint, "DELTA_CHECKPOINT_EVERY", 3)
+        cfg = PipelineConfig(lake_format="delta", lake_root=str(tmp_path / "lake_c"))
+        p = WeatherPipeline(spark, config=cfg)
+        log_dir = f"{cfg.lake_root}/weather/_delta_log"
+
+        def batch(days: int) -> int:
+            start = next_job_id(spark)
+            p.run(json.dumps(payload_fixture(days=days)))["marts_weather_daily"].collect()
+            return next_job_id(spark) - start
+
+        for days in (1, 2, 3):  # versions 0-2
+            batch(days)
+        assert not os.path.exists(f"{log_dir}/_last_checkpoint")
+        assert batch(4) <= 10  # version 3: the checkpoint batch
+        assert os.path.exists(f"{log_dir}/{3:020d}.checkpoint.parquet")
+        assert batch(5) <= 10  # version 4 replays from the checkpoint
+        mart = spark.table("marts_weather_daily").collect()
+        assert len(mart) == 5
+
     def test_empty_batch_short_circuits(self, spark, tmp_path):
         cfg = PipelineConfig(lake_root=str(tmp_path / "lake2"))
         p = WeatherPipeline(spark, config=cfg, fetcher=lambda: json.dumps({}))
