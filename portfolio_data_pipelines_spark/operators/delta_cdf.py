@@ -14,7 +14,6 @@ Reference: delta-io PROTOCOL.md (Change Data Files / Add CDC File).
 
 from __future__ import annotations
 
-import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -406,11 +405,11 @@ def read_delta_cdf(
     append-mostly table is join-free, and over a CDF-enabled table it
     is join-free everywhere."""
     fs, _, jvm = _hadoop_fs(spark, path)
-    versions = dl._list_log_versions(fs, jvm, path)
-    if not versions:
+    tail = dl._log_tail(fs, jvm, path)
+    if not tail[0]:
         raise FileNotFoundError(f"no _delta_log under {path}")
-    tip = versions[-1] if to_version is None else to_version
-    tip_state = dl._replay_log(spark, path, tip)
+    tip = tail[0][-1] if to_version is None else to_version
+    tip_state = dl._replay_log(spark, path, tip, tail)
     meta = tip_state.meta
     if meta is None:
         raise ValueError(f"Delta log under {path} has no metaData action")
@@ -427,7 +426,7 @@ def read_delta_cdf(
 
     # live set at from_version, advanced commit by commit below
     live: dict[str, dict] = (
-        dict(dl._replay_log(spark, path, from_version).adds)
+        dict(dl._replay_log(spark, path, from_version, tail).adds)
         if from_version >= 0
         else {}
     )
@@ -457,35 +456,26 @@ def read_delta_cdf(
 
     pieces = []
     for v in range(from_version + 1, tip + 1):
-        log_file = f"{path}/{dl._log_path(v)}"
-        hpath = jvm.org.apache.hadoop.fs.Path(log_file)
-        if not fs.exists(hpath):
-            raise FileNotFoundError(
-                f"commit {v} missing from {path}/_delta_log"
-            )
-        ts_ms = dl._commit_ts_ms(fs, jvm, path, v)
+        actions = dl._commit_actions(fs, jvm, path, v)
+        ts_ms = dl._commit_ts_ms(fs, jvm, path, v, actions)
         adds_v: dict[str, dict] = {}
         removed_adds: dict[str, dict] = {}
         cdc_v: list[str] = []
-        for line in dl._read_text(fs, jvm, log_file).splitlines():
-            if not line.strip():
-                continue
-            action = json.loads(line)
+        for action in actions:
             if "add" in action:
-                a = dict(action["add"])
-                rel = dl._decode_path(a["path"])
-                a["path"] = rel
+                a = action["add"]
+                rel = a["path"]
                 if a.get("dataChange", True):
                     adds_v[rel] = a
                 live[rel] = a
             elif "remove" in action:
-                rel = dl._decode_path(action["remove"]["path"])
+                rel = action["remove"]["path"]
                 # the removed entry comes from the PRE-commit live set
                 prev = live.pop(rel, None)
                 if action["remove"].get("dataChange", True) and prev is not None:
                     removed_adds[rel] = prev
             elif "cdc" in action:
-                cdc_v.append(dl._decode_path(action["cdc"]["path"]))
+                cdc_v.append(action["cdc"]["path"])
         if cdc_v:
             # write-side change files: the commit's changes verbatim —
             # no join, and valid even after the rewritten data files

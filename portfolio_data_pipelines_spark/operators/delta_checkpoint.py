@@ -201,11 +201,7 @@ def _read_actions(fs, jvm, file: str) -> list[dict]:
     pyarrow yields map columns as (key, value) pairs; replay normalizes
     them with ``delta_log._as_str_map``."""
     if file.endswith(".json"):
-        return [
-            json.loads(line)
-            for line in dl._read_text(fs, jvm, file).splitlines()
-            if line.strip()
-        ]
+        return dl._ndjson_actions(dl._read_text(fs, jvm, file))
     data = _read_bytes(fs, jvm, file)
     return pq.read_table(pa.BufferReader(data)).to_pylist()
 

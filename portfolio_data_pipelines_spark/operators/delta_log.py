@@ -192,48 +192,19 @@ def _now_ms() -> int:
     return int(_dt.datetime.now(_dt.timezone.utc).timestamp() * 1000)
 
 
-def _list_log_versions(fs, jvm, path: str) -> list[int]:
-    """Commit versions present in the log, WITHOUT a directory listing:
-    start at ``_last_checkpoint`` (when present) and probe forward with
-    existence checks until the first gap — versions are contiguous by
-    construction (each is claimed by exclusive create), so reads cost
-    O(tail since checkpoint) small RPCs at any table age."""
-    return _log_tail(fs, jvm, path)[0]
-
-
 def _log_tail(fs, jvm, path: str) -> tuple[list[int], dict | None]:
-    """:func:`_list_log_versions` plus the ``_last_checkpoint`` doc it
-    anchored on (None when absent), so a replay starts from the same
-    checkpoint without reading the pointer again."""
-    lp = _local_path(path)
-    if lp is not None:
-        if not os.path.isdir(f"{lp}/_delta_log"):
-            return [], None
-        lc = delta_checkpoint._read_last_checkpoint_doc(fs, jvm, path)
-        start = int(lc["version"]) if lc else 0
-        out = []
-        v = start
-        while os.path.exists(f"{lp}/{_log_path(v)}"):
-            out.append(v)
-            v += 1
-        return out, lc
-    log_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/_delta_log")
-    if not fs.exists(log_dir):
-        return [], None
+    """The commit versions a replay needs: the contiguous run from the
+    ``_last_checkpoint`` anchor (0 without one) out of
+    :func:`_all_commit_versions`, plus the pointer doc (None when
+    absent) so a replay starts from the same checkpoint without reading
+    it again. The pointer is read BEFORE the listing: a checkpoint that
+    lands between the two calls then leaves the pointer older than the
+    listing, which still holds its run; the other order could anchor on
+    a version the listing never saw and return an empty run."""
     lc = delta_checkpoint._read_last_checkpoint_doc(fs, jvm, path)
-    start = int(lc["version"]) if lc else 0
-    # ONE listing instead of one fs.exists round trip per version (r16
-    # verdict #7): on object stores each probe is a metadata RPC, so a
-    # 50-commit tail cost 50 sequential calls; the listing costs one.
-    # The result contract is unchanged — the contiguous run from the
-    # checkpoint anchor (same set the forward probe walked).
-    present = set()
-    for st in fs.listStatus(log_dir):
-        name = st.getPath().getName()
-        if len(name) == 25 and name.endswith(".json") and name[:20].isdigit():
-            present.add(int(name[:20]))
+    present = set(_all_commit_versions(fs, jvm, path))
     out = []
-    v = start
+    v = int(lc["version"]) if lc else 0
     while v in present:
         out.append(v)
         v += 1
@@ -242,32 +213,28 @@ def _log_tail(fs, jvm, path: str) -> tuple[list[int], dict | None]:
 
 def _all_commit_versions(fs, jvm, path: str) -> list[int]:
     """EVERY commit version whose NDJSON file still exists, from one
-    directory listing. Unlike :func:`_list_log_versions` (the
-    checkpoint-anchored forward probe — the O(tail) hot path used by
-    replay), this sees commits BEFORE the latest checkpoint that log
-    cleanup has not yet removed. Timestamp resolution must search this
-    full retained history: delta-spark resolves ``timestampAsOf``
-    against all retained commits, not just the post-checkpoint tail."""
+    directory listing — the one listing of ``_delta_log``. It also sees
+    commits BEFORE the latest checkpoint that log cleanup has not yet
+    removed: timestamp resolution and history search this full retained
+    range (delta-spark resolves ``timestampAsOf`` against all retained
+    commits), while replays take :func:`_log_tail`'s run from the
+    checkpoint."""
     lp = _local_path(path)
     if lp is not None:
         try:
             names = os.listdir(f"{lp}/_delta_log")
         except FileNotFoundError:
             return []
-        return sorted(
-            int(n[:20])
-            for n in names
-            if len(n) == 25 and n.endswith(".json") and n[:20].isdigit()
-        )
-    log_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/_delta_log")
-    if not fs.exists(log_dir):
-        return []
-    out = []
-    for st in fs.listStatus(log_dir):
-        name = st.getPath().getName()
-        if len(name) == 25 and name.endswith(".json") and name[:20].isdigit():
-            out.append(int(name[:20]))
-    return sorted(out)
+    else:
+        log_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/_delta_log")
+        if not fs.exists(log_dir):
+            return []
+        names = [st.getPath().getName() for st in fs.listStatus(log_dir)]
+    return sorted(
+        int(n[:20])
+        for n in names
+        if len(n) == 25 and n.endswith(".json") and n[:20].isdigit()
+    )
 
 
 def _read_text(fs, jvm, path_str: str) -> str:
@@ -282,6 +249,47 @@ def _read_text(fs, jvm, path_str: str) -> str:
     # verdict #7) — commit files are small, so the whole body rides one
     # call like the local branch's read()
     return _read_bytes(fs, jvm, path_str).decode("utf-8").rstrip("\n")
+
+
+def _ndjson_actions(text: str) -> list[dict]:
+    """The actions of an NDJSON log file (a commit, or a V2 checkpoint
+    main), one per non-blank line."""
+    return [json.loads(line) for line in text.splitlines() if line.strip()]
+
+
+def _missing_file(jvm, err: Exception) -> bool:
+    """Whether a read failed because its file is absent: a local
+    ``FileNotFoundError``, or Hadoop's ``java.io.FileNotFoundException``
+    raised through py4j."""
+    if isinstance(err, FileNotFoundError):
+        return True
+    java = getattr(err, "java_exception", None)
+    return java is not None and jvm.java.lang.Class.forName(
+        "java.io.FileNotFoundException"
+    ).isInstance(java)
+
+
+def _commit_actions(fs, jvm, path: str, version: int) -> list[dict]:
+    """The actions of commit ``version``, in file order, with ``add`` /
+    ``remove`` / ``cdc`` paths URL-decoded to the physical form replay
+    keys on — the one reader of commit files. ``fs=jvm=None`` reads a
+    local table without a JVM (the streaming feed's Python workers).
+    An absent commit raises ``FileNotFoundError`` naming the version;
+    the read itself detects it, so a hit costs no existence probe."""
+    try:
+        text = _read_text(fs, jvm, f"{path}/{_log_path(version)}")
+    except Exception as e:
+        if not _missing_file(jvm, e):
+            raise
+        raise FileNotFoundError(
+            f"commit {version} missing from {path}/_delta_log"
+        ) from None
+    actions = _ndjson_actions(text)
+    for action in actions:
+        for kind in ("add", "remove", "cdc"):
+            if kind in action:
+                action[kind]["path"] = _decode_path(action[kind]["path"])
+    return actions
 
 
 def _stats_value(v):
@@ -1258,35 +1266,48 @@ def _commit_info(
     return {"commitInfo": info}
 
 
-def _read_commit_info(fs, jvm, path: str, version: int) -> dict | None:
-    """The ``commitInfo`` action of one commit file, or None (foreign
+def _info_of(actions: list[dict]) -> dict | None:
+    """The ``commitInfo`` among a commit's actions, or None (foreign
     logs may omit it; the spec only recommends it)."""
+    return next((a["commitInfo"] for a in actions if "commitInfo" in a), None)
+
+
+def _read_commit_info(fs, jvm, path: str, version: int) -> dict | None:
+    """The ``commitInfo`` of commit ``version``, or None — also when
+    the commit is absent or not valid JSON."""
     try:
-        text = _read_text(fs, jvm, f"{path}/{_log_path(version)}")
-    except Exception:
+        return _info_of(_commit_actions(fs, jvm, path, version))
+    except (FileNotFoundError, ValueError):
         return None
-    for line in text.splitlines():
-        if not line.strip():
-            continue
-        action = json.loads(line)
-        if "commitInfo" in action:
-            return action["commitInfo"]
-    return None
 
 
-def _commit_ts_ms(fs, jvm, path: str, version: int) -> int:
+def _commit_mtime_ms(fs, jvm, path: str, version: int) -> int:
+    """The commit file's modification time in epoch ms."""
+    log_file = f"{path}/{_log_path(version)}"
+    lp = _local_path(log_file)
+    if lp is not None:
+        return os.stat(lp).st_mtime_ns // 1_000_000
+    return fs.getFileStatus(
+        jvm.org.apache.hadoop.fs.Path(log_file)
+    ).getModificationTime()
+
+
+def _commit_ts_ms(
+    fs, jvm, path: str, version: int, actions: list[dict] | None = None
+) -> int:
     """The commit's time in epoch ms: ``commitInfo.inCommitTimestamp``
     when present (the ICT feature's robust form — object stores may
     rewrite file mtimes on copy/rewrite, silently corrupting
     time-travel resolution), else the commit file's modification time
     (delta-spark's historic behavior, the only signal foreign logs
-    without ICT carry)."""
-    info = _read_commit_info(fs, jvm, path, version)
-    if info is not None and "inCommitTimestamp" in info:
+    without ICT carry). ``actions`` are the commit's already-read
+    :func:`_commit_actions`, so the file is not read twice."""
+    if actions is None:
+        actions = _commit_actions(fs, jvm, path, version)
+    info = _info_of(actions) or {}
+    if "inCommitTimestamp" in info:
         return int(info["inCommitTimestamp"])
-    return fs.getFileStatus(
-        jvm.org.apache.hadoop.fs.Path(f"{path}/{_log_path(version)}")
-    ).getModificationTime()
+    return _commit_mtime_ms(fs, jvm, path, version)
 
 
 def _resolve_ict(fs, jvm, path: str, version: int) -> int:
@@ -2463,12 +2484,7 @@ def write_delta(
             if not (retriable and lost_race):
                 raise
             for v in range(new_version, latest[-1] + 1):
-                for line in _read_text(
-                    fs, jvm, f"{path}/{_log_path(v)}"
-                ).splitlines():
-                    if not line.strip():
-                        continue
-                    act = json.loads(line)
+                for act in _commit_actions(fs, jvm, path, v):
                     if "metaData" in act or "protocol" in act:
                         raise ValueError(
                             f"concurrent metadata change at version {v} — "
@@ -2638,42 +2654,20 @@ def _replay_log(
                 }
                 _note_dv_tombstone(dvd, int(r.get("deletionTimestamp", 0)))
         start = lc["version"] + 1
-    lp = _local_path(path)
-    vset = set(versions)  # already proven present by the tip listing
+    # a pinned version below the checkpoint replays from commit 0; one
+    # that log cleanup removed raises FileNotFoundError from the read
     for v in range(start, target + 1):
-        log_file = f"{path}/{_log_path(v)}"
-        if v not in vset:
-            # only pre-checkpoint pinned reads land here — those
-            # versions are below the listing's checkpoint anchor, so
-            # presence needs its own probe (r16 verdict #7: the common
-            # path no longer pays one existence RPC per version)
-            present = (
-                os.path.exists(f"{lp}/{_log_path(v)}")
-                if lp is not None
-                else fs.exists(jvm.org.apache.hadoop.fs.Path(log_file))
-            )
-            if not present:
-                raise FileNotFoundError(
-                    f"commit {v} missing from {path}/_delta_log "
-                    "(cleaned up before this pinned version's checkpoint)"
-                )
-        text = _read_text(fs, jvm, log_file)
-        for line in text.splitlines():
-            if not line.strip():
-                continue
-            action = json.loads(line)
+        for action in _commit_actions(fs, jvm, path, v):
             if "protocol" in action:
                 protocol = action["protocol"]
             elif "metaData" in action:
                 meta = action["metaData"]
             elif "add" in action:
                 a = action["add"]
-                a["path"] = _decode_path(a["path"])
                 adds[a["path"]] = a
                 removes.pop(a["path"], None)
             elif "remove" in action:
                 rm = action["remove"]
-                rm["path"] = _decode_path(rm["path"])
                 prev = adds.pop(rm["path"], None)
                 # the tombstone keeps the file's LAST deletion-vector
                 # descriptor (explicit on the remove, else synthesized

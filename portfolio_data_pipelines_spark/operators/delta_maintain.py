@@ -784,17 +784,8 @@ def describe_history(spark: SparkSession, path: str) -> DataFrame:
     fs, _, jvm = _hadoop_fs(spark, path)
     rows = []
     for v in dl._all_commit_versions(fs, jvm, path):
-        log_file = f"{path}/{dl._log_path(v)}"
-        hpath = jvm.org.apache.hadoop.fs.Path(log_file)
-        mtime_ms = fs.getFileStatus(hpath).getModificationTime()
-        info = None
-        for line in dl._read_text(fs, jvm, log_file).splitlines():
-            if not line.strip():
-                continue
-            action = json.loads(line)
-            if "commitInfo" in action:
-                info = action["commitInfo"]
-                break
+        info = dl._info_of(dl._commit_actions(fs, jvm, path, v))
+        mtime_ms = dl._commit_mtime_ms(fs, jvm, path, v)
         ts_ms = (info or {}).get(
             "inCommitTimestamp", (info or {}).get("timestamp", mtime_ms)
         )
@@ -1026,7 +1017,7 @@ def convert_parquet_to_delta(
     pcols = dl._norm_pcols(partition_col)
     dl._warn_if_commit_unsafe(path)
     fs, _, jvm = _hadoop_fs(spark, path)
-    if dl._list_log_versions(fs, jvm, path):
+    if dl._log_tail(fs, jvm, path)[0]:
         raise ValueError(
             f"{path} already has a _delta_log; CONVERT is one-shot"
         )

@@ -645,29 +645,19 @@ def read_delta_changes(
     computes value-level diffs when those are needed). Cost: the log
     tail plus a scan of ONLY the new files."""
     fs, _, jvm = _hadoop_fs(spark, path)
-    versions = dl._list_log_versions(fs, jvm, path)
-    if not versions:
+    tail = dl._log_tail(fs, jvm, path)
+    if not tail[0]:
         raise FileNotFoundError(f"no _delta_log under {path}")
-    tip = versions[-1] if to_version is None else to_version
-    meta = dl._replay_log(spark, path, tip).meta
+    tip = tail[0][-1] if to_version is None else to_version
+    meta = dl._replay_log(spark, path, tip, tail).meta
     if meta is None:
         raise ValueError(f"Delta log under {path} has no metaData action")
     schema = dl._spark_schema_from_string(meta["schemaString"])
     new_adds: list[tuple[int, dict]] = []
     for v in range(from_version + 1, tip + 1):
-        log_file = f"{path}/{dl._log_path(v)}"
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(log_file)):
-            raise FileNotFoundError(
-                f"commit {v} missing from {path}/_delta_log"
-            )
-        for line in dl._read_text(fs, jvm, log_file).splitlines():
-            if not line.strip():
-                continue
-            action = json.loads(line)
+        for action in dl._commit_actions(fs, jvm, path, v):
             if "add" in action and action["add"].get("dataChange", True):
-                a = action["add"]
-                a["path"] = dl._decode_path(a["path"])
-                new_adds.append((v, a))
+                new_adds.append((v, action["add"]))
     out_fields = [f.name for f in schema.fields] + ["_commit_version"]
     if not new_adds:
         from pyspark.sql.types import LongType, StructField, StructType

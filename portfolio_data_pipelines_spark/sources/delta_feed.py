@@ -18,12 +18,14 @@ Design:
   together so a cold backfill doesn't pay one Python-worker round-trip
   per file, while a commit landing 200 MB still fans out across ~50
   tasks. ``maxBytesPerTask=0`` restores strict one-file-per-task.
-- **Log access is spec-only and Python-side** (same parsing layer as
-  the independent conformance reader ``operators/delta_reader``): the
-  planner reads the NDJSON tail, never the data; each task reads
-  exactly its one parquet file via pyarrow — acceptable by design
-  because a feed batch touches only the files of new commits, never
-  the table.
+- **Log access is Python-side**: the planner lists the log and reads
+  each commit through the engine's own helpers
+  (``delta_log._all_commit_versions`` / ``_commit_actions``, called
+  without a JVM), and takes the live set and metadata from the
+  conformance reader ``operators/delta_reader``; it never reads the
+  data. Each task reads exactly its parquet files via pyarrow —
+  acceptable by design because a feed batch touches only the files of
+  new commits, never the table.
 - Every output row carries ``_commit_version``, the same contract as
   the batch ``read_delta_changes``.
 
@@ -71,8 +73,11 @@ nothing new to emit, so no duplicates are possible);
 duplicate rows. (Behavior change note: before round 10 this source
 silently planned change commits' re-added files.)
 
-Local-filesystem tables (this sandbox has no object store); an external
-deployment swaps the ``os`` calls for its store's SDK.
+Local tables only: the planner and the tasks run in Python workers
+without a JVM, so they read through ``os`` and pyarrow, not a Hadoop
+filesystem. A path with a non-``file`` scheme (``s3a://``, ``hdfs://``)
+or a ``file://host/`` authority is refused with a ``ValueError`` when
+the reader is built. Remote tables would need ``pyarrow.fs`` in both.
 """
 
 from __future__ import annotations
@@ -94,16 +99,15 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..operators import delta_log as dl
 from ..operators.delta_reader import (
     _cast_partition_value,
-    _commit_time_ms_external,
     _config_of,
     _dv_deleted_rows,
     _dv_of,
-    _list_commit_versions,
-    _local,
     _replay,
 )
+from ..operators.hadoop_io import _local_path
 
 
 def _arrow_type_of_json(jtype):
@@ -223,40 +227,6 @@ class _FeedCdcFilesPartition(InputPartition):
         self.ts_ms = ts_ms
 
 
-def _commit_data_adds(
-    log_dir: str, version: int
-) -> tuple[list[dict], bool]:
-    """(dataChange add actions of ONE commit (paths decoded), does the
-    commit ALSO carry dataChange removes). The second flag marks a
-    change commit — DELETE/UPDATE/MERGE re-add touched files (or their
-    rewrites) with dataChange=true, so an append-only consumer that
-    planned those adds would emit every surviving row a second time."""
-    from urllib.parse import unquote
-
-    commit = os.path.join(log_dir, f"{version:020d}.json")
-    if not os.path.exists(commit):
-        raise FileNotFoundError(
-            f"commit {version} missing from {log_dir} — cleaned up before "
-            "this stream consumed it (raise the log retention or restart "
-            "the stream from a fresh checkpoint)"
-        )
-    adds = []
-    has_dc_removes = False
-    for line in open(commit).read().splitlines():
-        if not line.strip():
-            continue
-        action = json.loads(line)
-        if "add" in action and action["add"].get("dataChange", True):
-            a = dict(action["add"])
-            a["path"] = unquote(a["path"])
-            adds.append(a)
-        elif "remove" in action and action["remove"].get(
-            "dataChange", True
-        ):
-            has_dc_removes = True
-    return adds, has_dc_removes
-
-
 def _fix_ts(val, type_name: str):
     """TimestampType values must reach Spark's Python DataSource layer
     tz-AWARE (Arrow refuses naive timestamps for the UTC-adjusted
@@ -274,37 +244,28 @@ def _fix_ts(val, type_name: str):
     return val
 
 
-def _commit_change_actions(log_dir: str, version: int) -> list[dict]:
-    """ALL add/remove/cdc actions of one commit (paths decoded),
-    preserving dataChange flags — the change-feed planner needs every
-    side."""
-    from urllib.parse import unquote
-
-    commit = os.path.join(log_dir, f"{version:020d}.json")
-    if not os.path.exists(commit):
-        raise FileNotFoundError(
-            f"commit {version} missing from {log_dir} — cleaned up before "
-            "this stream consumed it (raise the log retention or restart "
-            "the stream from a fresh checkpoint)"
+def _table_root(path: str | None) -> str:
+    """The feed table's local POSIX root. The planner and the tasks run
+    in Python workers without a JVM, so they read through ``os`` and
+    pyarrow and cannot reach a Hadoop filesystem: a non-``file`` scheme
+    or a ``file://host/`` authority is refused here, up front."""
+    if not path:
+        raise ValueError("delta_feed requires .option('path', <table>)")
+    root = _local_path(path)
+    if root is None:
+        raise ValueError(
+            f"delta_feed reads local tables only, not {path!r}: its "
+            "planner and tasks run in Python workers without a JVM, so "
+            "they cannot reach a Hadoop filesystem — pass an absolute "
+            "local path or a file:/// URI"
         )
-    out = []
-    for line in open(commit).read().splitlines():
-        if not line.strip():
-            continue
-        action = json.loads(line)
-        for kind in ("add", "remove", "cdc"):
-            if kind in action:
-                a = dict(action[kind])
-                a["path"] = unquote(a["path"])
-                out.append({kind: a})
-    return out
+    return root
 
 
 class DeltaFeedStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("delta_feed requires .option('path', <table>)")
+        self.root = _table_root(options.get("path"))
+        self.path = options["path"]
         self.schema = schema
         self.start_version = int(options.get("startingversion", -1))
         # readChangeFeed mode: emit row-level changes (_change_type ∈
@@ -327,17 +288,28 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
         # stream start (the schema is pinned for the query's lifetime,
         # Spark streaming semantics — a mid-stream rename needs a
         # restart, as in delta-spark).
-        _root, _adds, meta = _replay(self.path, None)
+        _root, _adds, meta = _replay(self.root, None)
+        _jfields = json.loads(meta["schemaString"]).get("fields", [])
         _cm_mode = _config_of(meta).get("delta.columnMapping.mode", "none")
         if _cm_mode in ("name", "id"):
             self.phys = {
                 f["name"]: (f.get("metadata") or {}).get(
                     "delta.columnMapping.physicalName", f["name"]
                 )
-                for f in json.loads(meta["schemaString"])["fields"]
+                for f in _jfields
             }
         else:
             self.phys = None
+        # top-level columns with a non-UTF8_BINARY (fold-compare)
+        # collation, from the __COLLATIONS field metadata
+        self.fold_cols = {
+            f["name"]
+            for f in _jfields
+            for name in (
+                (f.get("metadata") or {}).get("__COLLATIONS") or {}
+            ).values()
+            if name.split(".", 1)[-1].upper() != "UTF8_BINARY"
+        }
         # id-mode tables (Iceberg conversions) resolve columns by
         # parquet FIELD ID per file — column names in the files are
         # arbitrary. Each file's columns are renamed to the table's
@@ -347,7 +319,6 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
         if _cm_mode == "id":
             from ..operators.delta_reader import _idmode_check_shape
 
-            _jfields = json.loads(meta["schemaString"])["fields"]
             for _f in _jfields:
                 _idmode_check_shape(_f.get("type"), _f["name"])
             self.fids = {
@@ -394,27 +365,9 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
             options.get("ignoredeletes", "false")
         ).lower() == "true"
         self._progress: int | None = None  # known position, once seen
-        self._fold_cols_cache: set | None = None  # see _fold_cols
 
     def _phys(self, name: str) -> str:
         return self.phys.get(name, name) if self.phys else name
-
-    def _fold_cols(self) -> set:
-        """Top-level columns with a non-UTF8_BINARY (fold-compare)
-        collation, from the table's __COLLATIONS field metadata —
-        resolved once per stream (the schema is pinned for the query's
-        lifetime), not per planned commit."""
-        if self._fold_cols_cache is None:
-            _root, _adds, meta = _replay(self.path, None)
-            out: set = set()
-            for f in json.loads(meta["schemaString"]).get("fields", []):
-                for name in ((f.get("metadata") or {}).get(
-                    "__COLLATIONS"
-                ) or {}).values():
-                    if name.split(".", 1)[-1].upper() != "UTF8_BINARY":
-                        out.add(f["name"])
-            self._fold_cols_cache = out
-        return self._fold_cols_cache
 
     @staticmethod
     def _unshred_cell(cell):
@@ -496,8 +449,7 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
         return {"version": self.start_version}
 
     def latestOffset(self) -> dict:
-        log_dir = os.path.join(_local(self.path), "_delta_log")
-        versions = _list_commit_versions(log_dir)
+        versions = dl._all_commit_versions(None, None, self.root)
         tip = versions[-1] if versions else self.start_version
         # Cap commits per batch ONLY when the reader knows where the
         # stream is (cold start, or after a planned batch). On a
@@ -508,14 +460,40 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
             tip = min(tip, self._progress + self.max_commits)
         return {"version": tip}
 
+    def _size_groups(self, sized) -> Iterator[list]:
+        """``(item, size)`` pairs packed, in order, into groups of at
+        most ``maxBytesPerTask`` bytes (one item a group when it is 0);
+        an item larger than the cap gets a group of its own."""
+        group: list = []
+        group_bytes = 0
+        for item, size in sized:
+            if group and (
+                self.max_bytes <= 0 or group_bytes + size > self.max_bytes
+            ):
+                yield group
+                group, group_bytes = [], 0
+            group.append(item)
+            group_bytes += size
+        if group:
+            yield group
+
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         self._progress = int(end["version"])
-        root = _local(self.path)
-        log_dir = os.path.join(root, "_delta_log")
+        root = self.root
         parts: list[InputPartition] = []
         if not self.cdf:
             for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
-                adds_v, has_dc_removes = _commit_data_adds(log_dir, v)
+                # a change commit (DELETE/UPDATE/MERGE) re-adds touched
+                # files (or their rewrites) next to dataChange removes
+                actions = dl._commit_actions(None, None, root, v)
+                adds_v = [
+                    a["add"] for a in actions
+                    if "add" in a and a["add"].get("dataChange", True)
+                ]
+                has_dc_removes = any(
+                    "remove" in a and a["remove"].get("dataChange", True)
+                    for a in actions
+                )
                 if (
                     has_dc_removes
                     and not self.ignore_changes
@@ -534,22 +512,14 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
                         "to accept duplicates, or ignoredeletes=true "
                         "to tolerate delete-only commits."
                     )
-                group: list = []
-                group_bytes = 0
-                for a in adds_v:
-                    size = int(a.get("size", 0))
-                    if group and (
-                        self.max_bytes <= 0
-                        or group_bytes + size > self.max_bytes
-                    ):
-                        parts.append(_FeedFilePartition(v, root, group))
-                        group, group_bytes = [], 0
-                    group.append(
-                        (a["path"], a.get("partitionValues", {}), _dv_of(a))
+                parts.extend(
+                    _FeedFilePartition(v, root, group)
+                    for group in self._size_groups(
+                        ((a["path"], a.get("partitionValues", {}), _dv_of(a)),
+                         int(a.get("size", 0)))
+                        for a in adds_v
                     )
-                    group_bytes += size
-                if group:
-                    parts.append(_FeedFilePartition(v, root, group))
+                )
             return parts
         # Change-feed planning: the removed side of each commit's diff
         # comes from the PRE-commit live set, reconstructed by one log
@@ -558,14 +528,15 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
         sv = int(start["version"])
         live: dict[str, dict] = {}
         if sv >= 0:
-            _root, adds0, _meta = _replay(self.path, sv)
+            _root, adds0, _meta = _replay(root, sv)
             live = dict(adds0)
         for v in range(sv + 1, int(end["version"]) + 1):
             adds_v: list = []
             removed_v: list = []
             cdc_v: list = []
             touched_bytes = 0
-            for action in _commit_change_actions(log_dir, v):
+            actions = dl._commit_actions(None, None, root, v)
+            for action in actions:
                 if "add" in action:
                     a = action["add"]
                     live[a["path"]] = a
@@ -584,29 +555,19 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
                              _dv_of(prev))
                         )
                         touched_bytes += int(prev.get("size", 0))
-                else:
+                elif "cdc" in action:
                     cdc_v.append(action["cdc"])
             if cdc_v:
                 # write-side change files: stream them like plain-mode
                 # adds (arrow batches, size-bounded groups) — the diff
                 # already happened at commit time
-                ts = _commit_time_ms_external(log_dir, v)
-                group: list = []
-                group_bytes = 0
-                for c in cdc_v:
-                    size = int(c.get("size", 0))
-                    if group and (
-                        self.max_bytes <= 0
-                        or group_bytes + size > self.max_bytes
-                    ):
-                        parts.append(
-                            _FeedCdcFilesPartition(v, root, group, ts)
-                        )
-                        group, group_bytes = [], 0
-                    group.append(c["path"])
-                    group_bytes += size
-                if group:
-                    parts.append(_FeedCdcFilesPartition(v, root, group, ts))
+                ts = dl._commit_ts_ms(None, None, root, v, actions)
+                parts.extend(
+                    _FeedCdcFilesPartition(v, root, group, ts)
+                    for group in self._size_groups(
+                        (c["path"], int(c.get("size", 0))) for c in cdc_v
+                    )
+                )
                 continue
             if not (adds_v or removed_v):
                 continue
@@ -620,7 +581,7 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
                         "changes, or enable_change_data_feed on the "
                         "table so rewrites materialize change files"
                     )
-                folded = sorted(set(self.key_cols) & self._fold_cols())
+                folded = sorted(set(self.key_cols) & self.fold_cols)
                 if folded:
                     # reconstruction groups rows in a PYTHON dict — a
                     # byte-wise compare that would diverge from the
@@ -651,7 +612,7 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
             parts.append(
                 _FeedCdfPartition(
                     v, root, adds_v, removed_v,
-                    _commit_time_ms_external(log_dir, v),
+                    dl._commit_ts_ms(None, None, root, v, actions),
                 )
             )
         return parts
@@ -777,134 +738,91 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
                 yield n + ("update_postimage", v, ts)
             # equal images: carried over by the rewrite — not a change
 
-    def _read_cdc_files(
-        self, partition: _FeedCdcFilesPartition
+    def _arrow_batches(
+        self, root: str, rel: str, version: int, pvals: dict | None = None,
+        dv=None, ts_ms: int | None = None,
     ) -> Iterator:
-        """Write-side change files as arrow batches: every column
-        (including partition columns) is materialized in-file under its
-        physical name plus ``_change_type``;  ``_commit_version`` /
-        ``_commit_timestamp`` are constants of the commit."""
+        """One data or change file of a task as arrow record batches in
+        the stream's schema. Spark 4's Python DataSource consumes
+        yielded ``pyarrow.RecordBatch`` objects directly, so rows move
+        parquet → arrow → Spark without a per-row Python conversion
+        (the backfill bottleneck — measured 6× over a JVM read when
+        emitting tuples). ``_commit_version`` and ``_commit_timestamp``
+        (``ts_ms``) are constants of the commit; partition columns come
+        from ``pvals`` (physical names), or from the file itself in
+        change files, which also carry ``_change_type``. DV'd rows are
+        dropped, columns added after the file was written are null,
+        shredded variants are reassembled, and naive parquet timestamps
+        (UTC wall-clock values) are pinned to UTC, not shifted."""
+        import datetime as dt
+
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        target = to_arrow_schema(self.schema)
-        for rel in partition.files:
-            tbl = self._id_align(
-                pq.read_table(os.path.join(partition.root, rel))
+        pvals = pvals or {}
+        types = {f.name: f.dataType.typeName() for f in self.schema.fields}
+        tbl = self._id_align(pq.read_table(os.path.join(root, rel)))
+        if dv is not None:
+            # DV'd positions are logically deleted — drop them before
+            # the batch leaves the task (arrow take keeps the zero-copy
+            # path for the survivors)
+            dead = _dv_deleted_rows(root, dv)
+            tbl = tbl.take(
+                pa.array(
+                    [i for i in range(tbl.num_rows) if i not in dead],
+                    type=pa.int64(),
+                )
             )
-            n = tbl.num_rows
-            present = set(tbl.column_names)
-            arrays = []
-            for f in target:
-                if f.name == "_commit_version":
-                    arrays.append(
-                        pa.repeat(pa.scalar(partition.version, f.type), n)
-                    )
-                elif f.name == "_commit_timestamp":
-                    import datetime as dt
-
-                    arrays.append(
-                        pa.repeat(
-                            pa.scalar(
-                                dt.datetime.fromtimestamp(
-                                    partition.ts_ms / 1000.0,
-                                    tz=dt.timezone.utc,
-                                ),
-                                f.type,
-                            ),
-                            n,
-                        )
-                    )
-                else:
-                    pname = (
-                        "_change_type"
-                        if f.name == "_change_type"
-                        else self._phys(f.name)
-                    )
-                    if pname in present:
-                        col = tbl.column(pname).combine_chunks()
-                        col = self._maybe_unshred(col, f.type)
-                        if (
-                            pa.types.is_timestamp(f.type)
-                            and f.type.tz is not None
-                            and pa.types.is_timestamp(col.type)
-                            and col.type.tz is None
-                        ):
-                            col = pc.assume_timezone(col, f.type.tz)
-                        arrays.append(col.cast(f.type))
-                    else:
-                        arrays.append(pa.nulls(n, f.type))  # pre-evolution
-            out = pa.table(arrays, schema=target).combine_chunks()
-            yield from out.to_batches()
+        n = tbl.num_rows
+        present = set(tbl.column_names)
+        target = to_arrow_schema(self.schema)
+        arrays = []
+        for f in target:
+            pname = self._phys(f.name)  # physical lookup key
+            if f.name == "_commit_version":
+                arrays.append(pa.repeat(pa.scalar(version, f.type), n))
+            elif f.name == "_commit_timestamp":
+                ts = dt.datetime.fromtimestamp(
+                    ts_ms / 1000.0, tz=dt.timezone.utc
+                )
+                arrays.append(pa.repeat(pa.scalar(ts, f.type), n))
+            elif pname in pvals:
+                v = _cast_partition_value(
+                    pvals[pname], types.get(f.name, "string")
+                )
+                arrays.append(pa.repeat(pa.scalar(v, f.type), n))
+            elif pname in present:
+                col = tbl.column(pname).combine_chunks()
+                col = self._maybe_unshred(col, f.type)
+                if (
+                    pa.types.is_timestamp(f.type)
+                    and f.type.tz is not None
+                    and pa.types.is_timestamp(col.type)
+                    and col.type.tz is None
+                ):
+                    col = pc.assume_timezone(col, f.type.tz)
+                arrays.append(col.cast(f.type))
+            else:
+                arrays.append(pa.nulls(n, f.type))  # pre-evolution
+        out = pa.table(arrays, schema=target).combine_chunks()
+        yield from out.to_batches()
 
     def read(self, partition) -> Iterator:
-        if isinstance(partition, _FeedCdcFilesPartition):
-            yield from self._read_cdc_files(partition)
-            return
         if isinstance(partition, _FeedCdfPartition):
             yield from self._read_cdf(partition)
-            return
-        # Plain mode streams ARROW RECORD BATCHES, not Python tuples:
-        # Spark 4's Python DataSource consumes yielded
-        # pyarrow.RecordBatch objects directly, so the per-row
-        # Python-object conversion (the backfill bottleneck — measured
-        # 6× over a JVM read when emitting tuples) disappears; data
-        # moves parquet → arrow → Spark without materializing rows.
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        target = to_arrow_schema(self.schema)
-        types = {f.name: f.dataType.typeName() for f in self.schema.fields}
-        for rel, pvals_raw, dv in partition.files:
-            tbl = self._id_align(
-                pq.read_table(os.path.join(partition.root, rel))
-            )
-            if dv is not None:
-                # DV'd positions are logically deleted — drop them
-                # before the batch leaves the task (arrow take keeps
-                # the zero-copy path for the survivors)
-                dead = _dv_deleted_rows(partition.root, dv)
-                tbl = tbl.take(
-                    pa.array(
-                        [i for i in range(tbl.num_rows) if i not in dead],
-                        type=pa.int64(),
-                    )
+        elif isinstance(partition, _FeedCdcFilesPartition):
+            for rel in partition.files:
+                yield from self._arrow_batches(
+                    partition.root, rel, partition.version,
+                    ts_ms=partition.ts_ms,
                 )
-            n = tbl.num_rows
-            present = set(tbl.column_names)
-            arrays = []
-            for f in target:
-                pname = self._phys(f.name)  # physical lookup key
-                if f.name == "_commit_version":
-                    arrays.append(
-                        pa.repeat(pa.scalar(partition.version, f.type), n)
-                    )
-                elif pname in pvals_raw:
-                    v = _cast_partition_value(
-                        pvals_raw[pname], types.get(f.name, "string")
-                    )
-                    arrays.append(pa.repeat(pa.scalar(v, f.type), n))
-                elif pname in present:
-                    col = tbl.column(pname).combine_chunks()
-                    col = self._maybe_unshred(col, f.type)
-                    if (
-                        pa.types.is_timestamp(f.type)
-                        and f.type.tz is not None
-                        and pa.types.is_timestamp(col.type)
-                        and col.type.tz is None
-                    ):
-                        # naive parquet timestamps hold UTC wall-clock
-                        # values — pin, don't shift
-                        col = pc.assume_timezone(col, f.type.tz)
-                    arrays.append(col.cast(f.type))
-                else:
-                    arrays.append(pa.nulls(n, f.type))  # pre-evolution
-            out = pa.table(arrays, schema=target).combine_chunks()
-            yield from out.to_batches()
+        else:
+            for rel, pvals, dv in partition.files:
+                yield from self._arrow_batches(
+                    partition.root, rel, partition.version, pvals, dv
+                )
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in Spark's checkpoint; the log is immutable
@@ -918,10 +836,8 @@ class DeltaChangeFeedDataSource(DataSource):
         return "delta_feed"
 
     def schema(self) -> StructType:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("delta_feed requires .option('path', <table>)")
-        _root, _adds, meta = _replay(path, None)
+        root = _table_root(self.options.get("path"))
+        _root, _adds, meta = _replay(root, None)
         base = StructType.fromJson(json.loads(meta["schemaString"]))
         cdf = str(self.options.get("readchangefeed", "false")).lower() == "true"
         extra = (

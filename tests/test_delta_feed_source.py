@@ -1044,3 +1044,20 @@ def test_feed_reconstruction_refuses_folded_collation_keys(
     with pytest.raises(Exception, match="fold|collation"):
         q.awaitTermination(120)
         raise AssertionError("expected the stream to fail planning")
+
+
+@pytest.mark.parametrize(
+    "path", ["s3a://bucket/t", "hdfs:///warehouse/t", "file://nas01/t"]
+)
+def test_feed_refuses_non_local_table(path):
+    """The planner and tasks run in JVM-less Python workers, so a table
+    they cannot reach through ``os`` is refused when the reader is
+    built, not later with an os-level error."""
+    from pyspark.sql.types import StructType
+
+    from portfolio_data_pipelines_spark.sources.delta_feed import (
+        DeltaFeedStreamReader,
+    )
+
+    with pytest.raises(ValueError, match="local tables only.*without a JVM"):
+        DeltaFeedStreamReader(StructType([]), {"path": path})

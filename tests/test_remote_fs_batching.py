@@ -6,8 +6,13 @@ and (on object stores) a metadata RPC. These tests DISGUISE a local
 table as remote — monkeypatching ``_local_path`` to always miss — and
 count the calls crossing the fs handle, pinning that:
 
-- ``_list_log_versions`` costs O(1) listings, not one ``exists`` probe
-  per version;
+- the log tail (``_log_tail``) costs O(1) listings, not one ``exists``
+  probe per version, and reads the ``_last_checkpoint`` pointer before
+  it lists;
+- ``_commit_actions`` reads a commit without an existence probe and
+  reports a missing one as ``FileNotFoundError`` naming the version;
+- ``read_delta_changes`` and ``read_delta_cdf`` list the log once and
+  read each commit once;
 - ``_read_text`` moves a commit file in one buffered transfer, not one
   ``readLine`` round trip per line;
 - ``_replay_log`` adds no per-version existence probe on top;
@@ -23,11 +28,16 @@ URIs with a foreign authority are NOT treated as local.
 from __future__ import annotations
 
 import json
+import os
 from collections import Counter, defaultdict
 
 import pytest
 
-from portfolio_data_pipelines_spark.operators import delta_checkpoint
+from portfolio_data_pipelines_spark.operators import (
+    delta_cdf,
+    delta_checkpoint,
+    delta_scan,
+)
 from portfolio_data_pipelines_spark.operators import delta_log as dl
 from portfolio_data_pipelines_spark.operators import hadoop_io as hio
 
@@ -76,13 +86,94 @@ def test_list_log_versions_lists_once(spark, tmp_path, no_local_fastpath):
     path = _make_table(spark, tmp_path, 6)
     fs, _, jvm = hio._hadoop_fs(spark, path)
     cfs = _CountingFS(fs)
-    versions = dl._list_log_versions(cfs, jvm, path)
+    versions = dl._log_tail(cfs, jvm, path)[0]
     assert versions == list(range(6))
     assert cfs.calls["listStatus"] == 1
     # exists: the log-dir probe + the _last_checkpoint pointer probe —
     # NOT one per version (the r16 form made 7+ here)
     assert cfs.calls["exists"] <= 2
     assert sum(cfs.calls.values()) <= 4
+
+
+def test_log_tail_reads_pointer_before_listing(spark, tmp_path, monkeypatch):
+    # listing first could miss the commits a checkpoint landing between
+    # the two calls anchors on, and return an empty run
+    path = _make_table(spark, tmp_path, 2)
+    order = []
+    real_doc = delta_checkpoint._read_last_checkpoint_doc
+    real_list = dl._all_commit_versions
+    monkeypatch.setattr(
+        delta_checkpoint, "_read_last_checkpoint_doc",
+        lambda *a: order.append("pointer") or real_doc(*a),
+    )
+    monkeypatch.setattr(
+        dl, "_all_commit_versions",
+        lambda *a: order.append("listing") or real_list(*a),
+    )
+    fs, _, jvm = hio._hadoop_fs(spark, path)
+    assert dl._log_tail(fs, jvm, path)[0] == [0, 1]
+    assert order == ["pointer", "listing"]
+
+
+def _write_commit_text(path, version: int, text: str) -> None:
+    os.makedirs(f"{path}/_delta_log", exist_ok=True)
+    with open(f"{path}/{dl._log_path(version)}", "w") as f:
+        f.write(text)
+
+
+def test_commit_actions_decodes_paths_and_skips_blank_lines(tmp_path):
+    path = str(tmp_path / "t")
+    rel = "k=100%25 off/part-0.parquet"  # physical: hive-escaped '%'
+    _write_commit_text(path, 0, "\n".join([
+        "",
+        json.dumps({"commitInfo": {"operation": "WRITE"}}),
+        "   ",
+        json.dumps({"add": {"path": dl._encode_path(rel)}}),
+        json.dumps({"remove": {"path": dl._encode_path(rel)}}),
+        json.dumps({"cdc": {"path": "_change_data/a%20b.parquet"}}),
+        "",
+    ]))
+    actions = dl._commit_actions(None, None, path, 0)
+    assert [next(iter(a)) for a in actions] == [
+        "commitInfo", "add", "remove", "cdc",
+    ]
+    assert actions[1]["add"]["path"] == rel
+    assert actions[2]["remove"]["path"] == rel
+    assert actions[3]["cdc"]["path"] == "_change_data/a b.parquet"
+
+
+def test_commit_actions_missing_version_local(tmp_path):
+    path = str(tmp_path / "t")
+    _write_commit_text(path, 0, json.dumps({"commitInfo": {}}))
+    with pytest.raises(FileNotFoundError, match="commit 3 missing"):
+        dl._commit_actions(None, None, path, 3)
+
+
+def test_commit_actions_hadoop_branch(spark, tmp_path, no_local_fastpath):
+    path = _make_table(spark, tmp_path, 2)
+    fs, _, jvm = hio._hadoop_fs(spark, path)
+    cfs = _CountingFS(fs)
+    actions = dl._commit_actions(cfs, jvm, path, 1)
+    assert any("add" in a for a in actions)
+    # a hit is one open, with no existence probe first
+    assert cfs.calls["open"] == 1
+    assert cfs.calls["exists"] == 0
+    # a miss surfaces as FileNotFoundError naming the version, not as a
+    # raw py4j error
+    with pytest.raises(FileNotFoundError, match="commit 7 missing"):
+        dl._commit_actions(cfs, jvm, path, 7)
+    assert cfs.calls["exists"] == 0
+
+
+def test_pinned_replay_below_cleaned_checkpoint_raises(
+    spark, tmp_path, no_local_fastpath
+):
+    path = _make_table(spark, tmp_path, 4)
+    delta_checkpoint.checkpoint_delta(spark, path, 2)
+    os.remove(f"{path}/{dl._log_path(0)}")
+    assert len(dl._replay_log(spark, path, 3).adds) == 4
+    with pytest.raises(FileNotFoundError, match="commit 0 missing"):
+        dl._replay_log(spark, path, 1)
 
 
 def test_read_text_single_transfer(spark, tmp_path, no_local_fastpath):
@@ -130,6 +221,52 @@ def _count_fs_calls(spark, monkeypatch) -> _CountingFS:
             mod, "_hadoop_fs", lambda s, p: (cfs, *real(s, p)[1:])
         )
     return cfs
+
+
+def _count_change_read_calls(spark, monkeypatch) -> _CountingFS:
+    cfs = _count_fs_calls(spark, monkeypatch)
+    real = hio._hadoop_fs
+    for mod in (delta_scan, delta_cdf):
+        monkeypatch.setattr(
+            mod, "_hadoop_fs", lambda s, p: (cfs, *real(s, p)[1:])
+        )
+    return cfs
+
+
+@pytest.mark.parametrize("read", ["changes", "cdf"])
+def test_change_reads_list_once(
+    spark, tmp_path, no_local_fastpath, monkeypatch, read
+):
+    path = _make_table(spark, tmp_path, 6)
+    cfs = _count_change_read_calls(spark, monkeypatch)
+    if read == "changes":
+        df = delta_scan.read_delta_changes(spark, path, 1, 5)
+    else:
+        df = delta_cdf.read_delta_cdf(spark, path, 1, to_version=5)
+    assert df.count() == 40
+    # one tail (pointer probe, log-dir probe, one listing) shared by
+    # every replay of the read; each commit of the range opened once
+    assert cfs.calls["listStatus"] == 1
+    assert cfs.calls["exists"] == 2
+    if read == "changes":
+        # the tip replay opens v0..v5, the range loop v2..v5
+        assert cfs.calls["open"] == 10
+    else:
+        # + the from-version replay's v0..v1
+        assert cfs.calls["open"] <= 12
+
+
+@pytest.mark.parametrize("read", ["changes", "cdf"])
+def test_change_reads_on_local_table_probe_nothing(
+    spark, tmp_path, monkeypatch, read
+):
+    path = _make_table(spark, tmp_path, 6)
+    cfs = _count_change_read_calls(spark, monkeypatch)
+    if read == "changes":
+        delta_scan.read_delta_changes(spark, path, 1, 5)
+    else:
+        delta_cdf.read_delta_cdf(spark, path, 1, to_version=5)
+    assert cfs.calls["exists"] == 0
 
 
 def test_append_lists_log_once(spark, tmp_path, no_local_fastpath, monkeypatch):
