@@ -164,17 +164,18 @@ def _checkpoint_files(fs, jvm, path: str, lc: dict) -> list[str]:
     ):
         return [classic]
     prefix = f"{v:020d}.checkpoint."
-    log_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/_delta_log")
+    log_dir = f"{path}/_delta_log"
+    lp = _local_path(log_dir)
+    names = os.listdir(lp) if lp is not None else [
+        st.getPath().getName()
+        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(log_dir))
+    ]
     # the spec allows V2 manifests in BOTH formats: parquet AND NDJSON
     # (V.checkpoint.<uuid>.json)
     found = sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(log_dir)
-        if st.getPath().getName().startswith(prefix)
-        and (
-            st.getPath().getName().endswith(".parquet")
-            or st.getPath().getName().endswith(".json")
-        )
+        n for n in names
+        if n.startswith(prefix)
+        and (n.endswith(".parquet") or n.endswith(".json"))
     )
     multipart = re.compile(
         rf"{v:020d}\.checkpoint\.\d{{10}}\.\d{{10}}\.parquet$"

@@ -129,8 +129,9 @@ def _idmode_validate_shape(jtype, path: str) -> None:
     keys/values — must carry ``delta.columnMapping.id``: StructFields
     exist (and carry metadata) below repeated levels too, and Spark 4's
     parquet field-id machinery both stamps and resolves them there
-    (verified empirically; delta_reader's pyarrow remap recurses the
-    same way). Only a struct field MISSING its id is refused."""
+    (verified empirically; the streaming feed's pyarrow alignment
+    recurses the same way). Only a struct field MISSING its id is
+    refused."""
     if not isinstance(jtype, dict):
         return
     t = jtype.get("type")

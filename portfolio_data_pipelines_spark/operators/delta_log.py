@@ -531,8 +531,7 @@ def _variant_physical(
     )
 
     def conv(batches):
-        from .delta_reader import _variant_metadata_keys, _variant_value
-        from .variant import _encode_value, shred_scalar
+        from .variant import _decode, _encode_value, _metadata_keys, shred_scalar
 
         _py = {
             "long": lambda x: isinstance(x, int)
@@ -572,14 +571,13 @@ def _variant_physical(
             # the full binary
             if v is None:
                 return None
-            keys = _variant_metadata_keys(v.metadata)
             if not v.value or (v.value[0] & 3) != 2:  # not an object
                 return {
                     "metadata": v.metadata, "value": v.value,
                     "typed_value": None,
                 }
-            obj = _variant_value(v.value, 0, keys)[0]
-            key_ids = {k: i for i, k in enumerate(keys)}
+            obj = _decode(v.value, v.metadata)
+            key_ids = {k: i for i, k in enumerate(_metadata_keys(v.metadata))}
             tv = {}
             for f, t in spec.items():
                 if f not in obj:
@@ -613,9 +611,8 @@ def _variant_physical(
                     "metadata": v.metadata, "value": v.value,
                     "typed_value": None,
                 }
-            keys = _variant_metadata_keys(v.metadata)
-            arr = _variant_value(v.value, 0, keys)[0]
-            key_ids = {k: i for i, k in enumerate(keys)}
+            arr = _decode(v.value, v.metadata)
+            key_ids = {k: i for i, k in enumerate(_metadata_keys(v.metadata))}
             tv = []
             for x in arr:
                 if _py[elem_t](x):
@@ -2554,8 +2551,32 @@ def _replay_log(
     JSON + the checkpoint file(s) + the commit tail), never the full
     history; pinned-version reads at or after the checkpoint do the
     same. ``tail`` is a :func:`_log_tail` result the caller already
-    holds, so the log is not listed again."""
+    holds, so the log is not listed again.
+
+    On top of :func:`_replay_state` it refuses collations the running
+    Spark build does not resolve: the engine compares by them, so one
+    it cannot honor would silently change string semantics."""
     fs, _, jvm = _hadoop_fs(spark, path)
+    st = _replay_state(fs, jvm, path, version, tail)
+    declared = set((st.protocol or {}).get("readerFeatures") or ())
+    if declared & _COLLATION_FEATURES:
+        bad = _unsupported_collations(st.meta)
+        if bad:
+            raise ValueError(
+                f"table declares collation(s) {bad} this Spark build does "
+                "not resolve; refusing to read rather than silently "
+                "changing string comparison semantics."
+            )
+    return st
+
+
+def _replay_state(fs, jvm, path: str, version: int | None,
+                  tail: tuple[list[int], dict | None] | None = None,
+                  ) -> LogState:
+    """:func:`_replay_log` without a session: ``fs=jvm=None`` replays a
+    local table (the streaming feed's JVM-less Python workers). The
+    reader-feature gate passes declared collations; resolving them
+    needs a Spark build, so :func:`_replay_log` checks them."""
     versions, lc = tail if tail is not None else _log_tail(fs, jvm, path)
     if not versions:
         raise FileNotFoundError(f"no _delta_log under {path}")
@@ -2727,25 +2748,13 @@ def _replay_log(
                     "feature-granular protocol."
                 )
             feats = set(protocol["readerFeatures"])
-            unknown = feats - _SUPPORTED_READER_FEATURES
-            # collation features: accepted when the RUNNING Spark build
-            # resolves every declared collation — UTF8_BINARY /
-            # UTF8_LCASE statically (r12) and the bundled ICU set
-            # (UNICODE, UNICODE_CI, locale forms) by probe (r13); the
-            # materialized collated StringType then carries the exact
-            # compare/grouping semantics natively. Only names this
-            # build cannot resolve stay refused.
-            coll = unknown & _COLLATION_FEATURES
-            if coll:
-                bad = _unsupported_collations(meta)
-                if bad:
-                    raise ValueError(
-                        f"table declares collation(s) {bad} this Spark "
-                        "build does not resolve; refusing to read "
-                        "rather than silently changing string "
-                        "comparison semantics."
-                    )
-                unknown -= coll
+            # collation features pass here: whether the running Spark
+            # build resolves each declared collation (UTF8_BINARY /
+            # UTF8_LCASE statically, the bundled ICU set by probe) is
+            # _replay_log's check
+            unknown = (
+                feats - _SUPPORTED_READER_FEATURES - _COLLATION_FEATURES
+            )
             if unknown:
                 raise ValueError(
                     f"table requires reader features {sorted(unknown)} "

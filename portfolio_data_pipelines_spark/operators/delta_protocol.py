@@ -5,8 +5,8 @@ reader/writer feature capability sets, creation-protocol derivation,
 the writer gate, protocol upgrades/downgrades, collation support
 probing, and the icebergCompat duty checks. No Spark session, no
 filesystem — everything here is dict-in/dict-out, which is what makes
-the gates unit-testable and reusable by both the writer (delta_log)
-and the independent reader (delta_reader).
+the gates unit-testable and reusable by the writer (delta_log) and the
+read path.
 
 Reference: delta-io PROTOCOL.md (Table Features, Column Mapping,
 Iceberg Compatibility, Collations); see the per-function docstrings.

@@ -8,8 +8,8 @@ derivation), the log-only data-skipping proofs (`_file_may_match` /
 `read_delta` with predicate skipping and time travel
 (`version_as_of`), and the incremental append feed
 (`read_delta_changes`). Write-side machinery (staging, commit,
-replay) stays in delta_log; the independent spec-only reader lives in
-``delta_reader.py``.
+replay) stays in delta_log; the independent spec-only reader the tests
+compare against lives in ``tests/delta_reader.py``.
 
 Reference: delta-io PROTOCOL.md (Data Skipping / Deletion Vectors /
 Row Tracking / Column Mapping) and delta-spark's DeltaScan.

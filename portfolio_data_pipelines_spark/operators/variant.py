@@ -1,16 +1,17 @@
-"""Open Variant binary encoding — the ENCODER side.
+"""Open Variant binary encoding — the engine's encoder, and its
+decoding of shredded cells.
 
 The parquet-format spec (VariantEncoding.md, the encoding Delta's
 ``variantType`` table feature stores as a ``struct<value binary,
 metadata binary>`` pair) defines a little-endian binary document
 format: a metadata dictionary of UTF-8 keys plus a recursive value
-encoding. The repo already carries an independent from-spec DECODER
-(``operators/delta_reader.py:_variant_value`` — used by the external
-conformance reader); this module is the inverse, written from the same
-spec text and sharing no code with either that decoder or pyspark's
-``VariantVal`` — so conformance tests can pin THREE implementations
-against each other (this encoder, the external decoder, and Spark's
-own variant reader).
+encoding. The encoder is written from the spec text and shares no code
+with pyspark's ``VariantVal`` or with the independent from-spec decoder
+of the test oracle (``tests/delta_reader.py``), so conformance tests
+pin THREE implementations against each other (this encoder, the
+oracle's decoder, and Spark's own variant reader). Decoding a binary
+value goes through ``VariantVal.toPython`` (:func:`_decode`);
+:func:`_shredded_value` reassembles shredded cells around it.
 
 Uses:
 - building FOREIGN variant table fixtures without Spark (tests write
@@ -217,6 +218,69 @@ def encode_variant(value) -> tuple[bytes, bytes]:
     ordered = sorted(keys)
     key_ids = {k: i for i, k in enumerate(ordered)}
     return _encode_metadata(ordered), _encode_value(value, key_ids)
+
+
+def _metadata_keys(md: bytes) -> list[str]:
+    """The metadata dictionary's keys in id order — the inverse of
+    :func:`_encode_metadata`."""
+    if (md[0] & 0x0F) != 1:
+        raise ValueError(f"unsupported variant metadata version {md[0] & 0x0F}")
+    osz = ((md[0] >> 6) & 3) + 1
+    n = int.from_bytes(md[1:1 + osz], "little")
+    offs = [
+        int.from_bytes(md[1 + i * osz:1 + (i + 1) * osz], "little")
+        for i in range(1, n + 2)
+    ]
+    base = 1 + (n + 2) * osz
+    return [md[base + offs[i]:base + offs[i + 1]].decode() for i in range(n)]
+
+
+def _decode(value: bytes, metadata: bytes):
+    """One binary variant value → Python via ``VariantVal.toPython``,
+    under a 50-digit decimal context: the default 28 digits would round
+    a 38-digit decimal16."""
+    from decimal import localcontext
+
+    from pyspark.sql.types import VariantVal
+
+    with localcontext() as ctx:
+        ctx.prec = 50
+        return VariantVal(bytes(value), bytes(metadata)).toPython()
+
+
+def _shredded_value(value, typed, metadata: bytes):
+    """One shredded (value?, typed_value?) pair → Python
+    (VariantShredding.md): a null ``typed_value`` defers to the binary
+    ``value``; an object's per-field groups are absent when both-null,
+    and its binary ``value`` holds the residual fields; array elements
+    are per-element groups; a scalar ``typed_value`` IS the value."""
+    if typed is None:
+        return None if value is None else _decode(value, metadata)
+    if isinstance(typed, dict):
+        out = {
+            name: _shredded_value(grp.get("value"), grp.get("typed_value"),
+                                  metadata)
+            for name, grp in typed.items()
+            if grp is not None
+            and (grp.get("value") is not None
+                 or grp.get("typed_value") is not None)
+        }
+        if value is not None:
+            resid = _decode(value, metadata)
+            if not isinstance(resid, dict):
+                raise ValueError(
+                    "shredded object residual value must be an object, "
+                    f"got {type(resid).__name__}"
+                )
+            out.update(resid)
+        return out
+    if isinstance(typed, list):
+        return [
+            None if e is None
+            else _shredded_value(e.get("value"), e.get("typed_value"), metadata)
+            for e in typed
+        ]
+    return typed  # scalar shredded type: already parquet-typed Python
 
 
 #: Scalar shred targets this writer supports (VariantShredding.md

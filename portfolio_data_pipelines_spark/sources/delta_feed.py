@@ -18,14 +18,13 @@ Design:
   together so a cold backfill doesn't pay one Python-worker round-trip
   per file, while a commit landing 200 MB still fans out across ~50
   tasks. ``maxBytesPerTask=0`` restores strict one-file-per-task.
-- **Log access is Python-side**: the planner lists the log and reads
-  each commit through the engine's own helpers
-  (``delta_log._all_commit_versions`` / ``_commit_actions``, called
-  without a JVM), and takes the live set and metadata from the
-  conformance reader ``operators/delta_reader``; it never reads the
-  data. Each task reads exactly its parquet files via pyarrow —
-  acceptable by design because a feed batch touches only the files of
-  new commits, never the table.
+- **Log access is Python-side**: the planner lists the log, reads
+  each commit and replays the live set and metadata through the
+  engine's own helpers (``delta_log._all_commit_versions`` /
+  ``_commit_actions`` / ``_replay_state``, called without a JVM); it
+  never reads the data. Each task reads exactly its parquet files via
+  pyarrow — acceptable by design because a feed batch touches only the
+  files of new commits, never the table.
 - Every output row carries ``_commit_version``, the same contract as
   the batch ``read_delta_changes``.
 
@@ -86,6 +85,7 @@ import json
 import os
 from collections.abc import Iterator, Sequence
 
+import numpy as np
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
@@ -100,14 +100,9 @@ from pyspark.sql.types import (
 )
 
 from ..operators import delta_log as dl
-from ..operators.delta_reader import (
-    _cast_partition_value,
-    _config_of,
-    _dv_deleted_rows,
-    _dv_of,
-    _replay,
-)
-from ..operators.hadoop_io import _local_path
+from ..operators.deletion_vectors import descriptor_positions
+from ..operators.hadoop_io import _local_path, _read_bytes
+from ..operators.variant import _shredded_value, encode_variant
 
 
 def _arrow_type_of_json(jtype):
@@ -123,6 +118,44 @@ def _arrow_type_of_json(jtype):
         ],
     }).fields[0].dataType
     return to_arrow_type(dt)
+
+
+def _cast_partition_value(v: str | None, type_name: str):
+    """partitionValues are logical STRINGS in the log; cast to the
+    schemaString type."""
+    import datetime as dt
+
+    if v is None:
+        return None
+    if type_name in ("byte", "short", "integer", "long"):
+        return int(v)
+    if type_name in ("float", "double"):
+        return float(v)
+    if type_name == "boolean":
+        return v == "true"
+    if type_name == "date":
+        return dt.date.fromisoformat(v)
+    if type_name.startswith("decimal"):
+        import decimal
+
+        return decimal.Decimal(v)
+    if type_name in ("timestamp", "timestamp_ntz"):
+        return dt.datetime.fromisoformat(v)
+    return v
+
+
+def _dv_keep(root: str, dv: dict, n_rows: int) -> np.ndarray:
+    """The keep-mask of a data file's ``n_rows`` rows: False at each
+    position its deletion vector marks deleted."""
+    keep = np.ones(n_rows, dtype=bool)
+    keep[descriptor_positions(
+        dv,
+        lambda loc: _read_bytes(
+            None, None, loc if "://" in loc or loc.startswith("/")
+            else f"{root}/{loc}"
+        ),
+    )] = False
+    return keep
 
 
 def _align_nested_arrow(arr, jtype):
@@ -288,9 +321,11 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
         # stream start (the schema is pinned for the query's lifetime,
         # Spark streaming semantics — a mid-stream rename needs a
         # restart, as in delta-spark).
-        _root, _adds, meta = _replay(self.root, None)
+        meta = dl._replay_state(None, None, self.root, None).meta
         _jfields = json.loads(meta["schemaString"]).get("fields", [])
-        _cm_mode = _config_of(meta).get("delta.columnMapping.mode", "none")
+        _cm_mode = (meta.get("configuration") or {}).get(
+            "delta.columnMapping.mode", "none"
+        )
         if _cm_mode in ("name", "id"):
             self.phys = {
                 f["name"]: (f.get("metadata") or {}).get(
@@ -317,10 +352,10 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
         # pyarrow read, so the name-keyed plumbing below applies
         # unchanged (r12; refused through r11).
         if _cm_mode == "id":
-            from ..operators.delta_reader import _idmode_check_shape
+            from ..operators.delta_colmap import _idmode_validate_shape
 
             for _f in _jfields:
-                _idmode_check_shape(_f.get("type"), _f["name"])
+                _idmode_validate_shape(_f.get("type"), _f["name"])
             self.fids = {
                 f["name"]: int(
                     (f.get("metadata") or {})["delta.columnMapping.id"]
@@ -373,23 +408,17 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
     def _unshred_cell(cell):
         """One parquet-level variant cell → the plain (value, metadata)
         pair. SHREDDED cells (a ``typed_value`` field present —
-        VariantShredding.md) are reassembled with the external reader's
-        from-spec logic and re-encoded through the spec encoder; plain
-        pairs and nulls pass through untouched. Residual-only rows
-        (typed_value null, value present) keep their original bytes."""
+        VariantShredding.md) are reassembled by
+        ``variant._shredded_value`` and re-encoded through the spec
+        encoder; plain pairs and nulls pass through untouched.
+        Residual-only rows (typed_value null, value present) keep their
+        original bytes."""
         if cell is None or "typed_value" not in cell:
             return cell
         if cell.get("typed_value") is None and cell.get("value") is not None:
             return {"value": cell["value"], "metadata": cell["metadata"]}
-        from ..operators.delta_reader import (
-            _shredded_value,
-            _variant_metadata_keys,
-        )
-        from ..operators.variant import encode_variant
-
-        keys = _variant_metadata_keys(cell["metadata"])
         py = _shredded_value(
-            cell.get("value"), cell.get("typed_value"), keys
+            cell.get("value"), cell.get("typed_value"), cell["metadata"]
         )
         md, vb = encode_variant(py)
         return {"value": vb, "metadata": md}
@@ -515,7 +544,8 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
                 parts.extend(
                     _FeedFilePartition(v, root, group)
                     for group in self._size_groups(
-                        ((a["path"], a.get("partitionValues", {}), _dv_of(a)),
+                        ((a["path"], a.get("partitionValues", {}),
+                          a.get("deletionVector")),
                          int(a.get("size", 0)))
                         for a in adds_v
                     )
@@ -528,8 +558,7 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
         sv = int(start["version"])
         live: dict[str, dict] = {}
         if sv >= 0:
-            _root, adds0, _meta = _replay(root, sv)
-            live = dict(adds0)
+            live = dl._replay_state(None, None, root, sv).adds
         for v in range(sv + 1, int(end["version"]) + 1):
             adds_v: list = []
             removed_v: list = []
@@ -543,7 +572,7 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
                     if a.get("dataChange", True):
                         adds_v.append(
                             (a["path"], a.get("partitionValues", {}),
-                             _dv_of(a))
+                             a.get("deletionVector"))
                         )
                         touched_bytes += int(a.get("size", 0))
                 elif "remove" in action:
@@ -552,7 +581,7 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
                     if r.get("dataChange", True) and prev is not None:
                         removed_v.append(
                             (r["path"], prev.get("partitionValues", {}),
-                             _dv_of(prev))
+                             prev.get("deletionVector"))
                         )
                         touched_bytes += int(prev.get("size", 0))
                 elif "cdc" in action:
@@ -635,11 +664,10 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
             for c, v in pvals_raw.items()
         }
         table = self._id_align(pq.read_table(os.path.join(root, rel)))
+        if dv is not None:
+            table = table.filter(_dv_keep(root, dv, table.num_rows))
         present = set(table.column_names)
         rows = table.to_pylist()
-        if dv is not None:
-            dead = _dv_deleted_rows(root, dv)
-            rows = [r for i, r in enumerate(rows) if i not in dead]
         def cell(row, f):
             v = _fix_ts(row[self._phys(f.name)], types[f.name])
             # shredded variant cells (typed_value present) reassemble
@@ -766,15 +794,8 @@ class DeltaFeedStreamReader(DataSourceStreamReader):
         tbl = self._id_align(pq.read_table(os.path.join(root, rel)))
         if dv is not None:
             # DV'd positions are logically deleted — drop them before
-            # the batch leaves the task (arrow take keeps the zero-copy
-            # path for the survivors)
-            dead = _dv_deleted_rows(root, dv)
-            tbl = tbl.take(
-                pa.array(
-                    [i for i in range(tbl.num_rows) if i not in dead],
-                    type=pa.int64(),
-                )
-            )
+            # the batch leaves the task
+            tbl = tbl.filter(_dv_keep(root, dv, tbl.num_rows))
         n = tbl.num_rows
         present = set(tbl.column_names)
         target = to_arrow_schema(self.schema)
@@ -837,7 +858,7 @@ class DeltaChangeFeedDataSource(DataSource):
 
     def schema(self) -> StructType:
         root = _table_root(self.options.get("path"))
-        _root, _adds, meta = _replay(root, None)
+        meta = dl._replay_state(None, None, root, None).meta
         base = StructType.fromJson(json.loads(meta["schemaString"]))
         cdf = str(self.options.get("readchangefeed", "false")).lower() == "true"
         extra = (

@@ -22,6 +22,10 @@ Deliberate independence rules (kept even where sharing would be DRY):
   URL-decode the logical ``path`` of each action, join to the table
   root.
 
+The independence runs both ways: this module lives under ``tests/``
+and no package module imports it (``test_delta_external_reader.py``
+pins both directions with an AST scan).
+
 Local-filesystem only (the sandbox has no object store); an external
 deployment would swap ``os`` calls for its store's SDK.
 """

@@ -2,7 +2,7 @@
 
 The loop this closes: this engine's Delta writer is verified against
 (a) Spark's own reader and (b) an independent from-spec Python reader
-(``operators/delta_reader``), but a FOREIGN engine reading a written
+(``tests/delta_reader``), but a FOREIGN engine reading a written
 table end-to-end has been environment-blocked every round — the
 ``deltalake`` wheel and DuckDB's ``delta`` extension both need network
 access to install. This script is the CI-shaped version of that check:
@@ -12,7 +12,7 @@ probe result and exits 0 (blocked ≠ failed).
 
 Usage::
 
-    PYTHONPATH=/root/repo python tools/interop_probe.py [--sf-dir DIR]
+    python tests/interop_probe.py [--self-test]   # from the repo root
 
 Matrix (one table per row, written by THIS engine, read by each
 available foreign reader, values compared against Spark's read):
@@ -359,12 +359,10 @@ def run_matrix(spark, readers: dict, work: str) -> list[dict]:
 
 def _foreign_read_external(path: str):
     """--self-test pseudo-foreign reader: the repo's own independent
-    from-spec reader (operators/delta_reader) — proves the matrix
+    from-spec reader (tests/delta_reader) — proves the matrix
     machinery (builders, comparisons, error routing) end to end in a
     blocked environment. NOT a substitute for a real foreign engine."""
-    from portfolio_data_pipelines_spark.operators.delta_reader import (
-        read_delta_external,
-    )
+    from tests.delta_reader import read_delta_external
 
     names, rows = read_delta_external(path)
     return names, rows  # list, not set — variant cells are dicts

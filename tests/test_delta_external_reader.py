@@ -1,6 +1,6 @@
 """Wire-format conformance via an INDEPENDENT reader.
 
-``operators/delta_reader.py`` re-implements a Delta table read from the
+``tests/delta_reader.py`` re-implements a Delta table read from the
 open protocol alone — fresh module, pyarrow data path, no imports from
 the writer (``delta_log.py``) — standing in for the external Delta
 implementations absent from this sandbox (delta-spark JAR, deltalake
@@ -20,7 +20,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from portfolio_data_pipelines_spark.operators import delta_reader
+from tests import delta_reader
 from portfolio_data_pipelines_spark.operators.delta_checkpoint import (
     DELTA_CHECKPOINT_EVERY,
 )
@@ -31,7 +31,7 @@ from portfolio_data_pipelines_spark.operators.delta_maintain import (
 )
 from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
-from portfolio_data_pipelines_spark.operators.delta_reader import (
+from tests.delta_reader import (
     read_delta_external,
 )
 
@@ -54,6 +54,31 @@ def test_reader_shares_no_code_with_writer():
             assert "delta_log" not in m, f"writer import leaked: {m}"
             assert not m.startswith("pyspark"), f"Spark import leaked: {m}"
     assert not hasattr(importlib.import_module(delta_reader.__name__), "read_delta")
+
+
+def test_engine_never_imports_the_reader():
+    """The reverse direction: no package module imports the oracle, so
+    an engine bug cannot hide in code both sides of a parity test run."""
+    import ast
+    import pathlib
+
+    import portfolio_data_pipelines_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    leaks = []
+    for f in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""] + [a.name for a in node.names]
+            else:
+                continue
+            leaks += [
+                f"{f.relative_to(root)}: {m}" for m in mods
+                if "delta_reader" in m
+            ]
+    assert not leaks, leaks
 
 
 def _assert_match(spark, path, version=None):
@@ -399,7 +424,7 @@ def test_timestamp_as_of_parity(spark, tmp_path):
         DELTA_CHECKPOINT_EVERY,
     )
     from portfolio_data_pipelines_spark.operators.delta_scan import version_as_of
-    from portfolio_data_pipelines_spark.operators.delta_reader import (
+    from tests.delta_reader import (
         read_delta_external_as_of,
         version_as_of_external,
     )
@@ -436,7 +461,7 @@ def test_check_constraint_configuration_roundtrip(spark, tmp_path):
         DELTA_CHECKPOINT_EVERY,
         checkpoint_delta,
     )
-    from portfolio_data_pipelines_spark.operators.delta_reader import (
+    from tests.delta_reader import (
         table_configuration,
     )
 

@@ -1061,3 +1061,69 @@ def test_feed_refuses_non_local_table(path):
 
     with pytest.raises(ValueError, match="local tables only.*without a JVM"):
         DeltaFeedStreamReader(StructType([]), {"path": path})
+
+
+def test_cdf_batch_from_checkpoint_version_rewrites_checkpointed_file(
+    registered, tmp_path, monkeypatch
+):
+    """A readChangeFeed batch whose start offset IS a checkpoint version
+    takes the pre-commit live set from that checkpoint. pyarrow returns
+    its partitionValues as (key, value) pairs; the replay must hand the
+    task a dict, or the reconstruction of a rewritten checkpointed file
+    fails."""
+    import os
+
+    from portfolio_data_pipelines_spark.operators import delta_checkpoint
+    from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
+
+    monkeypatch.setattr(delta_checkpoint, "DELTA_CHECKPOINT_EVERY", 2)
+    spark = registered
+    path = str(tmp_path / "t_cdf_ckpt")
+    for rows in (
+        [(1, 1.0, _day("2021-01-01")), (2, 2.0, _day("2021-01-01"))],
+        [(3, 3.0, _day("2021-01-02"))],
+        [(4, 4.0, _day("2021-01-03"))],
+    ):
+        write_delta(spark, _df(spark, rows).coalesce(1), path,
+                    partition_col="date")
+    assert os.path.exists(f"{path}/_delta_log/{2:020d}.checkpoint.parquet")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    _run_cdf_available(spark, path, out, ckpt)  # offset ends at v2
+    merge_delta(  # v3 rewrites v0's file: update id2, carry id1, insert id5
+        spark, path,
+        _df(spark, [(2, 20.0, _day("2021-01-01")),
+                    (5, 5.0, _day("2021-01-04"))]),
+        key_cols=["id"],
+    )
+    _run_cdf_available(spark, path, out, ckpt)
+    got = sorted(
+        (r["_change_type"], r["id"], r["v"], r["date"])
+        for r in spark.read.parquet(out).collect()
+        if r["_commit_version"] == 3
+    )
+    assert got == [
+        ("insert", 5, 5.0, _day("2021-01-04")),
+        ("update_postimage", 2, 20.0, _day("2021-01-01")),
+        ("update_preimage", 2, 2.0, _day("2021-01-01")),
+    ]
+
+
+def test_feed_streams_icu_collated_table(registered, tmp_path):
+    """The feed's planner replays in a Python worker with no Spark
+    session, so it cannot probe which collations the build resolves:
+    declared collations pass its gate, and the rows stream."""
+    from tests.test_protocol_features import _collated_fixture
+
+    spark = registered
+    path = _collated_fixture(tmp_path, "t_feed_icu", "UNICODE_CI")
+    q = (
+        spark.readStream.format("delta_feed").option("path", path).load()
+        .writeStream.format("memory").queryName("feed_icu_mem")
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    got = sorted(
+        (r["id"], r["s"], r["_commit_version"])
+        for r in spark.sql("select * from feed_icu_mem").collect()
+    )
+    assert got == [(1, "a", 0), (2, "B", 0)]

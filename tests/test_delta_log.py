@@ -1254,7 +1254,7 @@ class TestMultiColumnPartitioning:
         assert sorted(tuple(r) for r in after.collect()) == rows_before
 
     def test_external_reader_parity_multicol(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.delta_reader import (
+        from tests.delta_reader import (
             read_delta_external,
         )
 
@@ -1912,7 +1912,7 @@ class TestFullTupleScoping:
             tuple(r) for r in read_delta(spark, path).collect()
         ) == sorted(want)
         # independent spec-only reader parity on the result
-        from portfolio_data_pipelines_spark.operators.delta_reader import (
+        from tests.delta_reader import (
             read_delta_external,
         )
 
@@ -1991,7 +1991,7 @@ class TestFullTupleScoping:
             tuple(r) for r in read_delta(spark, path).collect()
         ) == rows_before
         # untouched-cell files stayed multi... at least unchanged count
-        from portfolio_data_pipelines_spark.operators.delta_reader import (
+        from tests.delta_reader import (
             read_delta_external,
         )
 
@@ -2727,7 +2727,7 @@ class TestColumnMapping:
 
     def test_external_reader_parity_on_mapped_table(self, spark, tmp_path):
         from portfolio_data_pipelines_spark.operators.delta_alter import rename_column
-        from portfolio_data_pipelines_spark.operators.delta_reader import (
+        from tests.delta_reader import (
             read_delta_external,
         )
 
@@ -2898,7 +2898,7 @@ class TestConvertParquet:
             convert_parquet_to_delta,
             describe_history,
         )
-        from portfolio_data_pipelines_spark.operators.delta_reader import (
+        from tests.delta_reader import (
             read_delta_external,
         )
 
@@ -3254,7 +3254,7 @@ class TestInCommitTimestamps:
         import os
 
         from portfolio_data_pipelines_spark.operators.delta_scan import version_as_of
-        from portfolio_data_pipelines_spark.operators.delta_reader import (
+        from tests.delta_reader import (
             version_as_of_external,
         )
 
@@ -3627,7 +3627,7 @@ class TestWriteSideCDF:
         same CDF from the wire format alone (cdc files + derivation
         rules), and refuses cdc-less rewrites as a foreign reader
         must."""
-        from portfolio_data_pipelines_spark.operators.delta_reader import (
+        from tests.delta_reader import (
             read_delta_changes_external,
         )
 

@@ -40,7 +40,7 @@ from portfolio_data_pipelines_spark.operators.delta_maintain import (
 )
 from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
-from portfolio_data_pipelines_spark.operators.delta_reader import (
+from tests.delta_reader import (
     read_delta_external,
 )
 from portfolio_data_pipelines_spark.operators.variant import encode_variant
@@ -280,7 +280,7 @@ def test_encoder_spark_and_external_decoders_agree(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from portfolio_data_pipelines_spark.operators.delta_reader import (
+    from tests.delta_reader import (
         _variant_metadata_keys,
         _variant_value,
     )
@@ -565,6 +565,30 @@ def test_object_shredding_write_round_trips(spark, tmp_path):
         write_delta(
             spark, df, str(tmp_path / "t_obj_bad"), shred_variants={"v": {}}
         )
+
+
+def test_object_shred_residual_keeps_wide_decimal(spark, tmp_path):
+    """An object-shredded write decodes each cell and re-encodes its
+    residual fields. A 38-digit decimal there must survive: decoding it
+    under the default 28-digit decimal context would round it."""
+    from decimal import localcontext
+
+    wide = "12345678901234567890123456789012.345678"
+    path = str(tmp_path / "t_objshred_dec")
+    df = spark.range(0, 1).select(
+        "id", F.parse_json(F.lit(f'{{"a": 7, "d": {wide}}}')).alias("v")
+    )
+    write_delta(spark, df, path, shred_variants={"v": {"a": "long"}})
+    want = {0: {"a": 7, "d": Decimal(wide)}}
+    with localcontext() as ctx:
+        ctx.prec = 50
+        got = {
+            r["id"]: r["v"].toPython()
+            for r in read_delta(spark, path).collect()
+        }
+    assert got == want
+    names, rows = read_delta_external(path)
+    assert {r[0]: r[1] for r in rows} == want
 
 
 def test_array_shredded_write_round_trips_in_both_readers(spark, tmp_path):

@@ -28,7 +28,7 @@ from portfolio_data_pipelines_spark.operators.delta_maintain import (
     vacuum_delta,
 )
 from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
-from portfolio_data_pipelines_spark.operators.delta_reader import (
+from tests.delta_reader import (
     read_delta_external,
 )
 

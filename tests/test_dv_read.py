@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from portfolio_data_pipelines_spark.operators import deletion_vectors as dvc
 from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
-from portfolio_data_pipelines_spark.operators.delta_reader import (
+from tests.delta_reader import (
     read_delta_external,
 )
 

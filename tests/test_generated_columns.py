@@ -23,7 +23,7 @@ from portfolio_data_pipelines_spark.operators.delta_log import (
 )
 from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
-from portfolio_data_pipelines_spark.operators.delta_reader import (
+from tests.delta_reader import (
     read_delta_external,
 )
 

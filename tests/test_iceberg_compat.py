@@ -27,7 +27,7 @@ from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
 from portfolio_data_pipelines_spark.operators.delta_log import delete_where, write_delta
 from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
-from portfolio_data_pipelines_spark.operators.delta_reader import (
+from tests.delta_reader import (
     read_delta_external,
 )
 
@@ -47,7 +47,7 @@ def _data_files(path):
 
 
 def _live_files(path):
-    from portfolio_data_pipelines_spark.operators.delta_reader import _replay
+    from tests.delta_reader import _replay
 
     root, adds, _meta = _replay(path, None)
     import os
@@ -263,7 +263,7 @@ def test_array_evolution_assigns_element_ids_in_the_same_commit(
     )
     # the evolved schema declares the element id; the staged file's
     # list element node is stamped
-    from portfolio_data_pipelines_spark.operators.delta_reader import _replay
+    from tests.delta_reader import _replay
 
     _root, _adds, meta = _replay(path, None)
     tags = next(
@@ -382,7 +382,7 @@ def test_struct_evolution_on_compat_table_assigns_nested_ids(spark, tmp_path):
         path, mode="append",
     )
     # the evolved schema carries ids on the nested fields
-    from portfolio_data_pipelines_spark.operators.delta_reader import _replay
+    from tests.delta_reader import _replay
 
     _root, _adds, meta = _replay(path, None)
     o = next(

@@ -1,6 +1,6 @@
 """The interop-probe machinery, pinned in the suite (r13, VERDICT #9).
 
-``tools/interop_probe.py``'s 12-table conformance matrix ran ad hoc
+``tests/interop_probe.py``'s 12-table conformance matrix ran ad hoc
 through r12; this slow-marked test wires its ``--self-test`` mode (the
 repo's independent from-spec reader standing in for a foreign engine)
 into the suite so the matrix builders, comparisons, and error routing
@@ -12,16 +12,13 @@ interop gap the moment the environment allows it.
 
 from __future__ import annotations
 
-import sys
 import tempfile
 
 import pytest
 
-sys.path.insert(0, "tools")
-
 
 def test_probe_reports_foreign_reader_availability():
-    from interop_probe import probe
+    from tests.interop_probe import probe
 
     env = probe()
     assert set(env) == {"deltalake", "duckdb_delta"}
@@ -32,7 +29,7 @@ def test_probe_reports_foreign_reader_availability():
 
 @pytest.mark.slow
 def test_self_test_matrix_all_tables_clean(spark):
-    from interop_probe import _foreign_read_external, run_matrix
+    from tests.interop_probe import _foreign_read_external, run_matrix
 
     readers = {"external_selftest": _foreign_read_external}
     work = tempfile.mkdtemp(prefix="delta_interop_pytest_")

@@ -40,7 +40,7 @@ from portfolio_data_pipelines_spark.operators.delta_maintain import (
 )
 from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
-from portfolio_data_pipelines_spark.operators.delta_reader import (
+from tests.delta_reader import (
     read_delta_external,
 )
 
@@ -505,7 +505,7 @@ def _walk_metadata(
 
             import pyarrow.parquet as _pq
 
-            from portfolio_data_pipelines_spark.operators.delta_reader import (
+            from tests.delta_reader import (
                 _replay,
             )
 
@@ -1201,7 +1201,7 @@ def _walk_composed(spark, tmp_path, seed, n_ops):
     from portfolio_data_pipelines_spark.operators.delta_log import update_where
     from portfolio_data_pipelines_spark.operators.delta_maintain import optimize_delta
     from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
-    from portfolio_data_pipelines_spark.operators.delta_reader import _replay
+    from tests.delta_reader import _replay
 
     rng = random.Random(seed)
     path = str(tmp_path / f"fuzz_comp_{seed}")

@@ -17,7 +17,7 @@ from portfolio_data_pipelines_spark.operators.delta_checkpoint import checkpoint
 from portfolio_data_pipelines_spark.operators.delta_log import write_delta
 from portfolio_data_pipelines_spark.operators.delta_maintain import cleanup_log
 from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
-from portfolio_data_pipelines_spark.operators.delta_reader import (
+from tests.delta_reader import (
     read_delta_external,
 )
 

@@ -26,7 +26,7 @@ from portfolio_data_pipelines_spark.operators.delta_maintain import (
     vacuum_delta,
 )
 from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
-from portfolio_data_pipelines_spark.operators.delta_reader import (
+from tests.delta_reader import (
     read_delta_external,
 )
 
@@ -529,7 +529,7 @@ def test_collation_nested_in_array_struct_refused(spark, tmp_path):
             f.write(json.dumps(a) + "\n")
     with pytest.raises(ValueError, match="NOPE_CI"):
         read_delta(spark, str(root)).collect()
-    from portfolio_data_pipelines_spark.operators.delta_reader import (
+    from tests.delta_reader import (
         read_delta_external,
     )
 

@@ -18,7 +18,9 @@ count the calls crossing the fs handle, pinning that:
 - ``_replay_log`` adds no per-version existence probe on top;
 - an append lists the log and probes ``_last_checkpoint`` once each;
 - a checkpoint is one create + one rename per file (no temp-dir
-  listings or recursive deletes), and a replay opens each file once.
+  listings or recursive deletes), and a replay opens each file once;
+- a V2 checkpoint's discovery lists ``_delta_log`` through ``os`` on a
+  local table.
 
 Also pins the r16-ADVICE ``_local_path`` gates themselves: bare paths
 are local only under a file-scheme fs.defaultFS, and ``file://host/...``
@@ -285,6 +287,17 @@ def test_append_lists_log_once(spark, tmp_path, no_local_fastpath, monkeypatch):
     ]) == 1
 
 
+def _declare_v2_checkpoints(path, version: int) -> None:
+    """Commit ``version`` as a protocol upgrade to v2Checkpoint, so the
+    checkpoint written at it takes the V2 layout."""
+    with open(f"{path}/_delta_log/{version:020d}.json", "w") as f:
+        f.write(json.dumps({"protocol": {
+            "minReaderVersion": 3, "minWriterVersion": 7,
+            "readerFeatures": ["v2Checkpoint"],
+            "writerFeatures": ["v2Checkpoint"],
+        }}) + "\n")
+
+
 @pytest.mark.parametrize("layout", ["classic", "multipart", "v2"])
 def test_checkpoint_is_create_and_rename_per_file(
     spark, tmp_path, no_local_fastpath, monkeypatch, layout
@@ -296,12 +309,7 @@ def test_checkpoint_is_create_and_rename_per_file(
         n_files = 3  # 3 parts, or a main + 2 sidecars of the 3 adds
     if layout == "v2":
         version = 3
-        with open(f"{path}/_delta_log/{version:020d}.json", "w") as f:
-            f.write(json.dumps({"protocol": {
-                "minReaderVersion": 3, "minWriterVersion": 7,
-                "readerFeatures": ["v2Checkpoint"],
-                "writerFeatures": ["v2Checkpoint"],
-            }}) + "\n")
+        _declare_v2_checkpoints(path, version)
     cfs = _count_fs_calls(spark, monkeypatch)
     delta_checkpoint.checkpoint_delta(spark, path, version)
     # the one listing is the replay's log tail; the write lists nothing
@@ -313,6 +321,21 @@ def test_checkpoint_is_create_and_rename_per_file(
     st = dl._replay_log(spark, path, None)
     assert len(st.adds) == 3
     assert cfs.calls["open"] == n_files + 1  # + _last_checkpoint
+    # the tail listing, plus the V2 main's discovery: its name is a UUID
+    assert cfs.calls["listStatus"] == (2 if layout == "v2" else 1)
+
+
+def test_local_v2_checkpoint_replay_lists_nothing(spark, tmp_path, monkeypatch):
+    # the V2 main's discovery lists _delta_log through os on a local
+    # table, as the tail listing does
+    path = _make_table(spark, tmp_path, 3)
+    _declare_v2_checkpoints(path, 3)
+    delta_checkpoint.checkpoint_delta(spark, path, 3)
+    assert not os.path.exists(f"{path}/_delta_log/{3:020d}.checkpoint.parquet")
+    cfs = _count_fs_calls(spark, monkeypatch)
+    st = dl._replay_log(spark, path, None)
+    assert len(st.adds) == 3
+    assert cfs.calls["listStatus"] == 0
 
 
 def test_local_path_gates():

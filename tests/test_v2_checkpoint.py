@@ -28,7 +28,7 @@ from portfolio_data_pipelines_spark.operators.delta_dv import delete_where_dv
 from portfolio_data_pipelines_spark.operators.delta_log import delete_where, write_delta
 from portfolio_data_pipelines_spark.operators.delta_merge import merge_delta
 from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
-from portfolio_data_pipelines_spark.operators.delta_reader import (
+from tests.delta_reader import (
     read_delta_external,
 )
 
@@ -160,6 +160,38 @@ def test_v2_inline_checkpoint_both_readers(spark, tmp_path):
     _to_v2(path, 2, sidecar=False)
     _drop_pre_checkpoint_commits(path, 2)
     assert _ids_both(spark, path) == list(range(30))
+
+
+def test_v2_checkpoint_feed_matches_read_delta(spark, tmp_path):
+    """The streaming feed replays the log without a JVM; over a V2
+    checkpoint it finds the UUID-named main through ``os`` and streams
+    the rows ``read_delta`` reads."""
+    from portfolio_data_pipelines_spark.sources.delta_feed import (
+        DeltaChangeFeedDataSource,
+    )
+
+    path = _mk(spark, tmp_path, "t_feed")
+    checkpoint_delta(spark, path, 2)
+    _to_v2(path, 2, sidecar=True)
+    write_delta(
+        spark,
+        spark.range(100, 103).select(
+            F.col("id"), F.lit("true").alias("grp"),
+            (F.col("id") * 10).alias("val"),
+        ),
+        path, partition_col="grp",
+    )
+    spark.dataSource.register(DeltaChangeFeedDataSource)
+    q = (
+        spark.readStream.format("delta_feed").option("path", path).load()
+        .writeStream.format("memory").queryName("v2_feed_mem")
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    cols = ["id", "grp", "val"]
+    fed = spark.sql("select * from v2_feed_mem").select(cols).collect()
+    assert sorted(fed) == sorted(read_delta(spark, path).select(cols).collect())
+    assert len(fed) == 33
 
 
 def test_v2_json_main_external_reader(spark, tmp_path):
