@@ -27,12 +27,10 @@ from . import delta_colmap, delta_scan
 from . import delta_log as dl
 from .delta_protocol import (
     _PROTOCOL_ACTION,
-    _check_writer_protocol,
     _iceberg_compat_version,
     _upgraded_protocol_with,
     _upgraded_protocol_writer_only,
 )
-from .hadoop_io import _hadoop_fs
 
 
 def enable_column_mapping(spark: SparkSession, path: str) -> int:
@@ -46,11 +44,8 @@ def enable_column_mapping(spark: SparkSession, path: str) -> int:
     as the spec requires. One metadata-only commit, zero data
     movement. Readers below version 2 must refuse the table afterwards
     (both this repo's readers enforce that)."""
-    dl._warn_if_commit_unsafe(path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
+    tx = dl.Txn(spark, path)
+    st = tx.st
     config = dict(st.meta.get("configuration") or {})
     if config.get("delta.columnMapping.mode", "none") != "none":
         raise ValueError(
@@ -83,16 +78,10 @@ def enable_column_mapping(spark: SparkSession, path: str) -> int:
         new_proto = _upgraded_protocol_with(proto, {"columnMapping"})
     else:
         new_proto = {"minReaderVersion": 2, "minWriterVersion": 5}
-    return dl._commit_metadata_only(
-        spark, path,
-        [
-            dl._commit_info(
-                "SET TBLPROPERTIES",
-                {"properties": {"delta.columnMapping.mode": "name"}},
-            ),
-            {"protocol": new_proto},
-            {"metaData": meta},
-        ],
+    return tx.commit(
+        "SET TBLPROPERTIES",
+        {"properties": {"delta.columnMapping.mode": "name"}},
+        [{"protocol": new_proto}, {"metaData": meta}],
     )
 
 
@@ -128,12 +117,8 @@ def enable_iceberg_compat(
 
     if version not in (1, 2):
         raise ValueError(f"icebergCompat version must be 1 or 2, got {version}")
-    dl._warn_if_commit_unsafe(path)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
+    tx = dl.Txn(spark, path)
+    st = tx.st
     config = dict(st.meta.get("configuration") or {})
     if _iceberg_compat_version(st.meta):
         raise ValueError(
@@ -222,18 +207,17 @@ def enable_iceberg_compat(
     meta = delta_colmap._assign_compat_element_ids(meta)
     proto = dict(st.protocol or _PROTOCOL_ACTION["protocol"])
     feat = f"icebergCompatV{version}"
-    actions = [
-        dl._commit_info(
-            "SET TBLPROPERTIES",
-            {"properties": {f"delta.enableIcebergCompatV{version}": "true"}},
-        )
-    ]
+    actions = []
     if feat not in (proto.get("writerFeatures") or []):
         actions.append(
             {"protocol": _upgraded_protocol_writer_only(proto, feat)}
         )
     actions.append({"metaData": meta})
-    v = dl._commit_metadata_only(spark, path, actions)
+    v = tx.commit(
+        "SET TBLPROPERTIES",
+        {"properties": {f"delta.enableIcebergCompatV{version}": "true"}},
+        actions,
+    )
     # REORG UPGRADE ICEBERG: rewrite live files whose parquet footer
     # lacks field ids (files already stamped — id-mode writes, prior
     # compat writes — are untouched). The probe reads the footer via a
@@ -245,7 +229,8 @@ def enable_iceberg_compat(
     # surfaced in a warning.
     from urllib.parse import unquote
 
-    st2 = dl._replay_log(spark, path, None)
+    tx = dl.Txn(spark, path)
+    st2 = tx.st
     doomed: dict[str, dict] = {}
     probe_failed = 0
     local_root = dl._normalize_uri(path, decode=False)
@@ -299,33 +284,14 @@ def enable_iceberg_compat(
     rewritten = delta_scan._read_adds(spark, path, doomed, st2.meta, row_ids=rt)
     if rt:
         rewritten = dl._rt_materialize(rewritten, st2.meta)
-    new_version = st2.version + 1
-    adds = dl._stage_commit_files(
-        spark, fs, jvm, path, rewritten, pcols, new_version,
-        data_change=False, l2p=l2p,
+    adds = tx.stage(rewritten, pcols, data_change=False, l2p=l2p)
+    return tx.commit(
+        "REORG",
+        {"applyIcebergCompat": f"V{version}"},
+        [tx.remove(rel, data_change=False) for rel in sorted(doomed)],
+        staged=adds,
+        metrics=dl._add_metrics(adds, len(doomed)),
     )
-    now = dl._now_ms()
-    actions = [
-        dl._commit_info(
-            "REORG",
-            {"applyIcebergCompat": f"V{version}"},
-            metrics=dl._add_metrics(adds, len(doomed)),
-        )
-    ]
-    actions.extend(
-        {
-            "remove": {
-                "path": dl._encode_path(rel),
-                "deletionTimestamp": now,
-                "dataChange": False,
-            }
-        }
-        for rel in sorted(doomed)
-    )
-    dl._rt_finalize_commit(st2, adds, actions, new_version)
-    actions.extend(adds)
-    dl._write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version
 
 
 def enable_row_tracking(spark: SparkSession, path: str) -> int:
@@ -347,12 +313,8 @@ def enable_row_tracking(spark: SparkSession, path: str) -> int:
     Scale: the backfill is O(live files) of driver-side log work and
     zero data I/O — it needs only the per-file numRecords the adds'
     stats already carry."""
-    dl._warn_if_commit_unsafe(path)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
+    tx = dl.Txn(spark, path)
+    st = tx.st
     if dl._row_tracking_supported(st.protocol):
         raise ValueError(f"row tracking already enabled on {path}")
     config = dict(st.meta.get("configuration") or {})
@@ -366,7 +328,6 @@ def enable_row_tracking(spark: SparkSession, path: str) -> int:
     proto = dict(st.protocol or _PROTOCOL_ACTION["protocol"])
     proto = _upgraded_protocol_writer_only(proto, "rowTracking")
     proto = _upgraded_protocol_writer_only(proto, "domainMetadata")
-    new_version = st.version + 1
     backfill = []
     for rel in sorted(st.adds):
         a = dict(st.adds[rel])
@@ -375,19 +336,17 @@ def enable_row_tracking(spark: SparkSession, path: str) -> int:
         a.pop("baseRowId", None)  # force fresh assignment
         a.pop("defaultRowCommitVersion", None)
         backfill.append({"add": a})
-    hwm = dl._rt_assign(backfill, dl._rt_hwm(st.domain_metadata), new_version)
-    actions: list[dict] = [
-        dl._commit_info(
-            "SET TBLPROPERTIES",
-            {"properties": {"delta.enableRowTracking": "true"}},
-        ),
-        {"protocol": proto},
-        {"metaData": meta},
-        dl._rt_domain_action(hwm if hwm is not None else -1),
-    ]
-    actions.extend(backfill)
-    dl._write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version
+    hwm = dl._rt_assign(backfill, dl._rt_hwm(st.domain_metadata), tx.version)
+    return tx.commit(
+        "SET TBLPROPERTIES",
+        {"properties": {"delta.enableRowTracking": "true"}},
+        [
+            {"protocol": proto},
+            {"metaData": meta},
+            dl._rt_domain_action(hwm if hwm is not None else -1),
+            *backfill,
+        ],
+    )
 
 
 def _guard_constraints_reference(meta: dict, column: str, op: str) -> None:
@@ -411,11 +370,8 @@ def rename_column(
     column mapping: the LOGICAL name changes, the field keeps its id
     and physical name, so no file is touched and every retained
     version still reads under the schema it was committed with."""
-    dl._warn_if_commit_unsafe(path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
+    tx = dl.Txn(spark, path)
+    st = tx.st
     if delta_colmap._logical_to_physical(st.meta) is None:
         raise ValueError(
             "rename_column requires name-mode column mapping — run "
@@ -436,12 +392,8 @@ def rename_column(
     meta["partitionColumns"] = [
         new if c == old else c for c in st.meta.get("partitionColumns", [])
     ]
-    return dl._commit_metadata_only(
-        spark, path,
-        [
-            dl._commit_info("RENAME COLUMN", {"from": old, "to": new}),
-            {"metaData": meta},
-        ],
+    return tx.commit(
+        "RENAME COLUMN", {"from": old, "to": new}, [{"metaData": meta}]
     )
 
 
@@ -450,11 +402,8 @@ def drop_column(spark: SparkSession, path: str, name: str) -> int:
     mapping: the field leaves the logical schema; its physical data
     stays in the files (ignored by mapped readers) and remains visible
     through time travel to pre-drop versions."""
-    dl._warn_if_commit_unsafe(path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
+    tx = dl.Txn(spark, path)
+    st = tx.st
     if delta_colmap._logical_to_physical(st.meta) is None:
         raise ValueError(
             "drop_column requires name-mode column mapping — run "
@@ -475,12 +424,8 @@ def drop_column(spark: SparkSession, path: str, name: str) -> int:
             "fields": [f for f in fields if f["name"] != name],
         }
     )
-    return dl._commit_metadata_only(
-        spark, path,
-        [
-            dl._commit_info("DROP COLUMNS", {"columns": [name]}),
-            {"metaData": meta},
-        ],
+    return tx.commit(
+        "DROP COLUMNS", {"columns": [name]}, [{"metaData": meta}]
     )
 
 
@@ -496,12 +441,8 @@ def add_check_constraint(
     overwrite, MERGE source, stream-sink batch — by this writer or any
     conformant one reading the configuration) enforces it. Returns the
     committed version."""
-    dl._warn_if_commit_unsafe(path)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
+    tx = dl.Txn(spark, path)
+    st = tx.st
     key = f"delta.constraints.{name}"
     config = dict(st.meta.get("configuration") or {})
     if key in config:
@@ -517,11 +458,7 @@ def add_check_constraint(
     config[key] = expr
     meta = dict(st.meta)
     meta["configuration"] = config
-    new_version = st.version + 1
-    actions = [
-        dl._commit_info("ADD CONSTRAINT", {"name": name, "expr": expr}),
-        {"metaData": meta},
-    ]
+    actions = [{"metaData": meta}]
     # checkConstraints is a writer-version-3 duty: a legacy-v2 table
     # must bump in the SAME commit or a foreign legacy writer keeps
     # committing without ever enforcing the new constraint
@@ -546,8 +483,9 @@ def add_check_constraint(
                 }
             }
         )
-    dl._write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version
+    return tx.commit(
+        "ADD CONSTRAINT", {"name": name, "expr": expr}, actions
+    )
 
 
 def drop_check_constraint(
@@ -557,12 +495,8 @@ def drop_check_constraint(
     from the table configuration in one metadata-only commit. Raises if
     the constraint does not exist (Delta's behavior without IF
     EXISTS)."""
-    dl._warn_if_commit_unsafe(path)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
+    tx = dl.Txn(spark, path)
+    st = tx.st
     key = f"delta.constraints.{name}"
     config = dict(st.meta.get("configuration") or {})
     if key not in config:
@@ -570,13 +504,7 @@ def drop_check_constraint(
     del config[key]
     meta = dict(st.meta)
     meta["configuration"] = config
-    new_version = st.version + 1
-    actions = [
-        dl._commit_info("DROP CONSTRAINT", {"name": name}),
-        {"metaData": meta},
-    ]
-    dl._write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version
+    return tx.commit("DROP CONSTRAINT", {"name": name}, [{"metaData": meta}])
 
 
 def set_column_default(
@@ -598,11 +526,8 @@ def set_column_default(
     The expression is validated by PLANNING it against the declared
     column type before anything commits (a malformed default would
     otherwise fail every later append)."""
-    dl._warn_if_commit_unsafe(path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
+    tx = dl.Txn(spark, path)
+    st = tx.st
     doc = json.loads(st.meta["schemaString"])
     by_name = {f["name"]: f for f in doc.get("fields", [])}
     if column not in by_name:
@@ -626,23 +551,20 @@ def set_column_default(
     by_name[column]["metadata"] = md
     meta = dict(st.meta)
     meta["schemaString"] = json.dumps(doc)
-    actions = [
-        dl._commit_info(
-            "ALTER COLUMN", {"column": column, "setDefault": expr}
-        ),
-        {"metaData": meta},
-    ]
+    actions = [{"metaData": meta}]
     proto = dict(st.protocol or _PROTOCOL_ACTION["protocol"])
     if "allowColumnDefaults" not in (proto.get("writerFeatures") or []):
         actions.insert(
-            1,
+            0,
             {
                 "protocol": _upgraded_protocol_writer_only(
                     proto, "allowColumnDefaults"
                 )
             },
         )
-    return dl._commit_metadata_only(spark, path, actions)
+    return tx.commit(
+        "ALTER COLUMN", {"column": column, "setDefault": expr}, actions
+    )
 
 
 def drop_column_default(
@@ -654,11 +576,8 @@ def drop_column_default(
     defaults, and a declared writer feature is never silently
     retracted; use :func:`drop_table_feature` once no column has
     one)."""
-    dl._warn_if_commit_unsafe(path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
+    tx = dl.Txn(spark, path)
+    st = tx.st
     doc = json.loads(st.meta["schemaString"])
     by_name = {f["name"]: f for f in doc.get("fields", [])}
     if column not in by_name:
@@ -670,13 +589,9 @@ def drop_column_default(
     by_name[column]["metadata"] = md
     meta = dict(st.meta)
     meta["schemaString"] = json.dumps(doc)
-    return dl._commit_metadata_only(
-        spark, path,
-        [
-            dl._commit_info("ALTER COLUMN", {"column": column,
-                                          "dropDefault": True}),
-            {"metaData": meta},
-        ],
+    return tx.commit(
+        "ALTER COLUMN", {"column": column, "dropDefault": True},
+        [{"metaData": meta}],
     )
 
 

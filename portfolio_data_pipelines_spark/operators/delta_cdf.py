@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from . import delta_colmap, delta_scan
 from . import delta_log as dl
-from .delta_protocol import _PROTOCOL_ACTION, _check_writer_protocol
+from .delta_protocol import _PROTOCOL_ACTION
 from .hadoop_io import _hadoop_fs
 
 
@@ -57,11 +57,8 @@ def enable_change_data_feed(spark: SparkSession, path: str) -> int:
     write time, so CDF reads cost O(changes) instead of re-deriving
     them from both sides of every rewrite — and stay readable after
     the rewritten data files are vacuumed."""
-    dl._warn_if_commit_unsafe(path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
+    tx = dl.Txn(spark, path)
+    st = tx.st
     config = dict(st.meta.get("configuration") or {})
     if str(config.get("delta.enableChangeDataFeed", "")).lower() == "true":
         return st.version  # idempotent
@@ -79,16 +76,10 @@ def enable_change_data_feed(spark: SparkSession, path: str) -> int:
         wf = set(proto.get("writerFeatures") or [])
         wf.add("changeDataFeed")
         proto["writerFeatures"] = sorted(wf)
-    return dl._commit_metadata_only(
-        spark, path,
-        [
-            dl._commit_info(
-                "SET TBLPROPERTIES",
-                {"properties": {"delta.enableChangeDataFeed": "true"}},
-            ),
-            {"protocol": proto},
-            {"metaData": meta},
-        ],
+    return tx.commit(
+        "SET TBLPROPERTIES",
+        {"properties": {"delta.enableChangeDataFeed": "true"}},
+        [{"protocol": proto}, {"metaData": meta}],
     )
 
 

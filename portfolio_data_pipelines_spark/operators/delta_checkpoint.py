@@ -261,7 +261,17 @@ def _chunks(rows: list[dict]) -> list[list[dict]]:
 
 def checkpoint_delta(spark: SparkSession, path: str, version: int) -> None:
     """Write a checkpoint of the table state at ``version`` and point
-    ``_last_checkpoint`` at it — the Delta reader fast path.
+    ``_last_checkpoint`` at it — the Delta reader fast path: one replay
+    to ``version``, then :func:`_write_checkpoint`."""
+    fs, _, jvm = _hadoop_fs(spark, path)
+    _write_checkpoint(fs, jvm, path, dl._replay_log(spark, path, version))
+
+
+def _write_checkpoint(fs, jvm, path: str, st: "dl.LogState") -> None:
+    """Write the checkpoint of replayed state ``st`` at ``st.version``
+    and point ``_last_checkpoint`` at it. A commit's cadence hands in
+    the state its writer already holds, so nothing is listed or
+    replayed.
 
     One row per action (protocol, metaData, each txn, live domain,
     in-retention tombstone and live add) in :data:`CHECKPOINT_SCHEMA`;
@@ -270,7 +280,6 @@ def checkpoint_delta(spark: SparkSession, path: str, version: int) -> None:
     ``v2Checkpoint`` tables, else classic, or multi-part above
     :data:`CHECKPOINT_PART_ACTIONS` rows. Built and written with
     pyarrow: no Spark job runs."""
-    st = dl._replay_log(spark, path, version)
     target, meta = st.version, st.meta
     if meta is None:
         raise ValueError("cannot checkpoint a log without metaData")
@@ -310,7 +319,6 @@ def checkpoint_delta(spark: SparkSession, path: str, version: int) -> None:
             "modificationTime": a.get("modificationTime", 0),
             "dataChange": a.get("dataChange", True),
         }})
-    fs, _, jvm = _hadoop_fs(spark, path)
     log = f"{path}/_delta_log"
     lc = {"version": target, "size": len(rows)}
     if "v2Checkpoint" in (proto.get("writerFeatures") or []):

@@ -21,7 +21,6 @@ from . import delta_log as dl
 from .delta_protocol import (
     _PROTOCOL_ACTION,
     _check_append_only,
-    _check_writer_protocol,
     _iceberg_compat_version,
     _upgraded_protocol_for_dv,
 )
@@ -218,18 +217,14 @@ def delete_where_dv(
 
     from . import deletion_vectors as dv_codec
 
-    dl._warn_if_commit_unsafe(path)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is not None and _iceberg_compat_version(st.meta):
+    tx = dl.Txn(spark, path)
+    st, fs, jvm = tx.st, tx.fs, tx.jvm
+    if _iceberg_compat_version(st.meta):
         raise ValueError(
             "icebergCompat tables cannot take deletion-vector deletes "
             "(Iceberg cannot read DV'd files before compat V3) — use "
             "the copy-on-write delete_where instead"
         )
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
     _check_append_only(st.meta, True)
     df = delta_scan._read_adds(spark, path, st.adds, st.meta, with_pos=True)
     if df is None:
@@ -361,7 +356,6 @@ def delete_where_dv(
             fully_dead.append(rel)
         else:
             dv_files.append((rel, blob_bytes, card))
-    new_version = st.version + 1
     descriptors: dict[str, dict] = {}
     if dv_files:
         # one framed .bin per commit holding every touched file's
@@ -373,6 +367,7 @@ def delete_where_dv(
         _write_small_file(
             fs, jvm, f"{path}/{bin_rel}", blob, overwrite=False
         )
+        tx.written.append(bin_rel)
         for (rel, _b, card), (off, size) in zip(dv_files, metas):
             descriptors[rel] = {
                 "storageType": "u",
@@ -390,35 +385,20 @@ def delete_where_dv(
             matched.select(
                 *cols, F.lit("delete").alias("_change_type")
             ),
-            new_version,
+            tx.version,
             delta_colmap._logical_to_physical(st.meta),
         )
-    actions: list[dict] = [
-        dl._commit_info(
-            "DELETE",
-            {"predicate": predicate},
-            metrics={
-                "numDeletedRows": str(n_deleted),
-                "numRemovedFiles": str(len(fully_dead)),
-                "numDeletionVectorsAdded": str(len(dv_files)),
-            },
-        )
-    ]
+    actions: list[dict] = []
     proto = dict(st.protocol or _PROTOCOL_ACTION["protocol"])
     if "deletionVectors" not in (proto.get("readerFeatures") or []):
         actions.append({"protocol": _upgraded_protocol_for_dv(proto)})
     actions.extend(cdc_actions)
-    now = dl._now_ms()
-    for rel in fully_dead + [r for r, _b, _c in dv_files]:
-        rm = {
-            "path": dl._encode_path(rel),
-            "deletionTimestamp": now,
-            "dataChange": True,
-        }
-        old = st.adds[rel].get("deletionVector")
-        if old:
-            rm["deletionVector"] = old
-        actions.append({"remove": rm})
+    actions.extend(
+        tx.remove(rel, deletion_vector=st.adds[rel].get("deletionVector"))
+        for rel in fully_dead + [r for r, _b, _c in dv_files]
+    )
+    # the re-adds point at live files: passed as plain actions, never
+    # as staged files the transaction would delete on a lost race
     for rel, _b, _c in dv_files:
         a = dict(st.adds[rel])
         a["path"] = dl._encode_path(rel)
@@ -432,5 +412,13 @@ def delete_where_dv(
             doc["tightBounds"] = False
             a["stats"] = json.dumps(doc, sort_keys=True)
         actions.append({"add": a})
-    dl._write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version
+    return tx.commit(
+        "DELETE",
+        {"predicate": predicate},
+        actions,
+        metrics={
+            "numDeletedRows": str(n_deleted),
+            "numRemovedFiles": str(len(fully_dead)),
+            "numDeletionVectorsAdded": str(len(dv_files)),
+        },
+    )

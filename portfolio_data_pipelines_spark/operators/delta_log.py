@@ -16,9 +16,9 @@ Reference behavior: the reference repo's roadmap names Delta/MERGE
 lakehouse surface.
 
 This module is the WRITE half of the Delta family: staging, commit
-(``_write_commit`` — the one commit-write path, which also owns the
-checkpoint cadence), log replay, schema evolution and copy-on-write
-DML. The rest of the protocol lives in sibling modules that own their
+(``Txn`` — the one optimistic transaction every commit goes through;
+its ``_write_commit`` also owns the checkpoint cadence), log replay,
+schema evolution and copy-on-write DML. The rest of the protocol lives in sibling modules that own their
 names — import each from the module that defines it:
 ``delta_protocol`` (feature gates), ``delta_scan`` (the shared read
 path + data skipping), ``delta_checkpoint``, ``delta_cdf``,
@@ -48,6 +48,7 @@ import datetime as _dt
 import json
 import os
 import re
+import time
 import uuid
 from typing import NamedTuple
 
@@ -184,7 +185,7 @@ def _warn_if_commit_unsafe(path: str) -> None:
             "is not atomic on object stores — concurrent writers to this "
             "table must be serialized externally (Delta's LogStore role).",
             RuntimeWarning,
-            stacklevel=3,
+            stacklevel=4,  # the caller of the operation opening a Txn
         )
 
 
@@ -967,20 +968,17 @@ def _rt_finalize_commit(
     add_actions: list[dict],
     actions: list[dict],
     new_version: int,
-    proto: dict | None = None,
-    domains: dict | None = None,
+    proto: dict | None,
 ) -> None:
-    """The one hook every staging commit path calls before writing:
-    when the table's protocol lists rowTracking, assign ids to the new
-    adds and append the advanced high-water mark's domainMetadata to
-    the SAME commit. No-op otherwise."""
-    protocol = proto if proto is not None else (st.protocol if st else None)
-    if not _row_tracking_supported(protocol):
+    """The row-tracking step of :meth:`Txn.commit`: when the commit's
+    protocol ``proto`` lists rowTracking, assign ids to the new adds
+    past ``st``'s high-water mark and append the advanced mark's
+    domainMetadata to the SAME commit. No-op otherwise."""
+    if not _row_tracking_supported(proto):
         return
-    doms = domains if domains is not None else (
-        st.domain_metadata if st else None
+    advanced = _rt_assign(
+        add_actions, _rt_hwm(st.domain_metadata if st else None), new_version
     )
-    advanced = _rt_assign(add_actions, _rt_hwm(doms), new_version)
     if advanced is not None:
         actions.append(_rt_domain_action(advanced))
 
@@ -1329,19 +1327,21 @@ def _commit_text(actions: list[dict]) -> str:
 
 
 def _write_commit(
-    spark, fs, jvm, path: str, version: int, actions: list[dict]
+    fs, jvm, path: str, version: int, actions: list[dict],
+    st: LogState | None,
 ) -> None:
     """Serialize ``actions`` as the spec's NDJSON and exclusively create
-    commit ``version`` — THE single commit-write path, so every commit
-    (data, metadata-only, conversion) carries a monotonic
-    ``commitInfo.inCommitTimestamp``. The ICT is resolved here, not at
-    action-build time, because an append retry can move the commit to a
-    later version whose predecessor differs.
+    commit ``version`` on top of state ``st`` (the state at
+    ``version - 1``; None for a table's creation). Every commit carries
+    a monotonic ``commitInfo.inCommitTimestamp``, resolved here, not at
+    action-build time, because a retry can move the commit to a later
+    version whose predecessor differs.
 
     This path also owns the checkpoint cadence: a commit whose version
     is a positive multiple of ``delta_checkpoint.DELTA_CHECKPOINT_EVERY``
-    is checkpointed right after it lands (version 0, a table's creation
-    or conversion, never is)."""
+    is checkpointed right after it lands, from ``st`` advanced over
+    ``actions`` (version 0, a table's creation or conversion, never
+    is). :meth:`Txn.commit` is its one caller."""
     ict = _resolve_ict(fs, jvm, path, version)
     for a in actions:
         if "commitInfo" in a:
@@ -1352,7 +1352,234 @@ def _write_commit(
         overwrite=False,
     )
     if version > 0 and version % delta_checkpoint.DELTA_CHECKPOINT_EVERY == 0:
-        delta_checkpoint.checkpoint_delta(spark, path, version)
+        delta_checkpoint._write_checkpoint(
+            fs, jvm, path, _apply_actions(_fork(st), _read_back(actions))
+        )
+
+
+def _read_back(actions: list[dict]) -> list[dict]:
+    """``actions`` as :func:`_commit_actions` reads them back once
+    committed: ``add`` / ``remove`` / ``cdc`` paths URL-decoded."""
+    out = []
+    for a in actions:
+        kind = next(iter(a))
+        if kind in ("add", "remove", "cdc"):
+            a = {kind: {**a[kind], "path": _decode_path(a[kind]["path"])}}
+        out.append(a)
+    return out
+
+
+class DeltaConcurrentModificationError(ValueError):
+    """A commit lost its version to a concurrent commit it conflicts
+    with (Delta's ConcurrentModificationException). ``version`` and
+    ``operation`` name the winning commit. The losing transaction's
+    own files are deleted before this is raised; re-read the table and
+    run the operation again."""
+
+    def __init__(
+        self, path: str, version: int, operation: str | None, what: str
+    ):
+        self.version = version
+        self.operation = operation
+        super().__init__(
+            f"concurrent {what} at version {version} of {path} "
+            f"({operation or 'no commitInfo'}) — re-read the table and "
+            "re-commit"
+        )
+
+
+def _blind_append(operation: str, params: dict, actions: list[dict]) -> bool:
+    """May a commit that lost its version race retry at the next one?
+    Only a blind append: an Append-mode WRITE with no replaceWhere
+    predicate that changes neither metaData nor protocol. It references
+    no previously-live file, so re-committing it later is sound — the
+    property that lets N concurrent appenders all land. Every other
+    commit depends on the state it read."""
+    return (
+        operation in ("WRITE", "STREAMING UPDATE")
+        and params.get("mode") == "Append"
+        and "predicate" not in params
+        and not any("metaData" in a or "protocol" in a for a in actions)
+    )
+
+
+class Txn:
+    """One optimistic Delta transaction, the only way a commit is
+    written.
+
+    Opening reads one snapshot: the log tail (``tail`` when the caller
+    already listed it), one replay into ``st`` and the writer-protocol
+    gate. ``version`` is the version it will commit: ``st.version + 1``,
+    or 0 on a table with no log (allowed only with ``create=True``;
+    otherwise a missing log raises ``FileNotFoundError`` and a log
+    without metaData ``ValueError``). Callers build their actions from
+    ``st``, stage data files through :meth:`stage`, record any other
+    file they write in ``written``, and finish with :meth:`commit`.
+
+    A lost version race follows the optimistic-concurrency rules of the
+    Delta Lake paper (Armbrust et al., VLDB 2020), as delta-spark's
+    OptimisticTransaction applies them: a blind append
+    (:func:`_blind_append`) checks the winning commits and retries at
+    the new tip, unless one changed metaData or protocol (a conflict:
+    the batch was validated against the old schema) or recorded this
+    commit's own txn id (a twin writer already committed the batch: an
+    idempotent skip). Any other loser raises
+    :class:`DeltaConcurrentModificationError`. Before a skip or a raise
+    the transaction deletes the files it wrote, and only those: staged
+    data files, cdc files and ``written`` — never an add that points at
+    a file that already existed (RESTORE re-adds, deletion-vector
+    re-adds)."""
+
+    def __init__(self, spark, path: str, tail=None, create: bool = False):
+        _warn_if_commit_unsafe(path)
+        self.t0 = time.monotonic()
+        self.spark, self.path = spark, path
+        self.fs, _, self.jvm = _hadoop_fs(spark, path)
+        self.tail = tail if tail is not None else _log_tail(
+            self.fs, self.jvm, path
+        )
+        self.st: LogState | None = None
+        if self.tail[0] or not create:
+            self.st = _replay_log(spark, path, None, self.tail)
+            _check_writer_protocol(self.st.protocol, self.st.meta)
+            if not create and self.st.meta is None:
+                raise ValueError(
+                    f"Delta log under {path} has no metaData action"
+                )
+        self.version = self.st.version + 1 if self.st is not None else 0
+        #: relative paths of the files this transaction wrote
+        self.written: list[str] = []
+
+    def stage(self, df: DataFrame, partition_cols: list, **kw) -> list[dict]:
+        """:func:`_stage_commit_files` at this transaction's version;
+        the staged files count as written by it."""
+        adds = _stage_commit_files(
+            self.spark, self.fs, self.jvm, self.path, df, partition_cols,
+            self.version, **kw,
+        )
+        self.written += [_decode_path(a["add"]["path"]) for a in adds]
+        return adds
+
+    @staticmethod
+    def remove(
+        rel: str, data_change: bool = True, deletion_vector: dict | None = None
+    ) -> dict:
+        """The ``remove`` action tombstoning live file ``rel`` now."""
+        rm = {
+            "path": _encode_path(rel),
+            "deletionTimestamp": _now_ms(),
+            "dataChange": data_change,
+        }
+        if deletion_vector:
+            rm["deletionVector"] = deletion_vector
+        return {"remove": rm}
+
+    def commit(
+        self,
+        operation: str,
+        params: dict | None = None,
+        actions: list[dict] = (),
+        staged: list[dict] = (),
+        metrics: dict | None = None,
+    ) -> int:
+        """Write ``commitInfo`` (``operation``, ``params``, ``metrics``
+        plus ``numOutputBytes`` of the ``staged`` adds and
+        ``executionTimeMs`` since opening), then ``actions``, then the
+        ``staged`` adds, with row-tracking ids assigned to the staged
+        adds that carry none. Returns the committed version (the tip,
+        for an idempotent skip)."""
+        params = params or {}
+        metrics = {
+            **(metrics or {}),
+            "numOutputBytes": sum(int(a["add"]["size"]) for a in staged),
+            "executionTimeMs": int((time.monotonic() - self.t0) * 1000),
+        }
+        head = [_commit_info(operation, params, metrics), *actions]
+        self.written += [
+            _decode_path(a["cdc"]["path"]) for a in head if "cdc" in a
+        ]
+        proto = next(
+            (a["protocol"] for a in reversed(head) if "protocol" in a),
+            self.st.protocol if self.st is not None else None,
+        )
+        fresh = [a for a in staged if a["add"].get("baseRowId") is None]
+        for _attempt in range(64):
+            body = list(head)
+            _rt_finalize_commit(self.st, staged, body, self.version, proto)
+            body += staged
+            try:
+                _write_commit(
+                    self.fs, self.jvm, self.path, self.version, body, self.st
+                )
+                return self.version
+            except Exception as race:
+                tip = self._lost_to(body)
+                if tip is None:
+                    raise
+                if not self._rebase(tip, operation, params, head, race):
+                    return tip
+            for a in fresh:
+                a["add"].pop("baseRowId", None)
+                a["add"].pop("defaultRowCommitVersion", None)
+        raise IOError(
+            f"commit to {self.path} lost the version race 64 times — "
+            "pathological contention"
+        )
+
+    def _lost_to(self, body: list[dict]) -> int | None:
+        """After a failed write: the log's tip when another writer took
+        this transaction's version, else None — the write failed for
+        another reason, or our own commit landed and its checkpoint
+        failed (never re-commit then)."""
+        self.tail = _log_tail(self.fs, self.jvm, self.path)
+        latest = self.tail[0]
+        if not latest or latest[-1] < self.version:
+            return None
+        ours = _read_text(
+            self.fs, self.jvm, f"{self.path}/{_log_path(self.version)}"
+        )
+        return None if ours == _commit_text(body) else latest[-1]
+
+    def _rebase(
+        self, tip: int, operation: str, params: dict, head: list[dict],
+        race: Exception,
+    ) -> bool:
+        """Apply the conflict rules to the commits that won versions
+        ``self.version..tip``: True to retry at ``tip + 1`` (``st``
+        advanced over them), False for an idempotent skip; raises
+        :class:`DeltaConcurrentModificationError` on a conflict."""
+        blind = _blind_append(operation, params, head)
+        ours = next((a["txn"] for a in head if "txn" in a), None)
+        st = _fork(self.st)
+        for v in range(self.version, tip + 1):
+            won = _commit_actions(self.fs, self.jvm, self.path, v)
+            if not blind:
+                self._abort(v, won, "commit", race)
+            for act in won:
+                if "metaData" in act or "protocol" in act:
+                    self._abort(v, won, "metadata change", race)
+                twin = act.get("txn")
+                if ours is not None and twin is not None and (
+                    twin.get("appId") == ours["appId"]
+                    and int(twin.get("version", -1)) >= ours["version"]
+                ):
+                    self._delete_written()
+                    return False
+            st = _apply_actions(st, won)
+        self.st, self.version = st, tip + 1
+        return True
+
+    def _abort(self, v: int, won: list[dict], what: str, race: Exception):
+        self._delete_written()
+        raise DeltaConcurrentModificationError(
+            self.path, v, (_info_of(won) or {}).get("operation"), what
+        ) from race
+
+    def _delete_written(self) -> None:
+        for rel in self.written:
+            self.fs.delete(
+                self.jvm.org.apache.hadoop.fs.Path(f"{self.path}/{rel}"), False
+            )
 
 
 def _add_metrics(adds: list[dict], removed: int) -> dict:
@@ -2072,18 +2299,12 @@ def write_delta(
             "replace_partitions requires mode='overwrite' and a "
             "partitioned table"
         )
-    _warn_if_commit_unsafe(path)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    tail = _log_tail(fs, jvm, path)
-    versions = tail[0]
-    new_version = (versions[-1] + 1) if versions else 0
+    tx = Txn(spark, path, create=True)
+    st = tx.st
     prev_adds: dict[str, dict] = {}
     prev_meta: dict | None = None
     prev_txns: dict[str, int] = {}
-    st: LogState | None = None
-    if versions:
-        st = _replay_log(spark, path, None, tail)
-        _check_writer_protocol(st.protocol, st.meta)
+    if st is not None:
         prev_adds, prev_meta, prev_txns = st.adds, st.meta, st.txns
         if shred_variants:
             feats = set((st.protocol or {}).get("writerFeatures") or [])
@@ -2095,7 +2316,7 @@ def write_delta(
                 )
     if txn is not None and prev_txns.get(txn[0], -1) >= txn[1]:
         # this (appId, version) already committed — exactly-once replay
-        return versions[-1]
+        return st.version
     creation_meta: dict | None = None
     if prev_meta is not None:
         _check_append_only(prev_meta, mode == "overwrite")
@@ -2267,9 +2488,9 @@ def write_delta(
             )
         if widened:
             # evolution commits never auto-retry to a later version, so
-            # new_version is the final tableVersion of this change
+            # tx.version is the final tableVersion of this change
             evolved_meta = _record_type_widening(
-                evolved_meta, widened, new_version
+                evolved_meta, widened, tx.version
             )
         if _iceberg_compat_version(evolved_meta):
             # re-run the compat duties against the EVOLVED meta before
@@ -2290,8 +2511,8 @@ def write_delta(
         else None
     )
     try:
-        adds = _stage_commit_files(
-            spark, fs, jvm, path, staged, pcols, new_version,
+        adds = tx.stage(
+            staged, pcols,
             replace_partitions=replace_partitions, l2p=l2p,
             shred_variants=shred_variants,
         )
@@ -2300,7 +2521,6 @@ def write_delta(
             staged.unpersist()
         if id_cache_ref is not None:
             id_cache_ref.unpersist()
-    now = _now_ms()
 
     doomed: list[str] = []
     if mode == "overwrite":
@@ -2340,7 +2560,7 @@ def write_delta(
                     f"cdf_key_cols {bad_keys} not in table schema {eff_cols}"
                 )
         cdc_actions = delta_cdf._maybe_stage_cdc(
-            spark, fs, jvm, path, eff_meta,
+            spark, tx.fs, tx.jvm, path, eff_meta,
             delta_scan._read_adds(
                 spark, path, {r: prev_adds[r] for r in doomed}, eff_meta
             ),
@@ -2356,26 +2576,10 @@ def write_delta(
                     eff_meta["schemaString"]
                 ).fields
             ],
-            new_version, l2p,
+            tx.version, l2p,
         )
-    actions: list[dict] = [
-        _commit_info(
-            "STREAMING UPDATE" if txn is not None else "WRITE",
-            {
-                "mode": mode.capitalize(),
-                **({"partitionBy": pcols} if pcols else {}),
-                **(
-                    {"predicate": replace_partitions}
-                    if replace_partitions is not None
-                    else {}
-                ),
-            },
-            metrics=_add_metrics(adds, len(doomed)),
-        )
-    ]
-    actions.extend(cdc_actions)
-    rt_proto = st.protocol if st is not None else None
-    if new_version == 0:
+    actions: list[dict] = list(cdc_actions)
+    if st is None:
         meta_action = (
             creation_meta
             if creation_meta is not None
@@ -2386,14 +2590,13 @@ def write_delta(
         # the MERGED configuration (creation_meta path and the
         # constraints= param both land in metaData.configuration), so
         # constraint/CDF/rowTracking-driven bumps can't be missed
-        rt_proto = _creation_protocol(
+        actions.append({"protocol": _creation_protocol(
             meta_action["metaData"]["schemaString"],
             generated_cols,
             identity_cols,
             meta_action["metaData"].get("configuration"),
             default_cols,
-        )
-        actions.append({"protocol": rt_proto})
+        )})
         actions.append(meta_action)
     elif id_hwms:
         # identity high-water marks advance in the SAME commit as the
@@ -2407,7 +2610,7 @@ def write_delta(
         )
     elif evolved_meta is not None:
         actions.append({"metaData": evolved_meta})
-    if new_version > 0 and evolved_meta is not None:
+    if st is not None and evolved_meta is not None:
         # evolution can introduce features the protocol must declare in
         # the SAME commit: timestamp_ntz / variant columns and type
         # widenings
@@ -2431,109 +2634,25 @@ def write_delta(
                 {"protocol": _upgraded_protocol_with(proto, need - have)}
             )
     if txn is not None:
-        actions.append(
-            {"txn": {"appId": txn[0], "version": txn[1], "lastUpdated": now}}
-        )
-    for rel in doomed:
-        actions.append(
-            {
-                "remove": {
-                    "path": _encode_path(rel),
-                    "deletionTimestamp": now,
-                    "dataChange": True,
-                }
-            }
-        )
-    _rt_finalize_commit(
-        st, adds, actions, new_version,
-        proto=rt_proto,
-        domains=st.domain_metadata if st is not None else {},
+        actions.append({"txn": {
+            "appId": txn[0], "version": txn[1], "lastUpdated": _now_ms(),
+        }})
+    actions.extend(tx.remove(rel) for rel in doomed)
+    return tx.commit(
+        "STREAMING UPDATE" if txn is not None else "WRITE",
+        {
+            "mode": mode.capitalize(),
+            **({"partitionBy": pcols} if pcols else {}),
+            **(
+                {"predicate": replace_partitions}
+                if replace_partitions is not None
+                else {}
+            ),
+        },
+        actions,
+        staged=adds,
+        metrics=_add_metrics(adds, len(doomed)),
     )
-    actions.extend(adds)
-    # Optimistic concurrency, Delta's OptimisticTransaction rules: a
-    # lost version race fails the exclusive create; a pure APPEND then
-    # auto-retries at the next version after checking the intervening
-    # commits for logical conflicts (metaData/protocol change → raise;
-    # a twin recording our txn id → idempotent skip). Appends never
-    # reference the previous live set, so blind-retry is sound — the
-    # property that lets N concurrent appenders all land. Overwrites,
-    # replaceWhere and evolution commits DO depend on the state they
-    # read, so they surface the conflict to the caller instead.
-    retriable = (
-        mode == "append"
-        and replace_partitions is None
-        and not any("metaData" in a or "protocol" in a for a in actions)
-    )
-    for _attempt in range(64):
-        try:
-            _write_commit(spark, fs, jvm, path, new_version, actions)
-            break
-        except Exception as race:
-            tail = _log_tail(fs, jvm, path)
-            latest = tail[0]
-            # our own commit landing and then failing its checkpoint
-            # is not a lost race: surface the error, never re-commit
-            lost_race = (
-                bool(latest) and latest[-1] >= new_version
-                and _read_text(fs, jvm, f"{path}/{_log_path(new_version)}")
-                != _commit_text(actions)
-            )
-            if not (retriable and lost_race):
-                raise
-            for v in range(new_version, latest[-1] + 1):
-                for act in _commit_actions(fs, jvm, path, v):
-                    if "metaData" in act or "protocol" in act:
-                        raise ValueError(
-                            f"concurrent metadata change at version {v} — "
-                            "append cannot be retried safely; re-read the "
-                            "table and re-commit"
-                        ) from race
-                    if (
-                        txn is not None
-                        and "txn" in act
-                        and act["txn"].get("appId") == txn[0]
-                        and int(act["txn"].get("version", -1)) >= txn[1]
-                    ):
-                        # a twin writer recorded our (appId, version):
-                        # this batch is already committed exactly once.
-                        # Our staged part files were renamed into the
-                        # table layout but will never get a log entry —
-                        # delete them now, or they become permanent
-                        # orphans no vacuum can collect (vacuum only
-                        # chases tombstones).
-                        for a in adds:
-                            fs.delete(
-                                jvm.org.apache.hadoop.fs.Path(
-                                    f"{path}/"
-                                    f"{_decode_path(a['add']['path'])}"
-                                ),
-                                False,
-                            )
-                        return latest[-1]
-            new_version = latest[-1] + 1
-            if _row_tracking_supported(rt_proto):
-                # a concurrent append may have advanced the row-id
-                # high-water mark: re-read it at the tip and reassign
-                # our adds' baseRowIds (and the commit version they
-                # default to) before retrying
-                for a in adds:
-                    a["add"].pop("baseRowId", None)
-                    a["add"].pop("defaultRowCommitVersion", None)
-                actions = [
-                    x for x in actions
-                    if (x.get("domainMetadata") or {}).get("domain")
-                    != _ROW_TRACKING_DOMAIN
-                ]
-                st_retry = _replay_log(spark, path, None, tail)
-                _rt_finalize_commit(
-                    st_retry, adds, actions, new_version, proto=rt_proto
-                )
-    else:
-        raise IOError(
-            f"append to {path} lost the version race 64 times — "
-            "pathological contention"
-        )
-    return new_version
 
 
 def _replay_log(
@@ -2591,16 +2710,6 @@ def _replay_state(fs, jvm, path: str, version: int | None,
     protocol: dict | None = None
     domains: dict[str, str] = {}
     dv_tombs: dict[str, int] = {}
-
-    def _note_dv_tombstone(dvd: dict | None, ts: int) -> None:
-        # max deletionTimestamp per referenced .bin, keyed by BIN path
-        # across ALL tombstones — never collapsed per data-file path
-        if dvd and dvd.get("storageType") == "u":
-            from .deletion_vectors import dv_rel_path
-
-            rel_bin = dv_rel_path(dvd["pathOrInlineDv"])
-            dv_tombs[rel_bin] = max(dv_tombs.get(rel_bin, 0), ts)
-
     start = 0
     if lc is not None and lc["version"] <= target:
         rows = delta_checkpoint._read_checkpoint(fs, jvm, path, lc)
@@ -2673,50 +2782,18 @@ def _replay_state(fs, jvm, path: str, version: int | None,
                     "dataChange": bool(r.get("dataChange", True)),
                     **({"deletionVector": dvd} if dvd else {}),
                 }
-                _note_dv_tombstone(dvd, int(r.get("deletionTimestamp", 0)))
+                _note_dv_tombstone(
+                    dv_tombs, dvd, int(r.get("deletionTimestamp", 0))
+                )
         start = lc["version"] + 1
+    st = LogState(
+        start - 1, adds, meta, txns, removes, protocol, domains, dv_tombs
+    )
     # a pinned version below the checkpoint replays from commit 0; one
     # that log cleanup removed raises FileNotFoundError from the read
     for v in range(start, target + 1):
-        for action in _commit_actions(fs, jvm, path, v):
-            if "protocol" in action:
-                protocol = action["protocol"]
-            elif "metaData" in action:
-                meta = action["metaData"]
-            elif "add" in action:
-                a = action["add"]
-                adds[a["path"]] = a
-                removes.pop(a["path"], None)
-            elif "remove" in action:
-                rm = action["remove"]
-                prev = adds.pop(rm["path"], None)
-                # the tombstone keeps the file's LAST deletion-vector
-                # descriptor (explicit on the remove, else synthesized
-                # from the replaced add) — vacuum ages the .bin from
-                # the tombstone's deletionTimestamp, mirroring how data
-                # files themselves age
-                dvd = rm.get("deletionVector") or (
-                    (prev or {}).get("deletionVector")
-                )
-                removes[rm["path"]] = {
-                    "deletionTimestamp": int(rm.get("deletionTimestamp", 0)),
-                    "dataChange": bool(rm.get("dataChange", True)),
-                    **({"deletionVector": dvd} if dvd else {}),
-                }
-                _note_dv_tombstone(
-                    dvd, int(rm.get("deletionTimestamp", 0))
-                )
-            elif "txn" in action:
-                t = action["txn"]
-                txns[t["appId"]] = max(
-                    txns.get(t["appId"], -1), int(t["version"])
-                )
-            elif "domainMetadata" in action:
-                dm = action["domainMetadata"]
-                if dm.get("removed"):
-                    domains.pop(dm["domain"], None)
-                else:
-                    domains[dm["domain"]] = dm.get("configuration")
+        st = _apply_actions(st, _commit_actions(fs, jvm, path, v))
+    protocol, meta = st.protocol, st.meta
     if protocol is not None:
         rv = int(protocol["minReaderVersion"])
         mode = ((meta or {}).get("configuration") or {}).get(
@@ -2773,8 +2850,79 @@ def _replay_state(fs, jvm, path: str, version: int | None,
                 "mapping. Refusing to read rather than silently "
                 "dropping those semantics."
             )
-    return LogState(
-        target, adds, meta, txns, removes, protocol, domains, dv_tombs
+    return st
+
+
+def _note_dv_tombstone(dv_tombs: dict, dvd: dict | None, ts: int) -> None:
+    """Record ``ts`` as the latest deletion time of the .bin a
+    tombstone's deletion-vector descriptor references: the max per BIN
+    path across ALL tombstones, never collapsed per data-file path."""
+    if dvd and dvd.get("storageType") == "u":
+        from .deletion_vectors import dv_rel_path
+
+        rel_bin = dv_rel_path(dvd["pathOrInlineDv"])
+        dv_tombs[rel_bin] = max(dv_tombs.get(rel_bin, 0), ts)
+
+
+def _apply_actions(st: LogState, actions: list[dict]) -> LogState:
+    """``st`` advanced over one commit — the commit-apply step of
+    replay. ``actions`` are as :func:`_commit_actions` reads them (file
+    paths physical). The containers of ``st`` are updated in place
+    (:func:`_fork` first to keep the original); the returned state
+    carries the next version and the commit's protocol and metaData."""
+    protocol, meta = st.protocol, st.meta
+    adds, removes, txns = st.adds, st.removes, st.txns
+    domains = st.domain_metadata
+    for action in actions:
+        if "protocol" in action:
+            protocol = action["protocol"]
+        elif "metaData" in action:
+            meta = action["metaData"]
+        elif "add" in action:
+            a = action["add"]
+            adds[a["path"]] = a
+            removes.pop(a["path"], None)
+        elif "remove" in action:
+            rm = action["remove"]
+            prev = adds.pop(rm["path"], None)
+            # the tombstone keeps the file's LAST deletion-vector
+            # descriptor (explicit on the remove, else synthesized from
+            # the replaced add) — vacuum ages the .bin from the
+            # tombstone's deletionTimestamp, mirroring how data files
+            # themselves age
+            dvd = rm.get("deletionVector") or (
+                (prev or {}).get("deletionVector")
+            )
+            ts = int(rm.get("deletionTimestamp", 0))
+            removes[rm["path"]] = {
+                "deletionTimestamp": ts,
+                "dataChange": bool(rm.get("dataChange", True)),
+                **({"deletionVector": dvd} if dvd else {}),
+            }
+            _note_dv_tombstone(st.dv_tombstones, dvd, ts)
+        elif "txn" in action:
+            t = action["txn"]
+            txns[t["appId"]] = max(txns.get(t["appId"], -1), int(t["version"]))
+        elif "domainMetadata" in action:
+            dm = action["domainMetadata"]
+            if dm.get("removed"):
+                domains.pop(dm["domain"], None)
+            else:
+                domains[dm["domain"]] = dm.get("configuration")
+    return st._replace(version=st.version + 1, protocol=protocol, meta=meta)
+
+
+def _fork(st: LogState | None) -> LogState:
+    """A copy of ``st`` (an empty table's state for None) that
+    :func:`_apply_actions` can advance without touching ``st``."""
+    if st is None:
+        return LogState(-1, {}, None, {}, {}, None, {}, {})
+    return st._replace(
+        adds=dict(st.adds),
+        txns=dict(st.txns),
+        removes=dict(st.removes),
+        domain_metadata=dict(st.domain_metadata or {}),
+        dv_tombstones=dict(st.dv_tombstones or {}),
     )
 
 
@@ -2959,13 +3107,9 @@ def _copy_on_write_where(
     prefer ``replace_partitions``, selective ones ``delete_where_dv``
     which skips the rewrite entirely); the rewrite is O(files holding
     matches)."""
-    _warn_if_commit_unsafe(path)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    st = _replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
+    tx = Txn(spark, path)
+    st = tx.st
     adds, meta = st.adds, st.meta
-    if meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
     schema = _spark_schema_from_string(meta["schemaString"])
     cols = [f.name for f in schema.fields]
     types = {f.name: f.dataType for f in schema.fields}
@@ -3060,11 +3204,8 @@ def _copy_on_write_where(
             updated = _rt_materialize(updated, meta, fresh_cv=True)
         updated, cached = _enforce_constraints(updated, meta)
         new_data = survivors.unionByName(updated)
-    new_version = st.version + 1
     try:
-        new_adds = _stage_commit_files(
-            spark, fs, jvm, path, new_data, pcols, new_version, l2p=l2p
-        )
+        new_adds = tx.stage(new_data, pcols, l2p=l2p)
         cdc_actions: list[dict] = []
         if delta_cdf._cdf_enabled(meta):
             pre = base.filter(~keep).select(*cols)
@@ -3082,43 +3223,25 @@ def _copy_on_write_where(
                     )
                 )
             cdc_actions = delta_cdf._stage_cdc_files(
-                spark, fs, jvm, path, changes, new_version, l2p
+                spark, tx.fs, tx.jvm, path, changes, tx.version, l2p
             )
     finally:
         if cached:
             updated.unpersist()
-    now = _now_ms()
-    actions: list[dict] = [
-        _commit_info(
-            operation,
-            {"predicate": predicate,
-             **({"assignments": assignments} if assignments else {})},
-            metrics={
-                metric: str(n_matched),
-                **_add_metrics(new_adds, len(touched_rels)),
-            },
-        )
-    ]
-    actions.extend(cdc_actions)
-    actions.extend(
-        {
-            "remove": {
-                "path": _encode_path(rel),
-                "deletionTimestamp": now,
-                "dataChange": True,
-                **(
-                    {"deletionVector": adds[rel]["deletionVector"]}
-                    if adds[rel].get("deletionVector")
-                    else {}
-                ),
-            }
-        }
-        for rel in touched_rels
+    return tx.commit(
+        operation,
+        {"predicate": predicate,
+         **({"assignments": assignments} if assignments else {})},
+        cdc_actions + [
+            tx.remove(rel, deletion_vector=adds[rel].get("deletionVector"))
+            for rel in touched_rels
+        ],
+        staged=new_adds,
+        metrics={
+            metric: str(n_matched),
+            **_add_metrics(new_adds, len(touched_rels)),
+        },
     )
-    _rt_finalize_commit(st, new_adds, actions, new_version)
-    actions.extend(new_adds)
-    _write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version
 
 
 def delete_where(spark: SparkSession, path: str, predicate: str) -> int | None:
@@ -3141,16 +3264,3 @@ def update_where(
         raise ValueError("UPDATE requires at least one assignment")
     return _copy_on_write_where(spark, path, predicate, assignments)
 
-
-def _commit_metadata_only(
-    spark, path: str, actions: list[dict]
-) -> int:
-    """One metadata-only commit (mapping upgrades, renames, drops,
-    constraint changes): exclusive-create the next version holding
-    exactly ``actions``."""
-    fs, _, jvm = _hadoop_fs(spark, path)
-    st = _replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    new_version = st.version + 1
-    _write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version

@@ -74,12 +74,8 @@ def optimize_delta(
     partition-grain into value-grain. The commit stays
     dataChange=false (layout, not content); a predicate that matched N
     files on the round-robin layout matches ~N/n_files after."""
-    dl._warn_if_commit_unsafe(path)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
+    tx = dl.Txn(spark, path)
+    st = tx.st
     pcols = st.meta.get("partitionColumns", [])
     if partitions is not None and not pcols:
         raise ValueError(
@@ -139,37 +135,21 @@ def optimize_delta(
         compacted = compacted.repartition(len(doomed_groups), *pcols)
     else:
         compacted = compacted.coalesce(1)
-    new_version = st.version + 1
-    adds = dl._stage_commit_files(
-        spark, fs, jvm, path, compacted, pcols, new_version,
-        data_change=False, l2p=l2p,
-    )
-    now = dl._now_ms()
-    actions: list[dict] = [
-        dl._commit_info(
-            "OPTIMIZE",
-            {
-                **({"zOrderBy": list(zorder_by)} if zorder_by else {}),
-                **({"predicate": partitions} if partitions is not None else {}),
-            },
-            metrics=dl._add_metrics(adds, len(doomed_adds)),
-        )
-    ]
-    actions.extend(
+    adds = tx.stage(compacted, pcols, data_change=False, l2p=l2p)
+    return tx.commit(
+        "OPTIMIZE",
         {
-            "remove": {
-                "path": dl._encode_path(rel),
-                "deletionTimestamp": now,
-                "dataChange": False,
-            }
-        }
-        for rels in doomed_groups.values()
-        for rel in sorted(rels)
+            **({"zOrderBy": list(zorder_by)} if zorder_by else {}),
+            **({"predicate": partitions} if partitions is not None else {}),
+        },
+        [
+            tx.remove(rel, data_change=False)
+            for rels in doomed_groups.values()
+            for rel in sorted(rels)
+        ],
+        staged=adds,
+        metrics=dl._add_metrics(adds, len(doomed_adds)),
     )
-    dl._rt_finalize_commit(st, adds, actions, new_version)
-    actions.extend(adds)
-    dl._write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version
 
 
 def purge_delta(
@@ -202,12 +182,8 @@ def purge_delta(
     OPTIMIZE variant there too). The reference (215-line Polars/dbt
     core) has no lakehouse layer; this completes the DV lifecycle of
     the round-7+ Delta family."""
-    dl._warn_if_commit_unsafe(path)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
+    tx = dl.Txn(spark, path)
+    st = tx.st
     pcols = st.meta.get("partitionColumns", [])
     if partitions is not None and not pcols:
         raise ValueError(
@@ -246,43 +222,29 @@ def purge_delta(
     purged = (
         purged.repartition(n_groups, *pcols) if pcols else purged.coalesce(1)
     )
-    new_version = st.version + 1
-    adds = dl._stage_commit_files(
-        spark, fs, jvm, path, purged, pcols, new_version,
-        data_change=False, l2p=l2p,
-    )
-    now = dl._now_ms()
-    actions: list[dict] = [
-        dl._commit_info(
-            "REORG",
-            {
-                "applyPurge": True,
-                **({"predicate": partitions} if partitions is not None else {}),
-            },
-            metrics={
-                **dl._add_metrics(adds, len(doomed)),
-                "numDeletionVectorsRemoved": str(len(doomed)),
-            },
-        )
-    ]
-    for rel in sorted(doomed):
-        # the remove carries the superseded descriptor (as the spec's
+    adds = tx.stage(purged, pcols, data_change=False, l2p=l2p)
+    return tx.commit(
+        "REORG",
+        {
+            "applyPurge": True,
+            **({"predicate": partitions} if partitions is not None else {}),
+        },
+        # each remove carries the superseded descriptor (as the spec's
         # in-place-update convention requires) so vacuum can age the
         # .bin from this tombstone without log archaeology
-        actions.append(
-            {
-                "remove": {
-                    "path": dl._encode_path(rel),
-                    "deletionTimestamp": now,
-                    "dataChange": False,
-                    "deletionVector": doomed[rel]["deletionVector"],
-                }
-            }
-        )
-    dl._rt_finalize_commit(st, adds, actions, new_version)
-    actions.extend(adds)
-    dl._write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version
+        [
+            tx.remove(
+                rel, data_change=False,
+                deletion_vector=doomed[rel]["deletionVector"],
+            )
+            for rel in sorted(doomed)
+        ],
+        staged=adds,
+        metrics={
+            **dl._add_metrics(adds, len(doomed)),
+            "numDeletionVectorsRemoved": str(len(doomed)),
+        },
+    )
 
 
 def set_domain_metadata(
@@ -312,13 +274,9 @@ def set_domain_metadata(
         )
     if not isinstance(configuration, str):
         configuration = json.dumps(configuration, sort_keys=True)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    proto = dict(st.protocol or _PROTOCOL_ACTION["protocol"])
-    actions: list[dict] = [
-        dl._commit_info("SET DOMAIN METADATA", {"domain": domain})
-    ]
+    tx = dl.Txn(spark, path)
+    proto = dict(tx.st.protocol or _PROTOCOL_ACTION["protocol"])
+    actions: list[dict] = []
     if "domainMetadata" not in (proto.get("writerFeatures") or []):
         actions.append(
             {"protocol": _upgraded_protocol_writer_only(
@@ -334,9 +292,7 @@ def set_domain_metadata(
             }
         }
     )
-    new_version = st.version + 1
-    dl._write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version
+    return tx.commit("SET DOMAIN METADATA", {"domain": domain}, actions)
 
 
 def remove_domain_metadata(
@@ -345,24 +301,15 @@ def remove_domain_metadata(
     """Tombstone a metadata domain (``removed: true``) — replay drops
     it, and checkpoints stop carrying it. Raises if the domain is not
     currently set."""
-    fs, _, jvm = _hadoop_fs(spark, path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if domain not in (st.domain_metadata or {}):
+    tx = dl.Txn(spark, path)
+    if domain not in (tx.st.domain_metadata or {}):
         raise ValueError(f"domain {domain!r} is not set on {path}")
-    actions = [
-        dl._commit_info("REMOVE DOMAIN METADATA", {"domain": domain}),
-        {
-            "domainMetadata": {
-                "domain": domain,
-                "configuration": "",
-                "removed": True,
-            }
-        },
-    ]
-    new_version = st.version + 1
-    dl._write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version
+    return tx.commit(
+        "REMOVE DOMAIN METADATA", {"domain": domain},
+        [{"domainMetadata": {
+            "domain": domain, "configuration": "", "removed": True,
+        }}],
+    )
 
 
 def get_domain_metadata(
@@ -393,11 +340,8 @@ def enable_clustering(
 
     Scale: clustering state is O(1) metadata; each OPTIMIZE pass
     rewrites only the files in its scope, exactly as ZORDER does."""
-    dl._warn_if_commit_unsafe(path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
+    tx = dl.Txn(spark, path)
+    st = tx.st
     schema = dl._spark_schema_from_string(st.meta["schemaString"])
     known = {f.name for f in schema.fields}
     missing = sorted(set(columns) - known)
@@ -415,10 +359,9 @@ def enable_clustering(
     proto = _upgraded_protocol_writer_only(proto, "clustering")
     proto = _upgraded_protocol_writer_only(proto, "domainMetadata")
     l2p = delta_colmap._logical_to_physical(st.meta) or {}
-    return dl._commit_metadata_only(
-        spark, path,
+    return tx.commit(
+        "CLUSTER BY", {"clusterBy": list(columns)},
         [
-            dl._commit_info("CLUSTER BY", {"clusterBy": list(columns)}),
             {"protocol": proto},
             {
                 "domainMetadata": {
@@ -483,17 +426,13 @@ def drop_table_feature(spark: SparkSession, path: str, feature: str) -> int:
     protocol as of that version — reader-version-3 — and so stays
     gated on actual DV support in both this engine and the external
     reader."""
-    dl._warn_if_commit_unsafe(path)
     if feature not in _DROPPABLE_FEATURES:
         raise ValueError(
             f"feature {feature!r} is not droppable by this writer "
             f"(droppable: {sorted(_DROPPABLE_FEATURES)})"
         )
-    fs, _, jvm = _hadoop_fs(spark, path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
-    if st.meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
+    tx = dl.Txn(spark, path)
+    st = tx.st
     proto = dict(st.protocol or _PROTOCOL_ACTION["protocol"])
     if feature not in (proto.get("readerFeatures") or []) and feature not in (
         proto.get("writerFeatures") or []
@@ -502,11 +441,7 @@ def drop_table_feature(spark: SparkSession, path: str, feature: str) -> int:
             f"table at {path} does not list feature {feature!r} in its "
             "protocol — nothing to drop"
         )
-    new_version = st.version + 1
-    actions = [
-        dl._commit_info("DROP FEATURE", {"feature": feature}),
-        {"protocol": _downgraded_protocol(proto, feature)},
-    ]
+    actions = [{"protocol": _downgraded_protocol(proto, feature)}]
     if feature == "deletionVectors":
         live_dv = sorted(
             rel for rel, a in st.adds.items() if a.get("deletionVector")
@@ -552,8 +487,7 @@ def drop_table_feature(spark: SparkSession, path: str, feature: str) -> int:
                 f"cannot drop {feature!r}: column(s) {still} still "
                 "declare a DEFAULT — drop_column_default them first"
             )
-    dl._write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version
+    return tx.commit("DROP FEATURE", {"feature": feature}, actions)
 
 
 def restore_delta(
@@ -581,12 +515,10 @@ def restore_delta(
     ``_change_data`` files (same form as MERGE's) when the caller
     names the row identity; without keys such a commit stays
     reconstruction-only (readers diff it with their own key_cols)."""
-    dl._warn_if_commit_unsafe(path)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    cur = dl._replay_log(spark, path, None)
-    _check_writer_protocol(cur.protocol, cur.meta)
-    old = dl._replay_log(spark, path, version)
-    if old.meta is None or cur.meta is None:
+    tx = dl.Txn(spark, path)
+    cur, fs, jvm = tx.st, tx.fs, tx.jvm
+    old = dl._replay_log(spark, path, version, tx.tail)
+    if old.meta is None:
         raise ValueError(f"Delta log under {path} has no metaData action")
     def _dv_identity(a: dict):
         d = a.get("deletionVector")
@@ -620,7 +552,6 @@ def restore_delta(
             f"cannot restore to version {version}: data files were "
             f"vacuumed: {missing[:5]}{'...' if len(missing) > 5 else ''}"
         )
-    new_version = cur.version + 1
     # The restored metaData governs the table from this commit on;
     # CDF enablement and the change-file schema follow it.
     reemit_meta = old.meta["schemaString"] != cur.meta[
@@ -644,32 +575,14 @@ def restore_delta(
                     eff_meta["schemaString"]
                 ).fields
             ],
-            new_version,
+            tx.version,
             delta_colmap._logical_to_physical(eff_meta),
         )
-    now = dl._now_ms()
-    actions: list[dict] = [
-        dl._commit_info(
-            "RESTORE", {"version": version},
-            metrics={
-                "numRestoredFiles": str(len(to_readd)),
-                "numRemovedFiles": str(len(to_remove)),
-            },
-        )
-    ]
-    actions.extend(cdc_actions)
+    actions: list[dict] = list(cdc_actions)
     if reemit_meta:
         actions.append({"metaData": old.meta})
-    for rel in to_remove:
-        actions.append(
-            {
-                "remove": {
-                    "path": dl._encode_path(rel),
-                    "deletionTimestamp": now,
-                    "dataChange": True,
-                }
-            }
-        )
+    actions.extend(tx.remove(rel) for rel in to_remove)
+    now = dl._now_ms()
     readd_actions = []
     for rel in to_readd:
         a = dict(old.adds[rel])
@@ -683,12 +596,16 @@ def restore_delta(
         readd_actions.append({"add": a})
     # rowTracking: re-adds from versions AFTER enablement carry their
     # original ids (stability); a restore to a PRE-enablement version
-    # re-adds bare files — they get fresh ids here so a row-tracking
-    # table never serves null row ids
-    dl._rt_finalize_commit(cur, readd_actions, actions, new_version)
-    actions.extend(readd_actions)
-    dl._write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version
+    # re-adds bare files — staged, they get fresh ids so a row-tracking
+    # table never serves null row ids. The transaction never deletes
+    # them: only files it wrote count as its own.
+    return tx.commit(
+        "RESTORE", {"version": version}, actions, staged=readd_actions,
+        metrics={
+            "numRestoredFiles": str(len(to_readd)),
+            "numRemovedFiles": str(len(to_remove)),
+        },
+    )
 
 
 def describe_detail(spark: SparkSession, path: str) -> DataFrame:
@@ -1015,9 +932,8 @@ def convert_parquet_to_delta(
     ``_delta_log`` already exists (conversion is one-shot; commit
     through ``write_delta`` afterwards)."""
     pcols = dl._norm_pcols(partition_col)
-    dl._warn_if_commit_unsafe(path)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    if dl._log_tail(fs, jvm, path)[0]:
+    tx = dl.Txn(spark, path, create=True)
+    if tx.st is not None:
         raise ValueError(
             f"{path} already has a _delta_log; CONVERT is one-shot"
         )
@@ -1029,7 +945,7 @@ def convert_parquet_to_delta(
             f"partition columns {missing} not found by discovery "
             f"(have {df.columns})"
         )
-    files = dl._relative_files(fs, jvm, path, "", pcols)
+    files = dl._relative_files(tx.fs, tx.jvm, path, "", pcols)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path}")
     now = dl._now_ms()
@@ -1046,15 +962,9 @@ def convert_parquet_to_delta(
         if stats is not None:
             add["stats"] = json.dumps(stats, sort_keys=True)
         adds.append({"add": add})
-    actions = [
-        dl._commit_info(
-            "CONVERT",
-            {"sourceFormat": "parquet", "partitionBy": pcols},
-            metrics=dl._add_metrics(adds, 0),
-        ),
-        _PROTOCOL_ACTION,
-        dl._metadata_action(df, pcols),
-    ]
-    actions.extend(adds)
-    dl._write_commit(spark, fs, jvm, path, 0, actions)
-    return 0
+    return tx.commit(
+        "CONVERT",
+        {"sourceFormat": "parquet", "partitionBy": pcols},
+        [_PROTOCOL_ACTION, dl._metadata_action(df, pcols), *adds],
+        metrics=dl._add_metrics(adds, 0),
+    )

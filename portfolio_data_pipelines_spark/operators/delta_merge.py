@@ -23,8 +23,7 @@ from pyspark.sql import functions as F
 
 from . import delta_cdf, delta_colmap, delta_scan
 from . import delta_log as dl
-from .delta_protocol import _check_append_only, _check_writer_protocol
-from .hadoop_io import _hadoop_fs
+from .delta_protocol import _check_append_only
 
 
 #: Fused-discovery bound: when the table's live set is at most this many
@@ -64,13 +63,9 @@ def merge_delta(
     The reference's roadmap names exactly this (``README.md:209``);
     ``operators/medallion.merge_upsert`` is the plain-parquet
     restatement at partition granularity."""
-    dl._warn_if_commit_unsafe(path)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
+    tx = dl.Txn(spark, path)
+    st = tx.st
     adds, meta = st.adds, st.meta
-    if meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
     schema = dl._spark_schema_from_string(meta["schemaString"])
     cols = [f.name for f in schema.fields]
     # identity columns through MERGE (r12; refused through r11): a
@@ -260,7 +255,6 @@ def merge_delta(
     if touched_rels:
         # the rewrite deletes rows from the touched files
         _check_append_only(meta, True)
-    new_version = st.version + 1
     # empty source ⇔ the fused profile saw zero key groups — no extra job
     if not touched_rels and max_kc is None:
         for fr in cached_frames:
@@ -422,9 +416,7 @@ def merge_delta(
         new_data = survivors.unionByName(source)
 
     try:
-        new_adds = dl._stage_commit_files(
-            spark, fs, jvm, path, new_data, pcols, new_version, l2p=l2p
-        )
+        new_adds = tx.stage(new_data, pcols, l2p=l2p)
     finally:
         for fr in cached_frames:
             fr.unpersist()
@@ -439,21 +431,14 @@ def merge_delta(
             dl._decode_path(a["add"]["path"]): a["add"] for a in new_adds
         }
         cdc_actions = delta_cdf._maybe_stage_cdc(
-            spark, fs, jvm, path, meta,
+            spark, tx.fs, tx.jvm, path, meta,
             delta_scan._read_adds(
                 spark, path, {r: adds[r] for r in touched_rels}, meta
             ),
             delta_scan._read_adds(spark, path, staged_map, meta),
-            key_cols, cols, new_version, l2p,
+            key_cols, cols, tx.version, l2p,
         )
-    now = dl._now_ms()
-
-    actions: list[dict] = [
-        dl._commit_info(
-            "MERGE", {"keyColumns": key_cols},
-            metrics=dl._add_metrics(new_adds, len(touched_rels)),
-        )
-    ]
+    actions: list[dict] = []
     if id_hwms:
         # identity high-water marks advance in the SAME commit as the
         # rows they cover (write_delta's append contract, kept by MERGE)
@@ -461,20 +446,11 @@ def merge_delta(
             {"metaData": dl._meta_with_identity_hwm(meta, id_hwms)}
         )
     actions.extend(cdc_actions)
-    actions.extend(
-        {
-            "remove": {
-                "path": dl._encode_path(rel),
-                "deletionTimestamp": now,
-                "dataChange": True,
-            }
-        }
-        for rel in touched_rels
+    actions.extend(tx.remove(rel) for rel in touched_rels)
+    return tx.commit(
+        "MERGE", {"keyColumns": key_cols}, actions, staged=new_adds,
+        metrics=dl._add_metrics(new_adds, len(touched_rels)),
     )
-    dl._rt_finalize_commit(st, new_adds, actions, new_version)
-    actions.extend(new_adds)
-    dl._write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version
 
 
 def apply_changes_delta(
@@ -504,13 +480,9 @@ def apply_changes_delta(
     exactly-once ledger for streaming replay. Returns the committed
     version (or the current one for an idempotent replay / empty
     batch)."""
-    dl._warn_if_commit_unsafe(path)
-    fs, _, jvm = _hadoop_fs(spark, path)
-    st = dl._replay_log(spark, path, None)
-    _check_writer_protocol(st.protocol, st.meta)
+    tx = dl.Txn(spark, path)
+    st = tx.st
     adds, meta = st.adds, st.meta
-    if meta is None:
-        raise ValueError(f"Delta log under {path} has no metaData action")
     if txn is not None and st.txns.get(txn[0], -1) >= txn[1]:
         return st.version
     schema = dl._spark_schema_from_string(meta["schemaString"])
@@ -640,7 +612,6 @@ def apply_changes_delta(
     touched_rels = sorted(touched_rels)
     if touched_rels:
         _check_append_only(meta, True)
-    new_version = st.version + 1
     if not touched_rels and upserts.isEmpty():
         if upserts_cached:
             upserts.unpersist()
@@ -690,9 +661,7 @@ def apply_changes_delta(
     else:
         new_data = survivors.unionByName(upserts)
     try:
-        new_adds = dl._stage_commit_files(
-            spark, fs, jvm, path, new_data, pcols, new_version, l2p=l2p
-        )
+        new_adds = tx.stage(new_data, pcols, l2p=l2p)
     finally:
         if upserts_cached:
             upserts.unpersist()
@@ -704,43 +673,28 @@ def apply_changes_delta(
             dl._decode_path(a["add"]["path"]): a["add"] for a in new_adds
         }
         cdc_actions = delta_cdf._maybe_stage_cdc(
-            spark, fs, jvm, path, meta,
+            spark, tx.fs, tx.jvm, path, meta,
             delta_scan._read_adds(
                 spark, path, {r: adds[r] for r in touched_rels}, meta
             ),
             delta_scan._read_adds(spark, path, staged_map, meta),
-            key_cols, cols, new_version, l2p,
+            key_cols, cols, tx.version, l2p,
         )
-    now = dl._now_ms()
-    actions: list[dict] = [
-        dl._commit_info(
-            "APPLY CHANGES", {"keyColumns": key_cols},
-            metrics=dl._add_metrics(new_adds, len(touched_rels)),
-        )
-    ]
+    actions: list[dict] = []
     if id_hwms:
         actions.append(
             {"metaData": dl._meta_with_identity_hwm(meta, id_hwms)}
         )
     actions.extend(cdc_actions)
     if txn is not None:
-        actions.append(
-            {"txn": {"appId": txn[0], "version": txn[1], "lastUpdated": now}}
-        )
-    actions.extend(
-        {
-            "remove": {
-                "path": dl._encode_path(rel),
-                "deletionTimestamp": now,
-                "dataChange": True,
-            }
-        }
-        for rel in touched_rels
+        actions.append({"txn": {
+            "appId": txn[0], "version": txn[1], "lastUpdated": dl._now_ms(),
+        }})
+    actions.extend(tx.remove(rel) for rel in touched_rels)
+    return tx.commit(
+        "APPLY CHANGES", {"keyColumns": key_cols}, actions, staged=new_adds,
+        metrics=dl._add_metrics(new_adds, len(touched_rels)),
     )
-    dl._rt_finalize_commit(st, new_adds, actions, new_version)
-    actions.extend(new_adds)
-    dl._write_commit(spark, fs, jvm, path, new_version, actions)
-    return new_version
 
 
 def delta_cdf_apply_sink(

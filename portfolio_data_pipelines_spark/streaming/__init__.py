@@ -104,24 +104,6 @@ def tumbling_daily_mart(events: DataFrame, watermark: str = "1 day") -> DataFram
     )
 
 
-def sliding_type_counts(
-    events: DataFrame, window: str = "2 days", slide: str = "1 day", watermark: str = "1 day"
-) -> DataFrame:
-    """Sliding event-time windows per event_type — each event lands in
-    window_duration/slide windows; state still watermark-bounded."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-        )
-    )
-
-
 def user_session_windows(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "1 day"
 ) -> DataFrame:

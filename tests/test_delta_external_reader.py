@@ -223,7 +223,6 @@ def test_exported_lake_layout_parity(spark, tmp_path):
     from portfolio_data_pipelines_spark.operators.delta_protocol import (
         _PROTOCOL_ACTION,
     )
-    from portfolio_data_pipelines_spark.operators.hadoop_io import _hadoop_fs
 
     path = str(tmp_path / "lake")
     d0 = _df(spark, [(1, 1.0, _day("2021-01-01")), (2, 2.0, _day("2021-01-02"))])
@@ -240,13 +239,10 @@ def test_exported_lake_layout_parity(spark, tmp_path):
                 "dataChange": True,
             }})
     assert adds
-    fs, _, jvm = _hadoop_fs(spark, path)
-    dl._write_commit(spark, fs, jvm, path, 0, [
-        dl._commit_info("CONVERT", {"sourceFormat": "parquet"}),
-        _PROTOCOL_ACTION,
-        dl._metadata_action(d0, ["date"]),
-        *adds,
-    ])
+    dl.Txn(spark, path, create=True).commit(
+        "CONVERT", {"sourceFormat": "parquet"},
+        [_PROTOCOL_ACTION, dl._metadata_action(d0, ["date"]), *adds],
+    )
     _assert_match(spark, path)
     # Delta-native commits continue on the exported table
     write_delta(spark, _df(spark, [(3, 3.0, _day("2021-01-03"))]),

@@ -302,6 +302,145 @@ class TestLogConformance:
         # table intact under the injected (no-op) metadata commit
         assert read_delta(spark, path).count() == 1
 
+    def test_metadata_commit_racing_alter_keeps_its_constraint(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A metadata-only commit builds its metaData from the snapshot
+        it opened on: when a competing ALTER lands first, it must raise
+        the named conflict, never commit its stale metaData over the
+        winner's (which would silently drop the new constraint)."""
+        import portfolio_data_pipelines_spark.operators.delta_log as dl
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
+            add_check_constraint,
+        )
+        from portfolio_data_pipelines_spark.operators.delta_cdf import (
+            enable_change_data_feed,
+        )
+
+        path = str(tmp_path / "t3d")
+        write_delta(
+            spark, spark.createDataFrame([(1, 1.0)], "id bigint, v double"),
+            path,
+        )
+        real_replay = dl._replay_log
+        raced = {"done": False}
+
+        def replay_then_race(*a, **k):
+            st = real_replay(*a, **k)
+            if not raced["done"]:
+                raced["done"] = True
+                add_check_constraint(spark, path, "pos", "id > 0")  # v1
+            return st
+
+        monkeypatch.setattr(dl, "_replay_log", replay_then_race)
+        with pytest.raises(dl.DeltaConcurrentModificationError) as err:
+            enable_change_data_feed(spark, path)
+        monkeypatch.setattr(dl, "_replay_log", real_replay)
+        assert (err.value.version, err.value.operation) == (1, "ADD CONSTRAINT")
+        st = dl._replay_log(spark, path, None)
+        assert st.version == 1
+        assert st.meta["configuration"]["delta.constraints.pos"] == "id > 0"
+
+    @pytest.mark.parametrize(
+        "op", ["merge", "delete", "update", "dv_delete", "optimize",
+               "restore", "alter"],
+    )
+    def test_lost_race_raises_and_leaves_no_orphans(
+        self, spark, tmp_path, monkeypatch, op
+    ):
+        """Every operation that reads table state and loses its version
+        to a real append into another partition raises the named error,
+        leaves the winner's table, and deletes exactly the files it
+        wrote: afterwards every data, change-data and .bin file under
+        the table is a live add, a tombstone, a referenced bitmap or a
+        committed change-data file. A
+        RESTORE re-add and a deletion-vector re-add point at existing
+        files, which must survive."""
+        import os
+
+        import portfolio_data_pipelines_spark.operators.delta_log as dl
+        from portfolio_data_pipelines_spark.operators.delta_alter import (
+            add_check_constraint,
+        )
+        from portfolio_data_pipelines_spark.operators.delta_dv import (
+            delete_where_dv,
+        )
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
+            restore_delta,
+        )
+        from portfolio_data_pipelines_spark.operators.deletion_vectors import (
+            dv_rel_path,
+        )
+
+        path = str(tmp_path / f"t_race_{op}")
+        schema = "id bigint, v double, p string"
+        a_rows = [(1, 1.0, "a"), (2, 2.0, "a")]
+        write_delta(
+            spark, spark.createDataFrame(a_rows, schema).coalesce(1), path,
+            partition_col="p",
+            configuration={"delta.enableChangeDataFeed": "true"},
+        )
+        write_delta(
+            spark, spark.createDataFrame([(3, 3.0, "a"), (4, 4.0, "a")], schema)
+            .coalesce(1), path, partition_col="p",
+        )
+        dl.delete_where(spark, path, "id = 4")  # v2: tombstones v1's file
+        run = {
+            "merge": lambda: merge_delta(
+                spark, path,
+                spark.createDataFrame([(1, 10.0, "a")], schema), ["id"],
+            ),
+            "delete": lambda: dl.delete_where(spark, path, "id = 1"),
+            "update": lambda: dl.update_where(
+                spark, path, "id = 1", {"v": "v + 1"}
+            ),
+            "dv_delete": lambda: delete_where_dv(spark, path, "id = 1"),
+            "optimize": lambda: optimize_delta(spark, path),
+            "restore": lambda: restore_delta(
+                spark, path, 1, cdf_key_cols=["id"]
+            ),
+            "alter": lambda: add_check_constraint(spark, path, "pos", "id > 0"),
+        }[op]
+        winner = spark.createDataFrame([(9, 9.0, "b")], schema)
+        orig_write = dl._write_small_file
+        raced = {"done": False}
+
+        def append_first(fs, jvm, pathstr, content, overwrite=False):
+            # the operation's commit is about to create v3: a concurrent
+            # append into partition b takes v3 first
+            if not raced["done"] and pathstr.endswith(f"{3:020d}.json"):
+                raced["done"] = True
+                assert write_delta(spark, winner, path, partition_col="p") == 3
+            return orig_write(fs, jvm, pathstr, content, overwrite=overwrite)
+
+        monkeypatch.setattr(dl, "_write_small_file", append_first)
+        with pytest.raises(dl.DeltaConcurrentModificationError) as err:
+            run()
+        monkeypatch.setattr(dl, "_write_small_file", orig_write)
+        assert (err.value.version, err.value.operation) == (3, "WRITE")
+        assert _rows(spark, read_delta(spark, path)) == sorted(
+            a_rows + [(3, 3.0, "a"), (9, 9.0, "b")]
+        )
+        st = dl._replay_log(spark, path, None)
+        assert st.version == 3
+        known = set(st.adds) | set(st.removes) | {
+            dv_rel_path(a["deletionVector"]["pathOrInlineDv"])
+            for a in st.adds.values() if a.get("deletionVector")
+        } | {  # change-data files of the committed versions
+            a["cdc"]["path"]
+            for v in range(4)
+            for a in dl._commit_actions(None, None, path, v)
+            if "cdc" in a
+        }
+        on_disk = {
+            os.path.relpath(os.path.join(d, n), path)
+            for d, _dirs, names in os.walk(path)
+            if "_delta_log" not in d
+            for n in names
+            if n.endswith((".parquet", ".bin"))
+        }
+        assert on_disk == known
+
 
 class TestCheckpoint:
     def test_checkpoint_written_and_used(self, spark, tmp_path):
@@ -336,6 +475,65 @@ class TestCheckpoint:
         )
         assert lc["version"] == 1
         assert len(_rows(spark, read_delta(spark, path))) == 2
+
+    def test_commit_checkpoints_equal_full_replay(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A commit's checkpoint is built from the state its writer
+        holds, advanced over the commit, not from a fresh replay: at
+        each checkpoint of a MERGE → DV delete → OPTIMIZE → RESTORE run
+        the checkpoint-anchored replay equals the replay of every
+        commit from version 0."""
+        from portfolio_data_pipelines_spark.operators import delta_checkpoint
+        from portfolio_data_pipelines_spark.operators import delta_log as dl
+        from portfolio_data_pipelines_spark.operators.delta_dv import (
+            delete_where_dv,
+        )
+        from portfolio_data_pipelines_spark.operators.delta_maintain import (
+            restore_delta,
+        )
+        from portfolio_data_pipelines_spark.operators.hadoop_io import (
+            _hadoop_fs,
+        )
+
+        monkeypatch.setattr(delta_checkpoint, "DELTA_CHECKPOINT_EVERY", 2)
+        path = str(tmp_path / "t_cp_eq")
+        d = _day("2024-01-01")
+
+        def rows(*ids):
+            return _df(spark, [(i, float(i), d) for i in ids]).coalesce(1)
+
+        steps = [
+            lambda: write_delta(spark, rows(1, 2), path, partition_col="date"),
+            lambda: write_delta(spark, rows(3, 4), path, partition_col="date"),
+            lambda: merge_delta(spark, path, rows(2, 5), key_cols=["id"]),
+            lambda: delete_where_dv(spark, path, "id = 3"),
+            lambda: optimize_delta(spark, path),
+            lambda: restore_delta(spark, path, 1),
+            lambda: write_delta(spark, rows(6), path, partition_col="date"),
+        ]
+        fs, _, jvm = _hadoop_fs(spark, path)
+        for v, step in enumerate(steps):
+            assert step() == v
+            if v and v % 2 == 0:
+                lc = json.loads(
+                    (tmp_path / "t_cp_eq" / "_delta_log" / "_last_checkpoint")
+                    .read_text()
+                )
+                assert lc["version"] == v
+                full = dl._replay_state(
+                    fs, jvm, path, None, (list(range(v + 1)), None)
+                )
+                anchored = dl._replay_log(spark, path, None)
+                # a checkpoint keeps one tombstone per data path, so the
+                # .bin of a DV'd file that RESTORE re-added loses its
+                # tombstone time there; the rest of the state is equal
+                assert anchored.dv_tombstones.items() <= (
+                    full.dv_tombstones.items()
+                )
+                assert anchored._replace(dv_tombstones=None) == (
+                    full._replace(dv_tombstones=None)
+                )
 
 
 class TestExactlyOnce:
@@ -2332,6 +2530,18 @@ class TestCommitInfoHistory:
         assert by_v[4]["operationParameters"]["version"] == "2"
         assert by_v[0]["operationParameters"]["mode"] == "Append"
         assert all(r["timestamp"] is not None for r in hist)
+        # every commit reports its written bytes and its time: the staged
+        # adds' sizes, from the transaction's open to its commit
+        for v in (0, 1, 2, 3):
+            m = by_v[v]["operationMetrics"]
+            adds = [
+                json.loads(x)["add"]
+                for x in (tmp_path / "t_hist" / "_delta_log"
+                          / f"{v:020d}.json").read_text().splitlines()
+                if '"add"' in x
+            ]
+            assert int(m["numOutputBytes"]) == sum(a["size"] for a in adds) > 0
+            assert int(m["executionTimeMs"]) >= 0
 
     def test_commit_info_first_line_and_not_in_checkpoint(self, spark, tmp_path):
         path = str(tmp_path / "t_hist_cp")

@@ -338,10 +338,7 @@ def _walk_metadata(
         rename_column,
         set_column_default,
     )
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        _commit_metadata_only,
-        _replay_log,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_log import Txn
     from portfolio_data_pipelines_spark.operators.delta_maintain import (
         cleanup_log,
         vacuum_delta,
@@ -459,11 +456,11 @@ def _walk_metadata(
 
             version = enable_iceberg_compat(spark, path, version=2)
     if v2:
-        st = _replay_log(spark, path, None)
-        version = _commit_metadata_only(
-            spark, path,
+        tx = Txn(spark, path)
+        version = tx.commit(
+            "SET TBLPROPERTIES", {},
             [{"protocol": _upgraded_protocol_with(
-                st.protocol, {"v2Checkpoint"}
+                tx.st.protocol, {"v2Checkpoint"}
             )}],
         )
     rid: dict[int, int] = {}

@@ -97,6 +97,40 @@ def test_checkpoint_cadence_read_from_delta_checkpoint(spark, tmp_path, monkeypa
     assert read_delta(spark, path).count() == 55
 
 
+def test_one_commit_path():
+    """Every commit goes through ``Txn.commit``: it is the only caller
+    of ``_write_commit`` in the package, and the per-site metadata
+    commit helper is gone."""
+    import ast
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "portfolio_data_pipelines_spark",
+    )
+    callers, defined = [], set()
+    for root, _dirs, names in os.walk(pkg):
+        for name in sorted(n for n in names if n.endswith(".py")):
+            tree = ast.parse(open(os.path.join(root, name)).read())
+            scopes = [
+                (f"{cls.name}.{fn.name}" if cls else fn.name, fn)
+                for cls in [None] + [
+                    n for n in ast.walk(tree) if isinstance(n, ast.ClassDef)
+                ]
+                for fn in (cls.body if cls else tree.body)
+                if isinstance(fn, ast.FunctionDef)
+            ]
+            defined |= {qual for qual, _fn in scopes}
+            for qual, fn in scopes:
+                for node in ast.walk(fn):
+                    if isinstance(node, ast.Call) and (
+                        getattr(node.func, "id", None) == "_write_commit"
+                        or getattr(node.func, "attr", None) == "_write_commit"
+                    ):
+                        callers.append((name, qual))
+    assert callers == [("delta_log.py", "Txn.commit")]
+    assert "_commit_metadata_only" not in defined
+
+
 def test_checkpoint_failure_after_append_is_not_a_lost_race(
     spark, tmp_path, monkeypatch
 ):
@@ -119,10 +153,10 @@ def test_checkpoint_failure_after_append_is_not_a_lost_race(
     write_delta(spark, df, path)
     write_delta(spark, df, path)
 
-    def failing_checkpoint(spark_, path_, version):
+    def failing_checkpoint(fs, jvm, path_, st):
         raise RuntimeError("checkpoint failed")
 
-    monkeypatch.setattr(delta_checkpoint, "checkpoint_delta", failing_checkpoint)
+    monkeypatch.setattr(delta_checkpoint, "_write_checkpoint", failing_checkpoint)
     with pytest.raises(RuntimeError, match="checkpoint failed"):
         write_delta(spark, df, path, txn=("app", 1))
     log = os.path.join(path, "_delta_log")

@@ -12,11 +12,13 @@ the optimistic-retry surface is exercised under genuine concurrency:
 - the log must hold a gapless version chain with no duplicate or
   orphaned commit files;
 - a DELETE racing the appends either commits its exact semantics or
-  surfaces a clean conflict error — never a half-applied state.
+  raises ``DeltaConcurrentModificationError`` — never a half-applied
+  state.
 
 Local-FS rename is atomic (the same guarantee HDFS/ABFS give), which is
-exactly the regime ``_write_commit``'s exclusive-create contract
-assumes — see delta_log.py's module docstring on object stores.
+exactly the regime the exclusive create of ``delta_log.Txn.commit``
+assumes — see delta_log.py's ``_warn_if_commit_unsafe`` on object
+stores.
 """
 
 from __future__ import annotations

@@ -16,7 +16,8 @@ count the calls crossing the fs handle, pinning that:
 - ``_read_text`` moves a commit file in one buffered transfer, not one
   ``readLine`` round trip per line;
 - ``_replay_log`` adds no per-version existence probe on top;
-- an append lists the log and probes ``_last_checkpoint`` once each;
+- an append lists the log and probes ``_last_checkpoint`` once each,
+  also when its commit writes a checkpoint;
 - a checkpoint is one create + one rename per file (no temp-dir
   listings or recursive deletes), and a replay opens each file once;
 - a V2 checkpoint's discovery lists ``_delta_log`` through ``os`` on a
@@ -285,6 +286,23 @@ def test_append_lists_log_once(spark, tmp_path, no_local_fastpath, monkeypatch):
         a for a in cfs.args["exists"]
         if str(a[0]).endswith("/_last_checkpoint")
     ]) == 1
+
+
+def test_checkpoint_commit_lists_log_once(
+    spark, tmp_path, no_local_fastpath, monkeypatch
+):
+    # the commit's checkpoint is written from the state the writer
+    # holds, so the commit lists the log once, as a plain append does
+    monkeypatch.setattr(delta_checkpoint, "DELTA_CHECKPOINT_EVERY", 3)
+    path = _make_table(spark, tmp_path, 3)
+    cfs = _count_fs_calls(spark, monkeypatch)
+    df = spark.range(10).coalesce(1).selectExpr("id", "id * 2 AS v")
+    assert dl.write_delta(spark, df, path) == 3
+    assert cfs.calls["create"] == 3  # commit, checkpoint, _last_checkpoint
+    assert len([
+        a for a in cfs.args["listStatus"] if str(a[0]).endswith("/_delta_log")
+    ]) == 1
+    assert len(dl._replay_log(spark, path, None).adds) == 4
 
 
 def _declare_v2_checkpoints(path, version: int) -> None:

@@ -281,12 +281,10 @@ def test_writes_to_foreign_row_tracking_table_honor_duty(spark, tmp_path):
     meta = next(a["metaData"] for a in acts if "metaData" in a)
     cfg = dict(meta["configuration"])
     cfg.pop("delta.enableRowTracking")
-    from portfolio_data_pipelines_spark.operators.delta_log import (
-        _commit_metadata_only,
-    )
+    from portfolio_data_pipelines_spark.operators.delta_log import Txn
 
-    _commit_metadata_only(
-        spark, path,
+    Txn(spark, path).commit(
+        "UNSET TBLPROPERTIES", {},
         [{"metaData": {**meta, "configuration": cfg}}],
     )
     write_delta(
