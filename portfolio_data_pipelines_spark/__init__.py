@@ -10,8 +10,9 @@ A from-scratch re-expression of the capabilities of the reference repo
   (the reference declares schemas explicitly; so do we).
 - ``sources``   — ingestion: JSON payload parsing (weather / FX),
   typed parquet scans of the star schema.
-- ``operators`` — medallion writer (idempotent day-partition overwrite),
-  dedup, similarity search, text analysis, multimodal plumbing.
+- ``operators`` — the Delta lake (the bronze's idempotent day-scoped
+  overwrite, MERGE, time travel), JDBC warehouse writers, dedup,
+  similarity search, text analysis, multimodal plumbing.
 - ``plans``     — dbt-like model registry (ref/source resolution, tags,
   topological view builds, declarative data-quality tests).
 - ``streaming`` — Structured Streaming restatement of the hourly cadence

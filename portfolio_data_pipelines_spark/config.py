@@ -41,10 +41,9 @@ class PipelineConfig:
     # Lake layout (reference: weather_hourly_pipeline.py:70-79)
     lake_root: str = field(default_factory=lambda: _env("LAKE_ROOT", "/tmp/lake"))
     lake_bucket: str = field(default_factory=lambda: _env("S3_BUCKET", "datalake"))
-    #: "parquet" (dynamic partition overwrite, the reference contract) or
-    #: "delta" (transaction-logged bronze: same day-level idempotency via
-    #: replace_partitions, plus time travel over every ingest).
-    lake_format: str = field(default_factory=lambda: _env("LAKE_FORMAT", "parquet"))
+    #: The bronze is always Delta; "delta" is the one value WeatherPipeline
+    #: accepts, so a stale LAKE_FORMAT fails loudly instead of switching.
+    lake_format: str = field(default_factory=lambda: _env("LAKE_FORMAT", "delta"))
 
     # Optional S3/MinIO endpoint surface (reference: s3_client.py:4-15).
     # When s3_endpoint is set, the session factory injects fs.s3a.* conf.

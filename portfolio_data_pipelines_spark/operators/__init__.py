@@ -1,3 +1,3 @@
-"""Engine operators: medallion writes, dedup, similarity, text, multimodal."""
-
-from .medallion import write_bronze, write_partition_overwrite  # noqa: F401
+"""Engine operators: the Delta lake, JDBC warehouse writers, dedup,
+similarity, text, multimodal. Import each name from the module that
+defines it."""

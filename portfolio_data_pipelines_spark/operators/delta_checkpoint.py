@@ -138,15 +138,33 @@ def _read_last_checkpoint_doc(fs, jvm, path: str) -> dict | None:
     return json.loads(dl._read_text(fs, jvm, ps))
 
 
+def _v2_main_name(v: int, lc: dict) -> str | None:
+    """The V2 main's file name from the doc's ``v2Checkpoint.path``, or
+    None when absent or not a bare ``V.checkpoint.<id>.{parquet,json}``
+    name at version ``v`` (the doc is outside input: a foreign or
+    corrupt pointer must not steer the read out of ``_delta_log``)."""
+    ref = lc.get("v2Checkpoint")
+    name = ref.get("path") if isinstance(ref, dict) else None
+    if (
+        isinstance(name, str)
+        and name.startswith(f"{v:020d}.checkpoint.")
+        and name.endswith((".parquet", ".json"))
+        and "/" not in name
+    ):
+        return name
+    return None
+
+
 def _checkpoint_files(fs, jvm, path: str, lc: dict) -> list[str]:
     """Checkpoint file(s) for a ``_last_checkpoint`` doc: the classic
     single file, the MULTI-PART parts (``parts`` in the doc, N files
     named ``V.checkpoint.{i:010d}.{N:010d}.parquet``) or the UUID-named
     V2 main (``V.checkpoint.<uuid>.{parquet,json}``, what delta-spark
     writes by default on modern tables) — a conformant reader must
-    accept all three. The V2 name is unpredictable, so its probe is the
-    one place checkpoint discovery pays a directory listing, and only
-    after the classic-name probe missed."""
+    accept all three. The doc's ``v2Checkpoint`` field names the V2
+    main; without it (older writers) the name is unpredictable, so its
+    probe is the one place checkpoint discovery pays a directory
+    listing, and only after the classic-name probe missed."""
     v = int(lc["version"])
     parts = lc.get("parts")
     if parts:
@@ -155,6 +173,9 @@ def _checkpoint_files(fs, jvm, path: str, lc: dict) -> list[str]:
             f"{path}/_delta_log/{v:020d}.checkpoint.{i:010d}.{n:010d}.parquet"
             for i in range(1, n + 1)
         ]
+    v2_main = _v2_main_name(v, lc)
+    if v2_main is not None:
+        return [f"{path}/_delta_log/{v2_main}"]
     classic = f"{path}/_delta_log/{v:020d}.checkpoint.parquet"
     lcl = _local_path(classic)
     if (
@@ -335,7 +356,12 @@ def _write_checkpoint(fs, jvm, path: str, st: "dl.LogState") -> None:
             )
             main.append({"sidecar": {"path": name, "sizeInBytes": size}})
         name = f"{target:020d}.checkpoint.{uuid.uuid4().hex}.parquet"
-        _write_parquet(fs, jvm, f"{log}/{name}", main, _V2_MAIN_SCHEMA)
+        size = _write_parquet(fs, jvm, f"{log}/{name}", main, _V2_MAIN_SCHEMA)
+        # the spec's pointer to the main, so readers need no listing to
+        # find its UUID name; the write clock stands in for the mtime
+        lc["v2Checkpoint"] = {
+            "path": name, "sizeInBytes": size, "modificationTime": dl._now_ms(),
+        }
     else:
         # above the part bound the MULTI-PART form: a long-lived table's
         # checkpoint must not be one file that grows without bound

@@ -60,9 +60,7 @@ def merge_delta(
     cost is O(files containing matching keys), not O(table). Ambiguous
     sources (duplicate keys) are rejected, as Delta does.
 
-    The reference's roadmap names exactly this (``README.md:209``);
-    ``operators/medallion.merge_upsert`` is the plain-parquet
-    restatement at partition granularity."""
+    The reference's roadmap names exactly this (``README.md:209``)."""
     tx = dl.Txn(spark, path)
     st = tx.st
     adds, meta = st.adds, st.meta

@@ -1,107 +1,20 @@
-"""Medallion writers (SURVEY §2.2 K1-K4, §7 M3).
+"""Warehouse writers over JDBC (SURVEY §2.2 K3/K4).
 
-The reference's sink contract, restated Spark-native:
-
-- **Bronze (lake)**: zstd Parquet under Hive-style ``date=YYYY-MM-DD``
-  partitions (``weather_hourly_pipeline.py:70-79``). Spark writes the
-  partitioned layout directly — no per-file boto3 uploads.
-- **Idempotent day-level upsert (K4)**: the reference deletes the day then
-  re-inserts inside one transaction (``weather_hourly_pipeline.py:101-112``).
-  Spark-native equivalent: *dynamic partition overwrite* — an
-  ``INSERT OVERWRITE`` that replaces only the partitions present in the
-  incoming batch. Running the same batch twice yields the same rows
-  (idempotency test in tests/test_medallion.py).
-
-Atomicity note (SURVEY §4 "hard parts" #1): dynamic partition overwrite on
-plain Parquet is last-writer-wins per partition, not transactional across
-partitions — readers can observe a partially-rewritten multi-day batch. The
-reference has the same exposure (its DELETE+INSERT is transactional only
-because one Postgres txn spans the whole batch). A table format with
-commit atomicity (Delta/Iceberg — the reference's own roadmap,
-``README.md:204,209``) closes the gap; the writer below works unchanged on
-those via ``saveAsTable``/``replaceWhere``.
-
-Scale notes:
-- Partition column = ``to_date(time)`` → one directory per day; at 100 TB
-  (~years of data × many locations) add a second partition level (e.g.
-  location bucket) before any single day exceeds a few GB.
-- ``repartition(partition_cols)`` before write: groups each output
-  partition's rows into one task → one file per partition per batch, the
-  same layout the reference produces, and avoids the many-small-files
-  failure mode of a 32-way-parallel write of a tiny batch.
+The reference loads each hourly batch into Postgres with a
+delete-day-then-insert inside one transaction
+(``weather_hourly_pipeline.py:101-112``) and reads the warehouse back
+through dbt views. These are the Spark-native restatements: a
+day-scoped JDBC upsert and a partitioned JDBC read-back. The lake-side
+bronze is Delta (``operators/delta_log.write_delta``), whose
+day-scoped ``replace_partitions`` overwrite commits every day of a
+batch atomically.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def write_bronze(
-    df: DataFrame,
-    path: str,
-    partition_col: str = "date",
-    derive_from: str = "time",
-    coalesce_files: bool = True,
-) -> None:
-    """Write a batch to the bronze lake, Hive-partitioned by date.
-
-    Derives ``partition_col`` from ``derive_from`` when absent (the
-    reference computes ``date`` from ``time`` at
-    ``weather_hourly_pipeline.py:67``). Uses dynamic partition overwrite:
-    re-running a batch replaces exactly its own days.
-    """
-    if partition_col not in df.columns:
-        df = df.withColumn(partition_col, F.to_date(F.col(derive_from)))
-    if coalesce_files:
-        # One task per output day ⇒ one file per day per batch. For large
-        # batches drop coalesce_files and let AQE size the tasks.
-        df = df.repartition(partition_col)
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", "zstd")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-
-
-def write_partition_overwrite(
-    df: DataFrame,
-    table: str,
-    partition_col: str = "date",
-    derive_from: str = "time",
-) -> None:
-    """Idempotent day-level upsert into a catalog table (K4 parity).
-
-    ``INSERT OVERWRITE`` with ``partitionOverwriteMode=dynamic`` (set in
-    the session factory) replaces only the partitions present in ``df`` —
-    the declarative form of the reference's ``DELETE WHERE time::date = %s``
-    + ``executemany INSERT``.
-    """
-    spark = df.sparkSession
-    if partition_col not in df.columns:
-        df = df.withColumn(partition_col, F.to_date(F.col(derive_from)))
-    if not spark.catalog.tableExists(table):
-        (
-            df.repartition(partition_col)
-            .write.partitionBy(partition_col)
-            .format("parquet")
-            .saveAsTable(table)
-        )
-        return
-    # insertInto is positional: align to the table's column order (the
-    # partition column sits last in a saveAsTable-created schema).
-    aligned = df.select(*spark.table(table).columns)
-    (
-        aligned.repartition(partition_col)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .insertInto(table)
-    )
 
 
 def write_warehouse_jdbc(
@@ -123,7 +36,7 @@ def write_warehouse_jdbc(
     driver-side statement, then ``df.write.jdbc(mode="append")`` streams
     partition-parallel batched inserts.
 
-    Atomicity caveat (same as the lake writer, SURVEY §4): delete and
+    Atomicity caveat (SURVEY §4): delete and
     insert are separate transactions here; a reader between them sees an
     empty day. The reference wraps both in one psycopg commit — on JDBC
     that requires routing the insert through the same connection, which
@@ -230,110 +143,3 @@ def read_warehouse_jdbc(
             .option("numPartitions", str(num_partitions))
         )
     return reader.load()
-
-
-def merge_upsert(
-    spark,
-    path: str,
-    updates: DataFrame,
-    key_cols: Sequence[str],
-    partition_col: str = "date",
-    derive_from: str = "time",
-) -> None:
-    """Row-level MERGE (upsert) into a partitioned parquet lake.
-
-    The reference's roadmap asks for Delta/Iceberg + MERGE
-    (``README.md:204,209``); this is the plain-parquet restatement:
-    within each partition touched by ``updates``, rows matching on
-    ``key_cols`` are replaced and new keys appended (WHEN MATCHED THEN
-    UPDATE / WHEN NOT MATCHED THEN INSERT), untouched partitions are
-    never read or written. Implementation: anti-join the existing slice
-    against the updates on the keys, union the updates, rewrite only
-    those partitions via dynamic partition overwrite.
-
-    Scale: cost is O(touched partitions), not O(lake) — the anti-join
-    shuffles only the affected days, and the per-partition rewrite is
-    the same day-scoped write the bronze sink does. Atomicity matches
-    the lake writer (last-writer-wins per partition, not transactional
-    across partitions); on Delta/Iceberg swap this for native MERGE and
-    gain commit atomicity with the same call shape.
-    """
-    keys = list(key_cols)
-    if partition_col not in updates.columns:
-        updates = updates.withColumn(partition_col, F.to_date(F.col(derive_from)))
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:  # first write: nothing to merge against
-        updates.repartition(partition_col).write.mode("overwrite").option(
-            "compression", "zstd"
-        ).partitionBy(partition_col).parquet(path)
-        return
-    # Partition pruning: only the days present in the update batch are
-    # scanned (driver-side collect of a handful of partition values —
-    # the same scalar the reference passes around as the batch date).
-    days = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    slice_ = existing.filter(F.col(partition_col).isin(days))
-    kept = slice_.join(updates.select(*keys).distinct(), keys, "left_anti")
-    merged = kept.select(*updates.columns).unionByName(updates)
-    # The dynamic mode is pinned per-write, not inherited from the
-    # session: under the default STATIC mode this overwrite would delete
-    # the ENTIRE lake path and keep only the touched partitions — silent
-    # data loss if called from a stock SparkSession.
-    (
-        merged.repartition(partition_col)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", "zstd")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-
-
-def compact_partition(
-    spark,
-    path: str,
-    partition_col: str,
-    partition_value,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Compact one Hive partition's small files (lake maintenance).
-
-    Streaming/micro-batch sinks accrete one file per trigger per day
-    (the many-small-files failure mode); readers then pay per-file open
-    cost and tiny row groups. This rewrites a single partition into
-    ``ceil(bytes / target_file_bytes)`` files via dynamic partition
-    overwrite, so the rewrite is idempotent and scoped to that partition
-    only — safe to run day-by-day behind the watermark while newer
-    partitions keep ingesting. Returns the file count after compaction.
-
-    At 100 TB this runs as a rolling maintenance job over closed
-    partitions; table formats (Delta OPTIMIZE / Iceberg rewrite_data_files)
-    are the managed equivalent.
-    """
-    import math
-
-    from pyspark.sql import functions as F  # noqa: F811
-
-    part_path = f"{path}/{partition_col}={partition_value}"
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(part_path)
-    fs = p.getFileSystem(hconf)
-    size = fs.getContentSummary(p).getLength()
-    n_files = max(1, math.ceil(size / target_file_bytes))
-
-    df = (
-        spark.read.parquet(path)
-        .filter(F.col(partition_col) == F.lit(partition_value))
-        .repartition(n_files)
-        .withColumn(partition_col, F.lit(partition_value))
-    )
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-    return sum(
-        1 for f in fs.listStatus(p) if f.getPath().getName().endswith(".parquet")
-    )

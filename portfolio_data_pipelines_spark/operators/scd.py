@@ -11,7 +11,7 @@ imply — this operator is that mechanism, Spark-native.
 
 Scale shape: everything is one shuffle on the business key followed by
 linear per-key window passes — closed history is untouched (append-only
-at the storage layer via ``merge_upsert``/``merge_delta``), and the
+at the storage layer via ``merge_delta``), and the
 recomputed segment is |open rows| + |batch|, never |history|. No loops,
 no driver-side state: a 100 TB history with a billion keys flows through
 the same three-stage plan.

@@ -1,4 +1,2 @@
-"""Model layer: dbt-parity registry of named SQL models + quality tests."""
-
-from .registry import Model, ModelRegistry  # noqa: F401
-from .quality import accepted_values, not_null, row_range, run_expectations  # noqa: F401
+"""Model layer: dbt-parity registry of named SQL models + quality tests.
+Import each name from the module that defines it."""

@@ -219,8 +219,7 @@ class ModelRegistry:
         incremental block typically filters the source against
         ``{{ this }}``'s high-water mark), then
         - merge on ``unique_key``: existing rows whose keys reappear are
-          replaced (anti-join + union — the plain-parquet MERGE, same
-          shape as operators/medallion.merge_upsert), or
+          replaced (anti-join + union over a catalog table), or
         - append when no key is given (dbt's append strategy).
 
         Scale: the incremental branch reads the existing table once for

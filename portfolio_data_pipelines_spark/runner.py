@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, PipelineConfig
-from .operators.medallion import write_bronze
+from .operators.delta_log import write_delta
+from .operators.delta_scan import read_delta
 from .plans.models import default_registry
 from .plans.quality import not_null, row_range, run_expectations
 from .sources.weather import weather_payload_to_df
@@ -62,6 +63,12 @@ class WeatherPipeline:
     ) -> None:
         self.spark = spark
         self.cfg = config or DEFAULT_CONFIG
+        if self.cfg.lake_format != "delta":
+            raise ValueError(
+                f"lake_format={self.cfg.lake_format!r} is not supported: the "
+                "plain-parquet bronze was removed and the bronze is always "
+                "Delta; set lake_format (LAKE_FORMAT) to 'delta'"
+            )
         # Injectable fetcher: production would do an HTTP GET driver-side
         # (reference: requests.get with 30 s timeout); tests inject a
         # fixture payload. No network dependency in the engine itself.
@@ -93,26 +100,20 @@ class WeatherPipeline:
             return StageResult(date=None, path=None, rows=0)
         d = min((day for day in day_rows if day is not None), default=None)
         path = f"{self.cfg.lake_root}/weather"
-        if self.cfg.lake_format == "delta":
-            # Transaction-logged bronze: the reference's day-level
-            # idempotent re-run contract becomes a replaceWhere-scoped
-            # overwrite — re-running a batch tombstones exactly its own
-            # days' files, and every ingest stays time-travelable.
-            from .operators.delta_log import write_delta
-
-            # null dates (unparseable timestamps, F1's non-strict parse)
-            # stay in bronze for audit — they live in the null partition,
-            # which the replace set must include or the commit rejects
-            # the staged data
-            write_delta(
-                self.spark, with_date, path,
-                partition_col="date", mode="overwrite",
-                replace_partitions=[
-                    day.isoformat() if day is not None else None for day in day_rows
-                ],
-            )
-        else:
-            write_bronze(with_date, path)
+        # Transaction-logged bronze: the reference's day-level idempotent
+        # re-run contract becomes a replaceWhere-scoped overwrite —
+        # re-running a batch tombstones exactly its own days' files, all
+        # days commit atomically, and every ingest stays time-travelable.
+        # Null dates (unparseable timestamps, F1's non-strict parse) stay
+        # in bronze for audit — they live in the null partition, which the
+        # replace set must include or the commit rejects the staged data.
+        write_delta(
+            self.spark, with_date, path,
+            partition_col="date", mode="overwrite",
+            replace_partitions=[
+                day.isoformat() if day is not None else None for day in day_rows
+            ],
+        )
         return StageResult(
             date=d.isoformat() if d else None, path=path, rows=sum(day_rows.values())
         )
@@ -120,21 +121,15 @@ class WeatherPipeline:
     # Stage 3 — warehouse load (K3/K4): re-read bronze, narrow to the
     # 4-column warehouse schema (P4), register as the `weather_hourly`
     # relation the models read. The reference's delete-day-then-insert is
-    # bronze's dynamic partition overwrite; the warehouse relation is a
+    # the bronze's day-scoped Delta overwrite; the warehouse relation is a
     # view over the lake (no second copy, no row-at-a-time executemany).
     def load_warehouse(self, manifest: StageResult | None = None) -> DataFrame:
         if manifest is None or manifest.path is None:
             manifest = self.transform_and_store()
         if manifest.path is None:
             raise ValueError("empty batch: nothing to load")
-        if self.cfg.lake_format == "delta":
-            from .operators.delta_scan import read_delta
-
-            bronze = read_delta(self.spark, manifest.path)
-        else:
-            bronze = self.spark.read.parquet(manifest.path)
         wh = (
-            bronze
+            read_delta(self.spark, manifest.path)
             # P4 projection narrowing: lat/lon stay lake-only.
             .select("time", "temperature_2m", "relative_humidity_2m", "ingested_at")
             # The warehouse contract declares time not-null (dbt

@@ -1,5 +1,2 @@
-"""Ingestion sources: JSON payload parsers and typed parquet scans."""
-
-from .parquet import load_star_schema, scan_table  # noqa: F401
-from .weather import weather_payload_to_df  # noqa: F401
-from .fx import fx_payload_to_df  # noqa: F401
+"""Ingestion sources: JSON payload parsers, typed parquet scans and the
+Delta streaming feed. Import each name from the module that defines it."""

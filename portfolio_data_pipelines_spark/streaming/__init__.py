@@ -4,9 +4,11 @@ The reference's hourly cadence is an Airflow ``@hourly`` schedule driving
 a batch delete-day-then-insert upsert (``weather_hourly_pipeline.py:40,
 101-112``). The idiomatic Spark restatement is Structured Streaming: a
 file source watching the landing zone, event-time windows with watermarks
-for late hourly data, and a ``foreachBatch`` sink reusing the same
-idempotent medallion writer — one code path for backfill
-(``Trigger.AvailableNow``) and steady-state (processing-time trigger).
+for late hourly data, and the Delta bronze as the ``foreachBatch`` sink
+(``operators/delta_log.delta_stream_sink``: its ``txn`` ledger skips a
+replayed batch, so output is exactly-once across restarts) — one code
+path for backfill (``Trigger.AvailableNow``) and steady-state
+(processing-time trigger).
 
 Scale notes:
 - Windowed aggregations shuffle on (window, key); state is bounded by the
@@ -324,51 +326,3 @@ def enrich_with_dimension(
     """
     return stream.join(F.broadcast(dim), on, how)
 
-
-def stream_to_bronze(
-    events: DataFrame,
-    path: str,
-    checkpoint: str,
-    available_now: bool = True,
-):
-    """Stream → bronze lake through ``foreachBatch`` with exactly-once
-    output under restart/replay.
-
-    Each micro-batch writes dynamic-partition-overwrite parquet
-    partitioned by ``(date, _batch_id)``: the batch id — deterministic
-    from the checkpoint's offset log — scopes the overwrite, so
-
-    - a REPLAYED batch (crash between sink success and offset commit)
-      rewrites exactly its own ``(day, batch)`` partitions → idempotent;
-    - two different batches touching the same day land in sibling
-      ``_batch_id=`` subdirectories → no clobbering. (The r2 sink
-      overwrote whole day partitions per batch, which was idempotent
-      for replay but silently dropped an earlier batch's same-day rows
-      in multi-batch streams.)
-
-    Readers scan ``path`` with date pruning intact; ``_batch_id`` is
-    just a second partition level (compact it away with
-    ``compact_partition`` behind the watermark, like any streaming
-    small-file maintenance).
-    """
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.withColumn("date", F.to_date(F.col("ts")))
-            .withColumn("_batch_id", F.lit(batch_id))
-            .repartition("date")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", "zstd")
-            .partitionBy("date", "_batch_id")
-            .parquet(path)
-        )
-
-    writer = (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -733,7 +733,7 @@ class TestDeltaBronzePipeline:
             },
         }
         raw = _json.dumps(payload)
-        cfg = PipelineConfig(lake_root=str(tmp_path / "lake"), lake_format="delta")
+        cfg = PipelineConfig(lake_root=str(tmp_path / "lake"))
         pipe = WeatherPipeline(spark, config=cfg, fetcher=lambda: raw)
         built1 = pipe.run(raw)
         built2 = pipe.run(raw)  # re-run: same day replaced, not duplicated
@@ -925,7 +925,7 @@ def test_delta_bronze_keeps_unparseable_timestamp_rows(spark, tmp_path):
             "relative_humidity_2m": [50.0, 51.0, 52.0],
         },
     }
-    cfg = PipelineConfig(lake_root=str(tmp_path / "lake"), lake_format="delta")
+    cfg = PipelineConfig(lake_root=str(tmp_path / "lake"))
     pipe = WeatherPipeline(spark, config=cfg, fetcher=lambda: _json.dumps(payload))
     pipe.run(_json.dumps(payload))
     bronze = read_delta(spark, f"{cfg.lake_root}/weather")

@@ -1,13 +1,12 @@
-"""Medallion writer tests: layout, zstd, and the K4 idempotency contract."""
+"""JDBC warehouse writer tests: the K4 day-level upsert and the
+partitioned read-back, driven against embedded Derby."""
 
 from __future__ import annotations
 
 import datetime as dt
-import os
 
 from pyspark.sql import functions as F
 
-from portfolio_data_pipelines_spark.operators.medallion import write_bronze
 from portfolio_data_pipelines_spark.schemas import WEATHER_BRONZE
 
 
@@ -24,97 +23,6 @@ def _batch(spark, day: int, n: int = 4, temp: float = 20.0):
         for h in range(n)
     ]
     return spark.createDataFrame(rows, schema=WEATHER_BRONZE)
-
-
-class TestBronzeWriter:
-    def test_hive_layout_and_zstd(self, spark, tmp_path):
-        path = str(tmp_path / "bronze")
-        write_bronze(_batch(spark, day=20), path)
-        # Hive-style date= directories (K2 parity)
-        assert any(d.startswith("date=2025-08-20") for d in os.listdir(path))
-        part_dir = os.path.join(path, "date=2025-08-20")
-        files = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
-        assert len(files) == 1  # one file per day per batch, like the reference
-        assert ".zstd." in files[0]
-
-    def test_dynamic_overwrite_only_touches_batch_days(self, spark, tmp_path):
-        path = str(tmp_path / "bronze2")
-        write_bronze(_batch(spark, day=20), path)
-        write_bronze(_batch(spark, day=21), path)
-        df = spark.read.parquet(path)
-        assert df.count() == 8  # day-21 write did not clobber day-20
-
-    def test_rerun_same_day_idempotent(self, spark, tmp_path):
-        path = str(tmp_path / "bronze3")
-        write_bronze(_batch(spark, day=20, temp=20.0), path)
-        write_bronze(_batch(spark, day=20, temp=30.0), path)  # reprocess day
-        df = spark.read.parquet(path)
-        assert df.count() == 4  # replaced, not appended
-        assert df.agg(F.min("temperature_2m")).first()[0] == 30.0
-
-
-def test_bronze_date_filter_prunes_partitions(spark, tmp_path):
-    """A date predicate on the bronze lake must prune at the partition
-    level (PartitionFilters in the scan), not post-filter rows — the
-    property that makes day-scoped queries O(day) instead of O(lake)."""
-    from pyspark.sql import functions as F
-
-    from portfolio_data_pipelines_spark.operators.medallion import write_bronze
-    from portfolio_data_pipelines_spark.sources.parquet import scan_table
-
-    out = str(tmp_path / "bronze_prune")
-    write_bronze(
-        scan_table(spark, "/root/testdata/sf0.001", "events"),
-        out, partition_col="date", derive_from="ts",
-    )
-    one_day = spark.read.parquet(out).filter(F.col("date") == "2024-01-05")
-    plan = one_day._jdf.queryExecution().executedPlan().toString()
-    # The predicate lands in PartitionFilters (directory-level pruning),
-    # not DataFilters (row-level post-filtering).
-    assert "PartitionFilters: [isnotnull(date" in plan
-    assert "= 2024-01-05)" in plan.split("PartitionFilters:")[1].split("]")[0]
-    assert one_day.count() > 0
-
-
-def test_compact_partition_merges_small_files(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from portfolio_data_pipelines_spark.operators.medallion import compact_partition
-    from portfolio_data_pipelines_spark.sources.parquet import scan_table
-
-    out = str(tmp_path / "frag")
-    src = scan_table(spark, "/root/testdata/sf0.001", "events").withColumn(
-        "date", F.to_date("ts")
-    )
-    one_day = src.filter(F.col("date") == "2024-01-05")
-    # Fragment: 8 separate appends → ≥8 files in the partition.
-    for _ in range(8):
-        one_day.coalesce(1).write.mode("append").partitionBy("date").parquet(out)
-    # Materialize the pre-compaction rows: the lazy plan would re-list
-    # files after the rewrite deleted them.
-    before_rows = sorted(map(tuple, spark.read.parquet(out).collect()))
-
-    n_files = compact_partition(spark, out, "date", "2024-01-05")
-    after = spark.read.parquet(out)
-    assert n_files == 1  # tiny partition → single file
-    assert sorted(map(tuple, after.collect())) == before_rows  # no rows lost
-
-
-def test_bronze_uri_scheme_bucket_layout(spark, tmp_path):
-    """K2 end-to-end through an explicit URI scheme: writing to a
-    file:// "bucket" exercises the same Hadoop FileSystem abstraction an
-    s3a:// target uses (scheme -> FS impl resolution, qualified-path key
-    construction); only the FS implementation differs. Asserts the
-    Hive-key layout and a round-trip read through the same URI."""
-    bucket = f"file://{tmp_path}/lake-bucket/weather"
-    write_bronze(_batch(spark, day=22), bucket)
-    local = str(tmp_path / "lake-bucket" / "weather")
-    part_dir = os.path.join(local, "date=2025-08-22")
-    assert os.path.isdir(part_dir), os.listdir(local)
-    assert any(f.endswith(".parquet") for f in os.listdir(part_dir))
-    back = spark.read.parquet(bucket)
-    assert back.count() == 4
-    assert set(back.select("date").distinct().toPandas()["date"].astype(str)) == {"2025-08-22"}
 
 
 class TestJdbcWarehouse:
@@ -220,49 +128,6 @@ class TestJdbcWarehouse:
 
         with pytest.raises(ValueError, match="unsafe partition_column"):
             read_warehouse_jdbc(spark, url, "weather_hourly", partition_column="ts; DROP")
-
-
-class TestMergeUpsert:
-    def test_update_insert_and_untouched_partitions(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.medallion import merge_upsert
-
-        path = str(tmp_path / "merge_lake")
-        merge_upsert(spark, path, _batch(spark, day=20, temp=20.0), key_cols=["time"])
-        merge_upsert(spark, path, _batch(spark, day=21, temp=40.0), key_cols=["time"])
-        assert spark.read.parquet(path).count() == 8
-
-        # One matched key (hour 0 of day 20, new temp) + one new key (hour 9).
-        upd = spark.createDataFrame(
-            [
-                (dt.datetime(2025, 8, 20, 0), 99.0, 50.0, "-23.55", "-46.63",
-                 dt.datetime(2025, 8, 20, 13)),
-                (dt.datetime(2025, 8, 20, 9), 77.0, 50.0, "-23.55", "-46.63",
-                 dt.datetime(2025, 8, 20, 13)),
-            ],
-            schema=_batch(spark, day=20).schema,
-        )
-        merge_upsert(spark, path, upd, key_cols=["time"])
-
-        lake = spark.read.parquet(path)
-        d20 = lake.filter(F.col("date") == "2025-08-20")
-        assert d20.count() == 5  # 4 original, 1 updated in place, 1 inserted
-        temps = {r["time"]: r["temperature_2m"] for r in d20.collect()}
-        assert temps[dt.datetime(2025, 8, 20, 0)] == 99.0   # WHEN MATCHED: updated
-        assert temps[dt.datetime(2025, 8, 20, 1)] == 21.0   # untouched row kept
-        assert temps[dt.datetime(2025, 8, 20, 9)] == 77.0   # WHEN NOT MATCHED: inserted
-        # Partition not present in the update batch is never rewritten.
-        d21 = lake.filter(F.col("date") == "2025-08-21")
-        assert d21.count() == 4
-        assert d21.agg(F.min("temperature_2m")).first()[0] == 40.0
-
-    def test_merge_rerun_idempotent(self, spark, tmp_path):
-        from portfolio_data_pipelines_spark.operators.medallion import merge_upsert
-
-        path = str(tmp_path / "merge_lake2")
-        batch = _batch(spark, day=20)
-        merge_upsert(spark, path, batch, key_cols=["time"])
-        merge_upsert(spark, path, batch, key_cols=["time"])  # same batch again
-        assert spark.read.parquet(path).count() == 4
 
 
 def test_jdbc_readback_numeric_partition_column(spark, tmp_path):

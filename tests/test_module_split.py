@@ -7,14 +7,14 @@ from __future__ import annotations
 
 import os
 
+PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "portfolio_data_pipelines_spark",
+)
+
 DELTA_MODULES = sorted(
     name[:-3]
-    for name in os.listdir(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "portfolio_data_pipelines_spark", "operators",
-        )
-    )
+    for name in os.listdir(os.path.join(PKG, "operators"))
     if name.startswith("delta_") and name.endswith(".py")
 )
 
@@ -43,6 +43,22 @@ def test_split_modules_import_standalone():
             timeout=120,
         )
         assert r.returncode == 0, (mod, r.stderr[-500:])
+
+
+def test_subpackage_inits_import_nothing():
+    """``operators``, ``sources`` and ``plans`` re-export nothing: every
+    name is imported from the module that defines it, and importing a
+    sub-package loads none of its modules."""
+    import ast
+
+    for sub in ("operators", "sources", "plans"):
+        with open(os.path.join(PKG, sub, "__init__.py")) as f:
+            tree = ast.parse(f.read())
+        imports = [
+            ast.unparse(n) for n in ast.walk(tree)
+            if isinstance(n, (ast.Import, ast.ImportFrom))
+        ]
+        assert imports == [], (sub, imports)
 
 
 def test_checkpoint_cadence_read_from_delta_checkpoint(spark, tmp_path, monkeypatch):
@@ -103,12 +119,8 @@ def test_one_commit_path():
     commit helper is gone."""
     import ast
 
-    pkg = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "portfolio_data_pipelines_spark",
-    )
     callers, defined = [], set()
-    for root, _dirs, names in os.walk(pkg):
+    for root, _dirs, names in os.walk(PKG):
         for name in sorted(n for n in names if n.endswith(".py")):
             tree = ast.parse(open(os.path.join(root, name)).read())
             scopes = [

@@ -316,7 +316,7 @@ def _declare_v2_checkpoints(path, version: int) -> None:
         }}) + "\n")
 
 
-@pytest.mark.parametrize("layout", ["classic", "multipart", "v2"])
+@pytest.mark.parametrize("layout", ["classic", "multipart", "v2", "v2_unnamed"])
 def test_checkpoint_is_create_and_rename_per_file(
     spark, tmp_path, no_local_fastpath, monkeypatch, layout
 ):
@@ -325,7 +325,7 @@ def test_checkpoint_is_create_and_rename_per_file(
     if layout != "classic":
         monkeypatch.setattr(delta_checkpoint, "CHECKPOINT_PART_ACTIONS", 2)
         n_files = 3  # 3 parts, or a main + 2 sidecars of the 3 adds
-    if layout == "v2":
+    if layout.startswith("v2"):
         version = 3
         _declare_v2_checkpoints(path, version)
     cfs = _count_fs_calls(spark, monkeypatch)
@@ -335,12 +335,43 @@ def test_checkpoint_is_create_and_rename_per_file(
     assert cfs.calls["delete"] == 0
     assert cfs.calls["rename"] == n_files
     assert cfs.calls["create"] == n_files + 1  # + _last_checkpoint
+    log = f"{path}/_delta_log"
+    with open(f"{log}/_last_checkpoint") as f:
+        lc = json.load(f)
+    if layout.startswith("v2"):
+        # the pointer names the UUID main, with its size
+        main = lc["v2Checkpoint"]
+        assert os.path.getsize(f"{log}/{main['path']}") == main["sizeInBytes"]
+    else:
+        assert "v2Checkpoint" not in lc
+    if layout == "v2_unnamed":
+        # an older writer's pointer, without the field
+        del lc["v2Checkpoint"]
+        with open(f"{log}/_last_checkpoint", "w") as f:
+            json.dump(lc, f)
+        os.remove(f"{log}/._last_checkpoint.crc")  # stale Hadoop checksum
     cfs.calls.clear()
     st = dl._replay_log(spark, path, None)
     assert len(st.adds) == 3
     assert cfs.calls["open"] == n_files + 1  # + _last_checkpoint
-    # the tail listing, plus the V2 main's discovery: its name is a UUID
-    assert cfs.calls["listStatus"] == (2 if layout == "v2" else 1)
+    # the tail listing, plus the V2 main's discovery when the pointer
+    # does not name it
+    assert cfs.calls["listStatus"] == (2 if layout == "v2_unnamed" else 1)
+
+
+def test_v2_pointer_names_only_a_main_at_its_version():
+    v = 3
+    main = f"{v:020d}.checkpoint.{'a' * 32}.parquet"
+    assert delta_checkpoint._v2_main_name(v, {"v2Checkpoint": {"path": main}}) == main
+    for bad in (
+        None, 7, f"{4:020d}.checkpoint.{'a' * 32}.parquet",
+        f"{v:020d}.checkpoint./../../data.parquet", "../x.parquet",
+        f"{v:020d}.checkpoint.{'a' * 32}.crc",
+    ):
+        lc = {"v2Checkpoint": {"path": bad}}
+        assert delta_checkpoint._v2_main_name(v, lc) is None, bad
+    assert delta_checkpoint._v2_main_name(v, {}) is None
+    assert delta_checkpoint._v2_main_name(v, {"v2Checkpoint": main}) is None
 
 
 def test_local_v2_checkpoint_replay_lists_nothing(spark, tmp_path, monkeypatch):

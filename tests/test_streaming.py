@@ -13,11 +13,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from portfolio_data_pipelines_spark.functions import davg
+from portfolio_data_pipelines_spark.operators.delta_log import delta_stream_sink
+from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
 from portfolio_data_pipelines_spark.sources.parquet import scan_table
 from portfolio_data_pipelines_spark.streaming import (
     events_file_stream,
     running_user_totals,
-    stream_to_bronze,
     tumbling_daily_mart,
     user_session_windows,
 )
@@ -102,26 +103,47 @@ def test_running_totals_last_ts_is_user_max(spark):
     assert got == batch
 
 
+def _stream_to_delta_bronze(spark, src: str, out: str, ckpt: str) -> None:
+    """Run the events stream at ``src`` to completion into the Delta
+    bronze at ``out``, date-partitioned, through the exactly-once sink."""
+    q = (
+        events_file_stream(spark, src)
+        .withColumn("date", F.to_date("ts"))
+        .writeStream.foreachBatch(
+            delta_stream_sink(out, partition_col="date", app_id="events-bronze")
+        )
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+
+
+def _rows_per_day(df, ts_col: str | None = None) -> dict[str, int]:
+    day = F.to_date(ts_col) if ts_col else F.col("date")
+    return {
+        str(r["d"]): r["n"]
+        for r in df.groupBy(day.alias("d")).agg(F.count("*").alias("n")).collect()
+    }
+
+
 def test_stream_to_bronze_is_idempotent(spark, tmp_path):
     out = str(tmp_path / "bronze")
     for i in range(2):  # second run replays from a fresh checkpoint
-        q = stream_to_bronze(
-            events_file_stream(spark, SF), out, str(tmp_path / f"ckpt{i}")
-        )
-        q.awaitTermination(300)
-    written = spark.read.parquet(out)
+        _stream_to_delta_bronze(spark, SF, out, str(tmp_path / f"ckpt{i}"))
+    written = read_delta(spark, out)
     src = scan_table(spark, SF, "events")
-    assert written.count() == src.count()  # replay overwrote, not appended
-    assert set(written.columns) == set(src.columns) | {"date", "_batch_id"}
+    assert written.count() == src.count()  # the txn ledger skipped the replay
+    assert set(written.columns) == set(src.columns) | {"date"}
 
 
 def test_stream_restart_replay_is_exactly_once(spark, tmp_path):
     """Kill-and-resume recovery: after a simulated crash between sink
     success and offset commit (offsets/0 present, commits/0 deleted),
     the restarted query REPLAYS batch 0 through the foreachBatch sink.
-    The (date, _batch_id)-scoped overwrite makes the replay rewrite
-    exactly its own partitions — final lake content is exactly-once,
-    and a second same-day batch is layered beside, not clobbered."""
+    The Delta sink's txn ledger skips the replayed batch id, so the
+    final bronze is exactly-once, and a second same-day batch appends
+    beside the first instead of replacing it."""
     import glob
     import os
     import shutil
@@ -136,10 +158,9 @@ def test_stream_restart_replay_is_exactly_once(spark, tmp_path):
     f = glob.glob(f"{src}/part-*.parquet")[0]
     os.rename(f, f"{src}/events-0.parquet")
 
-    q = stream_to_bronze(events_file_stream(spark, src), out, ckpt)
-    q.awaitTermination(300)
-    n = batch.count()
-    assert spark.read.parquet(out).count() == n
+    _stream_to_delta_bronze(spark, src, out, ckpt)
+    src_per_day = _rows_per_day(batch, "ts")
+    assert _rows_per_day(read_delta(spark, out)) == src_per_day
 
     # crash simulation: batch 0's sink output is on disk, its offset is
     # logged, but the commit marker is gone → restart must re-run it
@@ -152,27 +173,13 @@ def test_stream_restart_replay_is_exactly_once(spark, tmp_path):
     # and a second file (same days!) arrives before the restart
     shutil.copy(f"{src}/events-0.parquet", f"{src}/events-1.parquet")
 
-    q2 = stream_to_bronze(events_file_stream(spark, src), out, ckpt)
-    q2.awaitTermination(300)
+    _stream_to_delta_bronze(spark, src, out, ckpt)
 
-    written = spark.read.parquet(out)
-    assert written.count() == 2 * n  # replayed batch did not duplicate
-    assert sorted(
-        r["_batch_id"] for r in written.select("_batch_id").distinct().collect()
-    ) == [0, 1]
-    # same-day rows from both batches coexist (the r2 sink lost batch 0)
-    per_day = {
-        str(r["date"]): r["n"]
-        for r in written.groupBy("date").agg(F.count("*").alias("n")).collect()
+    # the replayed batch 0 did not duplicate, and batch 1's same-day
+    # rows sit beside batch 0's
+    assert _rows_per_day(read_delta(spark, out)) == {
+        d: 2 * c for d, c in src_per_day.items()
     }
-    src_per_day = {
-        str(r["d"]): r["n"]
-        for r in batch.select(F.to_date("ts").alias("d"))
-        .groupBy("d")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert per_day == {d: 2 * c for d, c in src_per_day.items()}
 
 
 def test_dedup_stream_drops_replayed_duplicates(spark, tmp_path):
