@@ -31,11 +31,11 @@ def plan_leaves(df) -> list[str]:
     return [leaves.apply(i).nodeName() for i in range(leaves.size())]
 
 
-def payload_fixture(days: int = 2, per_day: int = 24, first_day: int = 20) -> dict:
+def payload_fixture(days: int = 2, per_day: int = 24) -> dict:
     times, temps, hums = [], [], []
     for d in range(days):
         for h in range(per_day):
-            times.append(f"2025-08-{first_day + d:02d}T{h:02d}:00")
+            times.append(f"2025-08-{20 + d:02d}T{h:02d}:00")
             temps.append(15.0 + d + h * 0.25)
             hums.append(50.0 + (h % 10))
     return {
@@ -209,38 +209,6 @@ class TestPipelineEndToEnd:
         assert batch(5) <= 10  # version 4 replays from the checkpoint
         mart = spark.table("marts_weather_daily").collect()
         assert len(mart) == 5
-
-    def test_file_uri_lake_root_keeps_hive_day_layout(self, spark, tmp_path):
-        """K2 end-to-end through an explicit URI scheme: a file:// lake
-        root resolves through the same Hadoop FileSystem abstraction an
-        s3a:// bucket does. The Delta bronze keeps the reference's
-        layout — one zstd parquet per day per batch under ``date=`` —
-        and a batch for another day leaves the first day's files alone."""
-        import os
-
-        from portfolio_data_pipelines_spark.operators.delta_scan import read_delta
-
-        root = tmp_path / "lake-bucket"
-        p = WeatherPipeline(spark, config=PipelineConfig(lake_root=f"file://{root}"))
-        local = root / "weather"
-
-        def day_files(day: str) -> list[str]:
-            names = os.listdir(local / f"date={day}")
-            files = sorted(n for n in names if n.endswith(".parquet"))
-            assert len(files) == 1 and files[0].endswith(".zstd.parquet"), names
-            return files
-
-        m = p.transform_and_store(json.dumps(payload_fixture(days=1)))
-        first = day_files("2025-08-20")
-        p.transform_and_store(json.dumps(payload_fixture(days=1, first_day=21)))
-        assert day_files("2025-08-20") == first
-        day_files("2025-08-21")
-        assert (local / "_delta_log").is_dir()
-        back = read_delta(spark, m.path)
-        assert m.path == f"file://{root}/weather"
-        assert {str(r["date"]): r["count"] for r in back.groupBy("date").count().collect()} == {
-            "2025-08-20": 24, "2025-08-21": 24,
-        }
 
     def test_parquet_lake_format_is_refused(self, spark):
         """The plain-parquet bronze is gone: a stale ``LAKE_FORMAT=parquet``
