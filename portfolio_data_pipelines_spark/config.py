@@ -3,9 +3,10 @@
 The reference wires lat/lon, API endpoints, S3 and Postgres connection
 parameters through ``os.getenv`` with defaults
 (``airflow/dags/weather_hourly_pipeline.py:18-20``,
-``airflow/include/lib/s3_client.py:5-7``). We keep the same surface as a
-dataclass so every knob is observable and testable, and add the Spark
-tuning knobs the reference delegates to its engines.
+``airflow/include/lib/s3_client.py:5-7``). The engine fetches nothing
+over HTTP, so it keeps only the knobs its code reads: the ingestion
+retry count, the lake root and format, the S3/MinIO endpoint, and the
+Spark tuning knobs the reference delegates to its engines.
 """
 
 from __future__ import annotations
@@ -22,25 +23,11 @@ def _env(name: str, default: str) -> str:
 class PipelineConfig:
     """All pipeline knobs, env-overridable, with reference-parity defaults."""
 
-    # Weather ingestion (reference: weather_hourly_pipeline.py:18-27)
-    weather_lat: str = field(default_factory=lambda: _env("WEATHER_LAT", "-23.5505"))
-    weather_lon: str = field(default_factory=lambda: _env("WEATHER_LON", "-46.6333"))
-    weather_api_base: str = field(
-        default_factory=lambda: _env("WEATHER_API_BASE", "https://api.open-meteo.com/v1/forecast")
-    )
-    http_timeout_s: int = field(default_factory=lambda: int(_env("HTTP_TIMEOUT_S", "30")))
+    # Ingestion retries (reference: weather_hourly_pipeline.py:14)
     http_retries: int = field(default_factory=lambda: int(_env("HTTP_RETRIES", "1")))
-
-    # FX ingestion (reference: .env.example:22-24)
-    fx_api_base: str = field(
-        default_factory=lambda: _env("EXTERNAL_API_BASE", "https://api.exchangerate.host")
-    )
-    fx_api_endpoint: str = field(default_factory=lambda: _env("EXTERNAL_API_ENDPOINT", "/latest"))
-    fx_base_currency: str = field(default_factory=lambda: _env("EXTERNAL_API_BASE_CURRENCY", "USD"))
 
     # Lake layout (reference: weather_hourly_pipeline.py:70-79)
     lake_root: str = field(default_factory=lambda: _env("LAKE_ROOT", "/tmp/lake"))
-    lake_bucket: str = field(default_factory=lambda: _env("S3_BUCKET", "datalake"))
     #: The bronze is always Delta; "delta" is the one value WeatherPipeline
     #: accepts, so a stale LAKE_FORMAT fails loudly instead of switching.
     lake_format: str = field(default_factory=lambda: _env("LAKE_FORMAT", "delta"))

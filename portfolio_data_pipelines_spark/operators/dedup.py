@@ -89,10 +89,6 @@ def _memo_scalar(key: tuple, build):
     return val
 
 
-# Back-compat alias (r3 interim name).
-clear_shared_shingles = clear_shared_plans
-
-
 def _memo_persist(key: tuple, build) -> DataFrame:
     """Return the cached persisted DataFrame for ``key``, building and
     persisting it (MEMORY_AND_DISK, LRU-evicted) on first request."""

@@ -434,9 +434,9 @@ def add_check_constraint(
 ) -> int:
     """ALTER TABLE ADD CONSTRAINT — Delta's post-creation constraint
     path: validate the EXISTING table data against ``expr`` first (one
-    filter + count over the current snapshot — exactly what delta-spark
-    pays), refuse if any live row violates it, then commit an updated
-    metaData whose configuration carries
+    filter + count over the snapshot the transaction holds — exactly
+    what delta-spark pays), refuse if any live row violates it, then
+    commit an updated metaData whose configuration carries
     ``delta.constraints.<name>``. Every subsequent commit (append,
     overwrite, MERGE source, stream-sink batch — by this writer or any
     conformant one reading the configuration) enforces it. Returns the
@@ -447,8 +447,14 @@ def add_check_constraint(
     config = dict(st.meta.get("configuration") or {})
     if key in config:
         raise ValueError(f"constraint {name!r} already exists: {config[key]}")
-    current = delta_scan.read_delta(spark, path)
-    n_bad = current.filter(~F.coalesce(F.expr(expr), F.lit(True))).count()
+    # validate the snapshot this transaction holds; no live file means
+    # an empty table, which no constraint can fail
+    current = delta_scan._read_adds(spark, path, st.adds, st.meta)
+    n_bad = (
+        current.filter(dl._check_violated([expr])).count()
+        if current is not None
+        else 0
+    )
     if n_bad:
         raise ValueError(
             f"cannot add CHECK constraint {name!r} ({expr}): {n_bad} "

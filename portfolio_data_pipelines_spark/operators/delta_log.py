@@ -44,15 +44,19 @@ Scale notes:
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
+import functools
 import json
+import operator
 import os
 import re
 import time
 import uuid
+from collections.abc import Callable
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import delta_cdf, delta_checkpoint, delta_colmap, delta_dv, delta_scan
@@ -656,7 +660,6 @@ def _metadata_action(
     constraints: dict | None = None,
     generated_cols: dict | None = None,
     identity_cols: dict | None = None,
-    identity_hwms: dict | None = None,
     configuration: dict | None = None,
     default_cols: dict | None = None,
 ) -> dict:
@@ -714,10 +717,6 @@ def _metadata_action(
             md["delta.identity.allowExplicitInsert"] = bool(
                 spec.get("allow_explicit_insert", False)
             )
-            if identity_hwms and name in identity_hwms:
-                md["delta.identity.highWaterMark"] = int(
-                    identity_hwms[name]
-                )
             by_name[name]["metadata"] = md
         schema_str = json.dumps(doc)
     return {
@@ -1016,82 +1015,50 @@ def _apply_identity_columns(
     version 6 / ``identityColumns``): an ABSENT column is allocated
     (see :func:`_allocate_identity`); a PROVIDED column is refused
     unless the table declared ``allowExplicitInsert`` (GENERATED BY
-    DEFAULT), in which case the high-water mark advances past the
-    observed values. Returns ``(frame, {col: new_hwm}, cache_ref)`` —
-    ``cache_ref`` is the exact frame object that was cached (the
-    caller unpersists it after staging), or None."""
-    if not specs:
-        return df, {}, None
-    hwms: dict[str, int] = {}
-    cache_ref = None
-    if any(c not in df.columns for c in specs):
-        df = df.cache()
-        cache_ref = df
+    DEFAULT), in which case :func:`_batch_gate` advances the high-water
+    mark past the observed values. Returns ``(frame, {col: new_hwm},
+    alloc_cache)`` — ``alloc_cache`` is the frame the allocator cached
+    for its two passes (the caller unpersists it after staging), or
+    None."""
     for c, spec in sorted(specs.items()):
-        if c not in df.columns:
-            df, new_hwm = _allocate_identity(df, c, spec)
-            if new_hwm is not None:
-                hwms[c] = new_hwm
-            continue
-        if not spec["allowExplicitInsert"]:
+        if c in df.columns and not spec["allowExplicitInsert"]:
             raise ValueError(
                 f"column {c!r} is GENERATED ALWAYS AS IDENTITY — "
                 "explicit values are refused (declare "
                 "allow_explicit_insert at creation for BY DEFAULT "
                 "semantics)"
             )
-        agg = F.max(c) if spec["step"] > 0 else F.min(c)
-        observed = df.agg(agg.alias("_m")).collect()[0]["_m"]
-        if observed is not None:
-            adv = _identity_hwm_advance(spec, int(observed))
-            if adv is not None:
-                hwms[c] = adv
-    return df, hwms, cache_ref
+    absent = sorted(c for c in specs if c not in df.columns)
+    if not absent:
+        return df, {}, None
+    df = alloc_cache = df.cache()
+    hwms: dict[str, int] = {}
+    for c in absent:
+        df, new_hwm = _allocate_identity(df, c, specs[c])
+        if new_hwm is not None:
+            hwms[c] = new_hwm
+    return df, hwms, alloc_cache
 
 
-def _apply_generated_columns(
-    df: DataFrame, meta: dict | None
-) -> tuple[DataFrame, bool]:
-    """The writer duty for generated columns (spec: legacy writer
-    version 4 / ``generatedColumns``): a column ABSENT from the batch
-    is computed from its generation expression (cast to the declared
-    type); a column the writer PROVIDED must match the expression
-    null-safely or the commit is rejected before staging — delta-spark
-    semantics for both sides. Cost mirrors CHECK constraints: compute
-    is free column expressions; the match check is one filter over the
-    BATCH, never the table. Returns ``(frame, did_cache)`` with the
-    same explicit-cache contract as :func:`_enforce_constraints`."""
+def _apply_generated_columns(df: DataFrame, meta: dict | None) -> DataFrame:
+    """The compute half of the generated-column writer duty (spec:
+    legacy writer version 4 / ``generatedColumns``): a column ABSENT
+    from the batch is computed from its generation expression (cast to
+    the declared type) — free column expressions, no pass. A column
+    the writer PROVIDED must match the expression; :func:`_batch_gate`
+    checks that."""
     gens = _generated_exprs(meta)
     if not gens:
-        return df, False
+        return df
     schema = _spark_schema_from_string(meta["schemaString"])
     types = {f.name: f.dataType for f in schema.fields}
-    provided: dict[str, str] = {}
     for c, e in sorted(gens.items()):
-        if c in df.columns:
-            provided[c] = e
-        else:
+        if c not in df.columns:
             df = df.withColumn(c, F.expr(e).cast(types[c]))
     # stage in declared column order (generation appends at the end)
     order = [f.name for f in schema.fields if f.name in df.columns]
     rest = [c for c in df.columns if c not in set(order)]
-    df = df.select(*order, *rest)
-    if not provided:
-        return df, False
-    violated = None
-    for c, e in sorted(provided.items()):
-        bad = ~F.col(c).eqNullSafe(F.expr(e).cast(types[c]))
-        violated = bad if violated is None else (violated | bad)
-    df = df.cache()
-    n_bad = df.filter(violated).count()
-    if n_bad:
-        df.unpersist()
-        raise ValueError(
-            f"commit violates generated-column expression(s) on {n_bad} "
-            "row(s): "
-            + "; ".join(f"{c} = {e}" for c, e in sorted(provided.items()))
-        )
-    return df, True
+    return df.select(*order, *rest)
 
 
 def _apply_column_defaults(df: DataFrame, meta: dict | None) -> DataFrame:
@@ -1118,47 +1085,12 @@ def _apply_column_defaults(df: DataFrame, meta: dict | None) -> DataFrame:
     return df
 
 
-def _enforce_constraints(
-    df: DataFrame, meta: dict | None
-) -> tuple[DataFrame, bool]:
-    """CHECK constraints (``delta.constraints.*`` in the table
-    configuration) gate every commit: a batch holding any row whose
-    expression evaluates FALSE is rejected before a byte is staged
-    (NULL passes, SQL CHECK semantics). Cost is one combined filter
-    over the BATCH — never the table.
-
-    Returns ``(frame_to_stage, did_cache)``: when a constraint actually
-    ran, the batch comes back ``.cache()``-ed so the rows validated are
-    exactly the rows committed (no check-then-write race on a
-    nondeterministic or moving source) and the batch is evaluated once,
-    not once per pass. ``did_cache`` is an EXPLICIT flag because
-    ``DataFrame.cache()`` returns the same object — an identity
-    comparison against the input can never detect the cache, so the
-    caller must unpersist if and only if this flag is True."""
-    if not meta:
-        return df, False
-    exprs = {
-        k[len("delta.constraints."):]: v
-        for k, v in (meta.get("configuration") or {}).items()
-        if k.startswith("delta.constraints.")
-    }
-    if not exprs:
-        return df, False
-    violated = None
-    for expr in exprs.values():
-        bad = ~F.coalesce(F.expr(expr), F.lit(True))
-        violated = bad if violated is None else (violated | bad)
-    df = df.cache()
-    n_bad = df.filter(violated).count()
-    if n_bad:
-        df.unpersist()
-        raise ValueError(
-            f"commit violates CHECK constraint(s) {sorted(exprs)} on "
-            f"{n_bad} row(s): " + "; ".join(
-                f"{n}: {e}" for n, e in sorted(exprs.items())
-            )
-        )
-    return df, True
+def _check_violated(exprs) -> Column:
+    """TRUE on a row that some CHECK expression in ``exprs`` evaluates
+    FALSE for; NULL passes (SQL CHECK semantics)."""
+    return functools.reduce(
+        operator.or_, [~F.coalesce(F.expr(e), F.lit(True)) for e in exprs]
+    )
 
 
 def _not_null_paths(fields: list, prefix: str = "") -> list[str]:
@@ -1176,28 +1108,14 @@ def _not_null_paths(fields: list, prefix: str = "") -> list[str]:
     return out
 
 
-def _enforce_not_null(
-    df: DataFrame, meta: dict | None, already_cached: bool
-) -> tuple[DataFrame, bool]:
-    """The spec's column invariant: a field the STORED schema declares
-    non-nullable must never receive NULL. ``_json_type_shape`` ignores
-    nullability on purpose (mapped-table metadata must not read as type
-    changes), so without this check a frame declaring a stored
-    non-nullable field as nullable slides through shape comparison and
-    stages NULLs external readers are told cannot exist (r13 ADVICE).
-
-    Cost discipline: the batch is only scanned for paths where the
-    stored schema says non-nullable AND the incoming frame says
-    nullable — when the frame's own schema already guarantees
-    non-null (the common case: same writer both times), Spark's type
-    system is the proof and no job runs. Inner struct fields pass when
-    their parent struct is NULL (the invariant constrains the field
-    only where the struct is present)."""
-    if not meta:
-        return df, False
+def _unproven_not_null_paths(df: DataFrame, meta: dict) -> list[str]:
+    """Stored NOT NULL paths the frame's own schema does not prove:
+    present in the frame but declared nullable there. When the frame
+    declares them non-nullable too (the same writer both times),
+    Spark's type system is the proof and nothing is scanned."""
     stored = _not_null_paths(json.loads(meta["schemaString"])["fields"])
     if not stored:
-        return df, False
+        return []
     frame_fields = json.loads(_schema_string(df))["fields"]
     frame_nn = set(_not_null_paths(frame_fields))
 
@@ -1210,30 +1128,117 @@ def _enforce_not_null(
                 yield from frame_paths(t["fields"], p + ".")
 
     present = set(frame_paths(frame_fields))
-    check = [p for p in stored if p in present and p not in frame_nn]
-    if not check:
-        return df, False
-    violated = None
-    for p in check:
-        c = F.col(p).isNull()
-        if "." in p:
-            c = F.col(p.rsplit(".", 1)[0]).isNotNull() & c
-        violated = c if violated is None else (violated | c)
-    did_cache = False
-    if not already_cached:
+    return [p for p in stored if p in present and p not in frame_nn]
+
+
+def _batch_checks(
+    df: DataFrame, meta: dict, provided
+) -> list[tuple[Column, Callable[[int], str]]]:
+    """Every row-level check a data commit owes the table, as
+    ``(violation predicate, message for n bad rows)`` pairs in raise
+    order:
+
+    1. generated columns the batch PROVIDED (``provided`` names the
+       caller's own columns) must equal their expression null-safely —
+       a column the writer computed is never re-checked;
+    2. CHECK constraints (``delta.constraints.*``), NULL passing;
+    3. the NOT NULL column invariant, on the paths the stored schema
+       declares non-nullable and the frame does not prove. Without it a
+       frame declaring a stored non-nullable field nullable would slide
+       through evolution's shape comparison (which ignores nullability
+       so mapped-table metadata never reads as a type change) and stage
+       NULLs external readers are told cannot exist. An inner struct
+       field passes where its parent struct is NULL."""
+    checks: list[tuple[Column, Callable[[int], str]]] = []
+    gens = {c: e for c, e in _generated_exprs(meta).items() if c in provided}
+    if gens:
+        types = {
+            f.name: f.dataType
+            for f in _spark_schema_from_string(meta["schemaString"]).fields
+        }
+        listed = "; ".join(f"{c} = {e}" for c, e in sorted(gens.items()))
+        checks.append((
+            functools.reduce(operator.or_, [
+                ~F.col(c).eqNullSafe(F.expr(e).cast(types[c]))
+                for c, e in sorted(gens.items())
+            ]),
+            lambda n: "commit violates generated-column expression(s) on "
+            f"{n} row(s): {listed}",
+        ))
+    cons = {
+        k[len("delta.constraints."):]: v
+        for k, v in (meta.get("configuration") or {}).items()
+        if k.startswith("delta.constraints.")
+    }
+    if cons:
+        listed_c = "; ".join(f"{k}: {e}" for k, e in sorted(cons.items()))
+        checks.append((
+            _check_violated(cons.values()),
+            lambda n: f"commit violates CHECK constraint(s) {sorted(cons)} "
+            f"on {n} row(s): {listed_c}",
+        ))
+    nn = _unproven_not_null_paths(df, meta)
+    if nn:
+        checks.append((
+            functools.reduce(operator.or_, [
+                F.col(p).isNull()
+                if "." not in p
+                else F.col(p.rsplit(".", 1)[0]).isNotNull() & F.col(p).isNull()
+                for p in nn
+            ]),
+            lambda n: f"commit writes NULL into non-nullable column(s) {nn} "
+            f"on {n} row(s) — the stored schema declares them NOT NULL "
+            "and external readers rely on it",
+        ))
+    return checks
+
+
+@contextlib.contextmanager
+def _batch_gate(df: DataFrame, meta: dict, provided=()):
+    """THE row-level gate every Delta data commit (WRITE and the stream
+    sink, MERGE, UPDATE, APPLY CHANGES) stages through. ``df`` is the
+    rows the commit introduces — never survivors a rewrite carries
+    over — ``meta`` the table's metaData, ``provided`` the columns the
+    caller's batch supplied. Yields ``(frame_to_stage, {col: new
+    identity high-water mark})``.
+
+    All of :func:`_batch_checks` run as columns of ONE aggregation over
+    one cached frame, together with the max/min of every provided
+    identity column (the new high-water marks); the first failing duty
+    raises. The cached frame is what gets staged, so the rows validated
+    are exactly the rows committed, and the gate releases it on every
+    exit, success or raise. A frame the caller already cached stays
+    cached. A batch with nothing to check runs no job and caches
+    nothing."""
+    checks = _batch_checks(df, meta, provided)
+    ids = {c: s for c, s in _identity_specs(meta).items() if c in provided}
+    if not checks and not ids:
+        yield df, {}
+        return
+    owned = not df.is_cached
+    if owned:
         df = df.cache()
-        did_cache = True
-    n_bad = df.filter(violated).count()
-    if n_bad:
-        # the commit aborts here, so release the batch cache whether we
-        # created it or an earlier duty (constraints/generated) did
-        df.unpersist()
-        raise ValueError(
-            f"commit writes NULL into non-nullable column(s) {check} "
-            f"on {n_bad} row(s) — the stored schema declares them NOT "
-            "NULL and external readers rely on it"
-        )
-    return df, did_cache
+    try:
+        row = df.agg(
+            *[F.count_if(bad) for bad, _ in checks],
+            *[
+                F.max(c) if s["step"] > 0 else F.min(c)
+                for c, s in sorted(ids.items())
+            ],
+        ).first()
+        for (_, message), n_bad in zip(checks, row):
+            if n_bad:
+                raise ValueError(message(n_bad))
+        hwms: dict[str, int] = {}
+        for (c, spec), seen in zip(sorted(ids.items()), row[len(checks):]):
+            if seen is not None:
+                adv = _identity_hwm_advance(spec, int(seen))
+                if adv is not None:
+                    hwms[c] = adv
+        yield df, hwms
+    finally:
+        if owned:
+            df.unpersist()
 
 
 def _commit_info(
@@ -2258,7 +2263,8 @@ def write_delta(
     (``delta.constraints.<name>``); every subsequent commit — appends,
     overwrites, MERGE sources, stream-sink batches — is rejected if any
     row evaluates an expression to FALSE (NULL passes, SQL CHECK
-    semantics). Enforcement costs one filter over the batch.
+    semantics). Enforcement is one column of :func:`_batch_gate`'s
+    single aggregation over the batch.
 
     ``replace_partitions`` (overwrite mode only) scopes the tombstones
     to the named partition values — Delta's ``replaceWhere``: only
@@ -2317,6 +2323,7 @@ def write_delta(
     if txn is not None and prev_txns.get(txn[0], -1) >= txn[1]:
         # this (appId, version) already committed — exactly-once replay
         return st.version
+    given = set(df.columns)
     creation_meta: dict | None = None
     if prev_meta is not None:
         _check_append_only(prev_meta, mode == "overwrite")
@@ -2343,16 +2350,10 @@ def write_delta(
         # allowColumnDefaults duty: fill omitted DEFAULT columns before
         # any other per-commit duty sees the frame
         df = _apply_column_defaults(df, prev_meta)
-        df, id_hwms, id_cache_ref = _apply_identity_columns(
+        df, id_hwms, id_cache = _apply_identity_columns(
             df, _identity_specs(prev_meta)
         )
-        df, gen_cached = _apply_generated_columns(df, prev_meta)
-        staged, staged_cached = _enforce_constraints(df, prev_meta)
-        staged_cached = staged_cached or gen_cached
-        staged, nn_cached = _enforce_not_null(
-            staged, prev_meta, already_cached=staged_cached
-        )
-        staged_cached = staged_cached or nn_cached
+        df = _apply_generated_columns(df, prev_meta)
     else:
         if shred_variants:
             # declare the shredding duty at creation: the feature rides
@@ -2399,8 +2400,7 @@ def write_delta(
                 _RT_MAT_CV_KEY, f"_row-commit-version-col-{uuid.uuid4()}"
             )
         id_hwms = {}
-        id_cache_ref = None
-        gen_cached = False
+        id_cache = None
         if identity_cols:
             specs: dict[str, dict] = {}
             for c, spec in sorted(identity_cols.items()):
@@ -2417,12 +2417,11 @@ def write_delta(
                         spec.get("allow_explicit_insert", False)
                     ),
                 }
-            df, id_hwms, id_cache_ref = _apply_identity_columns(df, specs)
+            df, id_hwms, id_cache = _apply_identity_columns(df, specs)
         if generated_cols:
             # compute absent generated columns BEFORE deriving the
-            # schema, then validate any the caller provided through the
-            # shared duty (creation batches follow the same contract
-            # every later commit will)
+            # schema; the batch gate validates the ones the caller
+            # provided, as on every later commit
             for c in sorted(generated_cols):
                 if c not in df.columns:
                     df = df.withColumn(c, F.expr(generated_cols[c]))
@@ -2450,29 +2449,10 @@ def write_delta(
                 spark.range(1).select().select(
                     F.expr(default_cols[c])
                 ).schema  # noqa: B018 — forces analysis
-        if generated_cols or identity_cols or default_cols:
-            creation_meta = _metadata_action(
-                df, pcols, constraints, generated_cols,
-                identity_cols, id_hwms, configuration, default_cols,
-            )
-            if generated_cols:
-                df, gen_cached = _apply_generated_columns(
-                    df, creation_meta["metaData"]
-                )
-        if constraints:
-            # enforce BEFORE staging so a rejected creation leaves nothing
-            staged, staged_cached = _enforce_constraints(
-                df,
-                {
-                    "configuration": {
-                        f"delta.constraints.{n}": e
-                        for n, e in constraints.items()
-                    }
-                },
-            )
-            staged_cached = staged_cached or gen_cached
-        else:
-            staged, staged_cached = df, gen_cached
+        creation_meta = _metadata_action(
+            df, pcols, constraints, generated_cols, identity_cols,
+            configuration, default_cols,
+        )["metaData"]
 
     # An evolving commit's files must be written under the EVOLVED
     # mapping (new columns get their col-<uuid> physical names), so the
@@ -2511,16 +2491,18 @@ def write_delta(
         else None
     )
     try:
-        adds = tx.stage(
-            staged, pcols,
-            replace_partitions=replace_partitions, l2p=l2p,
-            shred_variants=shred_variants,
-        )
+        with _batch_gate(df, creation_meta or prev_meta, given) as (
+            staged, seen_hwms,
+        ):
+            adds = tx.stage(
+                staged, pcols,
+                replace_partitions=replace_partitions, l2p=l2p,
+                shred_variants=shred_variants,
+            )
     finally:
-        if staged_cached:
-            staged.unpersist()
-        if id_cache_ref is not None:
-            id_cache_ref.unpersist()
+        if id_cache is not None:
+            id_cache.unpersist()
+    id_hwms.update(seen_hwms)
 
     doomed: list[str] = []
     if mode == "overwrite":
@@ -2580,24 +2562,19 @@ def write_delta(
         )
     actions: list[dict] = list(cdc_actions)
     if st is None:
-        meta_action = (
-            creation_meta
-            if creation_meta is not None
-            else _metadata_action(
-                df, pcols, constraints, configuration=configuration
-            )
-        )
-        # the MERGED configuration (creation_meta path and the
-        # constraints= param both land in metaData.configuration), so
-        # constraint/CDF/rowTracking-driven bumps can't be missed
+        if id_hwms:
+            creation_meta = _meta_with_identity_hwm(creation_meta, id_hwms)
+        # the MERGED configuration (configuration= and constraints= both
+        # land in metaData.configuration), so constraint/CDF/rowTracking-
+        # driven bumps can't be missed
         actions.append({"protocol": _creation_protocol(
-            meta_action["metaData"]["schemaString"],
+            creation_meta["schemaString"],
             generated_cols,
             identity_cols,
-            meta_action["metaData"].get("configuration"),
+            creation_meta.get("configuration"),
             default_cols,
         )})
-        actions.append(meta_action)
+        actions.append({"metaData": creation_meta})
     elif id_hwms:
         # identity high-water marks advance in the SAME commit as the
         # rows they cover (composes with an evolving schema)
@@ -3096,7 +3073,8 @@ def _copy_on_write_where(
     ``assignments`` None ⇒ DELETE; else UPDATE with {column: SQL expr}
     evaluated per matching row (exprs see the PRE-update row, as SQL
     UPDATE semantics require) and cast to the declared column type.
-    Updated rows re-validate CHECK constraints — an UPDATE is a write.
+    Updated rows pass the batch gate (CHECK constraints, NOT NULL) —
+    an UPDATE is a write.
     On CDF tables the change rows are staged directly (delete rows /
     pre+post image pairs) — no diff pass, the command knows its
     changes. Returns the committed version, or None when nothing
@@ -3160,10 +3138,8 @@ def _copy_on_write_where(
         # survivors are untouched rows: both id and commit version ride
         # into the rewrite's materialized columns
         survivors = _rt_materialize(survivors, meta)
-    cached = False
     if assignments is None:
         operation, metric = "DELETE", "numDeletedRows"
-        new_data = survivors
     else:
         operation, metric = "UPDATE", "numUpdatedRows"
         gens = _generated_exprs(meta)
@@ -3202,9 +3178,13 @@ def _copy_on_write_where(
             # commit-version column stays null and falls back to the
             # new add's defaultRowCommitVersion (this commit)
             updated = _rt_materialize(updated, meta, fresh_cv=True)
-        updated, cached = _enforce_constraints(updated, meta)
-        new_data = survivors.unionByName(updated)
-    try:
+    with contextlib.ExitStack() as gate:
+        new_data = survivors
+        if assignments is not None:
+            # the updated rows are the rows this commit introduces; its
+            # generated columns were computed above, so none is provided
+            updated, _ = gate.enter_context(_batch_gate(updated, meta))
+            new_data = survivors.unionByName(updated)
         new_adds = tx.stage(new_data, pcols, l2p=l2p)
         cdc_actions: list[dict] = []
         if delta_cdf._cdf_enabled(meta):
@@ -3225,9 +3205,6 @@ def _copy_on_write_where(
             cdc_actions = delta_cdf._stage_cdc_files(
                 spark, tx.fs, tx.jvm, path, changes, tx.version, l2p
             )
-    finally:
-        if cached:
-            updated.unpersist()
     return tx.commit(
         operation,
         {"predicate": predicate,

@@ -40,6 +40,26 @@ from .delta_protocol import _check_append_only
 FUSED_DISCOVERY_MAX_FILES = 32
 
 
+def _rt_keyed(rows, touched_df, key_cols, cols, meta) -> DataFrame:
+    """Row tracking for the rows a keyed rewrite (MERGE, APPLY CHANGES)
+    introduces: a key the touched files hold inherits the target row's
+    id — N matched target rows collapse to one, the smallest id
+    survives deterministically — with a fresh commit version; a new
+    key's null id derives from the new add's baseRowId."""
+    if touched_df is not None:
+        ids = touched_df.groupBy(*key_cols).agg(
+            F.min("_row_id").alias("_row_id")
+        )
+        rows = rows.join(ids, key_cols, "left").select(*cols, "_row_id")
+    else:
+        rows = rows.withColumn("_row_id", F.lit(None).cast("long"))
+    return dl._rt_materialize(
+        rows.withColumn("_row_commit_version", F.lit(None).cast("long")),
+        meta,
+        fresh_cv=True,
+    )
+
+
 def merge_delta(
     spark: SparkSession,
     path: str,
@@ -66,6 +86,7 @@ def merge_delta(
     adds, meta = st.adds, st.meta
     schema = dl._spark_schema_from_string(meta["schemaString"])
     cols = [f.name for f in schema.fields]
+    given = set(source.columns)
     # identity columns through MERGE (r12; refused through r11): a
     # source that OMITS the identity column takes the surrogate-key CDC
     # shape — matched rows inherit the target's stored values (the same
@@ -94,13 +115,14 @@ def merge_delta(
         )
     # generated/default columns: a merge source may legitimately OMIT
     # them (computed/filled here, before the completeness check); ones
-    # it provides must match their expression (generated) or are taken
-    # as-is (defaults). SQL MERGE semantics for an omitted DEFAULT
-    # column: the default applies to INSERT (not-matched) rows only —
-    # matched rows keep the target's stored values. The fill below
-    # covers inserts (and defaulted key columns, which discovery
-    # needs); matched rows are repaired from the touched files once
-    # they are read, before anything is staged (r12, ADVICE).
+    # it provides must match their expression (generated, checked by
+    # the batch gate) or are taken as-is (defaults). SQL MERGE
+    # semantics for an omitted DEFAULT column: the default applies to
+    # INSERT (not-matched) rows only — matched rows keep the target's
+    # stored values. The fill below covers inserts (and defaulted key
+    # columns, which discovery needs); matched rows are repaired from
+    # the touched files once they are read, before anything is staged
+    # (r12, ADVICE).
     defaults_omitted = sorted(
         c for c in dl._column_defaults(meta) if c not in source.columns
     )
@@ -112,9 +134,8 @@ def merge_delta(
         # placeholder: matched rows are repaired from the target below,
         # insert-branch rows are allocated past the high-water mark
         source = source.withColumn(c, F.lit(None).cast("long"))
-    gen_frame, gen_cached = dl._apply_generated_columns(source, meta)
-    cached_frames: list[DataFrame] = [gen_frame] if gen_cached else []
-    source = gen_frame
+    source = dl._apply_generated_columns(source, meta)
+    cached_frames: list[DataFrame] = []
     missing = [c for c in cols if c not in source.columns]
     if missing:
         raise ValueError(f"merge source missing target columns {missing}")
@@ -122,8 +143,8 @@ def merge_delta(
     # a plain-string key against a collated target column would be
     # INDETERMINATE_COLLATION at the discovery join)
     source = dl._align_source_types(source.select(*cols), schema)
-    # CHECK constraints are enforced AFTER the matched-row default
-    # repair below (validated rows == committed rows).
+    # the batch gate runs AFTER the matched-row default repair below
+    # (validated rows == committed rows).
     pcols = meta.get("partitionColumns", [])
     ptypes = {f.name: f.dataType for f in schema.fields if f.name in pcols}
 
@@ -333,18 +354,8 @@ def merge_delta(
                     f"matched row(s) ({id_provided}) — UPDATE of an "
                     "identity column is refused"
                 )
-        # ... and the high-water mark advances past observed inserts
-        obs = source.agg(
-            *[
-                (F.max(c) if id_specs[c]["step"] > 0 else F.min(c)).alias(c)
-                for c in id_provided
-            ]
-        ).first()
-        for c in id_provided:
-            if obs[c] is not None:
-                adv = dl._identity_hwm_advance(id_specs[c], int(obs[c]))
-                if adv is not None:
-                    id_hwms[c] = adv
+        # ... and the batch gate advances the high-water mark past the
+        # observed inserts
     # columns whose values changed AFTER the generated-column pass:
     # target-repaired ones (only when matches existed) and allocated
     # identity ones (always — they started as NULL placeholders)
@@ -354,23 +365,15 @@ def merge_delta(
     if changed_cols:
         # generated columns that the source omitted were computed from
         # the pre-repair (default-filled / identity-null) values —
-        # recompute against the repaired frame, and revalidate provided
-        # ones, iff any generation expression can see a repaired column
+        # recompute against the repaired frame iff any generation
+        # expression can see a repaired column
         pat = re.compile(
             "|".join(rf"\b{re.escape(c)}\b" for c in changed_cols)
         )
         if any(pat.search(e) for e in dl._generated_exprs(meta).values()):
-            regen, regen_cached = dl._apply_generated_columns(
+            source = dl._apply_generated_columns(
                 source.drop(*gens_omitted), meta
-            )
-            if regen_cached:
-                cached_frames.append(regen)
-            source = regen.select(*cols)
-    # CHECK constraints gate MERGE too; the returned (cached) frame is
-    # what gets staged, so validated rows == committed rows.
-    source, cached_source = dl._enforce_constraints(source, meta)
-    if cached_source:
-        cached_frames.append(source)
+            ).select(*cols)
     if touched_df is not None:
         survivors = touched_df.join(src_keys, key_cols, "left_anti").select(
             *cols,
@@ -384,40 +387,22 @@ def merge_delta(
             ).withColumn("_row_commit_version", F.lit(None).cast("long"))
     if rt:
         # row-id preservation through MERGE: survivors keep id AND
-        # commit version; matched-updated rows inherit the TARGET row's
-        # id (one broadcast-sized join against the touched files' keys)
-        # with a fresh commit version; inserts get null ids — fresh
-        # ones derive from the new add's baseRowId
+        # commit version (the gated source rows take theirs below)
         survivors = dl._rt_materialize(survivors, meta)
-        if touched_df is not None:
-            # N matched target rows collapse to ONE source row: the
-            # smallest id survives deterministically, the rest retire
-            tgt_ids = touched_df.groupBy(*key_cols).agg(
-                F.min("_row_id").alias("_row_id")
-            )
-            source_rt = source.join(tgt_ids, key_cols, "left").select(
-                *cols, "_row_id"
-            )
-        else:
-            source_rt = source.withColumn(
-                "_row_id", F.lit(None).cast("long")
-            )
-        source_rt = dl._rt_materialize(
-            source_rt.withColumn(
-                "_row_commit_version", F.lit(None).cast("long")
-            ),
-            meta,
-            fresh_cv=True,
-        )
-        new_data = survivors.unionByName(source_rt)
-    else:
-        new_data = survivors.unionByName(source)
-
+    # the source rows are what this MERGE introduces: they pass the
+    # batch gate, and the gated frame is what gets staged; survivors
+    # are never re-checked
     try:
-        new_adds = tx.stage(new_data, pcols, l2p=l2p)
+        with dl._batch_gate(source, meta, given) as (source, seen_hwms):
+            if rt:
+                source = _rt_keyed(source, touched_df, key_cols, cols, meta)
+            new_adds = tx.stage(
+                survivors.unionByName(source), pcols, l2p=l2p
+            )
     finally:
         for fr in cached_frames:
             fr.unpersist()
+    id_hwms.update(seen_hwms)
     # Write-side CDF: a rewrite commit on a CDF-enabled table
     # materializes its keyed net changes as change files — the staged
     # files are final on disk, so the diff reads them back rather than
@@ -529,26 +514,6 @@ def apply_changes_delta(
     )
     net = net.localCheckpoint(eager=True)  # one evaluation: discovery + rewrite
     upserts = net.filter(F.col("_change_type") != "delete").select(*cols)
-    # BY DEFAULT identity: advance the high-water mark past the
-    # source-allocated values this batch replicates (same commit)
-    id_hwms: dict[str, int] = {}
-    if id_specs:
-        obs = upserts.agg(
-            *[
-                (F.max(c) if id_specs[c]["step"] > 0 else F.min(c)).alias(c)
-                for c in sorted(id_specs)
-            ]
-        ).first()
-        for c in sorted(id_specs):
-            if obs[c] is not None:
-                adv = dl._identity_hwm_advance(id_specs[c], int(obs[c]))
-                if adv is not None:
-                    id_hwms[c] = adv
-    # CHECK constraints gate APPLY CHANGES exactly like WRITE and MERGE:
-    # a replica table with delta.constraints.* must reject violating
-    # upserts before a byte is staged (deletes carry no row state and
-    # cannot violate a CHECK).
-    upserts, upserts_cached = dl._enforce_constraints(upserts, meta)
 
     # discovery: files holding ANY affected key (upsert or delete).
     # Small live sets skip the stats-pruning bounds action entirely
@@ -611,8 +576,6 @@ def apply_changes_delta(
     if touched_rels:
         _check_append_only(meta, True)
     if not touched_rels and upserts.isEmpty():
-        if upserts_cached:
-            upserts.unpersist()
         return st.version
     rt = dl._row_tracking_supported(st.protocol)
     if touched_rels:
@@ -633,36 +596,17 @@ def apply_changes_delta(
                 "_row_id", F.lit(None).cast("long")
             ).withColumn("_row_commit_version", F.lit(None).cast("long"))
     if rt:
-        # same preservation contract as MERGE: survivors keep id+cv,
-        # upserted keys inherit the target row's id with a fresh cv,
-        # genuinely new keys derive fresh ids from the add
+        # same preservation contract as MERGE: survivors keep id+cv
         survivors = dl._rt_materialize(survivors, meta)
-        if touched_df is not None:
-            tgt_ids = touched_df.groupBy(*key_cols).agg(
-                F.min("_row_id").alias("_row_id")
-            )
-            upserts_rt = upserts.join(tgt_ids, key_cols, "left").select(
-                *cols, "_row_id"
-            )
-        else:
-            upserts_rt = upserts.withColumn(
-                "_row_id", F.lit(None).cast("long")
-            )
-        upserts_rt = dl._rt_materialize(
-            upserts_rt.withColumn(
-                "_row_commit_version", F.lit(None).cast("long")
-            ),
-            meta,
-            fresh_cv=True,
-        )
-        new_data = survivors.unionByName(upserts_rt)
-    else:
-        new_data = survivors.unionByName(upserts)
-    try:
-        new_adds = tx.stage(new_data, pcols, l2p=l2p)
-    finally:
-        if upserts_cached:
-            upserts.unpersist()
+    # the upserts are the rows this commit introduces, every column
+    # provided by the change batch: they pass the batch gate exactly
+    # like WRITE and MERGE rows (deletes carry no row state), and the
+    # gate advances BY DEFAULT identity high-water marks past the
+    # source-allocated values they replicate (same commit)
+    with dl._batch_gate(upserts, meta, cols) as (upserts, id_hwms):
+        if rt:
+            upserts = _rt_keyed(upserts, touched_df, key_cols, cols, meta)
+        new_adds = tx.stage(survivors.unionByName(upserts), pcols, l2p=l2p)
     # write-side CDF on the replica: rewrite commits carry cdc files,
     # so a replica-of-a-replica chain stays O(changes) end to end
     cdc_actions: list[dict] = []

@@ -3,8 +3,7 @@
 The reference re-reads its own parquet between stages
 (``weather_hourly_pipeline.py:86``) and resolves registered source tables
 via dbt (``sources.yml``). Here: schema-asserted ``spark.read.parquet``
-scans plus a helper that registers the whole star schema as temp views so
-``spark.sql`` queries resolve by name.
+scans, one table at a time by name.
 
 Scale note: scans stay declarative so Catalyst pushes filters and prunes
 columns into the parquet reader (verify with ``PushedFilters`` /
@@ -145,17 +144,3 @@ def scan_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return reader.schema(schema).parquet(path)
     return reader.parquet(path)
 
-
-def load_star_schema(spark: SparkSession, sf_dir: str, register_views: bool = True) -> dict[str, DataFrame]:
-    """Load every star-schema table; optionally register temp views.
-
-    With views registered, ``spark.sql("SELECT ... FROM lineitem ...")``
-    resolves exactly like the dbt ``source()`` indirection (S4).
-    """
-    tables: dict[str, DataFrame] = {}
-    for name in STAR_SCHEMA:
-        df = scan_table(spark, sf_dir, name)
-        if register_views:
-            df.createOrReplaceTempView(name)
-        tables[name] = df
-    return tables

@@ -173,67 +173,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """:func:`running_user_totals` on Spark 4's ``transformWithState``
-    API (``transformWithStateInPandas`` + a :class:`StatefulProcessor`
-    with named ``ValueState``) — the successor to
-    ``applyInPandasWithState``: typed state handles instead of one
-    opaque tuple, per-state TTL support, timers, and RocksDB-backed
-    stores at scale. Pinned equal to the classic form in tests so both
-    spellings stay correct."""
-    import datetime as dt
-
-    import pandas as pd  # noqa: F811
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", _TOTALS_STATE)
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self._totals.get() if self._totals.exists() else None
-            n, total, last_us = prev if prev is not None else (0, 0.0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                batch_max_us = int(pdf["ts"].astype("int64").max()) // 1000
-                last_us = max(last_us, batch_max_us)
-            self._totals.update((n, total, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "last_ts": [
-                        dt.datetime.utcfromtimestamp(last_us / 1_000_000)
-                    ],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    # transformWithState runs only on the RocksDB state store (the
-    # scale-grade store: changelog checkpointing, bounded memory); the
-    # classic HDFS-backed default crashes the TWS worker. Session-level
-    # and runtime-settable, so flipping it here covers queries started
-    # after this call without touching unrelated sessions' state config.
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningTotals(),
-        outputStructType=_TOTALS_OUT,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def dedup_stream(
     events: DataFrame,
     key_cols: list[str] | None = None,

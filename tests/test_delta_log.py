@@ -1848,22 +1848,26 @@ class TestAdviceR7:
 
     def test_constrained_commit_single_evaluation(self, spark, tmp_path):
         """The batch a constraint validates must be THE batch staged:
-        _enforce_constraints returns a cached frame (pinning one
-        evaluation of a nondeterministic source), and the commit path
-        unpersists it afterwards."""
+        the batch gate yields a cached frame (pinning one evaluation of
+        a nondeterministic source) and releases it on exit."""
         from portfolio_data_pipelines_spark.operators.delta_log import (
-            _enforce_constraints,
+            _batch_gate,
+            _schema_string,
         )
 
         df = spark.range(10).select(
             F.col("id"), F.rand(seed=7).alias("v")
         )
-        meta = {"configuration": {"delta.constraints.c": "v >= 0"}}
-        out, did_cache = _enforce_constraints(df, meta)
-        assert did_cache and out.is_cached
-        out.unpersist()
+        meta = {
+            "schemaString": _schema_string(df),
+            "configuration": {"delta.constraints.c": "v >= 0"},
+        }
+        with _batch_gate(df, meta) as (out, _):
+            assert out.is_cached
+        assert not out.is_cached
         # no constraints: same frame straight through, nothing cached
-        assert _enforce_constraints(df, {"configuration": {}}) == (df, False)
+        with _batch_gate(df, {**meta, "configuration": {}}) as (out, hwms):
+            assert out is df and not out.is_cached and hwms == {}
 
         path = str(tmp_path / "t_check_once")
         src = spark.range(50).select(F.col("id"), F.rand().alias("v"))
@@ -3930,14 +3934,174 @@ class TestNotNullInvariant:
 
     def test_same_writer_schema_skips_the_scan(self, spark, tmp_path):
         # frame declares the same non-nullables → type system is the
-        # proof; _enforce_not_null must not cache/scan
+        # proof; the batch gate must not cache/scan
         from portfolio_data_pipelines_spark.operators.delta_log import (
-            _enforce_not_null,
+            _batch_gate,
             _replay_log,
         )
 
         path, schema = self._mk(spark, tmp_path)
         st = _replay_log(spark, path, None)
         df = spark.createDataFrame([(6, ("v", 60))], schema)
-        out, cached = _enforce_not_null(df, st.meta, already_cached=False)
-        assert out is df and cached is False
+        before = _next_job_id(spark)
+        with _batch_gate(df, st.meta, df.columns) as (out, _):
+            assert out is df and not out.is_cached
+        assert _next_job_id(spark) == before
+
+
+def _next_job_id(spark) -> int:
+    """The DAGScheduler's next job id: the difference across a call is
+    the number of Spark jobs it launched."""
+    nxt = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    return int(nxt if isinstance(nxt, int) else nxt.get())
+
+
+def _cached_entries(spark) -> int:
+    return (
+        spark._jsparkSession.sharedState().cacheManager()
+        .cachedData().size()
+    )
+
+
+class TestBatchGate:
+    """Every Delta data commit — WRITE, MERGE, UPDATE, APPLY CHANGES —
+    passes one batch gate: the provided generated-column values, the
+    CHECK constraints and the NOT NULL invariant, checked in one
+    aggregation over the rows the commit introduces."""
+
+    #: id, v nullable; n stored NOT NULL; g GENERATED AS v * 2; v >= 0
+    SCHEMA = "id bigint, v bigint, n string, g bigint"
+
+    def _mk(self, spark, tmp_path):
+        from pyspark.sql.types import (
+            LongType,
+            StringType,
+            StructField,
+            StructType,
+        )
+
+        path = str(tmp_path / "gated")
+        schema = StructType([
+            StructField("id", LongType(), True),
+            StructField("v", LongType(), True),
+            StructField("n", StringType(), False),
+        ])
+        write_delta(
+            spark,
+            spark.createDataFrame([(1, 1, "a")], schema),
+            path,
+            generated_cols={"g": "v * 2"},
+            constraints={"pos": "v >= 0"},
+        )
+        return path
+
+    def _apply(self, spark, path, row):
+        from portfolio_data_pipelines_spark.operators.delta_merge import (
+            apply_changes_delta,
+        )
+
+        changes = spark.createDataFrame(
+            [(*row, "insert", 5)],
+            f"{self.SCHEMA}, _change_type string, _commit_version bigint",
+        )
+        return apply_changes_delta(spark, path, changes, ["id"])
+
+    def _commit(self, spark, path, op, duty):
+        from portfolio_data_pipelines_spark.operators.delta_log import (
+            update_where,
+        )
+
+        rows = {
+            "generated": (2, 2, "b", 999),
+            "check": (2, -1, "b", -2),
+            "not_null": (2, 2, None, 4),
+        }
+        if op == "write":
+            write_delta(
+                spark,
+                spark.createDataFrame([rows[duty]], self.SCHEMA),
+                path,
+                mode="append",
+            )
+        elif op == "merge":
+            merge_delta(
+                spark,
+                path,
+                spark.createDataFrame([(1, *rows[duty][1:])], self.SCHEMA),
+                ["id"],
+            )
+        elif op == "update":
+            update_where(
+                spark, path, "id = 1",
+                {"check": {"v": "-5"}, "not_null": {"n": "NULL"}}[duty],
+            )
+        else:
+            self._apply(spark, path, rows[duty])
+
+    MESSAGES = {
+        "generated": "generated-column expression",
+        "check": "CHECK constraint",
+        "not_null": "non-nullable",
+    }
+
+    @pytest.mark.parametrize(
+        "op, duty",
+        [
+            (op, duty)
+            for op in ("write", "merge", "update", "apply")
+            for duty in ("generated", "check", "not_null")
+            # UPDATE cannot assign a generated column; it refuses that
+            if (op, duty) != ("update", "generated")
+        ],
+    )
+    def test_every_data_commit_passes_the_gate(
+        self, spark, tmp_path, op, duty
+    ):
+        """Each cell raises its duty's message and leaves no trace: the
+        table keeps its version, no file is staged under the root, and
+        the session's cache is what it was."""
+        from pathlib import Path
+
+        from portfolio_data_pipelines_spark.operators.delta_log import (
+            _replay_log,
+        )
+
+        path = self._mk(spark, tmp_path)
+        files = sorted(Path(path).rglob("*"))
+        cached = _cached_entries(spark)
+        with pytest.raises(ValueError, match=self.MESSAGES[duty]):
+            self._commit(spark, path, op, duty)
+        assert _replay_log(spark, path, None).version == 0
+        assert sorted(Path(path).rglob("*")) == files
+        assert _cached_entries(spark) == cached
+
+    def test_apply_changes_replicates_a_matching_generated_value(
+        self, spark, tmp_path
+    ):
+        path = self._mk(spark, tmp_path)
+        cached = _cached_entries(spark)
+        assert self._apply(spark, path, (2, 3, "c", 6)) == 1
+        assert _cached_entries(spark) == cached
+        assert sorted(
+            tuple(r) for r in read_delta(spark, path).collect()
+        ) == [(1, 1, "a", 2), (2, 3, "c", 6)]
+
+    def test_three_duty_append_is_one_aggregation(self, spark, tmp_path):
+        """A batch that provides the generated column, meets a CHECK
+        constraint and arrives nullable over a NOT NULL column runs the
+        three duties as one aggregation: at most 4 jobs with staging
+        (8 when each duty counted the batch on its own). A batch with
+        nothing to check runs the staging job alone."""
+        path = self._mk(spark, tmp_path)
+        batch = spark.createDataFrame([(2, 2, "b", 4)], self.SCHEMA)
+        before = _next_job_id(spark)
+        write_delta(spark, batch, path, mode="append")
+        assert _next_job_id(spark) - before <= 4
+        plain = str(tmp_path / "plain")
+        write_delta(spark, _df(spark, [(1, 1.0, None)]), plain)
+        before = _next_job_id(spark)
+        write_delta(spark, _df(spark, [(2, 2.0, None)]), plain, mode="append")
+        assert _next_job_id(spark) - before == 1
+        assert sorted(
+            tuple(r) for r in read_delta(spark, path).collect()
+        ) == [(1, 1, "a", 2), (2, 2, "b", 4)]
